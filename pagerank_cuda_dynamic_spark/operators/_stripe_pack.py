@@ -123,6 +123,21 @@ def _pack_stripe_raw(
     }
 
 
+def _stripe_edges(raw: dict, hub_ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Inverse of _pack_stripe_raw for an unweighted record: the stripe's
+    (src, dst) int64 edge arrays — regular dst from the CSR counts, hub dst
+    from the hub-block counts over the full hub list."""
+    lo, hi = int(raw["lo"]), int(raw["hi"])
+    counts = raw["offsets"][1:] - raw["offsets"][:-1]
+    src = raw["src"].astype(np.int64)
+    dst = lo + np.repeat(np.arange(hi - lo, dtype=np.int64), counts)
+    if hub_ids.size:
+        hcnt = raw["hoff"][1:] - raw["hoff"][:-1]
+        src = np.concatenate([src, raw["hsrc"].astype(np.int64)])
+        dst = np.concatenate([dst, np.repeat(hub_ids, hcnt)])
+    return src, dst
+
+
 def _raw_to_row(raw: dict) -> dict:
     """Raw stripe record → blob row (PACK_SCHEMA) for the row-stream path
     (TCP loop, weighted snapshots, direct bsp_pack callers)."""

@@ -656,17 +656,6 @@ def _traversal_marks(
     return vaff
 
 
-def _mover_seeds(deletions: DataFrame | None, insertions: DataFrame | None, n: int) -> np.ndarray:
-    """Not used for DF init (marking is direct), kept for extensions."""
-    m = np.zeros(n, dtype=bool)
-    for df in (deletions, insertions):
-        if df is not None:
-            ids = df.select("src").distinct().toPandas()["src"].to_numpy()
-            if ids.size:
-                m[ids] = True
-    return m
-
-
 # ---------------------------------------------------------------------------
 # public entry points (pagerank.hxx:455–482, 498–526, 595–628, 680–735;
 # pagerankPrune.hxx:284–311)

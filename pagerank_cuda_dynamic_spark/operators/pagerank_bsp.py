@@ -46,6 +46,7 @@ injection — semantics of pagerank_weighted_joinagg.
 from __future__ import annotations
 
 import atexit
+import functools
 import os
 import shutil
 import tempfile
@@ -55,6 +56,7 @@ import uuid
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from pagerank_cuda_dynamic_spark.operators.pagerank import (
     PagerankOptions,
@@ -66,6 +68,7 @@ from pagerank_cuda_dynamic_spark.operators._stripe_pack import (
     _pack_stripe_raw,
     _raw_to_row,
     _spill_write,
+    _stripe_edges,
     _stub_pack_row,
 )
 
@@ -126,7 +129,9 @@ def _indegrees(graph) -> np.ndarray:
     return indeg
 
 
-def _auto_block_width(p: int, n: int, env: str | None) -> int:
+def _auto_block_width(
+    p: int, n: int, env: str | None, cores: int | None = None
+) -> int:
     """Gather-layout decision (measured on both sides, see bsp_pack):
     explicit env/param always wins (0 = force row order); otherwise
     block when the rank vector dwarfs LLC (|V|·8 B > 128 MB) AND the
@@ -135,10 +140,13 @@ def _auto_block_width(p: int, n: int, env: str | None) -> int:
     the gate means ≥ 8 physical cores; the nearest portable proxy).
     Host cores, not defaultParallelism: a session with inflated
     parallelism on a small box still has one LLC, and the blocking
-    win/loss is a property of the cache, not the scheduler."""
+    win/loss is a property of the cache, not the scheduler.  `cores` is
+    the host's logical CPU count (bsp_pack passes os.cpu_count()); None
+    means p, so the rule itself does not depend on the host it runs on."""
     if env is not None:
         return int(env)
-    cores = os.cpu_count() or p
+    if cores is None:
+        cores = p
     if min(cores, p) >= 16 and n * 8 > 128 * 2**20:
         return 1_000_000
     return 0
@@ -210,7 +218,7 @@ def bsp_pack(
         # the shared cache (p ≥ 16).  Env/param always override (0 = force
         # row order); forced-multi-block parity tests cover both layouts.
         block_width = _auto_block_width(
-            p, graph.n, os.environ.get("SPARK_GRAFT_BLOCK_WIDTH")
+            p, graph.n, os.environ.get("SPARK_GRAFT_BLOCK_WIDTH"), os.cpu_count()
         )
     weighted = "w" in graph.edges.columns
     e = graph.edges
@@ -461,7 +469,8 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
 
     Returns (None, bounds, n_stripes, hubs) — the packed-DataFrame slot is
     None because every consumer path reads the spill — or None when
-    ineligible (no parent spill, weighted, n changed, batch too big)."""
+    ineligible (no parent spill, weighted, n changed, batch too big).
+    Raises ValueError when a batch edge names a vertex outside [0, n)."""
     import pickle
 
     pspill = getattr(parent, "_bsp_spill", None)
@@ -502,13 +511,24 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
 
     d_src = dpdf["src"].to_numpy(np.int64)
     d_dst = dpdf["dst"].to_numpy(np.int64)
+    i_src = ipdf["src"].to_numpy(np.int64)
+    i_dst = ipdf["dst"].to_numpy(np.int64)
+    # routing sends any dst >= n to the last stripe and the int64 keys
+    # below alias ids outside [0, n): reject such a batch outright
+    bad = sum(
+        int(((np.minimum(a, b) < 0) | (np.maximum(a, b) >= N)).sum())
+        for a, b in ((d_src, d_dst), (i_src, i_dst))
+    )
+    if bad:
+        raise ValueError(
+            f"batch has {bad} edge(s) with a vertex id outside [0, {N}); "
+            "the fast path cannot grow the id space"
+        )
     # universal self-loops are re-injected by the full path
     # (GraphSnapshot.build self_loops=True), so a (v,v) deletion is a
     # no-op there — match that semantics instead of removing the loop
     keep_d = d_src != d_dst
     d_src, d_dst = d_src[keep_d], d_dst[keep_d]
-    i_src = ipdf["src"].to_numpy(np.int64)
-    i_dst = ipdf["dst"].to_numpy(np.int64)
     d_stripe = _route(d_src, d_dst)
     i_stripe = _route(i_src, i_dst)
     d_key = d_src * N + d_dst
@@ -546,19 +566,7 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
             with open(pp, "rb") as fh:
                 raw = _pickle.load(fh)
             lo, hi = int(raw["lo"]), int(raw["hi"])
-            counts = raw["offsets"][1:] - raw["offsets"][:-1]
-            dst_reg = lo + _np.repeat(
-                _np.arange(hi - lo, dtype=_np.int64), counts
-            )
-            src_reg = raw["src"].astype(_np.int64)
-            if HUBS.size:
-                hcnt = raw["hoff"][1:] - raw["hoff"][:-1]
-                src_all = _np.concatenate(
-                    [src_reg, raw["hsrc"].astype(_np.int64)]
-                )
-                dst_all = _np.concatenate([dst_reg, _np.repeat(HUBS, hcnt)])
-            else:
-                src_all, dst_all = src_reg, dst_reg
+            src_all, dst_all = _stripe_edges(raw, HUBS)
             key = src_all * NN + dst_all
             kept = key
             if dm.any():
@@ -584,7 +592,7 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
             _np.concatenate(a_del) if a_del else _np.empty(0, _np.int64),
         )
 
-    sc = child.edges.sparkSession.sparkContext
+    sc = deletions.sparkSession.sparkContext
     rows = sc.parallelize(range(n_parts), n_parts).mapPartitions(merge).collect()
     with open(os.path.join(spill_dir, "META.pkl"), "wb") as f:
         pickle.dump(meta, f, protocol=pickle.HIGHEST_PROTOCOL)
@@ -600,6 +608,37 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
             np.subtract.at(out, a_del, 1.0)
     child._outdeg_np = out
     return None, bounds, n_stripes, hubs
+
+
+def spill_edges(spark, spill_dir: str):
+    """The (src, dst) edge frame held by a complete stripe spill: one task
+    per pack partition reads the stripes it owns (s ≡ pid mod n_parts) and
+    unpacks them with _stripe_edges.  The rows are then hash-partitioned by
+    dst, the layout GraphSnapshot.build gives, so consumers such as
+    tidy_batch plan the same exchanges on a carried snapshot as on a
+    built one."""
+    import pickle
+
+    with open(os.path.join(spill_dir, "META.pkl"), "rb") as f:
+        meta = pickle.load(f)
+    n_stripes, n_parts = int(meta["n_stripes"]), int(meta["n_parts"])
+    hubs = np.asarray(meta["hubs"], dtype=np.int64)
+
+    def read(batches):
+        import pickle as _pickle
+
+        for pdf in batches:
+            for pid in pdf["id"].to_numpy():
+                for s in range(int(pid), n_stripes, n_parts):
+                    with open(os.path.join(spill_dir, f"s{s}.pkl"), "rb") as fh:
+                        src, dst = _stripe_edges(_pickle.load(fh), hubs)
+                    yield pd.DataFrame({"src": src, "dst": dst})
+
+    return (
+        spark.range(n_parts, numPartitions=n_parts)
+        .mapInPandas(read, "src long, dst long")
+        .repartition(spark.sparkContext.defaultParallelism, "dst")
+    )
 
 
 def _ragged_take(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
@@ -748,6 +787,9 @@ def _bsp_loop(
         mbm0 = mm("movers_bm_0.npy", (N,), np.uint8, 0)
         mm("movers_bm_1.npy", (N,), np.uint8, 0)
         mcnt = mm("mcnt.npy", (MAXIT + 2, n_stripes), np.int64, 0)
+        # per-stripe |affected| after iteration 0's mover expansion: the
+        # initial affected set when marking is seeded through movers0
+        mm("aff0.npy", (n_stripes,), np.int64, 0)
         if movers0 is not None and movers0.any():
             for s in range(n_stripes):
                 lo, hi = int(bounds[s]), int(bounds[s + 1])
@@ -980,6 +1022,7 @@ def _bsp_loop(
             ]
             mcnt_mm = _np.load(os.path.join(wd, "mcnt.npy"), mmap_mode="r+")
             vaff_mm = _np.load(os.path.join(wd, "vaff.npy"), mmap_mode="r+")
+            aff0_mm = _np.load(os.path.join(wd, "aff0.npy"), mmap_mode="r+")
             sat_mm = _np.load(os.path.join(wd, "sat.npy"), mmap_mode="r+")
             vaffs = {st["s"]: _np.array(vaff_mm[st["lo"]: st["hi"]], dtype=bool) for st in stripes}
             prev_As = {st["s"]: _np.empty(0, _np.int64) for st in stripes}
@@ -1168,6 +1211,8 @@ def _bsp_loop(
                     if NH and own_cols.size:
                         vaff_s[own_offs] |= hubaff_mm[own_cols].astype(bool)
                     A = _np.flatnonzero(vaff_s)
+                    if l == 0:
+                        aff0_mm[s] = A.size
                     full_stripe = A.size == width
                     if full_stripe and do_expand and not do_prune:
                         sat_mm[s] = 1
@@ -1305,7 +1350,9 @@ def _bsp_loop(
     if SPILL is not None:
         # lightweight skeleton job: one int per partition, stripes load
         # from the spill — no blob rows cross the JVM/Python boundary
-        sc = graph.edges.sparkSession.sparkContext
+        # the active session, not graph.edges': a delta-packed snapshot
+        # derives its edge frame only when a DataFrame consumer asks
+        sc = SparkSession.active().sparkContext
         base = sc.parallelize(range(NPARTS), NPARTS)
         results = [x for x in base.barrier().mapPartitions(loop).collect() if x]
     else:
@@ -1318,7 +1365,13 @@ def _bsp_loop(
     r = np.array(np.load(os.path.join(workdir, rank_file), mmap_mode="r"))
     el_final = float(np.load(os.path.join(workdir, "el.npy"), mmap_mode="r")[iters, :].max())
     state = {"converged": el_final < TOL, "el": el_final, "bounds": bounds}
+    affected_initial = 0
     if dynamic:
+        affected_initial = (
+            int(np.load(os.path.join(workdir, "aff0.npy")).sum())
+            if iters
+            else int(vaff0.sum())
+        )
         state["vaff"] = np.array(
             np.load(os.path.join(workdir, "vaff.npy"), mmap_mode="r")
         ).astype(bool)
@@ -1337,7 +1390,7 @@ def _bsp_loop(
         r,
         iters,
         time.time() - t_all,
-        affected_initial=int(vaff0.sum()) if dynamic else 0,
+        affected_initial=affected_initial,
         superstep_seconds=step_times,
         state=state,
         pack_seconds=pack_sec,
@@ -1365,39 +1418,56 @@ def pagerank_dynamic_traversal_bsp(
     return _bsp_loop(new, opts, q=_adjust_warm_start(q, new.n), vaff0=vaff)
 
 
+def _frontier_seeds(deletions, insertions, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """DF seeds of a TIDIED batch from one small collect: (vaff0, movers0)
+    with vaff0 = srcs(D∪I) ∪ dst(D) and movers0 = srcs(D∪I).
+
+    The loop's iteration-0 mover expansion then marks the new-graph
+    out-neighbours of movers0, which completes the reference's initial
+    marks (pagerank.hxx:645–652: old-graph out-neighbours of deletion
+    sources ∪ new-graph out-neighbours of insertion sources) without the
+    two |E| semi-join scans of _frontier_marks: for a tidied batch an
+    old-graph out-neighbour of u is a new-graph one or a deleted dst.
+    Sources are marked here because DF-P's expansion skips self-loops."""
+    frames = [
+        df.select("src", "dst", F.lit(is_del).alias("is_del"))
+        for df, is_del in ((deletions, True), (insertions, False))
+        if df is not None
+    ]
+    vaff = np.zeros(n, dtype=bool)
+    movers = np.zeros(n, dtype=bool)
+    if frames:
+        pdf = functools.reduce(DataFrame.unionByName, frames).toPandas()
+        movers[pdf["src"].to_numpy(np.int64)] = True
+        vaff[movers] = True
+        vaff[pdf["dst"].to_numpy(np.int64)[pdf["is_del"].to_numpy(bool)]] = True
+    return vaff, movers
+
+
 def pagerank_dynamic_frontier_bsp(
     old, new, deletions, insertions, q: np.ndarray, opts: PagerankOptions | None = None
 ) -> PagerankResult:
-    from pagerank_cuda_dynamic_spark.operators.pagerank import (
-        _adjust_warm_start,
-        _frontier_marks,
-    )
+    """Dynamic Frontier on BSP.  `old` is unused: the marks are seeded from
+    the tidied batch (see _frontier_seeds); kept for the shared signature."""
+    from pagerank_cuda_dynamic_spark.operators.pagerank import _adjust_warm_start
 
-    opts = opts or PagerankOptions()
-    vaff = _frontier_marks(old, new, deletions, insertions)
+    vaff, movers = _frontier_seeds(deletions, insertions, new.n)
     return _bsp_loop(
-        new, opts, q=_adjust_warm_start(q, new.n), vaff0=vaff, expand=True
+        new, opts or PagerankOptions(), q=_adjust_warm_start(q, new.n),
+        vaff0=vaff, expand=True, movers0=movers,
     )
 
 
 def pagerank_dynamic_frontier_prune_bsp(
     old, new, deletions, insertions, q: np.ndarray, opts: PagerankOptions | None = None
 ) -> PagerankResult:
-    from pagerank_cuda_dynamic_spark.operators.pagerank import (
-        _adjust_warm_start,
-        _frontier_marks,
-    )
+    """Dynamic Frontier with Pruning on BSP; seeded like the DF entry."""
+    from pagerank_cuda_dynamic_spark.operators.pagerank import _adjust_warm_start
 
-    opts = opts or PagerankOptions()
-    vaff = _frontier_marks(old, new, deletions, insertions)
+    vaff, movers = _frontier_seeds(deletions, insertions, new.n)
     return _bsp_loop(
-        new,
-        opts,
-        q=_adjust_warm_start(q, new.n),
-        vaff0=vaff,
-        corrected=True,
-        expand=True,
-        prune=True,
+        new, opts or PagerankOptions(), q=_adjust_warm_start(q, new.n),
+        vaff0=vaff, corrected=True, expand=True, prune=True, movers0=movers,
     )
 
 

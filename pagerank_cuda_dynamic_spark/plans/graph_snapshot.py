@@ -5,15 +5,14 @@ The reference snapshots graphs by copy-construction before each batch
 is just: the deduped self-looped edge DF (cached, hash-partitioned by dst —
 the gather key of the pull update), the vertex count, and the out-degree
 side table (transposeWithDegree's vertex value, transpose.hxx:79–100).
+A fast-path with_batch child derives its edges lazily, see with_batch.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 import numpy as np
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from pagerank_cuda_dynamic_spark.operators.graph import (
     apply_batch,
@@ -21,21 +20,80 @@ from pagerank_cuda_dynamic_spark.operators.graph import (
 )
 
 
-@dataclass
 class GraphSnapshot:
     """edges: (src:long, dst:long), deduped, self-loop on every vertex,
-    repartitioned by dst and cached.  Dense id space [0, n)."""
+    cached.  Dense id space [0, n).  degrees: (v, outdeg), cached."""
 
-    edges: DataFrame
-    n: int
-    degrees: DataFrame
-    _outdeg_np: np.ndarray | None = field(default=None, repr=False)
-    _packed: DataFrame | None = field(default=None, repr=False)
-    _bsp_packed: tuple | None = field(default=None, repr=False)
-    _bsp_spill: str | None = field(default=None, repr=False)
-    # (parent, deletions, insertions) when this snapshot came from
-    # with_batch — lets bsp_packed() build an incremental delta pack
-    _delta: tuple | None = field(default=None, repr=False)
+    def __init__(
+        self, edges: DataFrame | None, n: int, degrees: DataFrame | None = None
+    ):
+        self._edges = edges  # None until a lazy with_batch child derives it
+        self.n = n
+        self._degrees = degrees
+        self._outdeg_np: np.ndarray | None = None
+        self._packed: DataFrame | None = None
+        self._bsp_packed: tuple | None = None
+        self._bsp_spill: str | None = None
+        # (parent, deletions, insertions) when this snapshot came from
+        # with_batch — bsp_packed() builds an incremental delta pack from
+        # it, and a fast-path child derives its edge set from the result
+        self._delta: tuple | None = None
+
+    @property
+    def edges(self) -> DataFrame:
+        if self._edges is None:
+            if self._delta is not None:
+                self._apply_delta()
+            if self._edges is None:
+                from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
+                    spill_edges,
+                )
+
+                e = spill_edges(SparkSession.active(), self._bsp_spill).persist()
+                # fills the cache in one job; count() takes three here
+                e.write.format("noop").mode("overwrite").save()
+                self._edges = e
+        return self._edges
+
+    @property
+    def degrees(self) -> DataFrame:
+        if self._degrees is None:
+            self._degrees = out_degrees(self.edges).persist()
+        return self._degrees
+
+    def _apply_delta(self) -> None:
+        """One shot: merge the batch into the parent's stripe spill
+        (delta_pack).  When delta_pack declines and the edge set is still
+        pending, derive it from the parent with a broadcast anti-join +
+        append instead — a narrow plan, valid for a TIDIED batch."""
+        from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
+            _scratch_dir,
+            delta_pack,
+        )
+
+        parent, deletions, insertions = self._delta
+        spill = _scratch_dir() + "_spill"
+        got = delta_pack(self, parent, deletions, insertions, spill_dir=spill)
+        self._delta = None  # the parent must not stay pinned
+        if got is not None:
+            self._bsp_spill, self._bsp_packed = spill, got
+        elif self._edges is None:
+            on = ["src", "dst"]
+            # (v,v) deletions are no-ops on the default path (build
+            # re-injects universal self-loops) — hold that here too
+            e = (
+                parent.edges.join(
+                    F.broadcast(
+                        deletions.select(on).where(F.col("src") != F.col("dst"))
+                    ),
+                    on,
+                    "left_anti",
+                )
+                .unionByName(insertions.select(on))
+                .persist()
+            )
+            e.count()
+            self._edges = e
 
     def bsp_packed(
         self,
@@ -59,17 +117,7 @@ class GraphSnapshot:
             # batch-derived snapshot + packed parent → incremental pack:
             # O(|batch| + touched stripes), no |E| shuffle (delta_pack's
             # docstring has the full design)
-            from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
-                _scratch_dir,
-                delta_pack,
-            )
-
-            spill = _scratch_dir() + "_spill"
-            got = delta_pack(self, *self._delta, spill_dir=spill)
-            self._delta = None  # one shot: parent ref must not pin memory
-            if got is not None:
-                self._bsp_spill = spill
-                self._bsp_packed = got
+            self._apply_delta()
         if self._bsp_packed is None:
             from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
                 _scratch_dir,
@@ -184,40 +232,36 @@ class GraphSnapshot:
 
         repartition=False is the dynamic-regime fast path and assumes a
         TIDIED batch (tidy_batch's contract: dels ⊆ E, ins ∩ E = ∅, ins
-        unique, n unchanged): the child edge set is then a NARROW plan —
-        broadcast anti-join + append, no dedup shuffle, no repartition.
-        Correct rows either way; only the physical dst-clustering differs,
-        and the BSP pack routes by its own key regardless."""
+        unique, n unchanged).  It runs no Spark job: bsp_packed() merges
+        the batch into the parent's stripe spill (delta_pack), and the
+        child's edges, on first access, are read back from its own spill —
+        or, when delta_pack declines, derived from the parent by a
+        broadcast anti-join + append.  Either way the parent must stay
+        cached until the child's pack or edges are first used; after that
+        the child no longer reads through it.  Correct rows either way;
+        only the physical dst-clustering differs, and the BSP pack routes
+        by its own key regardless."""
         new_n = n or self.n
         if repartition:
             new_edges = apply_batch(self.edges, deletions, insertions)
             child = GraphSnapshot.build(new_edges, n=new_n, self_loops=True)
         else:
-            assert new_n == self.n, "fast-path with_batch cannot grow the id space"
-            on = ["src", "dst"]
-            # (v,v) deletions are no-ops on the default path (build
-            # re-injects universal self-loops) — hold that here too
-            e = (
-                self.edges.join(
-                    F.broadcast(
-                        deletions.select(on).where(F.col("src") != F.col("dst"))
-                    ),
-                    on,
-                    "left_anti",
+            if new_n != self.n:
+                raise ValueError(
+                    f"fast-path with_batch cannot grow the id space "
+                    f"({self.n} -> {new_n}); use repartition=True"
                 )
-                .unionByName(insertions.select(on))
-                .persist()
-            )
-            e.count()
-            child = GraphSnapshot(edges=e, n=new_n, degrees=out_degrees(e).persist())
+            child = GraphSnapshot(None, new_n)
         child._delta = (self, deletions, insertions)
         return child
 
     def unpersist(self) -> None:
         import shutil
 
-        self.edges.unpersist()
-        self.degrees.unpersist()
+        self._delta = None
+        for df in (self._edges, self._degrees):
+            if df is not None:
+                df.unpersist()
         if self._packed is not None:
             self._packed.unpersist()
             self._packed = None

@@ -5,7 +5,9 @@ iteration metrics, so a killed job resumes mid-convergence).
 Storage: two backends behind one contract —
   * Parquet snapshot directories (`<root>/iter=<l>/`) — the Iceberg table
     contract (immutable snapshot per commit, latest wins) without needing
-    Iceberg jars; the sandbox default.
+    Iceberg jars; the sandbox default.  The ranks are already a NumPy
+    array on the driver, so these are written and read with pyarrow: no
+    Spark job.  load() also reads directories that Spark wrote.
   * A real Iceberg catalog (`catalog=` or auto-detected from
     `spark.sql.catalog.<name> = …iceberg…` conf) — `writeTo(...).append()`
     per superstep into iter-keyed tables; Iceberg's snapshot commit replaces
@@ -23,12 +25,37 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
+
+
+def _write_parquet(path: str, columns: dict) -> None:
+    """One Parquet file under directory `path`.  Dictionary encoding only
+    on the stripe id `part` and no stored Arrow schema: that keeps the
+    files as small as Spark's writer made them."""
+    os.makedirs(path)
+    pq.write_table(
+        pa.table(columns),
+        os.path.join(path, "part-00000.parquet"),
+        use_dictionary=["part"] if "part" in columns else False,
+        store_schema=False,
+    )
+
+
+def _read_bitmap(path: str, n: int) -> np.ndarray | None:
+    """Sparse id set under directory `path` as a dense bitmap, or None."""
+    if not os.path.isdir(path):
+        return None
+    out = np.zeros(n, dtype=bool)
+    out[pq.read_table(path, columns=["v"])["v"].to_numpy()] = True
+    return out
 
 
 def detect_iceberg_catalog(spark: SparkSession) -> str | None:
@@ -108,9 +135,11 @@ class CheckpointManager:
         if bounds is None:
             bounds = np.array([0, n], dtype=np.int64)
         part = np.searchsorted(bounds, np.arange(n), side="right") - 1
-        pdf = pd.DataFrame(
-            {"v": np.arange(n, dtype=np.int64), "rank": ranks, "part": part.astype(np.int32)}
-        )
+        cols = {
+            "v": np.arange(n, dtype=np.int64),
+            "rank": np.asarray(ranks, dtype=np.float64),
+            "part": part.astype(np.int32),
+        }
         meta = {
             "iteration": l,
             "linf_residual": el,
@@ -122,25 +151,24 @@ class CheckpointManager:
         }
         meta.update(extra or {})
         if self.catalog:
-            self._save_iceberg(l, pdf, vaff, movers, meta)
+            self._save_iceberg(l, pd.DataFrame(cols), vaff, movers, meta)
             return
         d = self._iter_dir(l)
         tmp = d + ".tmp"
-        self.spark.createDataFrame(pdf).repartition(1, "part").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(tmp, "ranks"))
+        shutil.rmtree(tmp, ignore_errors=True)  # a crashed earlier attempt
+        _write_parquet(os.path.join(tmp, "ranks"), cols)
         if vaff is not None and vaff.any():
-            fr = pd.DataFrame({"v": np.flatnonzero(vaff).astype(np.int64)})
-            self.spark.createDataFrame(fr).write.mode("overwrite").parquet(
-                os.path.join(tmp, "frontier")
+            _write_parquet(
+                os.path.join(tmp, "frontier"),
+                {"v": np.flatnonzero(vaff).astype(np.int64)},
             )
         if movers is not None and movers.any():
             # pending out-neighbor expansion of the last pre-kill iteration
             # (DF/DF-P): without it a resumed run under-marks affected
             # vertices and can converge to different ranks
-            mv = pd.DataFrame({"v": np.flatnonzero(movers).astype(np.int64)})
-            self.spark.createDataFrame(mv).write.mode("overwrite").parquet(
-                os.path.join(tmp, "movers")
+            _write_parquet(
+                os.path.join(tmp, "movers"),
+                {"v": np.flatnonzero(movers).astype(np.int64)},
             )
         with open(os.path.join(tmp, "metrics.json"), "w") as fh:
             json.dump(meta, fh)
@@ -193,23 +221,15 @@ class CheckpointManager:
         if self.catalog:
             return self._load_iceberg(l)
         d = self._iter_dir(l)
-        pdf = self.spark.read.parquet(os.path.join(d, "ranks")).toPandas()
-        meta = json.load(open(os.path.join(d, "metrics.json")))
+        with open(os.path.join(d, "metrics.json")) as fh:
+            meta = json.load(fh)
         n = meta["n_vertices"]
+        # pyarrow's directory read skips Spark's _SUCCESS and .crc files
+        tbl = pq.read_table(os.path.join(d, "ranks"), columns=["v", "rank"])
         ranks = np.zeros(n, dtype=np.float64)
-        ranks[pdf["v"].to_numpy()] = pdf["rank"].to_numpy()
-        vaff = None
-        fdir = os.path.join(d, "frontier")
-        if os.path.isdir(fdir):
-            fr = self.spark.read.parquet(fdir).toPandas()
-            vaff = np.zeros(n, dtype=bool)
-            vaff[fr["v"].to_numpy()] = True
-        movers = None
-        mdir = os.path.join(d, "movers")
-        if os.path.isdir(mdir):
-            mv = self.spark.read.parquet(mdir).toPandas()
-            movers = np.zeros(n, dtype=bool)
-            movers[mv["v"].to_numpy()] = True
+        ranks[tbl["v"].to_numpy()] = tbl["rank"].to_numpy()
+        vaff = _read_bitmap(os.path.join(d, "frontier"), n)
+        movers = _read_bitmap(os.path.join(d, "movers"), n)
         return l, ranks, vaff, movers, meta
 
     def _load_iceberg(self, l: int):

@@ -21,7 +21,6 @@ from pagerank_cuda_dynamic_spark.operators.graph import tidy_batch
 from pagerank_cuda_dynamic_spark.operators.pagerank import (
     PagerankOptions,
     PagerankResult,
-    _frontier_marks,
 )
 from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import _bsp_loop
 from pagerank_cuda_dynamic_spark.plans.graph_snapshot import GraphSnapshot
@@ -158,11 +157,10 @@ def run_temporal_batches(
         )
         empty = ins_raw.limit(0)
         dels, ins = tidy_batch(g.edges, empty, ins_raw)
-        # materialize the tidied batch once (its plan probes |E|) and take
-        # the fast-path child: delta pack + narrow edge set, no |E| shuffle
-        ins = edges_seq.sparkSession.createDataFrame(
-            ins.toPandas(), schema="src long, dst long"
-        )
+        # materialize the tidied batch once and cut its lineage (its plan
+        # probes |E|), then take the fast-path child: delta pack, no |E|
+        # shuffle
+        dels, ins = dels.localCheckpoint(), ins.localCheckpoint()
         g2 = g.with_batch(dels, ins, repartition=False)
         t0 = time.time()
         if technique == "static":

@@ -158,3 +158,169 @@ def test_mover_bitmap_path_bit_equals_idlist_path(bsp_batch_setup, monkeypatch):
         a, b = runs["0"][i], runs["1"][i]
         assert a.iterations == b.iterations
         assert np.array_equal(a.ranks, b.ranks)  # bit-equal, not allclose
+
+
+def _count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran), read from the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _keys(pdf: pd.DataFrame, n: int) -> np.ndarray:
+    return pdf["src"].to_numpy(np.int64) * n + pdf["dst"].to_numpy(np.int64)
+
+
+def test_df_seeding_bit_equals_frontier_marks(spark):
+    """DF and DF-P seed their marks from the tidied batch and let the
+    loop's iteration-0 mover expansion finish them.  That must reproduce
+    the reference marking (_frontier_marks' old/new-graph out-neighbour
+    scans) exactly: same initial affected count, iterations, final
+    frontier and bit-equal ranks.  The batch has salted-hub dsts, a (v,v)
+    deletion, and a source with both a deletion and an insertion.  The
+    fast-path with_batch runs no Spark job, and the child's edges, read
+    back from its spill, are exactly the apply_batch edge set."""
+    from pagerank_cuda_dynamic_spark.operators.pagerank import (
+        PagerankOptions,
+        _frontier_marks,
+    )
+    from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import _bsp_loop
+
+    rng = np.random.default_rng(41)
+    n = 600
+    src = rng.integers(0, n, 6000)
+    dst = (rng.zipf(1.3, 6000) % n).astype(np.int64)
+    keep = src != dst
+    src, dst = src[keep], dst[keep]
+    g0 = GraphSnapshot.build(edges_df(spark, src, dst), n=n)
+    _, _, _, hubs = g0.bsp_packed(hub_factor=0.3)
+    assert hubs.size > 0, "test graph must exercise the salted-hub route"
+    base = pagerank_static_bsp(g0).ranks
+    existing = set(zip(src.tolist(), dst.tolist()))
+    u = int(src[0])
+    fresh = next(v for v in range(n) if v != u and (u, v) not in existing)
+    del_pdf = pd.DataFrame(
+        {
+            "src": np.concatenate([[u, 7], src[1:30]]),
+            "dst": np.concatenate([[dst[0], 7], dst[1:30]]),
+        }
+    )
+    ins_pdf = pd.DataFrame(
+        {
+            "src": np.concatenate([[u], rng.integers(0, n, 40)]),
+            "dst": np.concatenate([[fresh], np.resize(hubs, 20), rng.integers(0, n, 20)]),
+        }
+    )
+    dels, ins = tidy_batch(
+        g0.edges, spark.createDataFrame(del_pdf), spark.createDataFrame(ins_pdf)
+    )
+    dels, ins = dels.localCheckpoint(), ins.localCheckpoint()
+    d_pdf, i_pdf = dels.toPandas(), ins.toPandas()
+    assert ((d_pdf.src == 7) & (d_pdf.dst == 7)).any()
+    assert (d_pdf.src == u).any() and (i_pdf.src == u).any()
+
+    g1, jobs = _count_jobs(spark, lambda: g0.with_batch(dels, ins, repartition=False))
+    assert jobs == 0
+    g1.bsp_packed()
+    vaff_ref = _frontier_marks(g0, g1, dels, ins)
+    opts = PagerankOptions()
+    modes = {
+        "df": (pagerank_dynamic_frontier_bsp, {"expand": True}),
+        "dfp": (
+            pagerank_dynamic_frontier_prune_bsp,
+            {"expand": True, "prune": True, "corrected": True},
+        ),
+    }
+    for name, (entry, flags) in modes.items():
+        got = entry(g0, g1, dels, ins, base, opts)
+        want = _bsp_loop(g1, opts, q=base, vaff0=vaff_ref, **flags)
+        assert got.affected_initial == want.affected_initial == int(vaff_ref.sum()), name
+        assert got.iterations == want.iterations, name
+        assert np.array_equal(got.state["vaff"], want.state["vaff"]), name
+        assert np.array_equal(got.ranks, want.ranks), name
+
+    full = g0.with_batch(dels, ins)  # apply_batch + universal self-loops
+    a = g1.edges.toPandas().sort_values(["src", "dst"]).reset_index(drop=True)
+    b = full.edges.toPandas().sort_values(["src", "dst"]).reset_index(drop=True)
+    assert a.equals(b)
+    for x in (g0, g1, full):
+        x.unpersist()
+
+
+def test_fast_path_rejects_bad_batches(spark):
+    """The fast path rejects, with a ValueError, a grown id space and
+    batch edges outside [0, n) (these used to be an assert and a silent
+    misroute into the last stripe)."""
+    n = 50
+    rng = np.random.default_rng(3)
+    g0 = GraphSnapshot.build(
+        edges_df(spark, rng.integers(0, n, 200), rng.integers(0, n, 200)), n=n
+    )
+    g0.bsp_packed()
+    empty = spark.createDataFrame(
+        pd.DataFrame({"src": [], "dst": []}).astype("int64"),
+        schema="src long, dst long",
+    )
+    with pytest.raises(ValueError, match="id space"):
+        g0.with_batch(empty, empty, n=n + 5, repartition=False)
+    bad = spark.createDataFrame(
+        pd.DataFrame({"src": [1, 2, 3], "dst": [n, 4, n + 7]}),
+        schema="src long, dst long",
+    )
+    g1 = g0.with_batch(empty, bad, repartition=False)
+    with pytest.raises(ValueError, match=r"2 edge\(s\) with a vertex id outside \[0, 50\)"):
+        g1.bsp_packed()
+    g0.unpersist()
+
+
+def test_carried_stream_flat_jobs_and_oracle(spark):
+    """A long carried stream on the fast path: each batch is applied to
+    the previous child, ranked by DF-P from the previous ranks, and the
+    parent is released; the child's edges are then read back from its own
+    spill.  On every batch the edge set equals the NumPy one exactly and
+    the ranks match the NumPy oracle to 1e-6, and the Spark jobs per batch
+    stay flat — nothing re-derives through released parents.  Batches are
+    tidied in NumPy to keep the test short (tidy_batch on a carried
+    snapshot is covered by test_streaming)."""
+    from .oracle import add_self_loops_np, pagerank_numpy
+
+    rng = np.random.default_rng(23)
+    n, n_batches = 120, 30
+    src = rng.integers(0, n, 600)
+    dst = rng.integers(0, n, 600)
+    keep = src != dst
+    keys = np.unique(src[keep] * n + dst[keep])
+    g = GraphSnapshot.build(edges_df(spark, keys // n, keys % n), n=n)
+    ranks = pagerank_static_bsp(g).ranks
+    jobs = []
+    for _ in range(n_batches):
+        del_keys = np.unique(keys[rng.integers(0, keys.size, 3)])
+        ins_keys = np.unique(rng.integers(0, n, 8) * n + rng.integers(0, n, 8))
+        ins_keys = ins_keys[(ins_keys // n != ins_keys % n) & ~np.isin(ins_keys, keys)]
+        dels = edges_df(spark, del_keys // n, del_keys % n)
+        ins = edges_df(spark, ins_keys // n, ins_keys % n)
+
+        def batch():
+            g2 = g.with_batch(dels, ins, repartition=False)
+            res = pagerank_dynamic_frontier_prune_bsp(g, g2, dels, ins, ranks)
+            g.unpersist()
+            return g2, res, g2.edges.toPandas()
+
+        (g, res, got), k = _count_jobs(spark, batch)
+        jobs.append(k)
+        ranks = res.ranks
+        keys = np.union1d(np.setdiff1d(keys, del_keys), ins_keys)
+        s_, d_ = add_self_loops_np(n, keys // n, keys % n)
+        assert np.array_equal(np.sort(_keys(got, n)), s_ * n + d_)
+        want, _ = pagerank_numpy(n, s_, d_)
+        assert np.abs(ranks - want).max() <= 1e-6
+    g.unpersist()
+    assert np.mean(jobs[-5:]) <= np.mean(jobs[:5]), jobs
+

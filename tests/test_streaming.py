@@ -128,3 +128,54 @@ def test_kill_and_resume_iceberg_mode(spark):
     assert got is not None
     l, ranks, vaff2, movers, meta = got
     assert l == 0 and np.allclose(ranks, r) and vaff2[3] and vaff2[7]
+
+
+def test_checkpoint_save_runs_no_spark_job_and_reads_back(spark, tmp_path):
+    """The Parquet backend writes with pyarrow on the driver (0 Spark
+    jobs, same ranks/frontier/movers/metrics.json layout) and reads both
+    its own directories and ones the earlier Spark writer left, bit for
+    bit — a resume works across the upgrade."""
+    import json
+    import os
+    import uuid
+
+    rng = np.random.default_rng(5)
+    n = 1000
+    ranks = rng.random(n)
+    vaff = rng.random(n) < 0.1
+    movers = rng.random(n) < 0.05
+    bounds = np.array([0, 300, 700, n], dtype=np.int64)
+    cm = CheckpointManager(spark, str(tmp_path / "ck"), catalog=None)
+    sc = spark.sparkContext
+    group = f"ckpt-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        cm.save(4, ranks, vaff, 1e-3, 0.5, bounds=bounds, movers=movers)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert sorted(os.listdir(cm._iter_dir(4))) == [
+        "frontier", "metrics.json", "movers", "ranks",
+    ]
+
+    # the same state as the Spark writer laid it out
+    d = cm._iter_dir(7)
+    tmp = d + ".tmp"
+    part = (np.searchsorted(bounds, np.arange(n), side="right") - 1).astype(np.int32)
+    pdf = pd.DataFrame({"v": np.arange(n, dtype=np.int64), "rank": ranks, "part": part})
+    spark.createDataFrame(pdf).repartition(1, "part").write.parquet(
+        os.path.join(tmp, "ranks")
+    )
+    for name, bits in (("frontier", vaff), ("movers", movers)):
+        ids = pd.DataFrame({"v": np.flatnonzero(bits).astype(np.int64)})
+        spark.createDataFrame(ids).write.parquet(os.path.join(tmp, name))
+    with open(os.path.join(tmp, "metrics.json"), "w") as fh:
+        json.dump({"n_vertices": n, "iteration": 7}, fh)
+    os.rename(tmp, d)
+
+    for l in (4, 7):
+        got_l, got_r, got_v, got_m, meta = cm.load(l)
+        assert got_l == l and meta["n_vertices"] == n
+        assert np.array_equal(got_r, ranks)  # bit-exact
+        assert np.array_equal(got_v, vaff) and np.array_equal(got_m, movers)
+    assert cm.latest() == 7
