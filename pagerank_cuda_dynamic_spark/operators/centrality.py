@@ -163,10 +163,9 @@ def salsa(edges: DataFrame, iterations: int = 20) -> DataFrame:
     `hits` there is no normalization barrier at all: the whole run is
     one declarative chain of edge-keyed shuffles with zero driver
     traffic inside the loop (`hits` needs an L2-norm barrier per
-    half-step, though it too now folds the norm in as a lazy 1-row
-    crossJoin rather than a driver collect; PageRank needs the
-    dangling/teleport scalar).  Self-loops excluded as in `hits`.
-    Returns (v, auth, hub);
+    half-step: one double collected to the driver and folded back as a
+    literal; PageRank needs the dangling/teleport scalar).  Self-loops
+    excluded as in `hits`.  Returns (v, auth, hub);
     vertices with no in-edges have auth 0, no out-edges hub 0.
 
     Reference parity note: same gather shape as the rank pull of
@@ -378,6 +377,7 @@ def _ppr_multi(
     names = list(seed_sets)
     seed_frames = []
     tp = verts
+    validated = False
     try:
         for name, seeds in seed_sets.items():
             if seeds is None:
@@ -402,12 +402,13 @@ def _ppr_multi(
                 .withColumn(f"p_{name}", F.coalesce(F.col("_sp"), F.lit(0.0)))
                 .drop("_sp")
             )
-    except ValueError:
-        # rejected seed sets must not leak cached blocks in long-lived
-        # sessions (the n_verts == 0 branch above already unpersists)
-        for f in (verts, e, *seed_frames):
-            f.unpersist()
-        raise
+        validated = True
+    finally:
+        # rejected or failing seed sets must not leak cached blocks in
+        # long-lived sessions (the n_verts == 0 branch above already unpersists)
+        if not validated:
+            for f in (verts, e, *seed_frames):
+                f.unpersist()
     tp = tp.select("v", *[F.col(f"p_{c}") for c in names])
 
     P = damping
@@ -794,9 +795,12 @@ def absorption_probability(
         .distinct()
         .persist()
     )
-    n_verts = verts.count()
-    t = targets.toDF("v").distinct().persist()
+    cached = [e, verts]
+    validated = False
     try:
+        n_verts = verts.count()
+        t = targets.toDF("v").distinct().persist()
+        cached.append(t)
         n_targets = t.count()
         if n_targets == 0:
             raise ValueError("absorption_probability: targets must be non-empty")
@@ -806,10 +810,11 @@ def absorption_probability(
                 f"absorption_probability: {n_outside} target(s) not in the "
                 "vertex set"
             )
-    except ValueError:
-        for f in (e, verts, t):  # no cached-block leak on rejected targets
-            f.unpersist()
-        raise
+        validated = True
+    finally:
+        if not validated:  # no cached-block leak on rejected or failing targets
+            for f in cached:
+                f.unpersist()
     base = verts.join(
         F.broadcast(t.select("v", F.lit(True).alias("is_t"))), "v", "left"
     ).select("v", F.coalesce(F.col("is_t"), F.lit(False)).alias("is_t"))

@@ -1,10 +1,13 @@
-"""BSP-mode connected components and label propagation.
+"""BSP-mode connected components and label propagation in one Spark query.
 
-Same resident-stripe architecture as pagerank_bsp: one barrier job runs all
-label-propagation rounds; labels exchanged via double-buffered shared
-memmaps; round sync via flag-array spin.  One Spark-job-per-round (the
-mapInPandas kernels in operators/components.py) costs ~0.44 s/round of
-fixed overhead — the BSP loop pays it once.
+A `mapInPandas` emits every edge in both directions, `repartition(P, "dst")`
+gives each vertex's rows to one task, and a barrier `mapInPandas` runs all
+label rounds: two Spark jobs per call, where one job per round (the kernels
+in operators/components.py) costs ~0.44 s/round of fixed overhead.  Each
+task dedups its rows (`symmetrize`'s set semantics), builds a dst-CSR over
+the vertices it owns and scatters their labels into double-buffered shared
+memmaps; rounds sync via a flag-array spin.  A vertex with no edges is owned
+by no task and keeps its own id.
 
 CC semantics: iterative min-label to fixpoint over the symmetrized graph —
 component id = min vertex id (exact, matches components.connected_components_np).
@@ -21,66 +24,54 @@ import time
 import numpy as np
 from pyspark.sql import DataFrame
 
-from pagerank_cuda_dynamic_spark.operators.graph import symmetrize
-from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import _scratch_dir, bsp_pack
-from pagerank_cuda_dynamic_spark.plans.graph_snapshot import GraphSnapshot
+from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import _scratch_dir
 
 
-def _label_loop(graph: GraphSnapshot, mode: str, max_rounds: int) -> np.ndarray:
+def _label_loop(edges: DataFrame, n: int, mode: str, max_rounds: int) -> np.ndarray:
     """Shared BSP label loop.  mode='min' (CC) or 'mode' (LPA)."""
-    N = graph.n
-    # direct bsp_pack (row-stream mode): this loop reads the blob rows
-    # itself and runs exactly once per call, so the snapshot-level stripe
-    # spill (GraphSnapshot.bsp_packed) would add writes it never reads back
-    packed, bounds, n_stripes, hubs = bsp_pack(graph, hub_factor=float("inf"))
-    workdir = _scratch_dir()
-    os.makedirs(workdir, exist_ok=True)
-
-    def mm(name, shape, dtype, init=None):
-        arr = np.lib.format.open_memmap(
-            os.path.join(workdir, name), mode="w+", dtype=dtype, shape=shape
-        )
-        if init is not None:
-            arr[:] = init
-        arr.flush()
-        return arr
-
-    init = np.arange(N, dtype=np.int64)
-    mm("lab_0.npy", (N,), np.int64, init)
-    mm("lab_1.npy", (N,), np.int64, init)
-    mm("changed.npy", (max_rounds + 2, n_stripes), np.int64, 0)
-    flags = mm("flags.npy", (max_rounds + 2, n_stripes), np.uint8, 0)
-    flags[0, :] = 1
-    flags.flush()
-
-    wd = workdir
     use_min = mode == "min"
-    MAXR = max_rounds
+    # min-label converges within n rounds; LPA may 2-cycle up to its cap
+    MAXR = min(max_rounds, n) if use_min else max_rounds
+    P = edges.sparkSession.sparkContext.defaultParallelism
+    wd = _scratch_dir()
+
+    def mm(name, shape, dtype, init):
+        arr = np.lib.format.open_memmap(
+            os.path.join(wd, name), mode="w+", dtype=dtype, shape=shape
+        )
+        arr[:] = init
+        arr.flush()
+
+    def both_directions(it):
+        import pandas as _pd
+
+        for pdf in it:
+            rev = pdf.rename(columns={"src": "dst", "dst": "src"})
+            yield _pd.concat([pdf, rev], ignore_index=True)
 
     def loop(it):
         import numpy as _np
         import pandas as _pd
+        from pyspark import BarrierTaskContext
 
-        stripes = []
-        for row in it:
-            src = _np.frombuffer(
-                row["src_bin"], dtype=_np.int32 if row["src32"] else _np.int64
-            )
-            lo, hi = int(row["lo"]), int(row["hi"])
-            offsets = _np.frombuffer(row["offsets_bin"], dtype=_np.int64)
-            if offsets.size != (hi - lo) + 1:  # empty stub stripe
-                offsets = _np.zeros((hi - lo) + 1, dtype=_np.int64)
-            counts = (offsets[1:] - offsets[:-1]).astype(_np.int64)
-            ridx = _np.minimum(offsets[:-1], max(src.size - 1, 0))
-            empty = counts == 0
-            rowid = _np.repeat(_np.arange(hi - lo, dtype=_np.int64), counts)
-            stripes.append((int(row["stripe"]), lo, hi, src, ridx, empty, rowid))
+        pid = BarrierTaskContext.get().partitionId()
+        frames = list(it)
+        pdf = _pd.concat(frames) if frames else _pd.DataFrame({"src": [], "dst": []})
+        src = pdf["src"].to_numpy(_np.int64)
+        dst = pdf["dst"].to_numpy(_np.int64)
+        bad = int(((src < 0) | (src >= n) | (dst < 0) | (dst >= n)).sum())
+        if not bad and src.size:
+            key = _np.unique(dst * n + src)  # sorted by (dst, src): a dst-CSR
+            dst, src = key // n, key % n
+        own, starts = _np.unique(dst, return_index=True)
         labs = [
             _np.load(os.path.join(wd, "lab_0.npy"), mmap_mode="r+"),
             _np.load(os.path.join(wd, "lab_1.npy"), mmap_mode="r+"),
         ]
         ch_mm = _np.load(os.path.join(wd, "changed.npy"), mmap_mode="r+")
         flag_mm = _np.load(os.path.join(wd, "flags.npy"), mmap_mode="r+")
+        ch_mm[0, pid] = bad
+        flag_mm[0, pid] = 1
         deadline = time.time() + 3600
         l = 0
         while True:
@@ -88,68 +79,63 @@ def _label_loop(graph: GraphSnapshot, mode: str, max_rounds: int) -> np.ndarray:
                 if time.time() > deadline:
                     raise TimeoutError(f"BSP label sync timeout at round {l}")
                 time.sleep(0.0002)
-            if l > 0 and (int(ch_mm[l, :].sum()) == 0 or l >= MAXR):
-                break
-            if MAXR == 0:
+            if l == 0 and int(ch_mm[0, :].sum()):
+                break  # some task holds out-of-range ids
+            if l >= MAXR or (l > 0 and int(ch_mm[l, :].sum()) == 0):
                 break
             cur, nxt = l % 2, (l + 1) % 2
             lab = labs[cur]
-            for s, lo, hi, src, ridx, empty, rowid in stripes:
-                width = hi - lo
-                cur_slice = _np.array(lab[lo:hi])
-                new = cur_slice.copy()
-                if src.size:
-                    nl = lab[src]
-                    if use_min:
-                        mins = _np.minimum.reduceat(nl, ridx)
-                        mins[empty] = _np.iinfo(_np.int64).max
-                        new = _np.minimum(cur_slice, mins)
-                    else:
-                        pdf = _pd.DataFrame({"v": rowid, "lab": nl})
-                        counts_df = (
-                            pdf.groupby(["v", "lab"], sort=False)
-                            .size()
-                            .reset_index(name="c")
-                            .sort_values(["v", "c", "lab"], ascending=[True, False, True])
-                            .drop_duplicates("v", keep="first")
-                        )
-                        new[counts_df["v"].to_numpy()] = counts_df["lab"].to_numpy()
-                changed = int((new != cur_slice).sum())
-                labs[nxt][lo:hi] = new
-                ch_mm[l + 1, s] = changed
-                flag_mm[l + 1, s] = 1
+            old = lab[own]
+            nl = lab[src]
+            if use_min:
+                new = _np.minimum(old, _np.minimum.reduceat(nl, starts))
+            else:
+                new = (
+                    _pd.DataFrame({"v": dst, "lab": nl})
+                    .groupby(["v", "lab"], sort=False)
+                    .size()
+                    .reset_index(name="c")
+                    .sort_values(["v", "c", "lab"], ascending=[True, False, True])
+                    .drop_duplicates("v", keep="first")["lab"]
+                    .to_numpy(_np.int64)
+                )
+            labs[nxt][own] = new
+            ch_mm[l + 1, pid] = int((new != old).sum())
+            flag_mm[l + 1, pid] = 1
             l += 1
-        if any(st[0] == 0 for st in stripes):
-            yield l
-        else:
-            yield None
+        yield _pd.DataFrame({"rounds": [l]})
 
-    results = [x for x in packed.rdd.barrier().mapPartitions(loop).collect() if x is not None]
-    rounds = results[0]
-    out = np.array(np.load(os.path.join(workdir, f"lab_{rounds % 2}.npy"), mmap_mode="r"))
-    shutil.rmtree(workdir, ignore_errors=True)
-    packed.unpersist()
-    return out
-
-
-def _und_snapshot(edges: DataFrame, n: int) -> GraphSnapshot:
-    und = symmetrize(edges)
-    return GraphSnapshot.build(und, n=n, self_loops=False)
+    try:
+        os.makedirs(wd)
+        init = np.arange(n, dtype=np.int64)
+        mm("lab_0.npy", (n,), np.int64, init)
+        mm("lab_1.npy", (n,), np.int64, init)
+        # row 0 of changed.npy carries each task's count of out-of-range
+        # rows; row l + 1 the labels round l changed
+        mm("changed.npy", (MAXR + 2, P), np.int64, 0)
+        mm("flags.npy", (MAXR + 2, P), np.uint8, 0)
+        rows = (
+            edges.select("src", "dst")
+            .mapInPandas(both_directions, "src long, dst long")
+            .repartition(P, "dst")
+            .mapInPandas(loop, "rounds long", barrier=True)
+            .collect()
+        )
+        # an out-of-range edge arrives as two out-of-range rows
+        bad = int(np.load(os.path.join(wd, "changed.npy"), mmap_mode="r")[0, :].sum()) // 2
+        if bad:
+            raise ValueError(f"{bad} edge(s) have an id outside [0, {n})")
+        rounds = rows[0]["rounds"]  # every task, even an empty one, reports
+        return np.array(np.load(os.path.join(wd, f"lab_{rounds % 2}.npy"), mmap_mode="r"))
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
 
 
 def connected_components_bsp(edges: DataFrame, n: int, max_rounds: int = 10**6) -> np.ndarray:
     """Min-label propagation to fixpoint in one barrier job."""
-    g = _und_snapshot(edges, n)
-    try:
-        return _label_loop(g, "min", max_rounds)
-    finally:
-        g.unpersist()
+    return _label_loop(edges, n, "min", max_rounds)
 
 
 def label_propagation_bsp(edges: DataFrame, n: int, max_rounds: int = 20) -> np.ndarray:
     """Synchronous LPA (deterministic tie-break) in one barrier job."""
-    g = _und_snapshot(edges, n)
-    try:
-        return _label_loop(g, "mode", max_rounds)
-    finally:
-        g.unpersist()
+    return _label_loop(edges, n, "mode", max_rounds)

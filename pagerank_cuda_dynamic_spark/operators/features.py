@@ -28,6 +28,12 @@ from pyspark.sql import DataFrame
 
 from ..plans.barrier import broadcast_state, materialize
 
+# Widest uniform feature set that takes the packed-array hop, which
+# aggregates one avg column per dim (keeps codegen sane).  Wider sets fall
+# back to the relational hop, which moves |E|·d exploded rows through the
+# shuffle: same results, much slower.
+ARRAY_HOP_MAX_DIMS = 512
+
 
 def explode_features(feats: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """(id, array<float>) → relational (v, dim, val double); dim 0-based."""
@@ -60,7 +66,11 @@ def propagate_features(
     next hop — the operator propagates information, it does not invent
     it.  include_self=True is the GCN-renormalization analogue
     (self-loop added to every vertex) and keeps every featured vertex
-    alive."""
+    alive.
+
+    Every vertex carrying the same contiguous dims 0..d-1, with
+    d <= ARRAY_HOP_MAX_DIMS, takes the packed-array hop; anything else
+    (ragged, sparse or wider dim sets) takes the slower relational hop."""
     if hops < 0:
         raise ValueError("propagate_features: hops must be >= 0")
     e = edges.select("src", "dst").distinct()
@@ -114,7 +124,7 @@ def propagate_features(
         row["nv"] > 0
         and row["nd"] == 1
         and row["contiguous"] == 1
-        and row["d"] <= 512  # d avg columns per hop; keep codegen sane
+        and row["d"] <= ARRAY_HOP_MAX_DIMS
     )
     if uniform:
         x_arr = x_pack.select("v", F.col("pairs").getField("val").alias("x"))

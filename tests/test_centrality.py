@@ -443,3 +443,28 @@ def test_ppr_family_rejects_empty_graph(spark):
         personalized_pagerank(empty, seeds)
     with pytest.raises(ValueError, match="no vertices"):
         trustrank_spam_mass(empty, seeds)
+
+
+def test_ppr_and_absorption_unpersist_on_any_failure(spark):
+    """A seed / target frame that fails with something other than a
+    ValueError (here a Python UDF raising inside count()) must still
+    release the cached edge and vertex frames."""
+    from pyspark.sql import functions as F
+
+    from pagerank_cuda_dynamic_spark.operators.centrality import (
+        absorption_probability,
+    )
+
+    @F.udf("string")
+    def boom(x):
+        raise RuntimeError("boom")
+
+    bad = spark.range(1).select(boom("id").alias("v"))
+    e = _edges(spark, DIGRAPH)
+    jsc = spark.sparkContext._jsc
+    for fn in (personalized_pagerank, absorption_probability):
+        before = jsc.getPersistentRDDs().size()
+        with pytest.raises(Exception) as info:
+            fn(e, bad)
+        assert not isinstance(info.value, ValueError)
+        assert jsc.getPersistentRDDs().size() == before
