@@ -1,24 +1,44 @@
-"""Stripe-record packing helpers shared by the BSP pack, the stripe spill,
-and the delta-pack — kept in their own module so it can be registered for
-BY-VALUE cloudpickle serialization (pagerank_bsp does so at import).
+"""The stripe kernel and the barrier runtime shared by every BSP loop: the
+stripe record layout (pack, blob row, spill), the per-stripe NumPy gathers
+and rank update, the stripe router, and the memmap / flag-spin helpers.
 
-Why: Spark Python workers do not inherit the driver's runtime sys.path
-edits, so a worker-executed closure that references a module-level function
-of this package by REFERENCE dies with ModuleNotFoundError whenever the
-driver added the repo to sys.path at runtime (spark-submit from another
-cwd, the driver harness, notebooks).  By-value registration makes
-cloudpickle ship these functions' code with the closure instead.
+The memmap loop (pagerank_bsp._bsp_loop), the TCP ring
+(pagerank_tcp._tcp_loop) and the label loop (components_bsp._label_loop)
+keep only their exchange code and call these functions for the rest.
+
+The module registers itself for BY-VALUE cloudpickle serialization: Spark
+Python workers do not inherit the driver's runtime sys.path edits, so a
+worker-executed closure that references a module-level function of this
+package by REFERENCE dies with ModuleNotFoundError whenever the driver
+added the repo to sys.path at runtime (spark-submit from another cwd, the
+driver harness, notebooks).  By value, cloudpickle ships these functions'
+code with the closure instead.
 
 The stripe record layout is THE single source of truth for the BSP CSR:
 array dtypes carry the int32/int64 choice, so a record is self-describing
 whether it travels as a blob row (PACK_SCHEMA) or a spill file.
+
+A prepared stripe (prepare_stripe) covers dst rows [lo, hi): a dst-CSR of
+its regular in-edges (src, offsets), a hub-block CSR of the salted hub
+in-edges it holds over the full hub list (hsrc, hoff), src-sorted views of
+both for mover expansion (usrc/uoff/dstloc, husrc/huoff/hubcol), and the
+optional cache-blocked gather order (srcb/run_off/run_dst/rb_off).
 """
 
 from __future__ import annotations
 
 import os
+import pickle
+import sys
+import time
 
 import numpy as np
+from pyspark import cloudpickle
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+# a barrier loop that waits longer than this on its flags, in total, fails
+SYNC_DEADLINE_S = 3600
 
 
 def _pack_stripe_raw(
@@ -183,11 +203,238 @@ def _stub_pack_row(raw: dict) -> dict:
 def _spill_write(spill_dir: str, raw: dict) -> None:
     """Atomically persist one raw stripe record to the snapshot's spill
     (tmp + rename: barrier/pack task retries overwrite, never interleave)."""
-    import pickle
-
     os.makedirs(spill_dir, exist_ok=True)
     path = os.path.join(spill_dir, f"s{raw['s']}.pkl")
     tmp = f"{path}.tmp.{os.getpid()}"
     with open(tmp, "wb") as f:
         pickle.dump(raw, f, protocol=pickle.HIGHEST_PROTOCOL)
     os.replace(tmp, path)
+
+
+def _spill_read(spill_dir: str, s: int) -> dict:
+    """The raw record of stripe s from a spill written by _spill_write."""
+    with open(os.path.join(spill_dir, f"s{s}.pkl"), "rb") as f:
+        return pickle.load(f)
+
+
+def row_to_raw(row, n_hubs: int, weighted: bool) -> dict:
+    """Inverse of _raw_to_row: a PACK_SCHEMA blob row -> raw stripe record.
+    An empty stub row (_stub_pack_row) decodes to an edgeless stripe."""
+    lo, hi = int(row["lo"]), int(row["hi"])
+    src_t = np.int32 if row["src32"] else np.int64
+
+    def blob(col, dtype=np.int64):
+        return np.frombuffer(row[col], dtype=dtype)
+
+    def offs(col, size=1):  # a stub row ships no offsets
+        o = blob(col)
+        return o if o.size else np.zeros(size, np.int64)
+
+    return {
+        "s": int(row["stripe"]), "lo": lo, "hi": hi,
+        "src": blob("src_bin", src_t), "offsets": offs("offsets_bin", hi - lo + 1),
+        "usrc": blob("usrc_bin"), "uoff": offs("uoff_bin"),
+        "dstloc": blob("dstloc_bin", np.int32),
+        "hsrc": blob("hub_src_bin", np.int32 if row["hub_src32"] else np.int64),
+        "hoff": offs("hub_offsets_bin", n_hubs + 1),
+        "husrc": blob("husrc_bin"), "huoff": offs("huoff_bin"),
+        "hubcol": blob("hubcol_bin", np.int32),
+        "w_reg": blob("w_bin", np.float64) if weighted else None,
+        "w_hub": blob("hub_w_bin", np.float64) if weighted else None,
+        "srcb": blob("srcb_bin", src_t), "run_off": blob("runoff_bin"),
+        "run_dst": blob("rundst_bin", np.int32), "rb_off": blob("rboff_bin"),
+    }
+
+
+def _row_index(offsets: np.ndarray):
+    """(counts, ridx, empty) of a CSR: per-row edge counts, the start of
+    every NON-empty row, and the empty-row mask."""
+    counts = np.diff(offsets)
+    empty = counts == 0
+    return counts, offsets[:-1][~empty], empty
+
+
+def prepare_stripe(
+    raw: dict, hub_ids: np.ndarray, prune: bool = False, blocked: bool = True
+) -> dict:
+    """A raw record plus what the gathers and mover walks read: the row
+    index of the regular CSR (counts/ridx/empty) and of the hub block
+    (hcounts/hridx/hempty); with prune, the self-loop masks over both
+    src-sorted views (DF-P's expansion skips self-loops); the hub columns
+    homed in this stripe (own_cols) and their row offsets (own_offs).
+    blocked=False drops the blocked gather order (the dynamic loops gather
+    in row order)."""
+    st = dict(raw)
+    lo, hi = raw["lo"], raw["hi"]
+    st["counts"], st["ridx"], st["empty"] = _row_index(raw["offsets"])
+    st["hcounts"], st["hridx"], st["hempty"] = _row_index(raw["hoff"])
+    st["self_srcord"] = st["hself_srcord"] = None
+    if prune:
+        src_exp = np.repeat(raw["usrc"], np.diff(raw["uoff"]))
+        st["self_srcord"] = src_exp == raw["dstloc"].astype(np.int64) + lo
+        hsrc_exp = np.repeat(raw["husrc"], np.diff(raw["huoff"]))
+        st["hself_srcord"] = hsrc_exp == hub_ids[raw["hubcol"]]
+    st["own_cols"] = np.flatnonzero((hub_ids >= lo) & (hub_ids < hi))
+    st["own_offs"] = hub_ids[st["own_cols"]] - lo
+    if not blocked:
+        st["srcb"] = np.empty(0, np.int64)
+    return st
+
+
+def ragged_take(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Vectorized concatenation of ranges [starts[i], starts[i]+lens[i]).
+    starts/lens must have lens > 0."""
+    tot = int(lens.sum())
+    out = np.ones(tot, dtype=np.int64)
+    out[0] = starts[0]
+    pos = np.cumsum(lens)[:-1]
+    out[pos] = starts[1:] - (starts[:-1] + lens[:-1] - 1)
+    return np.cumsum(out)
+
+
+def csr_lookup(keys: np.ndarray, ukeys: np.ndarray, uoff: np.ndarray) -> np.ndarray:
+    """Positions (into the src-sorted edge array) of all edges whose src is
+    in keys; keys and ukeys sorted.  Returns int64 edge indices."""
+    if keys.size == 0 or ukeys.size == 0:
+        return np.empty(0, np.int64)
+    pos = np.searchsorted(ukeys, keys)
+    pos = np.minimum(pos, ukeys.size - 1)
+    ok = ukeys[pos] == keys
+    if not ok.any():
+        return np.empty(0, np.int64)
+    hit = pos[ok]
+    starts = uoff[hit]
+    return ragged_take(starts, uoff[hit + 1] - starts)
+
+
+def _reduce_rows(vals: np.ndarray, ridx: np.ndarray, empty: np.ndarray) -> np.ndarray:
+    """Per-row sums of vals over a CSR, 0 for empty rows.  Only non-empty
+    rows are reduced: np.add.reduceat over starts clipped into range would
+    cut the last edge off the last non-empty row before trailing empty
+    rows."""
+    if not empty.any():
+        return np.add.reduceat(vals, ridx)
+    out = np.zeros(empty.size)
+    if ridx.size:
+        out[~empty] = np.add.reduceat(vals, ridx)
+    return out
+
+
+def _slice_sums(rdiv, src, starts, lens) -> np.ndarray:
+    """Σ rdiv[src[e]] over each CSR slice [starts[i], starts[i] + lens[i]),
+    0 for an empty slice."""
+    out = np.zeros(lens.size)
+    nz = lens > 0
+    if nz.any():
+        eidx = ragged_take(starts[nz], lens[nz])
+        loc = np.concatenate([[0], np.cumsum(lens[nz])[:-1]]).astype(np.int64)
+        out[nz] = np.add.reduceat(rdiv[src[eidx]], loc)
+    return out
+
+
+def full_gather(st: dict, rdiv: np.ndarray) -> np.ndarray:
+    """Pull sums Σ w_uv·rdiv[u] of every row of a stripe's regular CSR, in
+    row order or, when the stripe carries one, in the cache-blocked order
+    (per-(block, dst) runs, then per-block adds onto unique rows; see
+    bsp_pack)."""
+    if st["srcb"].size:
+        partial = np.add.reduceat(rdiv[st["srcb"]], st["run_off"])
+        sums = np.zeros(st["hi"] - st["lo"])
+        rb, rd = st["rb_off"], st["run_dst"]
+        for bi in range(rb.size - 1):
+            sl = slice(rb[bi], rb[bi + 1])
+            sums[rd[sl]] += partial[sl]
+        return sums
+    vals = rdiv[st["src"]]
+    if st["w_reg"] is not None:
+        vals = vals * st["w_reg"]
+    return _reduce_rows(vals, st["ridx"], st["empty"])
+
+
+def affected_gather(st: dict, rdiv: np.ndarray, A: np.ndarray) -> np.ndarray:
+    """Pull sums of the rows A (sorted local offsets) of an unweighted
+    stripe: a ragged gather of their CSR slices, or the full-stripe gather
+    when they hold 60 % or more of the stripe's edges."""
+    lens = st["counts"][A]
+    tot = int(lens.sum())
+    if tot and tot >= 0.6 * st["src"].size:
+        return full_gather(st, rdiv)[A]
+    return _slice_sums(rdiv, st["src"], st["offsets"][A], lens)
+
+
+def hub_partials(st: dict, rdiv: np.ndarray, needed: np.ndarray | None = None):
+    """A stripe's salted partial sums per hub column, as (cols, part): over
+    every column (cols = slice(None)) when needed is None or the needed
+    columns hold 60 % or more of its hub edges, else over the needed
+    columns only (cols = needed; unweighted)."""
+    hsrc, hcounts = st["hsrc"], st["hcounts"]
+    if needed is None or int(hcounts[needed].sum()) >= 0.6 * hsrc.size:
+        vals = rdiv[hsrc]
+        if st["w_hub"] is not None:
+            vals = vals * st["w_hub"]
+        return slice(None), _reduce_rows(vals, st["hridx"], st["hempty"])
+    return needed, _slice_sums(rdiv, hsrc, st["hoff"][needed], hcounts[needed])
+
+
+def rank_update(
+    sums, r_old, deg, c0: float, damping: float, corrected: bool = False, rel: bool = False
+):
+    """The pull update of a set of rows from their gathered sums:
+    a = c0 + damping·sums, or DF-P's self-loop-corrected
+    a = (c0 + damping·(sums − r_old/deg)) / (1 − damping/deg) (deg: the
+    rows' out-degrees, read only when corrected).  Returns (a, el, rel):
+    el = max |r_old − a| (0 for no rows) and, when asked, the per-row
+    relative change rel = |r_old − a| / max(r_old, a) (else None)."""
+    if corrected:
+        a = (c0 + damping * (sums - r_old / deg)) / (1.0 - damping / deg)
+    else:
+        a = c0 + damping * sums
+    eu = np.abs(r_old - a)
+    el = float(eu.max()) if eu.size else 0.0
+    if rel:
+        return a, el, eu / np.maximum(np.maximum(r_old, a), 1e-300)
+    return a, el, None
+
+
+def stripe_of(
+    src: np.ndarray, dst: np.ndarray, interior: np.ndarray, hubs: np.ndarray, n_stripes: int
+) -> np.ndarray:
+    """Stripe of each edge: the stripe whose dst range holds dst (interior:
+    the stripe bounds without 0 and n), or src mod n_stripes (the salt)
+    when dst is a salted hub."""
+    stripe = np.searchsorted(interior, dst, side="right")
+    if hubs.size:
+        pos = np.searchsorted(hubs, dst)
+        is_h = (pos < hubs.size) & (hubs[np.minimum(pos, hubs.size - 1)] == dst)
+        stripe = np.where(is_h, src % n_stripes, stripe)
+    return stripe
+
+
+def mm_create(wd: str, name: str, shape, dtype, init=None) -> np.ndarray:
+    """Create the .npy memmap wd/name (zero-filled, or set to init)."""
+    arr = np.lib.format.open_memmap(
+        os.path.join(wd, name), mode="w+", dtype=dtype, shape=shape
+    )
+    if init is not None:
+        arr[:] = init
+    arr.flush()
+    return arr
+
+
+def mm_open(wd: str, name: str, mode: str = "r+") -> np.ndarray:
+    """Map the .npy memmap wd/name created by mm_create."""
+    return np.load(os.path.join(wd, name), mmap_mode=mode)
+
+
+def spin(flags: np.ndarray, row: int, deadline: float) -> None:
+    """Wait until every column of flags[row] is set: a ~0.5 ms hot window
+    (sub-µs sync when peers are close, the common case for short
+    supersteps), then 0.2 ms sleeps so laggard tasks keep the cores.
+    Raises TimeoutError past deadline (time.time() seconds)."""
+    n = 0
+    while not flags[row, :].all():
+        n += 1
+        if n > 300:
+            if time.time() > deadline:
+                raise TimeoutError(f"BSP flag sync timeout at row {row}")
+            time.sleep(0.0002)

@@ -6,8 +6,9 @@ label rounds: two Spark jobs per call, where one job per round (the kernels
 in operators/components.py) costs ~0.44 s/round of fixed overhead.  Each
 task dedups its rows (`symmetrize`'s set semantics), builds a dst-CSR over
 the vertices it owns and scatters their labels into double-buffered shared
-memmaps; rounds sync via a flag-array spin.  A vertex with no edges is owned
-by no task and keeps its own id.
+memmaps; rounds sync via a flag-array spin (the memmap and spin helpers are
+_stripe_pack's, shared with the PageRank loops).  A vertex with no edges is
+owned by no task and keeps its own id.
 
 CC semantics: iterative min-label to fixpoint over the symmetrized graph —
 component id = min vertex id (exact, matches components.connected_components_np).
@@ -24,6 +25,12 @@ import time
 import numpy as np
 from pyspark.sql import DataFrame
 
+from pagerank_cuda_dynamic_spark.operators._stripe_pack import (
+    SYNC_DEADLINE_S,
+    mm_create,
+    mm_open,
+    spin,
+)
 from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import _scratch_dir
 
 
@@ -34,13 +41,6 @@ def _label_loop(edges: DataFrame, n: int, mode: str, max_rounds: int) -> np.ndar
     MAXR = min(max_rounds, n) if use_min else max_rounds
     P = edges.sparkSession.sparkContext.defaultParallelism
     wd = _scratch_dir()
-
-    def mm(name, shape, dtype, init):
-        arr = np.lib.format.open_memmap(
-            os.path.join(wd, name), mode="w+", dtype=dtype, shape=shape
-        )
-        arr[:] = init
-        arr.flush()
 
     def both_directions(it):
         import pandas as _pd
@@ -64,21 +64,15 @@ def _label_loop(edges: DataFrame, n: int, mode: str, max_rounds: int) -> np.ndar
             key = _np.unique(dst * n + src)  # sorted by (dst, src): a dst-CSR
             dst, src = key // n, key % n
         own, starts = _np.unique(dst, return_index=True)
-        labs = [
-            _np.load(os.path.join(wd, "lab_0.npy"), mmap_mode="r+"),
-            _np.load(os.path.join(wd, "lab_1.npy"), mmap_mode="r+"),
-        ]
-        ch_mm = _np.load(os.path.join(wd, "changed.npy"), mmap_mode="r+")
-        flag_mm = _np.load(os.path.join(wd, "flags.npy"), mmap_mode="r+")
+        labs = [mm_open(wd, "lab_0.npy"), mm_open(wd, "lab_1.npy")]
+        ch_mm = mm_open(wd, "changed.npy")
+        flag_mm = mm_open(wd, "flags.npy")
         ch_mm[0, pid] = bad
         flag_mm[0, pid] = 1
-        deadline = time.time() + 3600
+        deadline = time.time() + SYNC_DEADLINE_S
         l = 0
         while True:
-            while not flag_mm[l, :].all():
-                if time.time() > deadline:
-                    raise TimeoutError(f"BSP label sync timeout at round {l}")
-                time.sleep(0.0002)
+            spin(flag_mm, l, deadline)
             if l == 0 and int(ch_mm[0, :].sum()):
                 break  # some task holds out-of-range ids
             if l >= MAXR or (l > 0 and int(ch_mm[l, :].sum()) == 0):
@@ -108,12 +102,12 @@ def _label_loop(edges: DataFrame, n: int, mode: str, max_rounds: int) -> np.ndar
     try:
         os.makedirs(wd)
         init = np.arange(n, dtype=np.int64)
-        mm("lab_0.npy", (n,), np.int64, init)
-        mm("lab_1.npy", (n,), np.int64, init)
+        mm_create(wd, "lab_0.npy", (n,), np.int64, init)
+        mm_create(wd, "lab_1.npy", (n,), np.int64, init)
         # row 0 of changed.npy carries each task's count of out-of-range
         # rows; row l + 1 the labels round l changed
-        mm("changed.npy", (MAXR + 2, P), np.int64, 0)
-        mm("flags.npy", (MAXR + 2, P), np.uint8, 0)
+        mm_create(wd, "changed.npy", (MAXR + 2, P), np.int64)
+        mm_create(wd, "flags.npy", (MAXR + 2, P), np.uint8)
         rows = (
             edges.select("src", "dst")
             .mapInPandas(both_directions, "src long, dst long")
@@ -122,11 +116,11 @@ def _label_loop(edges: DataFrame, n: int, mode: str, max_rounds: int) -> np.ndar
             .collect()
         )
         # an out-of-range edge arrives as two out-of-range rows
-        bad = int(np.load(os.path.join(wd, "changed.npy"), mmap_mode="r")[0, :].sum()) // 2
+        bad = int(mm_open(wd, "changed.npy", "r")[0, :].sum()) // 2
         if bad:
             raise ValueError(f"{bad} edge(s) have an id outside [0, {n})")
         rounds = rows[0]["rounds"]  # every task, even an empty one, reports
-        return np.array(np.load(os.path.join(wd, f"lab_{rounds % 2}.npy"), mmap_mode="r"))
+        return np.array(mm_open(wd, f"lab_{rounds % 2}.npy", "r"))
     finally:
         shutil.rmtree(wd, ignore_errors=True)
 

@@ -26,14 +26,18 @@ iteration (phase A), and the hub's home stripe combines the partials
 (thread- vs block-per-vertex at degree 64, pagerankCuda.hxx:470–481)
 re-expressed as a two-phase BSP exchange.
 
-O(affected) dynamic supersteps (round-2 rework): every stripe also packs a
-src-sorted copy of its edges with a unique-src CSR index, so marking the
-out-neighbors of rank movers costs O(Σ outdeg(movers) + |movers|·log U)
-instead of an O(E) in-edge gather (the reference's frontier expansion walks
-out-edge lists directly, pagerankCuda.hxx:96–117 / pagerank.hxx:700).
-Movers are exchanged as per-stripe id lists (segment + count), and salted
-hubs keep a shared `hubaff` bitmap so phase A computes partial sums only
-for hubs that are actually affected.
+Dynamic supersteps are O(affected): movers are exchanged as per-stripe id
+lists (segment + count) with a bitmap twin, each stripe extends its own
+frontier through the src-sorted view of its edges (the reference walks
+out-edge lists the same way, pagerankCuda.hxx:96–117), and salted hubs
+keep a shared `hubaff` bitmap so phase A sums only affected hubs.
+
+The per-stripe NumPy work — record decode, stripe preparation, the
+full-stripe and affected-set gathers, hub partials, the rank update, the
+stripe router — and the memmap / flag-spin helpers are one kernel in
+_stripe_pack, which the TCP ring (pagerank_tcp) and the label loop
+(components_bsp) call too.  This module owns the pack, the delta pack and
+the memmap exchange.
 
 Semantics identical to operators.pagerank mode="csr" (sync pull update,
 L∞ convergence, universal self-loops); cross-checked in tests to 1e-9.
@@ -63,22 +67,28 @@ from pagerank_cuda_dynamic_spark.operators.pagerank import (
     PagerankResult,
 )
 
-from pagerank_cuda_dynamic_spark.operators import _stripe_pack
+# worker closures call these by value (see _stripe_pack's docstring)
 from pagerank_cuda_dynamic_spark.operators._stripe_pack import (
+    SYNC_DEADLINE_S,
     _pack_stripe_raw,
     _raw_to_row,
+    _spill_read,
     _spill_write,
     _stripe_edges,
     _stub_pack_row,
+    affected_gather,
+    csr_lookup,
+    full_gather,
+    hub_partials,
+    mm_create,
+    mm_open,
+    prepare_stripe,
+    ragged_take,
+    rank_update,
+    row_to_raw,
+    spin,
+    stripe_of,
 )
-
-# Worker closures (pack_one, the delta merge) call these helpers; ship
-# their CODE with the closure instead of a module reference — Spark Python
-# workers do not see the driver's runtime sys.path edits (see
-# _stripe_pack's module docstring).
-from pyspark import cloudpickle as _cloudpickle
-
-_cloudpickle.register_pickle_by_value(_stripe_pack)
 
 PACK_SCHEMA = (
     "stripe int, lo long, hi long, "
@@ -320,17 +330,6 @@ def bsp_pack(
     interior_np = bounds[1:-1]
     ns_cap = n_stripes
 
-    def _stripe_of(src_np: np.ndarray, dst_np: np.ndarray) -> np.ndarray:
-        stripe = np.searchsorted(interior_np, dst_np, side="right")
-        hub_ids = bc_hubs.value
-        if hub_ids.size:
-            pos = np.searchsorted(hub_ids, dst_np)
-            is_h = (pos < hub_ids.size) & (
-                hub_ids[np.minimum(pos, hub_ids.size - 1)] == dst_np
-            )
-            stripe = np.where(is_h, src_np % ns_cap, stripe)
-        return stripe
-
     # Vectorized pandas route (one numpy searchsorted per batch).  A pure-
     # codegen route was tried in this round and measured SLOWER: a
     # log-depth CASE WHEN bisection tree over the ~n_stripes bounds costs
@@ -339,8 +338,9 @@ def bsp_pack(
     # fold ~20 s/pass — the Arrow route stays.
     @F.pandas_udf("long")
     def _route_key(src_s: pd.Series, dst_s: pd.Series) -> pd.Series:
-        stripe = _stripe_of(
-            src_s.to_numpy(dtype=np.int64), dst_s.to_numpy(dtype=np.int64)
+        stripe = stripe_of(
+            src_s.to_numpy(dtype=np.int64), dst_s.to_numpy(dtype=np.int64),
+            interior_np, bc_hubs.value, ns_cap,
         )
         return pd.Series(key_of_stripe[stripe])
 
@@ -375,7 +375,7 @@ def bsp_pack(
             src_all = pdf["src"].to_numpy(dtype=np.int64)
             dst_all = pdf["dst"].to_numpy(dtype=np.int64)
             w_all = pdf["w"].to_numpy(dtype=np.float64) if weighted else None
-            stripe = _stripe_of(src_all, dst_all)
+            stripe = stripe_of(src_all, dst_all, interior_np, bc_hubs.value, ns_cap)
             if not np.isin(stripe, own).all():
                 # the searchsorted slices below silently DROP edges whose
                 # stripe this partition does not own, so a divergence
@@ -494,21 +494,6 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
     N = int(child.n)
     interior = bounds[1:-1]
 
-    def _route(src, dst):
-        # intentional twin of bsp_pack's _stripe_of (closure-local there for
-        # worker serialization; a shared module-level helper would pickle
-        # by reference and break the spark-submit --py-files launch mode).
-        # Any edit must land in BOTH; divergence is pinned by
-        # tests/test_pagerank_bsp_dynamic.py::test_delta_pack_matches_full_pack
-        stripe = np.searchsorted(interior, dst, side="right")
-        if hubs.size:
-            pos = np.searchsorted(hubs, dst)
-            is_h = (pos < hubs.size) & (
-                hubs[np.minimum(pos, hubs.size - 1)] == dst
-            )
-            stripe = np.where(is_h, src % n_stripes, stripe)
-        return stripe
-
     d_src = dpdf["src"].to_numpy(np.int64)
     d_dst = dpdf["dst"].to_numpy(np.int64)
     i_src = ipdf["src"].to_numpy(np.int64)
@@ -529,8 +514,10 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
     # no-op there — match that semantics instead of removing the loop
     keep_d = d_src != d_dst
     d_src, d_dst = d_src[keep_d], d_dst[keep_d]
-    d_stripe = _route(d_src, d_dst)
-    i_stripe = _route(i_src, i_dst)
+    # bsp_pack's router over the parent's bounds and hubs: a batch edge
+    # lands in the stripe the full pack would have put it in
+    d_stripe = stripe_of(d_src, d_dst, interior, hubs, n_stripes)
+    i_stripe = stripe_of(i_src, i_dst, interior, hubs, n_stripes)
     d_key = d_src * N + d_dst
     i_key = i_src * N + i_dst
     PARENT, CHILD = pspill, spill_dir
@@ -538,7 +525,6 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
 
     def merge(it):
         import os as _os
-        import pickle as _pickle
         import shutil as _shutil
 
         import numpy as _np
@@ -563,8 +549,7 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
                     except OSError:
                         _shutil.copy(pp, cp)
                 continue
-            with open(pp, "rb") as fh:
-                raw = _pickle.load(fh)
+            raw = _spill_read(PARENT, s)
             lo, hi = int(raw["lo"]), int(raw["hi"])
             src_all, dst_all = _stripe_edges(raw, HUBS)
             key = src_all * NN + dst_all
@@ -625,13 +610,10 @@ def spill_edges(spark, spill_dir: str):
     hubs = np.asarray(meta["hubs"], dtype=np.int64)
 
     def read(batches):
-        import pickle as _pickle
-
         for pdf in batches:
             for pid in pdf["id"].to_numpy():
                 for s in range(int(pid), n_stripes, n_parts):
-                    with open(os.path.join(spill_dir, f"s{s}.pkl"), "rb") as fh:
-                        src, dst = _stripe_edges(_pickle.load(fh), hubs)
+                    src, dst = _stripe_edges(_spill_read(spill_dir, s), hubs)
                     yield pd.DataFrame({"src": src, "dst": dst})
 
     return (
@@ -641,15 +623,14 @@ def spill_edges(spark, spill_dir: str):
     )
 
 
-def _ragged_take(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Vectorized concatenation of ranges [starts[i], starts[i]+lens[i]).
-    starts/lens must have lens > 0."""
-    tot = int(lens.sum())
-    out = np.ones(tot, dtype=np.int64)
-    out[0] = starts[0]
-    pos = np.cumsum(lens)[:-1]
-    out[pos] = starts[1:] - (starts[:-1] + lens[:-1] - 1)
-    return np.cumsum(out)
+def _initial_ranks(q: np.ndarray | None, n: int) -> np.ndarray:
+    """The start vector: uniform 1/n, or the warm-start q (one per vertex)."""
+    if q is None:
+        return np.full(n, 1.0 / n)
+    r0 = np.asarray(q, dtype=np.float64)
+    if r0.shape != (n,):
+        raise ValueError(f"q has {r0.size} entries, the graph has {n} vertices")
+    return r0
 
 
 def _bsp_loop(
@@ -677,9 +658,11 @@ def _bsp_loop(
     vaff is task-local (a stripe's flags are only touched by its owner);
     movers (id segments + counts + a ping-pong bitmap twin — consumers
     pick the cheaper encoding per stripe), hub partials and `hubaff` are
-    the only cross-stripe state."""
+    the only cross-stripe state.  The per-stripe gathers and the update
+    are _stripe_pack's kernel; this function owns the memmap exchange."""
     t_all = time.time()
     N = graph.n
+    r0 = _initial_ranks(q, N)
     P_DAMP = opts.damping
     TOL = opts.tolerance
     MAXIT = opts.max_iterations
@@ -721,90 +704,15 @@ def _bsp_loop(
 
         with open(os.path.join(SPILL, "META.pkl"), "rb") as f:
             NPARTS = int(pickle.load(f)["n_parts"])
-    n_hubs = int(hubs.size)
+    HUBS = np.asarray(hubs, dtype=np.int64)
+    n_hubs = int(HUBS.size)
     outdeg = graph.outdeg_array()
     # Guard only the dangling zeros (their rdiv is never read): a plain
     # np.maximum(outdeg, 1.0) would silently clamp fractional *weighted*
     # out-degrees in (0, 1) and divide contributions by 1.0 instead of wdeg.
     safe_deg = np.where(outdeg > 0, outdeg, 1.0)
-    workdir = _scratch_dir()
-    os.makedirs(workdir, exist_ok=True)
-    r0 = np.full(N, 1.0 / N) if q is None else np.asarray(q, dtype=np.float64)
+    wd = _scratch_dir()
 
-    def mm(name, shape, dtype, init=None):
-        arr = np.lib.format.open_memmap(
-            os.path.join(workdir, name), mode="w+", dtype=dtype, shape=shape
-        )
-        if init is not None:
-            arr[:] = init
-        arr.flush()
-        return arr
-
-    mm("deg.npy", (N,), np.float64, safe_deg)
-    mm("hubs.npy", (max(n_hubs, 1),), np.int64, hubs if n_hubs else 0)
-    mm("rank_0.npy", (N,), np.float64, r0)
-    mm("rank_1.npy", (N,), np.float64, 0.0)
-    mm("rdiv_0.npy", (N,), np.float64, r0 / safe_deg)
-    # dynamic mode updates rdiv by write-set, so both buffers must start
-    # equal (unaffected entries are never rewritten)
-    mm("rdiv_1.npy", (N,), np.float64, r0 / safe_deg)
-    mm("el.npy", (MAXIT + 2, n_stripes), np.float64, 0.0)
-    if redistribute:
-        dang = outdeg == 0
-        mm("dang.npy", (N,), np.uint8, dang.astype(np.uint8))
-        dmass = mm("dmass.npy", (MAXIT + 2, n_stripes), np.float64, 0.0)
-        for s in range(n_stripes):
-            dmass[0, s] = float(r0[bounds[s]: bounds[s + 1]][dang[bounds[s]: bounds[s + 1]]].sum())
-        dmass.flush()
-    if n_hubs:
-        mm("hubpart_0.npy", (n_stripes, n_hubs), np.float64, 0.0)
-        mm("hubpart_1.npy", (n_stripes, n_hubs), np.float64, 0.0)
-        mm("flagsA.npy", (MAXIT + 2, n_stripes), np.uint8, 0)
-        if dynamic:
-            mm("hubaff.npy", (n_hubs,), np.uint8, vaff0[hubs].astype(np.uint8))
-        if dynamic and expand:
-            mm("flagsA0.npy", (MAXIT + 2, n_stripes), np.uint8, 0)
-    if dynamic:
-        mm("vaff.npy", (N,), np.uint8, vaff0.astype(np.uint8))
-        # per-stripe saturation flags (DF expand-without-prune only): once a
-        # stripe's whole slice is affected its bitmap can never change again
-        # (marking is monotone without pruning), so owners advertise
-        # saturation here and the mover machinery shuts itself off when
-        # every stripe has saturated — a dense-batch (1e-3·|E|) DF run then
-        # pays ND's per-superstep cost instead of a second edge walk
-        mm("sat.npy", (n_stripes,), np.uint8, 0)
-        # movers exchanged two ways, consumers pick per stripe by size:
-        # id lists (stripe s owns segment [bounds[s], bounds[s]+mcnt[row,s])
-        # of movers_ids_{row%2}) are cheap to WALK when the frontier is
-        # sparse (O(|M|·log|usrc|) searchsorted); the ping-pong BITMAP is
-        # cheap when it is dense (one O(|usrc|) byte gather, independent of
-        # |M|) — without it a dense-but-unsaturated 1e-3 frontier pays a
-        # near-|E| searchsorted walk per stripe per superstep plus a ×P
-        # duplicated O(|M|) id concat, which is what made full-size DF
-        # slower than a static recompute
-        mids0 = mm("movers_ids_0.npy", (N,), np.int64, 0)
-        mm("movers_ids_1.npy", (N,), np.int64, 0)
-        mbm0 = mm("movers_bm_0.npy", (N,), np.uint8, 0)
-        mm("movers_bm_1.npy", (N,), np.uint8, 0)
-        mcnt = mm("mcnt.npy", (MAXIT + 2, n_stripes), np.int64, 0)
-        # per-stripe |affected| after iteration 0's mover expansion: the
-        # initial affected set when marking is seeded through movers0
-        mm("aff0.npy", (n_stripes,), np.int64, 0)
-        if movers0 is not None and movers0.any():
-            for s in range(n_stripes):
-                lo, hi = int(bounds[s]), int(bounds[s + 1])
-                ids = np.flatnonzero(movers0[lo:hi]).astype(np.int64) + lo
-                mids0[lo: lo + ids.size] = ids
-                mcnt[0, s] = ids.size
-            mbm0[:] = movers0.astype(np.uint8)
-            mids0.flush()
-            mbm0.flush()
-            mcnt.flush()
-    flags = mm("flags.npy", (MAXIT + 2, n_stripes), np.uint8, 0)
-    flags[0, :] = 1
-    flags.flush()
-
-    wd = workdir
     dyn = dynamic
     do_expand = expand
     do_prune = prune
@@ -817,7 +725,6 @@ def _bsp_loop(
     REDIST = redistribute
     bounds_list = [int(b) for b in bounds]
 
-    PIN = bool(os.environ.get("SPARK_GRAFT_PIN_CORES"))
     # mover-walk strategy override: "" = auto (per-stripe by size),
     # "1" = force the bitmap gather, "0" = force the id-list walk.
     # Exists so the parity test can pin bitmap ≡ id-list bit-equality;
@@ -827,221 +734,49 @@ def _bsp_loop(
     def loop(it):
         import numpy as _np
 
-        if PIN:
-            # pin each resident worker to its own core (stride-spread when
-            # tasks < cores): removes scheduler migration + run-queue
-            # jitter — the superstep is a max over stripes, so one
-            # preempted worker stretches every superstep
-            try:
-                from pyspark import TaskContext as _TC
-
-                _pid = _TC.get().partitionId()
-                _ncpu = os.cpu_count() or 1
-                _stride = max(_ncpu // max(NSTRIPES, 1), 1)
-                os.sched_setaffinity(0, {(_pid * _stride) % _ncpu})
-            except Exception:
-                pass  # non-Linux or restricted: run unpinned
-
-        def ragged_take(starts, lens):
-            # local copy of _ragged_take: module-level refs would force
-            # workers to import this package (not on their sys.path when
-            # the driver added the repo to sys.path at runtime)
-            tot = int(lens.sum())
-            out = _np.ones(tot, dtype=_np.int64)
-            out[0] = starts[0]
-            pos = _np.cumsum(lens)[:-1]
-            out[pos] = starts[1:] - (starts[:-1] + lens[:-1] - 1)
-            return _np.cumsum(out)
-
-        def csr_lookup(keys, ukeys, uoff):
-            """positions (into the src-sorted edge array) of all edges whose
-            src ∈ keys; keys and ukeys sorted.  Returns int64 edge idx."""
-            if keys.size == 0 or ukeys.size == 0:
-                return _np.empty(0, _np.int64)
-            pos = _np.searchsorted(ukeys, keys)
-            pos = _np.minimum(pos, ukeys.size - 1)
-            ok = ukeys[pos] == keys
-            if not ok.any():
-                return _np.empty(0, _np.int64)
-            hit = pos[ok]
-            starts = uoff[hit]
-            lens = uoff[hit + 1] - starts
-            return ragged_take(starts, lens)
-
-        hub_ids = _np.load(os.path.join(wd, "hubs.npy"), mmap_mode="r") if NH else None
-        raws = []
         if SPILL is not None:
             # spill-load: stripe ownership is positional (s ≡ pid mod
             # NPARTS — the pack's round-robin blk_of rule), so the task
             # reconstructs its stripe set from its partition id alone and
             # reads raw records off the shared scratch
-            import pickle as _pickle
             from pyspark import TaskContext as _TC2
 
             for _ in it:
                 pass  # drain the skeleton partition
             _mypid = _TC2.get().partitionId()
-            for s2 in range(_mypid, NSTRIPES, NPARTS):
-                with open(os.path.join(SPILL, f"s{s2}.pkl"), "rb") as fh:
-                    raws.append(_pickle.load(fh))
+            raws = [_spill_read(SPILL, s2) for s2 in range(_mypid, NSTRIPES, NPARTS)]
         else:
-            for row in it:
-                lo, hi = int(row["lo"]), int(row["hi"])
-                width = hi - lo
-                offsets = _np.frombuffer(row["offsets_bin"], dtype=_np.int64)
-                if offsets.size != width + 1:  # empty stub stripe
-                    offsets = _np.zeros(width + 1, dtype=_np.int64)
-                uoff = _np.frombuffer(row["uoff_bin"], dtype=_np.int64)
-                if uoff.size == 0:
-                    uoff = _np.zeros(1, dtype=_np.int64)
-                hoff = (
-                    _np.frombuffer(row["hub_offsets_bin"], dtype=_np.int64)
-                    if NH
-                    else _np.zeros(1, _np.int64)
-                )
-                if NH and hoff.size != NH + 1:
-                    hoff = _np.zeros(NH + 1, dtype=_np.int64)
-                huoff = _np.frombuffer(row["huoff_bin"], dtype=_np.int64)
-                if huoff.size == 0:
-                    huoff = _np.zeros(1, dtype=_np.int64)
-                raws.append(
-                    {
-                        "s": int(row["stripe"]), "lo": lo, "hi": hi,
-                        "src": _np.frombuffer(
-                            row["src_bin"],
-                            dtype=_np.int32 if row["src32"] else _np.int64,
-                        ),
-                        "offsets": offsets,
-                        "usrc": _np.frombuffer(row["usrc_bin"], dtype=_np.int64),
-                        "uoff": uoff,
-                        "dstloc": _np.frombuffer(row["dstloc_bin"], dtype=_np.int32),
-                        "hsrc": _np.frombuffer(
-                            row["hub_src_bin"],
-                            dtype=_np.int32 if row["hub_src32"] else _np.int64,
-                        ),
-                        "hoff": hoff,
-                        "husrc": _np.frombuffer(row["husrc_bin"], dtype=_np.int64),
-                        "huoff": huoff,
-                        "hubcol": _np.frombuffer(row["hubcol_bin"], dtype=_np.int32),
-                        "w_reg": _np.frombuffer(row["w_bin"], dtype=_np.float64)
-                        if WEIGHTED
-                        else None,
-                        "w_hub": _np.frombuffer(row["hub_w_bin"], dtype=_np.float64)
-                        if WEIGHTED
-                        else None,
-                        "srcb": _np.frombuffer(
-                            row["srcb_bin"],
-                            dtype=_np.int32 if row["src32"] else _np.int64,
-                        ),
-                        "run_off": _np.frombuffer(row["runoff_bin"], dtype=_np.int64),
-                        "run_dst": _np.frombuffer(row["rundst_bin"], dtype=_np.int32),
-                        "rb_off": _np.frombuffer(row["rboff_bin"], dtype=_np.int64),
-                    }
-                )
-        stripes = []
-        for raw in raws:
-            lo, hi = int(raw["lo"]), int(raw["hi"])
-            src, offsets = raw["src"], raw["offsets"]
-            counts = (offsets[1:] - offsets[:-1]).astype(_np.int64)
-            ridx = _np.minimum(offsets[:-1], max(src.size - 1, 0))
-            empty = counts == 0
-            usrc, uoff, dstloc = raw["usrc"], raw["uoff"], raw["dstloc"]
-            self_srcord = None
-            if do_prune and dstloc.size:
-                srcs_exp = _np.repeat(usrc, (uoff[1:] - uoff[:-1]))
-                self_srcord = srcs_exp == (dstloc.astype(_np.int64) + lo)
-            # hub block (salted in-edges this stripe holds, over all hubs)
-            hsrc, hoff = raw["hsrc"], raw["hoff"]
-            hcounts = (hoff[1:] - hoff[:-1]).astype(_np.int64) if NH else None
-            hridx = _np.minimum(hoff[:-1], max(hsrc.size - 1, 0)) if NH else None
-            hempty = hcounts == 0 if NH else None
-            husrc, huoff, hubcol = raw["husrc"], raw["huoff"], raw["hubcol"]
-            hself_srcord = None
-            if do_prune and NH and hubcol.size:
-                hsrcs_exp = _np.repeat(husrc, (huoff[1:] - huoff[:-1]))
-                hself_srcord = hsrcs_exp == _np.asarray(hub_ids)[hubcol]
-            # hubs homed in this stripe (owner combines partials)
-            own_cols = (
-                _np.flatnonzero((_np.asarray(hub_ids) >= lo) & (_np.asarray(hub_ids) < hi))
-                if NH
-                else _np.empty(0, _np.int64)
-            )
-            own_offs = _np.asarray(hub_ids)[own_cols] - lo if NH else None
-            stripes.append(
-                {
-                    "s": int(raw["s"]), "lo": lo, "hi": hi,
-                    "src": src, "offsets": offsets, "counts": counts,
-                    "ridx": ridx, "empty": empty,
-                    "usrc": usrc, "uoff": uoff, "dstloc": dstloc,
-                    "self_srcord": self_srcord,
-                    "hsrc": hsrc, "hoff": hoff, "hcounts": hcounts,
-                    "hridx": hridx, "hempty": hempty,
-                    "husrc": husrc, "huoff": huoff, "hubcol": hubcol,
-                    "hself_srcord": hself_srcord,
-                    "w_reg": raw["w_reg"] if WEIGHTED else None,
-                    "w_hub": raw["w_hub"] if WEIGHTED else None,
-                    "srcb": raw["srcb"], "run_off": raw["run_off"],
-                    "run_dst": raw["run_dst"], "rb_off": raw["rb_off"],
-                    "own_cols": own_cols, "own_offs": own_offs,
-                }
-            )
+            raws = [row_to_raw(row, NH, WEIGHTED) for row in it]
+        stripes = [prepare_stripe(raw, HUBS, do_prune, blocked=not dyn) for raw in raws]
         del raws
-        deg = _np.load(os.path.join(wd, "deg.npy"), mmap_mode="r")
-        ranks = [
-            _np.load(os.path.join(wd, "rank_0.npy"), mmap_mode="r+"),
-            _np.load(os.path.join(wd, "rank_1.npy"), mmap_mode="r+"),
-        ]
-        rdivs = [
-            _np.load(os.path.join(wd, "rdiv_0.npy"), mmap_mode="r+"),
-            _np.load(os.path.join(wd, "rdiv_1.npy"), mmap_mode="r+"),
-        ]
-        el_mm = _np.load(os.path.join(wd, "el.npy"), mmap_mode="r+")
-        flag_mm = _np.load(os.path.join(wd, "flags.npy"), mmap_mode="r+")
+        deg = mm_open(wd, "deg.npy", "r")
+        ranks = [mm_open(wd, "rank_0.npy"), mm_open(wd, "rank_1.npy")]
+        rdivs = [mm_open(wd, "rdiv_0.npy"), mm_open(wd, "rdiv_1.npy")]
+        el_mm = mm_open(wd, "el.npy")
+        flag_mm = mm_open(wd, "flags.npy")
         if REDIST:
-            dang_mm = _np.load(os.path.join(wd, "dang.npy"), mmap_mode="r")
-            dmass_mm = _np.load(os.path.join(wd, "dmass.npy"), mmap_mode="r+")
+            dang_mm = mm_open(wd, "dang.npy", "r")
+            dmass_mm = mm_open(wd, "dmass.npy")
             dang_slices = {st["s"]: _np.asarray(dang_mm[st["lo"]: st["hi"]]).astype(bool) for st in stripes}
         if NH:
-            hubparts = [
-                _np.load(os.path.join(wd, "hubpart_0.npy"), mmap_mode="r+"),
-                _np.load(os.path.join(wd, "hubpart_1.npy"), mmap_mode="r+"),
-            ]
-            flagA_mm = _np.load(os.path.join(wd, "flagsA.npy"), mmap_mode="r+")
+            hubparts = [mm_open(wd, "hubpart_0.npy"), mm_open(wd, "hubpart_1.npy")]
+            flagA_mm = mm_open(wd, "flagsA.npy")
             if dyn:
-                hubaff_mm = _np.load(os.path.join(wd, "hubaff.npy"), mmap_mode="r+")
+                hubaff_mm = mm_open(wd, "hubaff.npy")
             if dyn and do_expand:
-                flagA0_mm = _np.load(os.path.join(wd, "flagsA0.npy"), mmap_mode="r+")
+                flagA0_mm = mm_open(wd, "flagsA0.npy")
         if dyn:
-            mids = [
-                _np.load(os.path.join(wd, "movers_ids_0.npy"), mmap_mode="r+"),
-                _np.load(os.path.join(wd, "movers_ids_1.npy"), mmap_mode="r+"),
-            ]
-            mbms = [
-                _np.load(os.path.join(wd, "movers_bm_0.npy"), mmap_mode="r+"),
-                _np.load(os.path.join(wd, "movers_bm_1.npy"), mmap_mode="r+"),
-            ]
-            mcnt_mm = _np.load(os.path.join(wd, "mcnt.npy"), mmap_mode="r+")
-            vaff_mm = _np.load(os.path.join(wd, "vaff.npy"), mmap_mode="r+")
-            aff0_mm = _np.load(os.path.join(wd, "aff0.npy"), mmap_mode="r+")
-            sat_mm = _np.load(os.path.join(wd, "sat.npy"), mmap_mode="r+")
+            mids = [mm_open(wd, "movers_ids_0.npy"), mm_open(wd, "movers_ids_1.npy")]
+            mbms = [mm_open(wd, "movers_bm_0.npy"), mm_open(wd, "movers_bm_1.npy")]
+            mcnt_mm = mm_open(wd, "mcnt.npy")
+            vaff_mm = mm_open(wd, "vaff.npy")
+            aff0_mm = mm_open(wd, "aff0.npy")
+            sat_mm = mm_open(wd, "sat.npy")
             vaffs = {st["s"]: _np.array(vaff_mm[st["lo"]: st["hi"]], dtype=bool) for st in stripes}
             prev_As = {st["s"]: _np.empty(0, _np.int64) for st in stripes}
-        deadline = time.time() + 3600
+        deadline = time.time() + SYNC_DEADLINE_S
         step_times = []
         l = 0
-
-        def spin(arr, row_i):
-            # hybrid spin: ~0.5 ms hot window (sub-µs sync latency when
-            # peers are already close — the common case for short dynamic
-            # supersteps), then 0.2 ms sleeps so laggard stripes keep the
-            # cores during long static supersteps
-            n = 0
-            while not arr[row_i, :].all():
-                n += 1
-                if n > 300:
-                    if time.time() > deadline:
-                        raise TimeoutError(f"BSP flag sync timeout at iter {row_i}")
-                    time.sleep(0.0002)
 
         def mover_list(row_i, buf):
             segs = []
@@ -1056,7 +791,7 @@ def _bsp_loop(
 
         while True:
             t0 = time.time()
-            spin(flag_mm, l)
+            spin(flag_mm, l, deadline)
             if l > 0 and (float(el_mm[l, :].max()) < TOL or l >= MAXIT):
                 break
             if MAXIT == 0:
@@ -1077,10 +812,10 @@ def _bsp_loop(
                     _M_cell.append(mover_list(l, mids[cur]))
                 return _M_cell[0]
 
-            def mover_edges(usrc, uoff):
+            def mover_edges(usrc, uoff, self_srcord):
                 """edge indices (into the stripe's src-sorted edge array)
                 whose src moved in iteration l — bitmap or id-list path,
-                identical results."""
+                identical results; self-loops dropped under pruning."""
                 use_bm = (
                     MBM_FORCE == "1"
                     or (MBM_FORCE == "" and mtotal * 8 > usrc.size)
@@ -1089,8 +824,10 @@ def _bsp_loop(
                     hit = _np.flatnonzero(mbms[cur][usrc])
                     if not hit.size:
                         return _np.empty(0, _np.int64)
-                    return ragged_take(uoff[hit], uoff[hit + 1] - uoff[hit])
-                return csr_lookup(get_M(), usrc, uoff)
+                    eidx = ragged_take(uoff[hit], uoff[hit + 1] - uoff[hit])
+                else:
+                    eidx = csr_lookup(get_M(), usrc, uoff)
+                return eidx if self_srcord is None else eidx[~self_srcord[eidx]]
             # DF fast path: with expansion but no pruning the affected map is
             # monotone, so once EVERY stripe has saturated no mover can mark
             # anything new — stop emitting them (which also kills the A0 hub
@@ -1112,83 +849,36 @@ def _bsp_loop(
                     # flags only exist in expand-without-prune mode)
                     sat_skip = not do_prune and sat_mm[st["s"]]
                     if st["husrc"].size and not sat_skip:
-                        eidx = mover_edges(st["husrc"], st["huoff"])
-                        if do_prune and eidx.size and st["hself_srcord"] is not None:
-                            eidx = eidx[~st["hself_srcord"][eidx]]
+                        eidx = mover_edges(st["husrc"], st["huoff"], st["hself_srcord"])
                         if eidx.size:
                             hubaff_mm[st["hubcol"][eidx]] = 1
                     flagA0_mm[l + 1, st["s"]] = 1
-                spin(flagA0_mm, l + 1)
+                spin(flagA0_mm, l + 1, deadline)
             # ---- phase A1: salted hub partial sums (affected-only if dyn) ----
             if NH:
                 needed = _np.flatnonzero(hubaff_mm) if dyn else None
                 for st in stripes:
-                    s = st["s"]
-                    hsrc, hoff, hcounts = st["hsrc"], st["hoff"], st["hcounts"]
-                    if not hsrc.size:
-                        if needed is None:
-                            hubparts[cur][s, :] = 0.0
-                        elif needed.size:
-                            hubparts[cur][s, needed] = 0.0
-                    elif needed is None or int(hcounts[needed].sum()) >= 0.6 * hsrc.size:
-                        wsrc = rdiv[hsrc]
-                        if WEIGHTED:
-                            wsrc = wsrc * st["w_hub"]
-                        part = _np.add.reduceat(wsrc, st["hridx"])
-                        part[st["hempty"]] = 0.0
-                        hubparts[cur][s, :] = part
-                    elif needed.size:
-                        lens = hcounts[needed]
-                        nz = lens > 0
-                        part = _np.zeros(needed.size)
-                        if nz.any():
-                            eidx = ragged_take(hoff[needed][nz], lens[nz])
-                            wsrc = rdiv[hsrc[eidx]]
-                            locs = _np.concatenate(
-                                [[0], _np.cumsum(lens[nz])[:-1]]
-                            ).astype(_np.int64)
-                            part[nz] = _np.add.reduceat(wsrc, locs)
-                        hubparts[cur][s, needed] = part
-                    flagA_mm[l + 1, s] = 1
-                spin(flagA_mm, l + 1)
+                    cols, part = hub_partials(st, rdiv, needed)
+                    hubparts[cur][st["s"], cols] = part
+                    flagA_mm[l + 1, st["s"]] = 1
+                spin(flagA_mm, l + 1, deadline)
             dsh = (
                 P_DAMP * float(dmass_mm[l, :].sum()) / N if REDIST else 0.0
             )
             # ---- phase B: rank update per owned stripe ----
             for st in stripes:
                 s, lo, hi = st["s"], st["lo"], st["hi"]
-                src, offsets, counts = st["src"], st["offsets"], st["counts"]
-                ridx, empty = st["ridx"], st["empty"]
                 own_cols, own_offs = st["own_cols"], st["own_offs"]
                 width = hi - lo
                 if not dyn:
-                    r_slice = _np.array(ranks[cur][lo:hi])
-                    if st["srcb"].size:
-                        # blocked gather: rdiv reads walk one block_width
-                        # window at a time; per-block partials land on
-                        # unique dst rows, so += is a plain fancy add
-                        partial = _np.add.reduceat(rdiv[st["srcb"]], st["run_off"])
-                        sums = _np.zeros(width)
-                        rb, rd = st["rb_off"], st["run_dst"]
-                        for bi in range(rb.size - 1):
-                            sl = slice(rb[bi], rb[bi + 1])
-                            sums[rd[sl]] += partial[sl]
-                    elif src.size:
-                        wsrc = rdiv[src]
-                        if WEIGHTED:
-                            wsrc = wsrc * st["w_reg"]
-                        sums = _np.add.reduceat(wsrc, ridx)
-                        sums[empty] = 0.0
-                    else:
-                        sums = _np.zeros(width)
-                    if NH and own_cols.size:
+                    sums = full_gather(st, rdiv)
+                    if own_cols.size:
                         sums[own_offs] += hubparts[cur][:, own_cols].sum(axis=0)
-                    a = C0 + dsh + P_DAMP * sums
-                    eu = _np.abs(a - r_slice)
-                    el = float(eu.max()) if width else 0.0
-                    a_div = a / _np.asarray(deg[lo:hi])
+                    a, el, _ = rank_update(
+                        sums, _np.array(ranks[cur][lo:hi]), None, C0 + dsh, P_DAMP
+                    )
                     ranks[nxt][lo:hi] = a
-                    rdivs[nxt][lo:hi] = a_div
+                    rdivs[nxt][lo:hi] = a / _np.asarray(deg[lo:hi])
                     if REDIST:
                         dmass_mm[l + 1, s] = float(a[dang_slices[s]].sum())
                     el_mm[l + 1, s] = el
@@ -1203,12 +893,10 @@ def _bsp_loop(
                 )  # owner's own byte — exact, set below
                 if not s_sat:
                     if movers_alive and st["usrc"].size:
-                        eidx = mover_edges(st["usrc"], st["uoff"])
-                        if do_prune and eidx.size and st["self_srcord"] is not None:
-                            eidx = eidx[~st["self_srcord"][eidx]]
+                        eidx = mover_edges(st["usrc"], st["uoff"], st["self_srcord"])
                         if eidx.size:
                             vaff_s[st["dstloc"][eidx]] = True
-                    if NH and own_cols.size:
+                    if own_cols.size:
                         vaff_s[own_offs] |= hubaff_mm[own_cols].astype(bool)
                     A = _np.flatnonzero(vaff_s)
                     if l == 0:
@@ -1231,77 +919,38 @@ def _bsp_loop(
                     # the fancy-index gathers, the A0/usrc mover walks and
                     # (once sat_all) mover emission itself
                     r_A = _np.array(rank_view)
-                    if src.size:
-                        w = rdiv[src]
-                        if WEIGHTED:
-                            w = w * st["w_reg"]
-                        sums = _np.add.reduceat(w, ridx)
-                        sums[empty] = 0.0
-                    else:
-                        sums = _np.zeros(width)
-                    if NH and own_cols.size:
+                    sums = full_gather(st, rdiv)
+                    if own_cols.size:
                         sums[own_offs] += hubparts[cur][:, own_cols].sum(axis=0)
                     dv_A = _np.asarray(deg[lo:hi])
-                    if do_corr:
-                        a_vals = (C0 + P_DAMP * (sums - r_A / dv_A)) / (
-                            1.0 - P_DAMP / dv_A
-                        )
-                    else:
-                        a_vals = C0 + P_DAMP * sums
+                    a_vals, el, rel = rank_update(
+                        sums, r_A, dv_A, C0, P_DAMP, do_corr,
+                        rel=(do_expand and not sat_all) or do_prune,
+                    )
                     rank_view[:] = a_vals
-                    eu = _np.abs(r_A - a_vals)
-                    el = float(eu.max())
-                    if (do_expand and not sat_all) or do_prune:
-                        denom = _np.maximum(_np.maximum(r_A, a_vals), 1e-300)
-                        rel = eu / denom
-                        if do_expand and not sat_all:
-                            mover_pos = _np.flatnonzero(rel > D_TOL)
-                        if do_prune:
-                            vaff_s[rel <= C_TOL] = False
+                    if do_expand and not sat_all:
+                        mover_pos = _np.flatnonzero(rel > D_TOL)
+                    if do_prune:
+                        vaff_s[rel <= C_TOL] = False
                     rdiv_nxt_v[:] = a_vals / dv_A
                 elif A is not None and A.size:
                     r_A = _np.array(rank_view[A])
-                    lens = counts[A]
-                    nz = lens > 0
-                    sums = _np.zeros(A.size)
-                    if nz.any():
-                        tot = int(lens[nz].sum())
-                        if tot >= 0.6 * src.size:
-                            w = rdiv[src]
-                            full = _np.add.reduceat(w, ridx)
-                            full[empty] = 0.0
-                            sums = full[A]
-                        else:
-                            eidx = ragged_take(offsets[A][nz], lens[nz])
-                            w = rdiv[src[eidx]]
-                            loc = _np.concatenate(
-                                [[0], _np.cumsum(lens[nz])[:-1]]
-                            ).astype(_np.int64)
-                            sums_nz = _np.add.reduceat(w, loc)
-                            sums[nz] = sums_nz
-                    if NH and own_cols.size:
+                    sums = affected_gather(st, rdiv, A)
+                    if own_cols.size:
                         act = _np.flatnonzero(vaff_s[own_offs])
                         if act.size:
                             hub_tot = hubparts[cur][:, own_cols[act]].sum(axis=0)
                             pos = _np.searchsorted(A, own_offs[act])
                             sums[pos] += hub_tot
                     dv_A = _np.asarray(deg[lo:hi])[A]
-                    if do_corr:
-                        a_vals = (C0 + P_DAMP * (sums - r_A / dv_A)) / (
-                            1.0 - P_DAMP / dv_A
-                        )
-                    else:
-                        a_vals = C0 + P_DAMP * sums
+                    a_vals, el, rel = rank_update(
+                        sums, r_A, dv_A, C0, P_DAMP, do_corr, rel=do_expand or do_prune
+                    )
                     rank_view[A] = a_vals
-                    eu = _np.abs(r_A - a_vals)
-                    el = float(eu.max())
-                    if do_expand or do_prune:
-                        denom = _np.maximum(_np.maximum(r_A, a_vals), 1e-300)
-                        rel = eu / denom
-                        if do_expand:
-                            mover_pos = A[rel > D_TOL]
-                        if do_prune:
-                            vaff_s[A[rel <= C_TOL]] = False
+                    if do_expand:
+                        mover_pos = A[rel > D_TOL]
+                    if do_prune:
+                        vaff_s[A[rel <= C_TOL]] = False
                     # rdiv_next: new values at A; repair the rest by
                     # stale-set copy (sparse frontier) or one contiguous
                     # memcpy (dense frontier — scattered writes lose)
@@ -1330,7 +979,7 @@ def _bsp_loop(
                         bm_v[:] = 0
                         if mover_pos.size:
                             bm_v[mover_pos] = 1
-                if NH and own_cols.size:
+                if own_cols.size:
                     # authoritative hub-affected state after prune/extension
                     hubaff_mm[own_cols] = vaff_s[own_offs].astype(_np.uint8)
                 if A is not None:  # saturated stripes keep their last A
@@ -1347,45 +996,107 @@ def _bsp_loop(
         else:
             yield None
 
-    if SPILL is not None:
-        # lightweight skeleton job: one int per partition, stripes load
-        # from the spill — no blob rows cross the JVM/Python boundary
-        # the active session, not graph.edges': a delta-packed snapshot
-        # derives its edge frame only when a DataFrame consumer asks
-        sc = SparkSession.active().sparkContext
-        base = sc.parallelize(range(NPARTS), NPARTS)
-        results = [x for x in base.barrier().mapPartitions(loop).collect() if x]
-    else:
-        results = [x for x in packed.rdd.barrier().mapPartitions(loop).collect() if x]
-    iters, step_times = results[0]
-    # setup = memmap init + barrier dispatch + stripe deserialization and
-    # any other wall outside the worker-timed supersteps
-    setup_sec = (time.time() - t_pack) - pack_sec - sum(step_times)
-    rank_file = "rank_0.npy" if dynamic else f"rank_{iters % 2}.npy"
-    r = np.array(np.load(os.path.join(workdir, rank_file), mmap_mode="r"))
-    el_final = float(np.load(os.path.join(workdir, "el.npy"), mmap_mode="r")[iters, :].max())
-    state = {"converged": el_final < TOL, "el": el_final, "bounds": bounds}
-    affected_initial = 0
-    if dynamic:
-        affected_initial = (
-            int(np.load(os.path.join(workdir, "aff0.npy")).sum())
-            if iters
-            else int(vaff0.sum())
-        )
-        state["vaff"] = np.array(
-            np.load(os.path.join(workdir, "vaff.npy"), mmap_mode="r")
-        ).astype(bool)
-        movers = np.zeros(N, dtype=bool)
-        mcnt_fin = np.load(os.path.join(workdir, "mcnt.npy"), mmap_mode="r")[iters, :]
-        mids_fin = np.load(
-            os.path.join(workdir, f"movers_ids_{iters % 2}.npy"), mmap_mode="r"
-        )
-        for s in range(n_stripes):
-            c = int(mcnt_fin[s])
-            if c:
-                movers[np.array(mids_fin[bounds[s]: bounds[s] + c])] = True
-        state["movers"] = movers
-    shutil.rmtree(workdir, ignore_errors=True)
+    try:
+        os.makedirs(wd)
+        mm_create(wd, "deg.npy", (N,), np.float64, safe_deg)
+        mm_create(wd, "rank_0.npy", (N,), np.float64, r0)
+        mm_create(wd, "rank_1.npy", (N,), np.float64, 0.0)
+        mm_create(wd, "rdiv_0.npy", (N,), np.float64, r0 / safe_deg)
+        # dynamic mode updates rdiv by write-set, so both buffers must start
+        # equal (unaffected entries are never rewritten)
+        mm_create(wd, "rdiv_1.npy", (N,), np.float64, r0 / safe_deg)
+        mm_create(wd, "el.npy", (MAXIT + 2, n_stripes), np.float64, 0.0)
+        if redistribute:
+            dang = outdeg == 0
+            mm_create(wd, "dang.npy", (N,), np.uint8, dang.astype(np.uint8))
+            dmass = mm_create(wd, "dmass.npy", (MAXIT + 2, n_stripes), np.float64, 0.0)
+            for s in range(n_stripes):
+                dmass[0, s] = float(r0[bounds[s]: bounds[s + 1]][dang[bounds[s]: bounds[s + 1]]].sum())
+            dmass.flush()
+        if n_hubs:
+            mm_create(wd, "hubpart_0.npy", (n_stripes, n_hubs), np.float64, 0.0)
+            mm_create(wd, "hubpart_1.npy", (n_stripes, n_hubs), np.float64, 0.0)
+            mm_create(wd, "flagsA.npy", (MAXIT + 2, n_stripes), np.uint8, 0)
+            if dynamic:
+                mm_create(wd, "hubaff.npy", (n_hubs,), np.uint8, vaff0[HUBS].astype(np.uint8))
+            if dynamic and expand:
+                mm_create(wd, "flagsA0.npy", (MAXIT + 2, n_stripes), np.uint8, 0)
+        if dynamic:
+            mm_create(wd, "vaff.npy", (N,), np.uint8, vaff0.astype(np.uint8))
+            # per-stripe saturation flags (DF expand-without-prune only): once a
+            # stripe's whole slice is affected its bitmap can never change again
+            # (marking is monotone without pruning), so owners advertise
+            # saturation here and the mover machinery shuts itself off when
+            # every stripe has saturated — a dense-batch (1e-3·|E|) DF run then
+            # pays ND's per-superstep cost instead of a second edge walk
+            mm_create(wd, "sat.npy", (n_stripes,), np.uint8, 0)
+            # movers exchanged two ways, consumers pick per stripe by size:
+            # id lists (stripe s owns segment [bounds[s], bounds[s]+mcnt[row,s])
+            # of movers_ids_{row%2}) are cheap to WALK when the frontier is
+            # sparse (O(|M|·log|usrc|) searchsorted); the ping-pong BITMAP is
+            # cheap when it is dense (one O(|usrc|) byte gather, independent of
+            # |M|) — without it a dense-but-unsaturated 1e-3 frontier pays a
+            # near-|E| searchsorted walk per stripe per superstep plus a ×P
+            # duplicated O(|M|) id concat, which is what made full-size DF
+            # slower than a static recompute
+            mids0 = mm_create(wd, "movers_ids_0.npy", (N,), np.int64, 0)
+            mm_create(wd, "movers_ids_1.npy", (N,), np.int64, 0)
+            mbm0 = mm_create(wd, "movers_bm_0.npy", (N,), np.uint8, 0)
+            mm_create(wd, "movers_bm_1.npy", (N,), np.uint8, 0)
+            mcnt = mm_create(wd, "mcnt.npy", (MAXIT + 2, n_stripes), np.int64, 0)
+            # per-stripe |affected| after iteration 0's mover expansion: the
+            # initial affected set when marking is seeded through movers0
+            mm_create(wd, "aff0.npy", (n_stripes,), np.int64, 0)
+            if movers0 is not None and movers0.any():
+                for s in range(n_stripes):
+                    lo, hi = int(bounds[s]), int(bounds[s + 1])
+                    ids = np.flatnonzero(movers0[lo:hi]).astype(np.int64) + lo
+                    mids0[lo: lo + ids.size] = ids
+                    mcnt[0, s] = ids.size
+                mbm0[:] = movers0.astype(np.uint8)
+                mids0.flush()
+                mbm0.flush()
+                mcnt.flush()
+        flags = mm_create(wd, "flags.npy", (MAXIT + 2, n_stripes), np.uint8, 0)
+        flags[0, :] = 1
+        flags.flush()
+
+        if SPILL is not None:
+            # lightweight skeleton job: one int per partition, stripes load
+            # from the spill — no blob rows cross the JVM/Python boundary
+            # the active session, not graph.edges': a delta-packed snapshot
+            # derives its edge frame only when a DataFrame consumer asks
+            sc = SparkSession.active().sparkContext
+            base = sc.parallelize(range(NPARTS), NPARTS)
+            results = [x for x in base.barrier().mapPartitions(loop).collect() if x]
+        else:
+            results = [x for x in packed.rdd.barrier().mapPartitions(loop).collect() if x]
+        iters, step_times = results[0]
+        # setup = memmap init + barrier dispatch + stripe deserialization and
+        # any other wall outside the worker-timed supersteps
+        setup_sec = (time.time() - t_pack) - pack_sec - sum(step_times)
+        rank_file = "rank_0.npy" if dynamic else f"rank_{iters % 2}.npy"
+        r = np.array(mm_open(wd, rank_file, "r"))
+        el_final = float(mm_open(wd, "el.npy", "r")[iters, :].max())
+        state = {"converged": el_final < TOL, "el": el_final, "bounds": bounds}
+        affected_initial = 0
+        if dynamic:
+            affected_initial = (
+                int(np.load(os.path.join(wd, "aff0.npy")).sum())
+                if iters
+                else int(vaff0.sum())
+            )
+            state["vaff"] = np.array(mm_open(wd, "vaff.npy", "r")).astype(bool)
+            movers = np.zeros(N, dtype=bool)
+            mcnt_fin = mm_open(wd, "mcnt.npy", "r")[iters, :]
+            mids_fin = mm_open(wd, f"movers_ids_{iters % 2}.npy", "r")
+            for s in range(n_stripes):
+                c = int(mcnt_fin[s])
+                if c:
+                    movers[np.array(mids_fin[bounds[s]: bounds[s] + c])] = True
+            state["movers"] = movers
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
     return PagerankResult(
         r,
         iters,

@@ -5,7 +5,9 @@ mmap one shared directory — true on one host (or a truly coherent shared
 FS), false on a generic multi-node cluster.  This module runs the SAME
 resident-stripe convergence loop with the iteration exchange done over
 peer-to-peer TCP instead of shared files, so it works across nodes with no
-shared storage at all:
+shared storage at all.  The per-stripe work (blob decode, stripe
+preparation, gathers, hub partials, rank update) is _stripe_pack's kernel,
+the same functions the memmap loop calls; this module owns the exchange:
 
   * tasks exchange (partition id, host, port) through
     ``BarrierTaskContext.allGather`` — one ~1 s barrier round-trip per job,
@@ -41,6 +43,9 @@ alive, (b) each task's mover-id segment and updated (id, value) pairs —
 so cross-node traffic is O(affected) for sparse frontiers, matching the
 O(affected) compute.  Semantics cross-checked against pagerank_bsp/csr in
 tests to 1e-10 (including forced hub salting).
+
+It is the only engine that needs no shared filesystem, which is why it is
+kept next to the memmap loop.
 """
 
 from __future__ import annotations
@@ -59,7 +64,16 @@ from pagerank_cuda_dynamic_spark.operators.pagerank import (
     PagerankOptions,
     PagerankResult,
 )
-from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import bsp_pack
+from pagerank_cuda_dynamic_spark.operators._stripe_pack import (
+    affected_gather,
+    csr_lookup,
+    full_gather,
+    hub_partials,
+    prepare_stripe,
+    rank_update,
+    row_to_raw,
+)
+from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import _initial_ranks, bsp_pack
 
 # a peer silent for this long is treated as lost (task error → stage retry);
 # env-overridable so harnesses that treat a lost peer as a scored failure
@@ -85,13 +99,18 @@ def _tcp_loop(
     injection, dangling mass redistributed per superstep.  The dangling
     share needs NO extra ring traffic: after the allgather every task
     holds the full rank vector, so each computes the identical global
-    dangling sum locally from the broadcast dangling-id list."""
+    dangling sum locally from the broadcast dangling-id list.  An
+    unweighted static run redistributes the same way when
+    opts.dangling == "redistribute".  The per-stripe gathers and the update
+    are _stripe_pack's kernel; this function owns the ring exchange."""
     dynamic = vaff0 is not None
+    REDIST = opts.dangling == "redistribute"
+    if corrected or dynamic:
+        assert not REDIST, "TCP dynamic modes assume self-looped graphs"
+        assert not weighted, "TCP dynamic modes are unweighted (reference regime)"
     if weighted:
-        assert opts.dangling == "redistribute", "weighted TCP redistributes dangling mass"
-        assert not dynamic, "TCP dynamic modes are unweighted (reference regime)"
+        assert REDIST, "weighted TCP redistributes dangling mass"
     else:
-        assert opts.dangling == "selfloop", "TCP mode assumes self-looped graphs"
         # without the flag the loop would ignore the w_bin blobs and
         # silently compute UNWEIGHTED ranks — refuse loudly instead
         assert "w" not in graph.edges.columns, (
@@ -102,6 +121,7 @@ def _tcp_loop(
     spark = graph.edges.sparkSession
     sc = spark.sparkContext
     N = graph.n
+    r0 = _initial_ranks(q, N)
     P_DAMP = opts.damping
     TOL = opts.tolerance
     MAXIT = opts.max_iterations
@@ -118,9 +138,7 @@ def _tcp_loop(
     _deg = graph.outdeg_array()
     # dangling-only guard; np.maximum would clamp weighted degrees in (0,1)
     safe_deg = np.where(_deg > 0, _deg, 1.0)
-    r0 = np.full(N, 1.0 / N) if q is None else np.asarray(q, dtype=np.float64)
     WEIGHTED = weighted
-    REDIST = weighted  # redistribute iff weighted (BSP weighted contract)
     bc_dang = sc.broadcast(np.flatnonzero(_deg == 0)) if REDIST else None
     bc_deg = sc.broadcast(safe_deg)
     bc_r0 = sc.broadcast(r0)
@@ -161,107 +179,14 @@ def _tcp_loop(
                 got += r2
             return bytes(buf)
 
-        def ragged_take(starts, lens):
-            tot = int(lens.sum())
-            out = _np.ones(tot, dtype=_np.int64)
-            out[0] = starts[0]
-            pos = _np.cumsum(lens)[:-1]
-            out[pos] = starts[1:] - (starts[:-1] + lens[:-1] - 1)
-            return _np.cumsum(out)
-
-        def csr_lookup(keys, ukeys, uoff):
-            """positions (into the src-sorted edge array) of all edges whose
-            src ∈ keys; keys and ukeys sorted.  Returns int64 edge idx."""
-            if keys.size == 0 or ukeys.size == 0:
-                return _np.empty(0, _np.int64)
-            pos = _np.searchsorted(ukeys, keys)
-            pos = _np.minimum(pos, ukeys.size - 1)
-            ok = ukeys[pos] == keys
-            if not ok.any():
-                return _np.empty(0, _np.int64)
-            hit = pos[ok]
-            starts = uoff[hit]
-            lens = uoff[hit + 1] - starts
-            return ragged_take(starts, lens)
-
         ctx = BarrierTaskContext.get()
         pid = ctx.partitionId()
 
         hub_ids = _np.asarray(bc_hubs.value)
-        stripes = []
-        for row in it:
-            lo, hi = int(row["lo"]), int(row["hi"])
-            width = hi - lo
-            src = _np.frombuffer(
-                row["src_bin"], dtype=_np.int32 if row["src32"] else _np.int64
-            )
-            offsets = _np.frombuffer(row["offsets_bin"], dtype=_np.int64)
-            if offsets.size != width + 1:  # empty stub stripe
-                offsets = _np.zeros(width + 1, dtype=_np.int64)
-            counts = (offsets[1:] - offsets[:-1]).astype(_np.int64)
-            ridx = _np.minimum(offsets[:-1], max(src.size - 1, 0))
-            empty = counts == 0
-            usrc = _np.frombuffer(row["usrc_bin"], dtype=_np.int64)
-            uoff = _np.frombuffer(row["uoff_bin"], dtype=_np.int64)
-            if uoff.size == 0:
-                uoff = _np.zeros(1, dtype=_np.int64)
-            dstloc = _np.frombuffer(row["dstloc_bin"], dtype=_np.int32)
-            self_srcord = None
-            if do_prune and dstloc.size:
-                srcs_exp = _np.repeat(usrc, (uoff[1:] - uoff[:-1]))
-                self_srcord = srcs_exp == (dstloc.astype(_np.int64) + lo)
-            # salted hub block this stripe holds (src pmod == stripe id)
-            hsrc = _np.frombuffer(
-                row["hub_src_bin"], dtype=_np.int32 if row["hub_src32"] else _np.int64
-            )
-            hoff = _np.frombuffer(row["hub_offsets_bin"], dtype=_np.int64)
-            if NH and hoff.size != NH + 1:
-                hoff = _np.zeros(NH + 1, dtype=_np.int64)
-            hcounts = (hoff[1:] - hoff[:-1]).astype(_np.int64) if NH else None
-            hridx = _np.minimum(hoff[:-1], max(hsrc.size - 1, 0)) if NH else None
-            hempty = hcounts == 0 if NH else None
-            husrc = _np.frombuffer(row["husrc_bin"], dtype=_np.int64)
-            huoff = _np.frombuffer(row["huoff_bin"], dtype=_np.int64)
-            if huoff.size == 0:
-                huoff = _np.zeros(1, dtype=_np.int64)
-            hubcol = _np.frombuffer(row["hubcol_bin"], dtype=_np.int32)
-            hself_srcord = None
-            if do_prune and NH and hubcol.size:
-                hsrcs_exp = _np.repeat(husrc, (huoff[1:] - huoff[:-1]))
-                hself_srcord = hsrcs_exp == hub_ids[hubcol]
-            w_reg = _np.frombuffer(row["w_bin"], dtype=_np.float64) if WEIGHTED else None
-            w_hub = _np.frombuffer(row["hub_w_bin"], dtype=_np.float64) if WEIGHTED else None
-            # cache-blocked gather order (static fast path; empty when
-            # weighted or the stripe has no edges) — see bsp_pack docstring
-            srcb = _np.frombuffer(
-                row["srcb_bin"], dtype=_np.int32 if row["src32"] else _np.int64
-            )
-            run_off = _np.frombuffer(row["runoff_bin"], dtype=_np.int64)
-            run_dst = _np.frombuffer(row["rundst_bin"], dtype=_np.int32)
-            rb_off = _np.frombuffer(row["rboff_bin"], dtype=_np.int64)
-            own_cols = (
-                _np.flatnonzero((hub_ids >= lo) & (hub_ids < hi))
-                if NH
-                else _np.empty(0, _np.int64)
-            )
-            own_offs = hub_ids[own_cols] - lo if NH else None
-            stripes.append(
-                {
-                    "lo": lo, "hi": hi,
-                    "src": src, "offsets": offsets, "counts": counts,
-                    "ridx": ridx, "empty": empty,
-                    "usrc": usrc, "uoff": uoff, "dstloc": dstloc,
-                    "self_srcord": self_srcord,
-                    "hsrc": hsrc, "hoff": hoff, "hcounts": hcounts,
-                    "hridx": hridx, "hempty": hempty,
-                    "husrc": husrc, "huoff": huoff, "hubcol": hubcol,
-                    "hself_srcord": hself_srcord,
-                    "w_reg": w_reg, "w_hub": w_hub,
-                    "srcb": srcb, "run_off": run_off,
-                    "run_dst": run_dst, "rb_off": rb_off,
-                    "own_cols": own_cols, "own_offs": own_offs,
-                }
-            )
+        stripes = [
+            prepare_stripe(row_to_raw(row, NH, WEIGHTED), hub_ids, do_prune, blocked=not dynamic)
+            for row in it
+        ]
 
         # listen before the roster gather so the ring can connect immediately
         lsock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
@@ -349,7 +274,7 @@ def _tcp_loop(
                 for st in stripes:
                     if st["husrc"].size:
                         eidx = csr_lookup(M, st["husrc"], st["huoff"])
-                        if do_prune and eidx.size and st["hself_srcord"] is not None:
+                        if st["hself_srcord"] is not None:
                             eidx = eidx[~st["hself_srcord"][eidx]]
                         if eidx.size:
                             marks[st["hubcol"][eidx]] = 1
@@ -366,28 +291,8 @@ def _tcp_loop(
                 needed = _np.flatnonzero(hubaff) if dynamic else None
                 local_part = _np.zeros(NH)
                 for st in stripes:
-                    hsrc, hoff, hcounts = st["hsrc"], st["hoff"], st["hcounts"]
-                    if not hsrc.size:
-                        continue
-                    if needed is None or int(hcounts[needed].sum()) >= 0.6 * hsrc.size:
-                        wsrc = rdiv[hsrc]
-                        if WEIGHTED:
-                            wsrc = wsrc * st["w_hub"]
-                        part = _np.add.reduceat(wsrc, st["hridx"])
-                        part[st["hempty"]] = 0.0
-                        local_part += part
-                    elif needed.size:
-                        lens = hcounts[needed]
-                        nz = lens > 0
-                        if nz.any():
-                            eidx = ragged_take(hoff[needed][nz], lens[nz])
-                            wsrc = rdiv[hsrc[eidx]]
-                            locs = _np.concatenate(
-                                [[0], _np.cumsum(lens[nz])[:-1]]
-                            ).astype(_np.int64)
-                            part = _np.zeros(needed.size)
-                            part[nz] = _np.add.reduceat(wsrc, locs)
-                            local_part[needed] += part
+                    cols, part = hub_partials(st, rdiv, needed)
+                    local_part[cols] += part
                 hub_tot = local_part.copy()
                 cur_h = local_part.tobytes()
                 for _ in range(P - 1):
@@ -405,31 +310,12 @@ def _tcp_loop(
                 my_slices = []
                 for st in stripes:
                     lo, hi = st["lo"], st["hi"]
-                    src, ridx, empty = st["src"], st["ridx"], st["empty"]
                     own_cols, own_offs = st["own_cols"], st["own_offs"]
-                    width = hi - lo
-                    if st["srcb"].size:
-                        # blocked gather (see bsp_pack): windowed rdiv reads
-                        partial = _np.add.reduceat(rdiv[st["srcb"]], st["run_off"])
-                        sums = _np.zeros(width)
-                        rb, rd = st["rb_off"], st["run_dst"]
-                        for bi in range(rb.size - 1):
-                            sl = slice(rb[bi], rb[bi + 1])
-                            sums[rd[sl]] += partial[sl]
-                    elif src.size:
-                        wsrc = rdiv[src]
-                        if WEIGHTED:
-                            wsrc = wsrc * st["w_reg"]
-                        sums = _np.add.reduceat(wsrc, ridx)
-                        sums[empty] = 0.0
-                    else:
-                        sums = _np.zeros(width)
-                    if NH and own_cols.size:
+                    sums = full_gather(st, rdiv)
+                    if own_cols.size:
                         sums[own_offs] += hub_tot[own_cols]
-                    a = C0 + dsh + P_DAMP * sums
-                    eu = _np.abs(a - r[lo:hi])
-                    if width:
-                        el_local = max(el_local, float(eu.max()))
+                    a, el, _ = rank_update(sums, r[lo:hi], None, C0 + dsh, P_DAMP)
+                    el_local = max(el_local, el)
                     my_slices.append((lo, hi, a.tobytes()))
                 block = pickle.dumps((pid, el_local, my_slices))
                 el_max = el_local
@@ -456,60 +342,36 @@ def _tcp_loop(
                 my_hub_states = []
                 for si, st in enumerate(stripes):
                     lo, hi = st["lo"], st["hi"]
-                    src, offsets, counts = st["src"], st["offsets"], st["counts"]
-                    ridx, empty = st["ridx"], st["empty"]
                     own_cols, own_offs = st["own_cols"], st["own_offs"]
                     vaff_s = vaffs[si]
                     if M.size and st["usrc"].size:
                         eidx = csr_lookup(M, st["usrc"], st["uoff"])
-                        if do_prune and eidx.size and st["self_srcord"] is not None:
+                        if st["self_srcord"] is not None:
                             eidx = eidx[~st["self_srcord"][eidx]]
                         if eidx.size:
                             vaff_s[st["dstloc"][eidx]] = True
-                    if NH and own_cols.size:
+                    if own_cols.size:
                         vaff_s[own_offs] |= hubaff[own_cols].astype(bool)
                     A = _np.flatnonzero(vaff_s)
                     if A.size:
                         r_A = _np.array(r[lo:hi][A])
-                        lens = counts[A]
-                        nz = lens > 0
-                        sums = _np.zeros(A.size)
-                        if nz.any():
-                            tot = int(lens[nz].sum())
-                            if tot >= 0.6 * src.size:
-                                full = _np.add.reduceat(rdiv[src], ridx)
-                                full[empty] = 0.0
-                                sums = full[A]
-                            else:
-                                eidx = ragged_take(offsets[A][nz], lens[nz])
-                                w = rdiv[src[eidx]]
-                                loc = _np.concatenate(
-                                    [[0], _np.cumsum(lens[nz])[:-1]]
-                                ).astype(_np.int64)
-                                sums[nz] = _np.add.reduceat(w, loc)
-                        if NH and own_cols.size:
+                        sums = affected_gather(st, rdiv, A)
+                        if own_cols.size:
                             act = _np.flatnonzero(vaff_s[own_offs])
                             if act.size:
                                 pos = _np.searchsorted(A, own_offs[act])
                                 sums[pos] += hub_tot[own_cols[act]]
-                        dv_A = deg[lo:hi][A]
-                        if do_corr:
-                            a_vals = (C0 + P_DAMP * (sums - r_A / dv_A)) / (
-                                1.0 - P_DAMP / dv_A
-                            )
-                        else:
-                            a_vals = C0 + P_DAMP * sums
-                        eu = _np.abs(r_A - a_vals)
-                        el_local = max(el_local, float(eu.max()))
-                        if do_expand or do_prune:
-                            denom = _np.maximum(_np.maximum(r_A, a_vals), 1e-300)
-                            rel = eu / denom
-                            if do_expand:
-                                my_movers.append((A[rel > D_TOL] + lo).astype(_np.int64))
-                            if do_prune:
-                                vaff_s[A[rel <= C_TOL]] = False
+                        a_vals, el, rel = rank_update(
+                            sums, r_A, deg[lo:hi][A], C0, P_DAMP, do_corr,
+                            rel=do_expand or do_prune,
+                        )
+                        el_local = max(el_local, el)
+                        if do_expand:
+                            my_movers.append((A[rel > D_TOL] + lo).astype(_np.int64))
+                        if do_prune:
+                            vaff_s[A[rel <= C_TOL]] = False
                         my_upds.append(((A + lo).astype(_np.int64), a_vals))
-                    if NH and own_cols.size:
+                    if own_cols.size:
                         # authoritative post-prune hub-affected state
                         my_hub_states.append(
                             (own_cols.astype(_np.int64), vaff_s[own_offs].astype(_np.uint8))

@@ -290,3 +290,46 @@ def test_scratch_dirs_reaped_at_interpreter_exit(tmp_path):
 
     assert not os.path.exists(d), "exchange dir survived interpreter exit"
     assert not os.path.exists(d + "_spill"), "spill dir survived interpreter exit"
+
+
+def test_trailing_empty_rows_keep_every_edge(spark):
+    """A stripe ending in rows without in-edges (no self-loops here) must
+    still sum every edge of its last non-empty row: BSP and TCP with
+    dangling="redistribute" equal the NumPy oracle."""
+    from pagerank_cuda_dynamic_spark.operators.pagerank_tcp import pagerank_static_tcp
+
+    n, src, dst = 5, [0, 1, 2, 0, 3, 4], [1, 2, 0, 2, 0, 0]
+    g = GraphSnapshot.build(edges_df(spark, src, dst), n=n, self_loops=False)
+    opts = PagerankOptions(dangling="redistribute")
+    want, _ = pagerank_numpy(n, np.array(src), np.array(dst), dangling="redistribute")
+    try:
+        for run in (pagerank_static_bsp, pagerank_static_tcp):
+            got = run(g, opts)
+            assert np.abs(got.ranks - want).max() <= 1e-10, run.__name__
+    finally:
+        g.unpersist()
+
+
+def test_wrong_length_q_raises_and_leaks_no_scratch(spark):
+    """A warm start of the wrong length is a ValueError naming both lengths,
+    raised before any exchange memmap exists, so no pr_bsp_* dir is left."""
+    import glob
+    import os
+    import tempfile
+
+    def scratch_dirs() -> set:
+        base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+        return {
+            d for d in glob.glob(os.path.join(base, "pr_bsp_*"))
+            if not d.endswith("_spill")
+        }
+
+    n, src, dst = MICRO_GRAPHS["diamond"]
+    g = GraphSnapshot.build(edges_df(spark, src, dst), n=n)
+    before = scratch_dirs()
+    try:
+        with pytest.raises(ValueError, match=rf"\b{n + 1}\b.*\b{n}\b"):
+            pagerank_static_bsp(g, q=np.ones(n + 1) / (n + 1))
+        assert scratch_dirs() - before == set()
+    finally:
+        g.unpersist()
