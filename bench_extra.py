@@ -52,7 +52,10 @@ def cmd_pack() -> None:
     from pagerank_cuda_dynamic_spark.sources.bench_graph import dense_transcript_graph
     from pagerank_cuda_dynamic_spark.plans import GraphSnapshot
     from pagerank_cuda_dynamic_spark.operators.pagerank import PagerankOptions
-    from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import pagerank_static_bsp
+    from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
+        STRIPE_EDGES,
+        pagerank_static_bsp,
+    )
 
     spark = _mk_spark("bench-extra-pack")
     out: dict = {"convs": BENCH_CONVS, "cpus": CPUS}
@@ -78,8 +81,7 @@ def cmd_pack() -> None:
     out["phase_hub_agg_sec"] = round(time.time() - t0, 2)
     hubs = np.sort(hub_pdf["v"].to_numpy().astype(np.int64))
     out["n_hubs"] = int(hubs.size)
-    stripe_edges = int(os.environ.get("SPARK_GRAFT_STRIPE_EDGES", "150000"))
-    k = max(1, min(16, round(m / p / max(stripe_edges, 1))))
+    k = max(1, min(16, round(m / p / STRIPE_EDGES)))
     n_target = p * k
     if hubs.size and hubs.size <= 4096:
         nonhub = g.edges.where(~F.col("dst").isin([int(h) for h in hubs]))

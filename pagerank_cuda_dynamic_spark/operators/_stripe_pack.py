@@ -21,8 +21,9 @@ whether it travels as a blob row (PACK_SCHEMA) or a spill file.
 A prepared stripe (prepare_stripe) covers dst rows [lo, hi): a dst-CSR of
 its regular in-edges (src, offsets), a hub-block CSR of the salted hub
 in-edges it holds over the full hub list (hsrc, hoff), src-sorted views of
-both for mover expansion (usrc/uoff/dstloc, husrc/huoff/hubcol), and the
-optional cache-blocked gather order (srcb/run_off/run_dst/rb_off).
+both for mover expansion (usrc/uoff/dstloc, husrc/huoff/hubcol).  Every
+gather reads the regular CSR in row (dst) order, the reference's one
+gather order.
 """
 
 from __future__ import annotations
@@ -40,6 +41,11 @@ cloudpickle.register_pickle_by_value(sys.modules[__name__])
 # a barrier loop that waits longer than this on its flags, in total, fails
 SYNC_DEADLINE_S = 3600
 
+# a consumer stripe gathers the mover bitmap over its src-sorted view once
+# |movers| · MOVER_BITMAP_FACTOR > |usrc|, and walks the mover id list
+# below that (see mover_edges)
+MOVER_BITMAP_FACTOR = 8
+
 
 def _pack_stripe_raw(
     s: int,
@@ -49,13 +55,12 @@ def _pack_stripe_raw(
     dst_all: np.ndarray,
     w_all: np.ndarray | None,
     hub_ids: np.ndarray,
-    block_width: int,
     weighted: bool,
 ) -> dict:
     """Pack ONE stripe's edges into the raw CSR arrays: contiguous dst-CSR
     for regular rows, hub-block CSR over the full hub list for salted hub
-    rows, src-sorted views of both (mover-extension indexes), and the
-    optional cache-blocked gather order (csr.hxx:107–286 analog)."""
+    rows, and src-sorted views of both (mover-extension indexes)
+    (csr.hxx:107–286 analog)."""
     if hub_ids.size:
         hub_col = np.searchsorted(hub_ids, dst_all)
         hub_col = np.where(
@@ -85,32 +90,8 @@ def _pack_stripe_raw(
     dstloc = dstoff[order2].astype(np.int32)
     usrc, ucnt = np.unique(src_by_src, return_counts=True)
     uoff = np.concatenate([[0], np.cumsum(ucnt)]).astype(np.int64)
-    # cache-blocked gather order: (src block, dst), run boundaries at every
-    # (block, dst) change — see bsp_pack's docstring for the layout note
-    if src.size and not weighted and block_width > 0:
-        blk = src // block_width
-        order3 = np.lexsort((dstoff, blk))
-        src_blk = src[order3]
-        dst3 = dstoff[order3].astype(np.int32)
-        blk3 = blk[order3]
-        change = np.empty(src.size, dtype=bool)
-        change[0] = True
-        change[1:] = (dst3[1:] != dst3[:-1]) | (blk3[1:] != blk3[:-1])
-        run_off = np.flatnonzero(change).astype(np.int64)
-        run_dst = dst3[run_off]
-        run_blk = blk3[run_off]
-        bchange = np.empty(run_off.size, dtype=bool)
-        bchange[0] = True
-        bchange[1:] = run_blk[1:] != run_blk[:-1]
-        rb_off = np.append(np.flatnonzero(bchange), run_off.size).astype(np.int64)
-    else:
-        src_blk = np.empty(0, np.int64)
-        run_off = np.empty(0, np.int64)
-        run_dst = np.empty(0, np.int32)
-        rb_off = np.empty(0, np.int64)
     if src.size and src.max() < 2**31:
         src = src.astype(np.int32)
-        src_blk = src_blk.astype(np.int32)
     # hub rows → hub-block CSR over the full hub list (col order)
     hsrc = src_all[is_h]
     hcol = hub_col[is_h] if hub_ids.size else np.empty(0, np.int64)
@@ -138,8 +119,6 @@ def _pack_stripe_raw(
         "husrc": husrc.astype(np.int64), "huoff": huoff, "hubcol": hubcol,
         "w_reg": w_reg if weighted else None,
         "w_hub": w_hub if weighted else None,
-        "srcb": src_blk, "run_off": run_off,
-        "run_dst": run_dst, "rb_off": rb_off,
     }
 
 
@@ -178,10 +157,6 @@ def _raw_to_row(raw: dict) -> dict:
         "hubcol_bin": raw["hubcol"].tobytes(),
         "w_bin": w_reg.tobytes() if w_reg is not None else b"",
         "hub_w_bin": w_hub.tobytes() if w_hub is not None else b"",
-        "srcb_bin": raw["srcb"].tobytes(),
-        "runoff_bin": raw["run_off"].tobytes(),
-        "rundst_bin": raw["run_dst"].tobytes(),
-        "rboff_bin": raw["rb_off"].tobytes(),
     }
 
 
@@ -196,7 +171,6 @@ def _stub_pack_row(raw: dict) -> dict:
         "hub_src_bin": b"", "hub_src32": True, "hub_offsets_bin": b"",
         "husrc_bin": b"", "huoff_bin": b"", "hubcol_bin": b"",
         "w_bin": b"", "hub_w_bin": b"",
-        "srcb_bin": b"", "runoff_bin": b"", "rundst_bin": b"", "rboff_bin": b"",
     }
 
 
@@ -241,8 +215,6 @@ def row_to_raw(row, n_hubs: int, weighted: bool) -> dict:
         "hubcol": blob("hubcol_bin", np.int32),
         "w_reg": blob("w_bin", np.float64) if weighted else None,
         "w_hub": blob("hub_w_bin", np.float64) if weighted else None,
-        "srcb": blob("srcb_bin", src_t), "run_off": blob("runoff_bin"),
-        "run_dst": blob("rundst_bin", np.int32), "rb_off": blob("rboff_bin"),
     }
 
 
@@ -254,16 +226,12 @@ def _row_index(offsets: np.ndarray):
     return counts, offsets[:-1][~empty], empty
 
 
-def prepare_stripe(
-    raw: dict, hub_ids: np.ndarray, prune: bool = False, blocked: bool = True
-) -> dict:
+def prepare_stripe(raw: dict, hub_ids: np.ndarray, prune: bool = False) -> dict:
     """A raw record plus what the gathers and mover walks read: the row
     index of the regular CSR (counts/ridx/empty) and of the hub block
     (hcounts/hridx/hempty); with prune, the self-loop masks over both
     src-sorted views (DF-P's expansion skips self-loops); the hub columns
-    homed in this stripe (own_cols) and their row offsets (own_offs).
-    blocked=False drops the blocked gather order (the dynamic loops gather
-    in row order)."""
+    homed in this stripe (own_cols) and their row offsets (own_offs)."""
     st = dict(raw)
     lo, hi = raw["lo"], raw["hi"]
     st["counts"], st["ridx"], st["empty"] = _row_index(raw["offsets"])
@@ -276,8 +244,6 @@ def prepare_stripe(
         st["hself_srcord"] = hsrc_exp == hub_ids[raw["hubcol"]]
     st["own_cols"] = np.flatnonzero((hub_ids >= lo) & (hub_ids < hi))
     st["own_offs"] = hub_ids[st["own_cols"]] - lo
-    if not blocked:
-        st["srcb"] = np.empty(0, np.int64)
     return st
 
 
@@ -307,6 +273,24 @@ def csr_lookup(keys: np.ndarray, ukeys: np.ndarray, uoff: np.ndarray) -> np.ndar
     return ragged_take(starts, uoff[hit + 1] - starts)
 
 
+def mover_edges(usrc, uoff, self_srcord, n_movers: int, bitmap, ids) -> np.ndarray:
+    """Positions (into a src-sorted edge array, usrc/uoff its CSR) of the
+    edges whose src moved, given the movers both as a bitmap over all
+    vertices and as ids() (a callable, so the sorted id list is built only
+    when walked).  A dense frontier (n_movers · MOVER_BITMAP_FACTOR >
+    |usrc|) gathers the bitmap over usrc in O(|usrc|); a sparse one walks
+    the id list in O(|M|·log|usrc|).  Both give the same positions in the
+    same order.  With self_srcord (DF-P) self-loops are dropped."""
+    if n_movers * MOVER_BITMAP_FACTOR > usrc.size:
+        hit = np.flatnonzero(bitmap[usrc])
+        if not hit.size:
+            return np.empty(0, np.int64)
+        eidx = ragged_take(uoff[hit], uoff[hit + 1] - uoff[hit])
+    else:
+        eidx = csr_lookup(ids(), usrc, uoff)
+    return eidx if self_srcord is None else eidx[~self_srcord[eidx]]
+
+
 def _reduce_rows(vals: np.ndarray, ridx: np.ndarray, empty: np.ndarray) -> np.ndarray:
     """Per-row sums of vals over a CSR, 0 for empty rows.  Only non-empty
     rows are reduced: np.add.reduceat over starts clipped into range would
@@ -333,18 +317,8 @@ def _slice_sums(rdiv, src, starts, lens) -> np.ndarray:
 
 
 def full_gather(st: dict, rdiv: np.ndarray) -> np.ndarray:
-    """Pull sums Σ w_uv·rdiv[u] of every row of a stripe's regular CSR, in
-    row order or, when the stripe carries one, in the cache-blocked order
-    (per-(block, dst) runs, then per-block adds onto unique rows; see
-    bsp_pack)."""
-    if st["srcb"].size:
-        partial = np.add.reduceat(rdiv[st["srcb"]], st["run_off"])
-        sums = np.zeros(st["hi"] - st["lo"])
-        rb, rd = st["rb_off"], st["run_dst"]
-        for bi in range(rb.size - 1):
-            sl = slice(rb[bi], rb[bi + 1])
-            sums[rd[sl]] += partial[sl]
-        return sums
+    """Pull sums Σ w_uv·rdiv[u] of every row of a stripe's regular CSR,
+    reduced in row order."""
     vals = rdiv[st["src"]]
     if st["w_reg"] is not None:
         vals = vals * st["w_reg"]

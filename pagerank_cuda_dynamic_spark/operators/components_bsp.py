@@ -19,7 +19,6 @@ label, fixpoint or max_rounds (matches components.label_propagation_np).
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 import numpy as np
@@ -31,7 +30,10 @@ from pagerank_cuda_dynamic_spark.operators._stripe_pack import (
     mm_open,
     spin,
 )
-from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import _scratch_dir
+from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
+    _remove_scratch,
+    _scratch_dir,
+)
 
 
 def _label_loop(edges: DataFrame, n: int, mode: str, max_rounds: int) -> np.ndarray:
@@ -122,7 +124,7 @@ def _label_loop(edges: DataFrame, n: int, mode: str, max_rounds: int) -> np.ndar
         rounds = rows[0]["rounds"]  # every task, even an empty one, reports
         return np.array(mm_open(wd, f"lab_{rounds % 2}.npy", "r"))
     finally:
-        shutil.rmtree(wd, ignore_errors=True)
+        _remove_scratch(wd)
 
 
 def connected_components_bsp(edges: DataFrame, n: int, max_rounds: int = 10**6) -> np.ndarray:

@@ -766,12 +766,12 @@ def topological_levels(
         if live.isEmpty():
             break
         # vertices with a LIVE predecessor stay; the rest peel at level r
-        blocked = (
+        fed = (
             e.join(broadcast_state(live.withColumnRenamed("v", "src"), n_edges), "src")
             .select(F.col("dst").alias("v"))
             .distinct()
         )
-        peeled = live.join(blocked, "v", "left_anti").transform(materialize)
+        peeled = live.join(fed, "v", "left_anti").transform(materialize)
         if peeled.isEmpty():
             raise ValueError(
                 "topological_levels: no vertex has in-degree 0 among "

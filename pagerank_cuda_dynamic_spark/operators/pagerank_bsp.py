@@ -77,13 +77,12 @@ from pagerank_cuda_dynamic_spark.operators._stripe_pack import (
     _stripe_edges,
     _stub_pack_row,
     affected_gather,
-    csr_lookup,
     full_gather,
     hub_partials,
     mm_create,
     mm_open,
+    mover_edges,
     prepare_stripe,
-    ragged_take,
     rank_update,
     row_to_raw,
     spin,
@@ -96,8 +95,7 @@ PACK_SCHEMA = (
     "usrc_bin binary, uoff_bin binary, dstloc_bin binary, "
     "hub_src_bin binary, hub_src32 boolean, hub_offsets_bin binary, "
     "husrc_bin binary, huoff_bin binary, hubcol_bin binary, "
-    "w_bin binary, hub_w_bin binary, "
-    "srcb_bin binary, runoff_bin binary, rundst_bin binary, rboff_bin binary"
+    "w_bin binary, hub_w_bin binary"
 )
 
 _PACK_COLS = [
@@ -107,28 +105,54 @@ _PACK_COLS = [
     "hub_src_bin", "hub_src32", "hub_offsets_bin",
     "husrc_bin", "huoff_bin", "hubcol_bin",
     "w_bin", "hub_w_bin",
-    "srcb_bin", "runoff_bin", "rundst_bin", "rboff_bin",
 ]
+
+# in-edges per stripe that bsp_pack aims for (k ≈ |E| / (p · STRIPE_EDGES)
+# stripes per task, 1..16; the measurement is at the cut in bsp_pack)
+STRIPE_EDGES = 150_000
+
+# delta_pack declines a batch with more deletions or insertions than this;
+# the child snapshot then derives its edges by anti-join and packs in full
+DELTA_MAX_BATCH = 200_000
+
+
+# Scratch dirs handed out by _scratch_dir and not yet removed.  Scratch
+# (memmap exchange) and derived "_spill" (stripe-record) dirs must not
+# outlive the driver: snapshots built by oracle gates or the driver's
+# queries() calls are often never unpersist()ed, and on tmpfs a leaked
+# spill is RAM.  One exit hook reaps what is left; callers that remove a
+# dir earlier drop it from the set, so a long stream keeps it small.
+_LIVE_SCRATCH: set[str] = set()
+
+
+def _remove_scratch(path: str) -> None:
+    """Remove now a _scratch_dir path, or its "_spill" twin, together with
+    the twin, and stop reaping them at exit."""
+    base = path.removesuffix("_spill")
+    for p in (base, base + "_spill"):
+        shutil.rmtree(p, ignore_errors=True)
+    _LIVE_SCRATCH.discard(base)
+
+
+@atexit.register
+def _reap_scratch() -> None:
+    for path in list(_LIVE_SCRATCH):
+        _remove_scratch(path)
 
 
 def _scratch_dir() -> str:
+    """A fresh scratch path (not created); it and its "_spill" twin are
+    removed at interpreter exit unless _remove_scratch removes them first."""
     base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
     path = os.path.join(base, f"pr_bsp_{uuid.uuid4().hex[:12]}")
-    # Scratch (memmap exchange) and derived "_spill" (stripe-record) dirs
-    # must not outlive the driver: snapshots built by oracle gates or the
-    # driver's queries() calls are often never unpersist()ed, and a crashed
-    # run skips cleanup entirely — on tmpfs the leaked stripes are RAM.
-    # Reap at interpreter exit; GraphSnapshot.unpersist still removes
-    # eagerly (rmtree on a missing path is a no-op).
-    for p in (path, path + "_spill"):
-        atexit.register(shutil.rmtree, p, ignore_errors=True)
+    _LIVE_SCRATCH.add(path)
     return path
 
 
 def _indegrees(graph) -> np.ndarray:
     """Dense |V| in-degree histogram on the driver.  NOT on the perf path —
-    bsp_pack derives bounds/hubs distributedly; this remains as the exact
-    cross-check used by the pack parity tests."""
+    bsp_pack derives bounds/hubs from its own degree pass; this remains as
+    the exact cross-check used by the pack parity tests."""
     pdf = (
         graph.edges.groupBy(F.col("dst").alias("v"))
         .agg(F.count(F.lit(1)).alias("indeg"))
@@ -139,35 +163,11 @@ def _indegrees(graph) -> np.ndarray:
     return indeg
 
 
-def _auto_block_width(
-    p: int, n: int, env: str | None, cores: int | None = None
-) -> int:
-    """Gather-layout decision (measured on both sides, see bsp_pack):
-    explicit env/param always wins (0 = force row order); otherwise
-    block when the rank vector dwarfs LLC (|V|·8 B > 128 MB) AND the
-    host core count is high enough to thrash the shared cache (≥ 16
-    logical CPUs — os.cpu_count() counts SMT threads, so on SMT-2 hosts
-    the gate means ≥ 8 physical cores; the nearest portable proxy).
-    Host cores, not defaultParallelism: a session with inflated
-    parallelism on a small box still has one LLC, and the blocking
-    win/loss is a property of the cache, not the scheduler.  `cores` is
-    the host's logical CPU count (bsp_pack passes os.cpu_count()); None
-    means p, so the rule itself does not depend on the host it runs on."""
-    if env is not None:
-        return int(env)
-    if cores is None:
-        cores = p
-    if min(cores, p) >= 16 and n * 8 > 128 * 2**20:
-        return 1_000_000
-    return 0
-
-
 def bsp_pack(
     graph,
     p: int | None = None,
     hub_factor: float = 4.0,
-    block_width: int | None = None,
-    stripe_edges: int | None = None,
+    stripe_edges: int = STRIPE_EDGES,
     spill_dir: str | None = None,
 ):
     """Stripe-packed CSR blobs + salted hub blocks, one row per dst stripe,
@@ -177,59 +177,24 @@ def bsp_pack(
     hubs: dst ids with indeg > hub_factor·E/p.  Their in-edges are assigned
     to stripes by pmod(src) (the salt) and packed as per-stripe hub CSR
     blocks over the full hub list; everything else is the regular
-    contiguous-stripe CSR (csr.hxx:107–286 analog), built once.  Every
-    blob also carries a src-sorted view (usrc/uoff/dstloc and
-    husrc/huoff/hubcol) so mover-frontier extension is O(out-edges of
-    movers).  If graph.edges has a `w` column, per-edge weights ride along
-    (w_bin/hub_w_bin) for weighted PageRank.
+    contiguous-stripe CSR (csr.hxx:107–286 analog), built once and
+    gathered in row (dst) order.  Every blob also carries a src-sorted
+    view (usrc/uoff/dstloc and husrc/huoff/hubcol) so mover-frontier
+    extension is O(out-edges of movers).  If graph.edges has a `w` column,
+    per-edge weights ride along (w_bin/hub_w_bin) for weighted PageRank.
+    stripe_edges is the in-edge budget per stripe (see the cut below).
 
     Exactly ONE row per stripe id 0..n_stripes-1 is guaranteed (stripes
     that receive no edges get an empty stub row) — the barrier loop waits
     on every stripe's flag, so a missing stripe would deadlock it.
 
-    Cache-blocked gather layout (AUTO when |V|·8 B > 128 MB and p ≥ 16 —
-    the regime it measurably wins; force via block_width / SPARK_GRAFT_
-    BLOCK_WIDTH, 0 = row order): each stripe's regular edges are ALSO packed
-    reordered by (src // block_width, dst) with run boundaries
-    (srcb/runoff/rundst/rboff blobs); the static loop then gathers rdiv
-    one block_width·8-byte rank-vector window at a time instead of
-    random-accessing all |V|·8 bytes.  Per-(block,dst) runs reduce
-    exactly like CSR rows; per-block partials accumulate with
-    unique-index adds (1e-10-identical, summation regrouping only).
-    MEASURED on the Zipf bench family this is ~35% SLOWER than row order
-    (hot head keeps the gather cache-resident; see BENCH records r4 vs
-    r4b), hence opt-in — it targets working sets that genuinely exceed
-    LLC.  MEASURED WIN in that regime (BENCH_r4f_scale4x_blocked vs
-    _scale4x): at 4× the bench graph (26.6 M vertices, 213 MB rank
-    vector — pure DRAM) block_width=1e6 is +41% at local[32]
-    (541 → 764 M edges/s) while ~7% slower at local[8] — enable it when
-    |V|·8 B ≫ LLC and the core count is high enough to thrash the
-    shared cache.
-
-    Scale note: bounds and hubs are derived DISTRIBUTEDLY — hub detection
-    is a `HAVING count > cut` aggregate that ships only the (tiny, ≤
-    ~p/hub_factor) hub list to the driver, and stripe bounds are
-    approxQuantile percentiles of non-hub edge dst values (≡ balancing
-    cumulative non-hub in-degree).  Nothing O(|V|) touches the driver in
-    the pack; the loop's own |V|-fits-one-node assumption (the reference
-    assumes one GPU, pagerankCuda.hxx:798) is now the only one left."""
+    Scale note: one degree pass ships a |V|-row (v, outdeg, indeg) table
+    to the driver, and the hub list and the stripe bounds derive from it
+    in NumPy — the same |V|-fits-one-node premise as the loop's rank
+    vector (the reference assumes one GPU, pagerankCuda.hxx:798)."""
     spark = graph.edges.sparkSession
     if p is None:
         p = spark.sparkContext.defaultParallelism
-    if stripe_edges is None:
-        stripe_edges = int(os.environ.get("SPARK_GRAFT_STRIPE_EDGES", "150000"))
-    if block_width is None:
-        # Row-order gather while any of the rank vector is cache-resident
-        # (blocking MEASURED SLOWER there: r4b record — the Zipf head keeps
-        # hot entries in LLC and blocking only adds run-accumulation
-        # overhead), AUTO-blocked in the regime blocking was built for and
-        # MEASURED to win (+41% at local[32], scale4x_blocked record):
-        # rank vector ≫ LLC (|V|·8 B > 128 MB) AND enough cores to thrash
-        # the shared cache (p ≥ 16).  Env/param always override (0 = force
-        # row order); forced-multi-block parity tests cover both layouts.
-        block_width = _auto_block_width(
-            p, graph.n, os.environ.get("SPARK_GRAFT_BLOCK_WIDTH"), os.cpu_count()
-        )
     weighted = "w" in graph.edges.columns
     e = graph.edges
     # ONE union-agg degree pass replaces four separate |E| jobs (the edge
@@ -325,7 +290,8 @@ def bsp_pack(
     for kid, b in zip(probe["id"].to_numpy(), probe["b"].to_numpy()):
         if key_of_block[int(b)] < 0:
             key_of_block[int(b)] = int(kid)
-    assert (key_of_block >= 0).all(), "murmur3 probe failed to cover all blocks"
+    if not (key_of_block >= 0).all():
+        raise RuntimeError("murmur3 probe failed to cover all blocks")
     key_of_stripe = key_of_block[blk_of]
     interior_np = bounds[1:-1]
     ns_cap = n_stripes
@@ -353,7 +319,7 @@ def bsp_pack(
         b = bc_bounds.value
         raw = _pack_stripe_raw(
             s, int(b[s]), int(b[s + 1]), src_all, dst_all, w_all,
-            bc_hubs.value, block_width, weighted,
+            bc_hubs.value, weighted,
         )
         if spill_dir:
             _spill_write(spill_dir, raw)
@@ -420,20 +386,18 @@ def bsp_pack(
 
     packed = routed.drop("rkey").mapInPandas(pack_partition, PACK_SCHEMA).persist()
     n_rows = packed.count()
-    assert n_rows == n_stripes, (
-        f"pack emitted {n_rows} stripe rows, expected {n_stripes}"
-    )
+    if n_rows != n_stripes:
+        raise RuntimeError(f"pack emitted {n_rows} stripe rows, expected {n_stripes}")
     if spill_dir:
         # spill is complete iff the pack job materialized every stripe row
-        # (asserted above) — the marker gates the loop's spill-load path
+        # (checked above) — the marker gates the loop's spill-load path
         import pickle
 
         with open(os.path.join(spill_dir, "META.pkl"), "wb") as f:
             pickle.dump(
                 {
                     "bounds": bounds, "hubs": hubs, "n_stripes": n_stripes,
-                    "n_parts": n_parts, "block_width": block_width,
-                    "weighted": weighted, "n": graph.n,
+                    "n_parts": n_parts, "weighted": weighted, "n": graph.n,
                 },
                 f,
                 protocol=pickle.HIGHEST_PROTOCOL,
@@ -441,9 +405,6 @@ def bsp_pack(
         with open(os.path.join(spill_dir, "COMPLETE"), "w") as f:
             f.write(str(n_stripes))
     return packed, bounds, n_stripes, hubs
-
-
-DELTA_MAX_BATCH = int(os.environ.get("SPARK_GRAFT_DELTA_MAX_BATCH", "200000"))
 
 
 def delta_pack(child, parent, deletions, insertions, spill_dir: str):
@@ -490,7 +451,6 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
     bounds = np.asarray(meta["bounds"], dtype=np.int64)
     hubs = np.asarray(meta["hubs"], dtype=np.int64)
     n_stripes, n_parts = int(meta["n_stripes"]), int(meta["n_parts"])
-    block_width = int(meta["block_width"] or 0)
     N = int(child.n)
     interior = bounds[1:-1]
 
@@ -521,7 +481,7 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
     d_key = d_src * N + d_dst
     i_key = i_src * N + i_dst
     PARENT, CHILD = pspill, spill_dir
-    NSTR, NP, BW, NN, HUBS = n_stripes, n_parts, block_width, N, hubs
+    NSTR, NP, NN, HUBS = n_stripes, n_parts, N, hubs
 
     def merge(it):
         import os as _os
@@ -569,7 +529,7 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
             else:
                 merged = kept
             raw2 = _pack_stripe_raw(
-                s, lo, hi, merged // NN, merged % NN, None, HUBS, BW, False
+                s, lo, hi, merged // NN, merged % NN, None, HUBS, False
             )
             _spill_write(CHILD, raw2)
         yield (
@@ -669,20 +629,17 @@ def _bsp_loop(
     C0 = (1.0 - P_DAMP) / N
     dynamic = vaff0 is not None
     redistribute = opts.dangling == "redistribute"
-    if corrected or dynamic:
-        assert opts.dangling == "selfloop", "BSP dynamic modes assume self-looped graphs"
-        assert not weighted, "BSP dynamic modes are unweighted (reference regime)"
+    if (corrected or dynamic) and opts.dangling != "selfloop":
+        raise ValueError(
+            f"dangling={opts.dangling!r}: BSP dynamic modes assume self-looped "
+            "graphs (dangling='selfloop')"
+        )
+    if (corrected or dynamic) and weighted:
+        raise ValueError("BSP dynamic modes are unweighted (reference regime)")
 
-    # Dynamic loops never read the blocked-gather blobs (they gather by
-    # affected-row CSR slices, not full-stripe block sweeps) — skip
-    # building them so large-|V| dynamic runs don't pay the auto-block
-    # lexsort/memory for nothing.  A cached pack (e.g. from a prior
-    # static run on the same snapshot) is reused either way.
     t_pack = time.time()
     pack_cached = getattr(graph, "_bsp_packed", None) is not None
-    packed, bounds, n_stripes, hubs = graph.bsp_packed(
-        block_width=0 if dynamic else None
-    )
+    packed, bounds, n_stripes, hubs = graph.bsp_packed()
     pack_sec = 0.0 if pack_cached else time.time() - t_pack
     # stripe spill: when the pack wrote raw stripe records to the
     # snapshot's scratch spill (GraphSnapshot.bsp_packed does), the loop
@@ -725,12 +682,6 @@ def _bsp_loop(
     REDIST = redistribute
     bounds_list = [int(b) for b in bounds]
 
-    # mover-walk strategy override: "" = auto (per-stripe by size),
-    # "1" = force the bitmap gather, "0" = force the id-list walk.
-    # Exists so the parity test can pin bitmap ≡ id-list bit-equality;
-    # captured here (driver-side) so the serialized closure carries it.
-    MBM_FORCE = os.environ.get("SPARK_GRAFT_MOVER_BM", "")
-
     def loop(it):
         import numpy as _np
 
@@ -747,7 +698,7 @@ def _bsp_loop(
             raws = [_spill_read(SPILL, s2) for s2 in range(_mypid, NSTRIPES, NPARTS)]
         else:
             raws = [row_to_raw(row, NH, WEIGHTED) for row in it]
-        stripes = [prepare_stripe(raw, HUBS, do_prune, blocked=not dyn) for raw in raws]
+        stripes = [prepare_stripe(raw, HUBS, do_prune) for raw in raws]
         del raws
         deg = mm_open(wd, "deg.npy", "r")
         ranks = [mm_open(wd, "rank_0.npy"), mm_open(wd, "rank_1.npy")]
@@ -800,10 +751,8 @@ def _bsp_loop(
             rdiv = rdivs[cur]
             mtotal = int(mcnt_mm[l, :].sum()) if (dyn and do_expand) else 0
             movers_alive = mtotal > 0
-            # mover walks pick a strategy PER CONSUMER stripe: a sparse
-            # frontier walks the id list (O(|M|·log|usrc|)); a dense one
-            # gathers the mover bitmap over usrc (O(|usrc|), independent
-            # of |M|).  The O(|M|) id concat is lazy so bitmap-only
+            # mover walks pick a strategy PER CONSUMER stripe (see
+            # mover_edges).  The O(|M|) id concat is lazy so bitmap-only
             # iterations never pay it (it used to run on EVERY worker)
             _M_cell = []
 
@@ -811,23 +760,6 @@ def _bsp_loop(
                 if not _M_cell:
                     _M_cell.append(mover_list(l, mids[cur]))
                 return _M_cell[0]
-
-            def mover_edges(usrc, uoff, self_srcord):
-                """edge indices (into the stripe's src-sorted edge array)
-                whose src moved in iteration l — bitmap or id-list path,
-                identical results; self-loops dropped under pruning."""
-                use_bm = (
-                    MBM_FORCE == "1"
-                    or (MBM_FORCE == "" and mtotal * 8 > usrc.size)
-                )
-                if use_bm:
-                    hit = _np.flatnonzero(mbms[cur][usrc])
-                    if not hit.size:
-                        return _np.empty(0, _np.int64)
-                    eidx = ragged_take(uoff[hit], uoff[hit + 1] - uoff[hit])
-                else:
-                    eidx = csr_lookup(get_M(), usrc, uoff)
-                return eidx if self_srcord is None else eidx[~self_srcord[eidx]]
             # DF fast path: with expansion but no pruning the affected map is
             # monotone, so once EVERY stripe has saturated no mover can mark
             # anything new — stop emitting them (which also kills the A0 hub
@@ -849,7 +781,10 @@ def _bsp_loop(
                     # flags only exist in expand-without-prune mode)
                     sat_skip = not do_prune and sat_mm[st["s"]]
                     if st["husrc"].size and not sat_skip:
-                        eidx = mover_edges(st["husrc"], st["huoff"], st["hself_srcord"])
+                        eidx = mover_edges(
+                            st["husrc"], st["huoff"], st["hself_srcord"],
+                            mtotal, mbms[cur], get_M,
+                        )
                         if eidx.size:
                             hubaff_mm[st["hubcol"][eidx]] = 1
                     flagA0_mm[l + 1, st["s"]] = 1
@@ -893,7 +828,10 @@ def _bsp_loop(
                 )  # owner's own byte — exact, set below
                 if not s_sat:
                     if movers_alive and st["usrc"].size:
-                        eidx = mover_edges(st["usrc"], st["uoff"], st["self_srcord"])
+                        eidx = mover_edges(
+                            st["usrc"], st["uoff"], st["self_srcord"],
+                            mtotal, mbms[cur], get_M,
+                        )
                         if eidx.size:
                             vaff_s[st["dstloc"][eidx]] = True
                     if own_cols.size:
@@ -1096,7 +1034,7 @@ def _bsp_loop(
                     movers[np.array(mids_fin[bounds[s]: bounds[s] + c])] = True
             state["movers"] = movers
     finally:
-        shutil.rmtree(wd, ignore_errors=True)
+        _remove_scratch(wd)
     return PagerankResult(
         r,
         iters,
@@ -1205,16 +1143,9 @@ class WeightedSnapshot:
             self._wdeg = arr
         return self._wdeg
 
-    def bsp_packed(
-        self,
-        p: int | None = None,
-        hub_factor: float = 4.0,
-        block_width: int | None = None,
-    ) -> tuple:
+    def bsp_packed(self, p: int | None = None, hub_factor: float = 4.0) -> tuple:
         if self._bsp_packed is None:
-            self._bsp_packed = bsp_pack(
-                self, p, hub_factor=hub_factor, block_width=block_width
-            )
+            self._bsp_packed = bsp_pack(self, p, hub_factor=hub_factor)
         return self._bsp_packed
 
     def unpersist(self) -> None:
@@ -1230,7 +1161,11 @@ def pagerank_weighted_bsp(
     """Weighted pull PageRank on the BSP path:
     a[v] = C0 + P·(Σ w_uv·r[u]/wdeg(u) + dangling_mass/N)."""
     opts = opts or PagerankOptions(dangling="redistribute")
-    assert opts.dangling == "redistribute", "weighted BSP redistributes dangling mass"
+    if opts.dangling != "redistribute":
+        raise ValueError(
+            f"dangling={opts.dangling!r}: weighted BSP redistributes dangling "
+            "mass (dangling='redistribute')"
+        )
     g = WeightedSnapshot(edges_w, n)
     try:
         return _bsp_loop(g, opts, weighted=True)

@@ -51,7 +51,6 @@ kept next to the memmap loop.
 from __future__ import annotations
 
 import json
-import os
 import pickle
 import socket
 import struct
@@ -75,10 +74,8 @@ from pagerank_cuda_dynamic_spark.operators._stripe_pack import (
 )
 from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import _initial_ranks, bsp_pack
 
-# a peer silent for this long is treated as lost (task error → stage retry);
-# env-overridable so harnesses that treat a lost peer as a scored failure
-# (bench.py's guarded sections) can fail fast instead of idling 5 minutes
-RING_RECV_TIMEOUT_S = float(os.environ.get("SPARK_GRAFT_RING_RECV_TIMEOUT", "300"))
+# a peer silent for this long is treated as lost (task error → stage retry)
+RING_RECV_TIMEOUT_S = 300.0
 
 
 def _tcp_loop(
@@ -105,15 +102,22 @@ def _tcp_loop(
     are _stripe_pack's kernel; this function owns the ring exchange."""
     dynamic = vaff0 is not None
     REDIST = opts.dangling == "redistribute"
-    if corrected or dynamic:
-        assert not REDIST, "TCP dynamic modes assume self-looped graphs"
-        assert not weighted, "TCP dynamic modes are unweighted (reference regime)"
-    if weighted:
-        assert REDIST, "weighted TCP redistributes dangling mass"
-    else:
+    if (corrected or dynamic) and REDIST:
+        raise ValueError(
+            "dangling='redistribute': TCP dynamic modes assume self-looped "
+            "graphs (dangling='selfloop')"
+        )
+    if (corrected or dynamic) and weighted:
+        raise ValueError("TCP dynamic modes are unweighted (reference regime)")
+    if weighted and not REDIST:
+        raise ValueError(
+            f"dangling={opts.dangling!r}: weighted TCP redistributes dangling "
+            "mass (dangling='redistribute')"
+        )
+    if not weighted and "w" in graph.edges.columns:
         # without the flag the loop would ignore the w_bin blobs and
         # silently compute UNWEIGHTED ranks — refuse loudly instead
-        assert "w" not in graph.edges.columns, (
+        raise ValueError(
             "TCP ring path got a weighted graph without weighted=True; "
             "unweighted entry points reject 'w' — use pagerank_weighted_tcp"
         )
@@ -184,7 +188,7 @@ def _tcp_loop(
 
         hub_ids = _np.asarray(bc_hubs.value)
         stripes = [
-            prepare_stripe(row_to_raw(row, NH, WEIGHTED), hub_ids, do_prune, blocked=not dynamic)
+            prepare_stripe(row_to_raw(row, NH, WEIGHTED), hub_ids, do_prune)
             for row in it
         ]
 
@@ -226,7 +230,7 @@ def _tcp_loop(
         recv_sock.settimeout(RING_RECV_TIMEOUT_S)
         send_sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
 
-        # writer thread: breaks the all-blocked-in-sendall ring deadlock
+        # writer thread: breaks the ring deadlock of every task stuck in sendall
         out_q: list = []
         out_cv = threading.Condition()
         done_flag = [False]
@@ -555,7 +559,11 @@ def pagerank_weighted_tcp(
     from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import WeightedSnapshot
 
     opts = opts or PagerankOptions(dangling="redistribute")
-    assert opts.dangling == "redistribute", "weighted TCP redistributes dangling mass"
+    if opts.dangling != "redistribute":
+        raise ValueError(
+            f"dangling={opts.dangling!r}: weighted TCP redistributes dangling "
+            "mass (dangling='redistribute')"
+        )
     g = WeightedSnapshot(edges_w, n)
     try:
         return _tcp_loop(g, opts, weighted=True)

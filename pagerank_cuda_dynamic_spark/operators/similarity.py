@@ -20,7 +20,7 @@ from pagerank_cuda_dynamic_spark.functions import cosine_expr  # noqa: E402  sha
 
 
 def _partials_scratch() -> str:
-    """Fresh scratch dir for blocked top-k partials, reaped at interpreter
+    """Fresh scratch dir for per-query-block top-k partials, reaped at interpreter
     exit: the DataFrame returned by brute_force_topk reads the partial
     parquet LAZILY, so the dir must outlive the call — but not the driver
     process (same lifecycle contract as pagerank_bsp._scratch_dir)."""

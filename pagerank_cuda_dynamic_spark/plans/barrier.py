@@ -25,7 +25,6 @@ to inherited stats.
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 import pyspark.sql.functions as F
@@ -55,7 +54,7 @@ STATE_BROADCAST_MAX_ROWS = 8_000_000
 # gather+materialize superstep on a 100-vertex/5k-edge graph costs
 # 670 ms with 32-task shuffles and ~155 ms sized; a 36k-vertex/1.2M-edge
 # graph drops 813 -> ~370 ms.
-LOOP_PARTITION_ROWS = int(os.environ.get("SPARK_GRAFT_LOOP_PARTITION_ROWS", "8192"))
+LOOP_PARTITION_ROWS = 8192
 
 
 @contextmanager

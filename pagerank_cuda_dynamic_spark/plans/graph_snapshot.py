@@ -67,6 +67,7 @@ class GraphSnapshot:
         pending, derive it from the parent with a broadcast anti-join +
         append instead — a narrow plan, valid for a TIDIED batch."""
         from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
+            _remove_scratch,
             _scratch_dir,
             delta_pack,
         )
@@ -77,7 +78,9 @@ class GraphSnapshot:
         self._delta = None  # the parent must not stay pinned
         if got is not None:
             self._bsp_spill, self._bsp_packed = spill, got
-        elif self._edges is None:
+            return
+        _remove_scratch(spill)
+        if self._edges is None:
             on = ["src", "dst"]
             # (v,v) deletions are no-ops on the default path (build
             # re-injects universal self-loops) — hold that here too
@@ -95,18 +98,10 @@ class GraphSnapshot:
             e.count()
             self._edges = e
 
-    def bsp_packed(
-        self,
-        p: int | None = None,
-        hub_factor: float = 4.0,
-        block_width: int | None = None,
-    ) -> tuple:
+    def bsp_packed(self, p: int | None = None, hub_factor: float = 4.0) -> tuple:
         """Cached (packed, bounds, n_stripes, hubs) stripe-CSR build for the
         BSP loop — built once per snapshot like the reference's device CSR.
-        hub_factor / block_width apply only to the first (building) call;
-        dynamic loops pass block_width=0 to skip the blocked-gather blobs
-        they never read (extra lexsort + ~|E|·4B they'd otherwise pay in
-        the auto-block regime).
+        p / hub_factor apply only to the first (building) call.
 
         The pack SPILLS raw stripe records to a scratch dir shared with the
         executors (the same premise as the loop's memmap exchange): repeat
@@ -126,11 +121,7 @@ class GraphSnapshot:
 
             self._bsp_spill = _scratch_dir() + "_spill"
             self._bsp_packed = bsp_pack(
-                self,
-                p,
-                hub_factor=hub_factor,
-                block_width=block_width,
-                spill_dir=self._bsp_spill,
+                self, p, hub_factor=hub_factor, spill_dir=self._bsp_spill
             )
         return self._bsp_packed
 
@@ -256,7 +247,9 @@ class GraphSnapshot:
         return child
 
     def unpersist(self) -> None:
-        import shutil
+        from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
+            _remove_scratch,
+        )
 
         self._delta = None
         for df in (self._edges, self._degrees):
@@ -270,5 +263,5 @@ class GraphSnapshot:
                 self._bsp_packed[0].unpersist()
             self._bsp_packed = None
         if self._bsp_spill is not None:
-            shutil.rmtree(self._bsp_spill, ignore_errors=True)
+            _remove_scratch(self._bsp_spill)
             self._bsp_spill = None

@@ -145,64 +145,6 @@ def test_bsp_pack_distributed_derivation_parity(spark):
         g.unpersist()
 
 
-def test_bsp_blocked_gather_parity(spark):
-    """Force the cache-blocked gather layout into MANY small blocks
-    (block_width=64 on a 3000-vertex graph ≈ 47 rdiv windows) on both the
-    memmap BSP and the TCP ring paths: per-(block,dst) run regrouping must
-    reproduce the row-order csr gather to 1e-10 with identical iteration
-    counts, and the pack must actually have produced multi-block stripes."""
-    from pagerank_cuda_dynamic_spark.operators import pagerank_bsp as PB
-    from pagerank_cuda_dynamic_spark.operators import pagerank_tcp as PT
-    from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import bsp_pack
-    from pagerank_cuda_dynamic_spark.operators.pagerank_tcp import pagerank_static_tcp
-
-    rng = np.random.default_rng(23)
-    n, m = 3000, 20000
-    src = rng.integers(0, n, m)
-    dst = rng.integers(0, n, m)
-    g = GraphSnapshot.build(edges_df(spark, src, dst), n=n)
-    packed, bounds, n_stripes, hubs = bsp_pack(g, block_width=64)
-    rows = packed.collect()
-    multi = 0
-    for row in rows:
-        rb = np.frombuffer(row["rboff_bin"], dtype=np.int64)
-        if rb.size > 2:  # >1 block in this stripe
-            multi += 1
-        srcb = np.frombuffer(
-            row["srcb_bin"], dtype=np.int32 if row["src32"] else np.int64
-        )
-        sref = np.frombuffer(
-            row["src_bin"], dtype=np.int32 if row["src32"] else np.int64
-        )
-        assert srcb.size == sref.size  # every regular edge is in the layout
-    assert multi > 0, "fixture must produce multi-block stripes"
-
-    class Forced:
-        def __init__(self, gr):
-            self._g = gr
-            self.edges, self.n = gr.edges, gr.n
-
-        def outdeg_array(self):
-            return self._g.outdeg_array()
-
-        def bsp_packed(self, *a, **k):
-            return packed, bounds, n_stripes, hubs
-
-    f = Forced(g)
-    a = pagerank_static_bsp(f, PagerankOptions())
-    orig = PT.bsp_pack
-    PT.bsp_pack = lambda gr: (packed, bounds, n_stripes, hubs)
-    try:
-        t = pagerank_static_tcp(f)
-    finally:
-        PT.bsp_pack = orig
-    b = pagerank_static(g, PagerankOptions(mode="csr"))
-    assert np.allclose(a.ranks, b.ranks, atol=1e-10)
-    assert np.allclose(t.ranks, b.ranks, atol=1e-10)
-    assert a.iterations == b.iterations == t.iterations
-    g.unpersist()
-
-
 def test_bsp_fine_stripes_parity(spark):
     """Stripes finer than tasks (edge-budget striping): a pack with k~16
     stripes per task must run the memmap AND TCP loops with identical
@@ -245,22 +187,6 @@ def test_bsp_fine_stripes_parity(spark):
     assert np.allclose(t.ranks, b.ranks, atol=1e-10)
     assert a.iterations == b.iterations == t.iterations
     g.unpersist()
-
-
-def test_auto_block_width_rule():
-    """Layout decision: env always wins; auto-block only when the rank
-    vector dwarfs LLC (>128 MB) AND p >= 16."""
-    from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
-        _auto_block_width,
-    )
-
-    big = 20_000_000  # 160 MB rank vector
-    small = 6_650_010  # 53 MB (the 1x bench graph): stays row-order
-    assert _auto_block_width(32, big, None) == 1_000_000
-    assert _auto_block_width(8, big, None) == 0       # few cores
-    assert _auto_block_width(32, small, None) == 0    # cache-resident head
-    assert _auto_block_width(32, big, "0") == 0       # env forces row order
-    assert _auto_block_width(8, small, "64") == 64    # env forces blocking
 
 
 def test_scratch_dirs_reaped_at_interpreter_exit(tmp_path):
@@ -333,3 +259,20 @@ def test_wrong_length_q_raises_and_leaks_no_scratch(spark):
         assert scratch_dirs() - before == set()
     finally:
         g.unpersist()
+
+
+def test_weighted_bsp_rejects_selfloop_dangling(spark):
+    """Weighted BSP redistributes dangling mass: dangling="selfloop" is a
+    ValueError naming the option, also under python -O (an assert would
+    vanish there, and the loop would return ranks that do not sum to 1)."""
+    import pandas as pd
+
+    from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
+        pagerank_weighted_bsp,
+    )
+
+    edges_w = spark.createDataFrame(
+        pd.DataFrame({"src": [0, 1, 2], "dst": [1, 2, 0], "w": [0.5, 1.5, 2.0]})
+    )
+    with pytest.raises(ValueError, match="dangling='selfloop'"):
+        pagerank_weighted_bsp(edges_w, 3, PagerankOptions())

@@ -142,18 +142,20 @@ def test_mover_bitmap_path_bit_equals_idlist_path(bsp_batch_setup, monkeypatch):
     chosen per consumer stripe by size in auto mode) must be exact
     equivalents: same eidx sets in the same src-sorted order, so the
     frontier marks, iteration counts and every float op are identical.
-    Pinned by forcing each path via SPARK_GRAFT_MOVER_BM and asserting
-    bit-equal ranks on DF and DF-P (the expand modes that exchange
-    movers)."""
+    Pinned by forcing each path through the kernel's size-rule factor
+    (0: never the bitmap; huge: always, as any walk has a mover) and
+    asserting bit-equal ranks on DF and DF-P (the expand modes that
+    exchange movers)."""
+    from pagerank_cuda_dynamic_spark.operators import _stripe_pack
+
     g0, g1, dels, ins, q, _ = bsp_batch_setup
     runs = {}
-    for force in ("0", "1"):
-        monkeypatch.setenv("SPARK_GRAFT_MOVER_BM", force)
+    for force, factor in (("0", 0), ("1", 2**40)):
+        monkeypatch.setattr(_stripe_pack, "MOVER_BITMAP_FACTOR", factor)
         runs[force] = (
             pagerank_dynamic_frontier_bsp(g0, g1, dels, ins, q),
             pagerank_dynamic_frontier_prune_bsp(g0, g1, dels, ins, q),
         )
-    monkeypatch.delenv("SPARK_GRAFT_MOVER_BM", raising=False)
     for i in range(2):
         a, b = runs["0"][i], runs["1"][i]
         assert a.iterations == b.iterations
@@ -324,3 +326,103 @@ def test_carried_stream_flat_jobs_and_oracle(spark):
     g.unpersist()
     assert np.mean(jobs[-5:]) <= np.mean(jobs[:5]), jobs
 
+
+
+def _np_batch(rng, keys, n, n_del, n_ins):
+    """A tidied batch against the edge keys src·n+dst (no self-loops in
+    keys): deletions drawn from keys, insertions new non-loop pairs."""
+    del_keys = np.unique(keys[rng.integers(0, keys.size, n_del)])
+    ins_keys = np.unique(rng.integers(0, n, n_ins) * n + rng.integers(0, n, n_ins))
+    ins_keys = ins_keys[(ins_keys // n != ins_keys % n) & ~np.isin(ins_keys, keys)]
+    return del_keys, ins_keys
+
+
+def test_delta_pack_decline_falls_back_to_full_pack(spark, monkeypatch):
+    """A batch larger than DELTA_MAX_BATCH makes delta_pack decline.  The
+    fast-path child then derives its edges by anti-join from the parent,
+    exactly (E \\ D) ∪ I, packs them in full, and DF-P on it matches the
+    NumPy oracle on the new graph."""
+    from pagerank_cuda_dynamic_spark.operators import pagerank_bsp
+
+    from .oracle import add_self_loops_np, pagerank_numpy
+
+    rng = np.random.default_rng(31)
+    n = 200
+    src = rng.integers(0, n, 1200)
+    dst = rng.integers(0, n, 1200)
+    keep = src != dst
+    keys = np.unique(src[keep] * n + dst[keep])
+    g0 = GraphSnapshot.build(edges_df(spark, keys // n, keys % n), n=n)
+    q = pagerank_static_bsp(g0).ranks
+    del_keys, ins_keys = _np_batch(rng, keys, n, 30, 60)
+    assert min(del_keys.size, ins_keys.size) > 10
+    dels = edges_df(spark, del_keys // n, del_keys % n).persist()
+    ins = edges_df(spark, ins_keys // n, ins_keys % n).persist()
+    monkeypatch.setattr(pagerank_bsp, "DELTA_MAX_BATCH", 10)
+    g1 = g0.with_batch(dels, ins, repartition=False)
+    try:
+        res = pagerank_dynamic_frontier_prune_bsp(g0, g1, dels, ins, q)
+        assert g1._bsp_packed[0] is not None, "the full pack did not run"
+        new = np.union1d(np.setdiff1d(keys, del_keys), ins_keys)
+        s_, d_ = add_self_loops_np(n, new // n, new % n)
+        want_keys = np.sort(s_ * n + d_)
+        assert np.array_equal(np.sort(_keys(g1.edges.toPandas(), n)), want_keys)
+        want, _ = pagerank_numpy(n, s_, d_)
+        assert np.abs(res.ranks - want).max() <= 1e-6
+    finally:
+        for x in (g1, g0, dels, ins):
+            x.unpersist()
+
+
+def test_scratch_registry_and_exit_hooks_stay_flat(spark):
+    """Scratch dirs are reaped by one exit hook over a registry of live
+    dirs: fast-path DF-P batches (delta spill + loop scratch) whose children
+    are unpersisted, and BSP connected components, add no exit hook and
+    leave nothing registered."""
+    import atexit
+
+    from pagerank_cuda_dynamic_spark.operators import pagerank_bsp
+    from pagerank_cuda_dynamic_spark.operators.components_bsp import (
+        connected_components_bsp,
+    )
+
+    rng = np.random.default_rng(37)
+    n = 120
+    src = rng.integers(0, n, 500)
+    dst = rng.integers(0, n, 500)
+    keep = src != dst
+    keys = np.unique(src[keep] * n + dst[keep])
+    g0 = GraphSnapshot.build(edges_df(spark, keys // n, keys % n), n=n)
+    q = pagerank_static_bsp(g0).ranks
+    hooks, live = atexit._ncallbacks(), len(pagerank_bsp._LIVE_SCRATCH)
+    try:
+        for _ in range(5):
+            del_keys, ins_keys = _np_batch(rng, keys, n, 3, 8)
+            dels = edges_df(spark, del_keys // n, del_keys % n)
+            ins = edges_df(spark, ins_keys // n, ins_keys % n)
+            g1 = g0.with_batch(dels, ins, repartition=False)
+            pagerank_dynamic_frontier_prune_bsp(g0, g1, dels, ins, q)
+            assert g1._bsp_packed[0] is None, "delta path not taken"
+            g1.unpersist()
+            assert atexit._ncallbacks() == hooks
+            assert len(pagerank_bsp._LIVE_SCRATCH) == live
+        edges = edges_df(spark, keys // n, keys % n)
+        for _ in range(5):
+            connected_components_bsp(edges, n)
+            assert atexit._ncallbacks() == hooks
+            assert len(pagerank_bsp._LIVE_SCRATCH) == live
+    finally:
+        g0.unpersist()
+    assert len(pagerank_bsp._LIVE_SCRATCH) == live - 1  # g0's spill
+
+
+def test_dynamic_bsp_rejects_redistribute(bsp_batch_setup):
+    """DF-P assumes self-looped graphs: dangling="redistribute" is a
+    ValueError naming the option, also under python -O."""
+    from pagerank_cuda_dynamic_spark.operators.pagerank import PagerankOptions
+
+    g0, g1, dels, ins, q, _ = bsp_batch_setup
+    with pytest.raises(ValueError, match="dangling='redistribute'"):
+        pagerank_dynamic_frontier_prune_bsp(
+            g0, g1, dels, ins, q, PagerankOptions(dangling="redistribute")
+        )

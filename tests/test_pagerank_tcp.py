@@ -221,7 +221,7 @@ def test_tcp_rejects_weighted_graphs(spark):
     )
     g = WeightedSnapshot(edges_w, n=3)
     try:
-        with pytest.raises(AssertionError, match="unweighted"):
+        with pytest.raises(ValueError, match="unweighted"):
             pagerank_static_tcp(g)
     finally:
         g.unpersist()

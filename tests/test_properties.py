@@ -95,8 +95,7 @@ def test_stripe_kernel_equals_bincount(data):
     """The shared full-stripe gather, affected-set gather and hub partials
     equal a plain np.bincount over the stripe's edges: leading, middle and
     trailing empty rows and hub columns, fully empty stripes, int32 and
-    int64 src, weights, row and blocked order, raw, blob-row and stub
-    records."""
+    int64 src, weights, raw, blob-row and stub records."""
     from pagerank_cuda_dynamic_spark.operators._stripe_pack import (
         _pack_stripe_raw,
         _raw_to_row,
@@ -123,10 +122,9 @@ def test_stripe_kernel_equals_bincount(data):
     dst = np.concatenate([rng.choice(rows, m), rng.choice(hub_live, mh)]).astype(np.int64)
     src = rng.integers(0, n, dst.size)
     w = rng.uniform(0.1, 2.0, dst.size) if weighted else None
-    bw = 0 if weighted else data.draw(st.sampled_from([0, 1, 3, 1000]))
-    raw = _pack_stripe_raw(0, lo, hi, src, dst, w, hubs, bw, weighted)
+    raw = _pack_stripe_raw(0, lo, hi, src, dst, w, hubs, weighted)
     if data.draw(st.booleans()):
-        for key in ("src", "hsrc", "srcb"):
+        for key in ("src", "hsrc"):
             raw[key] = raw[key].astype(np.int64)
     record = data.draw(st.sampled_from(["raw", "row", "stub"] if dst.size == 0 else ["raw", "row"]))
     if record == "row":
