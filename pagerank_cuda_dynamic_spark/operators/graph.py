@@ -7,6 +7,7 @@ Each operator returns a new DataFrame — graph mutation is snapshotting
 
 from __future__ import annotations
 
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -55,31 +56,69 @@ def self_loop_count(edges: DataFrame) -> DataFrame:
     )
 
 
+def _collect_batch(
+    deletions: DataFrame, insertions: DataFrame, limit: int | None = None
+) -> pd.DataFrame:
+    """Both sides of a batch as one pandas frame (src, dst, is_del), in one
+    Spark job: a union of the two sides, each capped at `limit` rows when
+    given."""
+    sides = [
+        df.select("src", "dst", F.lit(flag).alias("is_del"))
+        for df, flag in ((deletions, True), (insertions, False))
+    ]
+    if limit is not None:
+        sides = [df.limit(limit) for df in sides]
+    return sides[0].unionByName(sides[1]).toPandas()
+
+
+def _batch_probe(edges: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The rows of `edges` whose (src, dst) is one of `pairs` (the hasEdge
+    probe, batch.hxx:153–160).  Oriented for scale: ONE pass over the
+    (huge) edge table with the (small) pairs broadcast — never a plan that
+    must build or shuffle the edge side."""
+    on = ["src", "dst"]
+    return edges.select(on).join(F.broadcast(pairs.select(on)), on, "left_semi")
+
+
 def tidy_batch(
     edges: DataFrame, deletions: DataFrame, insertions: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """Batch hygiene (tidyBatchUpdateU, batch.hxx:201–208):
-    keep deletions that EXIST in the graph (semi join ≡ hasEdge probe,
-    batch.hxx:153–160), insertions that DON'T (anti join), both deduped.
-    Sorting (O1) is unnecessary in the set-semantics DataFrame world — kept
-    only at materialization for deterministic output."""
+    """Batch hygiene (tidyBatchUpdateU, batch.hxx:201–208): keep the
+    deletions that EXIST in `edges` and the insertions that DON'T, both
+    deduped and both taken against this (old) edge set — an edge in
+    D ∩ I ∩ E is deleted and not re-inserted.  Sorting (O1) is unnecessary
+    in the set-semantics DataFrame world.
+
+    Premise: the batch fits the driver (the probe broadcasts it anyway).
+    The raw batch is collected once, the edge table is probed once
+    (_batch_probe), and the set algebra runs in pandas.  The two returned
+    frames are built on the driver as single partitions, so materializing
+    them never re-reads `edges`.
+
+    Raises ValueError when a batch edge has a null src or dst."""
     on = ["src", "dst"]
-    d = deletions.select(on).dropDuplicates(on)
-    i = insertions.select(on).dropDuplicates(on)
-    # Existence probe oriented for scale: ONE pass over the (huge) edge
-    # table with the (small, by the dynamic-batch contract) union of batch
-    # pairs broadcast — never a plan that must build/shuffle the edge side.
-    # `hits` is bounded by the batch size, so the follow-up joins broadcast
-    # it too (the identical broadcast subplan is reused via ReusedExchange).
-    pairs = d.unionByName(i).dropDuplicates(on)
-    hits = (
-        edges.select(on)
-        .join(F.broadcast(pairs), on, "left_semi")
-        .dropDuplicates(on)
+    spark = edges.sparkSession
+    pdf = _collect_batch(deletions, insertions)
+    bad = int(pdf[on].isna().any(axis=1).sum())
+    if bad:
+        raise ValueError(f"batch has {bad} edge(s) with a null src or dst")
+    pairs = pdf[on].drop_duplicates()
+    if len(pairs):
+        probe = _batch_probe(edges, spark.createDataFrame(pairs))
+        hits = pd.MultiIndex.from_frame(probe.toPandas())
+    else:
+        hits = pd.MultiIndex.from_frame(pairs)
+    is_del = pdf["is_del"].to_numpy(bool)
+    d = pdf.loc[is_del, on].drop_duplicates()
+    i = pdf.loc[~is_del, on].drop_duplicates()
+    d = d[pd.MultiIndex.from_frame(d).isin(hits)]
+    i = i[~pd.MultiIndex.from_frame(i).isin(hits)]
+    # one partition each: a limit() over the frame (delta_pack's per-side
+    # cap) then needs no shuffle, which would cost a job per side
+    return (
+        spark.createDataFrame(d, deletions.select(on).schema).coalesce(1),
+        spark.createDataFrame(i, insertions.select(on).schema).coalesce(1),
     )
-    dels = d.join(F.broadcast(hits), on, "left_semi")
-    ins = i.join(F.broadcast(hits), on, "left_anti")
-    return dels, ins
 
 
 def apply_batch(

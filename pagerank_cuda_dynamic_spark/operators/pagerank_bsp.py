@@ -50,7 +50,6 @@ injection — semantics of pagerank_weighted_joinagg.
 from __future__ import annotations
 
 import atexit
-import functools
 import os
 import shutil
 import tempfile
@@ -60,8 +59,9 @@ import uuid
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
+from pagerank_cuda_dynamic_spark.operators.graph import _collect_batch
 from pagerank_cuda_dynamic_spark.operators.pagerank import (
     PagerankOptions,
     PagerankResult,
@@ -116,12 +116,13 @@ STRIPE_EDGES = 150_000
 DELTA_MAX_BATCH = 200_000
 
 
-# Scratch dirs handed out by _scratch_dir and not yet removed.  Scratch
-# (memmap exchange) and derived "_spill" (stripe-record) dirs must not
-# outlive the driver: snapshots built by oracle gates or the driver's
-# queries() calls are often never unpersist()ed, and on tmpfs a leaked
-# spill is RAM.  One exit hook reaps what is left; callers that remove a
-# dir earlier drop it from the set, so a long stream keeps it small.
+# Scratch dirs handed out by _scratch_dir, and similarity's top-k partials
+# dirs, not yet removed.  Scratch (memmap exchange) and derived "_spill"
+# (stripe-record) dirs must not outlive the driver: snapshots built by
+# oracle gates or the driver's queries() calls are often never
+# unpersist()ed, and on tmpfs a leaked spill is RAM.  One exit hook reaps
+# what is left; callers that remove a dir earlier drop it from the set, so
+# a long stream keeps it small.
 _LIVE_SCRATCH: set[str] = set()
 
 
@@ -423,10 +424,13 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
     hub list are inherited from the parent (a small batch cannot move the
     balance point materially; routing stays consistent by construction).
 
-    Cost: one |batch|-broadcast job over n_parts tasks, O(|batch| +
-    Σ|touched stripes|) work, zero shuffle.  Also derives the child's
-    out-degree array from the parent's + the applied delta, so the child
-    skips the |E| groupBy + |V| collect entirely.
+    Cost: one collect of the batch (both sides in one union, each limited
+    to DELTA_MAX_BATCH + 1 rows) and one |batch|-broadcast job over n_parts
+    tasks, O(|batch| + Σ|touched stripes|) work, zero shuffle.  The
+    collected arrays stay on the child with the two frames, so DF seeding
+    (_frontier_seeds) reads them instead of collecting again.  Also
+    derives the child's out-degree array from the parent's + the applied
+    delta, so the child skips the |E| groupBy + |V| collect entirely.
 
     Returns (None, bounds, n_stripes, hubs) — the packed-DataFrame slot is
     None because every consumer path reads the spill — or None when
@@ -444,9 +448,11 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
     if meta.get("weighted") or child.n != meta["n"] or child.n >= 2**31:
         return None
     lim = DELTA_MAX_BATCH
-    dpdf = deletions.select("src", "dst").limit(lim + 1).toPandas()
-    ipdf = insertions.select("src", "dst").limit(lim + 1).toPandas()
-    if len(dpdf) > lim or len(ipdf) > lim:
+    pdf = _collect_batch(deletions, insertions, limit=lim + 1)
+    b_src = pdf["src"].to_numpy(np.int64)
+    b_dst = pdf["dst"].to_numpy(np.int64)
+    b_del = pdf["is_del"].to_numpy(bool)
+    if int(b_del.sum()) > lim or int((~b_del).sum()) > lim:
         return None
     bounds = np.asarray(meta["bounds"], dtype=np.int64)
     hubs = np.asarray(meta["hubs"], dtype=np.int64)
@@ -454,10 +460,8 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
     N = int(child.n)
     interior = bounds[1:-1]
 
-    d_src = dpdf["src"].to_numpy(np.int64)
-    d_dst = dpdf["dst"].to_numpy(np.int64)
-    i_src = ipdf["src"].to_numpy(np.int64)
-    i_dst = ipdf["dst"].to_numpy(np.int64)
+    d_src, d_dst = b_src[b_del], b_dst[b_del]
+    i_src, i_dst = b_src[~b_del], b_dst[~b_del]
     # routing sends any dst >= n to the last stripe and the int64 keys
     # below alias ids outside [0, n): reject such a batch outright
     bad = sum(
@@ -469,6 +473,8 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
             f"batch has {bad} edge(s) with a vertex id outside [0, {N}); "
             "the fast path cannot grow the id space"
         )
+    # _frontier_seeds reads the collected batch from here, not Spark
+    child._batch = (deletions, insertions, b_src, b_dst, b_del)
     # universal self-loops are re-injected by the full path
     # (GraphSnapshot.build self_loops=True), so a (v,v) deletion is a
     # no-op there — match that semantics instead of removing the loop
@@ -1067,9 +1073,15 @@ def pagerank_dynamic_traversal_bsp(
     return _bsp_loop(new, opts, q=_adjust_warm_start(q, new.n), vaff0=vaff)
 
 
-def _frontier_seeds(deletions, insertions, n: int) -> tuple[np.ndarray, np.ndarray]:
-    """DF seeds of a TIDIED batch from one small collect: (vaff0, movers0)
-    with vaff0 = srcs(D∪I) ∪ dst(D) and movers0 = srcs(D∪I).
+def _frontier_seeds(new, deletions, insertions) -> tuple[np.ndarray, np.ndarray]:
+    """DF seeds of a TIDIED batch: (vaff0, movers0) with
+    vaff0 = srcs(D∪I) ∪ dst(D) and movers0 = srcs(D∪I).
+
+    The batch is read without a Spark job when `new` is the fast-path
+    child whose delta pack collected these very two frames (same objects,
+    kept on the child); any other batch costs one small collect.  The
+    arrays are the unfiltered batch, (v,v) deletions included, so both
+    routes give the same seeds.
 
     The loop's iteration-0 mover expansion then marks the new-graph
     out-neighbours of movers0, which completes the reference's initial
@@ -1078,18 +1090,19 @@ def _frontier_seeds(deletions, insertions, n: int) -> tuple[np.ndarray, np.ndarr
     two |E| semi-join scans of _frontier_marks: for a tidied batch an
     old-graph out-neighbour of u is a new-graph one or a deleted dst.
     Sources are marked here because DF-P's expansion skips self-loops."""
-    frames = [
-        df.select("src", "dst", F.lit(is_del).alias("is_del"))
-        for df, is_del in ((deletions, True), (insertions, False))
-        if df is not None
-    ]
-    vaff = np.zeros(n, dtype=bool)
-    movers = np.zeros(n, dtype=bool)
-    if frames:
-        pdf = functools.reduce(DataFrame.unionByName, frames).toPandas()
-        movers[pdf["src"].to_numpy(np.int64)] = True
-        vaff[movers] = True
-        vaff[pdf["dst"].to_numpy(np.int64)[pdf["is_del"].to_numpy(bool)]] = True
+    kept = getattr(new, "_batch", None)
+    if kept is not None and kept[0] is deletions and kept[1] is insertions:
+        src, dst, is_del = kept[2:]
+    else:
+        pdf = _collect_batch(deletions, insertions)
+        src = pdf["src"].to_numpy(np.int64)
+        dst = pdf["dst"].to_numpy(np.int64)
+        is_del = pdf["is_del"].to_numpy(bool)
+    vaff = np.zeros(new.n, dtype=bool)
+    movers = np.zeros(new.n, dtype=bool)
+    movers[src] = True
+    vaff[movers] = True
+    vaff[dst[is_del]] = True
     return vaff, movers
 
 
@@ -1100,7 +1113,7 @@ def pagerank_dynamic_frontier_bsp(
     the tidied batch (see _frontier_seeds); kept for the shared signature."""
     from pagerank_cuda_dynamic_spark.operators.pagerank import _adjust_warm_start
 
-    vaff, movers = _frontier_seeds(deletions, insertions, new.n)
+    vaff, movers = _frontier_seeds(new, deletions, insertions)
     return _bsp_loop(
         new, opts or PagerankOptions(), q=_adjust_warm_start(q, new.n),
         vaff0=vaff, expand=True, movers0=movers,
@@ -1113,7 +1126,7 @@ def pagerank_dynamic_frontier_prune_bsp(
     """Dynamic Frontier with Pruning on BSP; seeded like the DF entry."""
     from pagerank_cuda_dynamic_spark.operators.pagerank import _adjust_warm_start
 
-    vaff, movers = _frontier_seeds(deletions, insertions, new.n)
+    vaff, movers = _frontier_seeds(new, deletions, insertions)
     return _bsp_loop(
         new, opts or PagerankOptions(), q=_adjust_warm_start(q, new.n),
         vaff0=vaff, corrected=True, expand=True, prune=True, movers0=movers,

@@ -23,13 +23,14 @@ def _partials_scratch() -> str:
     """Fresh scratch dir for per-query-block top-k partials, reaped at interpreter
     exit: the DataFrame returned by brute_force_topk reads the partial
     parquet LAZILY, so the dir must outlive the call — but not the driver
-    process (same lifecycle contract as pagerank_bsp._scratch_dir)."""
-    import atexit
-    import shutil
+    process.  It joins pagerank_bsp's registry of live scratch dirs, whose
+    one exit hook reaps them all."""
     import tempfile
 
+    from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import _LIVE_SCRATCH
+
     path = tempfile.mkdtemp(prefix="bftopk_partials_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    _LIVE_SCRATCH.add(path)
     return path
 
 

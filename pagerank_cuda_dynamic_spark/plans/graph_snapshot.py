@@ -38,6 +38,9 @@ class GraphSnapshot:
         # with_batch — bsp_packed() builds an incremental delta pack from
         # it, and a fast-path child derives its edge set from the result
         self._delta: tuple | None = None
+        # (deletions, insertions, src, dst, is_del) once delta_pack has
+        # collected the batch: DF seeding reads it instead of Spark
+        self._batch: tuple | None = None
 
     @property
     def edges(self) -> DataFrame:
@@ -251,7 +254,7 @@ class GraphSnapshot:
             _remove_scratch,
         )
 
-        self._delta = None
+        self._delta = self._batch = None
         for df in (self._edges, self._degrees):
             if df is not None:
                 df.unpersist()

@@ -30,6 +30,9 @@ def get_spark(
       - shuffle partitions ≈ cores (supersteps are many small jobs — a large
         static 200-partition shuffle would dominate wall time; AQE coalesces
         anyway when partitions are tiny);
+      - spark.default.parallelism left to Spark, which sets it to the task
+        slot count: the barrier loops size their stages by it, and a
+        barrier stage wider than the slots can never be scheduled;
       - Arrow enabled for every pandas/Arrow kernel;
       - broadcast threshold generous: degree/dictionary dims are small
         relative to the edge table and must broadcast, never shuffle.
@@ -46,7 +49,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

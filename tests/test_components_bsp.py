@@ -80,3 +80,43 @@ def test_bsp_labels_reject_out_of_range_ids(spark, fn):
         fn(e, 5)
     assert time.time() - t0 < 60  # every task leaves the loop, no deadline wait
     assert _scratch_dirs() - before == set()
+
+
+def test_default_session_barrier_fits_slots(spark):
+    """get_spark() with default arguments on 2 task slots: the barrier
+    label loop is sized by spark.default.parallelism, which must not
+    exceed the slots (a wider barrier stage waits ~10 min in Spark's slot
+    check and then fails).  A fresh driver runs CC and matches the
+    NumPy-path labels well inside two minutes."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    n, src, dst = GRAPHS["components"]
+    probe = (
+        "import sys, json; sys.path.insert(0, %r)\n"
+        "import pandas as pd\n"
+        "from pagerank_cuda_dynamic_spark.session import get_spark\n"
+        "from pagerank_cuda_dynamic_spark.operators.components_bsp import connected_components_bsp\n"
+        "s = get_spark()\n"
+        "s.sparkContext.setLogLevel('ERROR')\n"
+        "e = s.createDataFrame(pd.DataFrame({'src': %r, 'dst': %r}), 'src long, dst long')\n"
+        "print(json.dumps([s.sparkContext.defaultParallelism, "
+        "connected_components_bsp(e, %d).tolist()]))\n"
+        "s.stop()\n" % (str(Path(__file__).resolve().parent.parent), src, dst, n)
+    )
+    env = {
+        k: v
+        for k, v in os.environ.items()
+        if k not in ("SPARK_GRAFT_MASTER", "SPARK_GRAFT_SHUFFLE_PARTITIONS")
+    }
+    env["SPARK_GRAFT_CPUS"] = "2"
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        capture_output=True, text=True, check=True, timeout=120, env=env,
+    )
+    par, labels = json.loads(out.stdout.strip().splitlines()[-1])
+    assert par == 2
+    e = edges_df(spark, src, dst)
+    assert labels == connected_components_np(e, n).tolist()

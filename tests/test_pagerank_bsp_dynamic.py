@@ -6,6 +6,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from pagerank_cuda_dynamic_spark.operators.graph import tidy_batch
 from pagerank_cuda_dynamic_spark.operators.pagerank import (
@@ -426,3 +428,155 @@ def test_dynamic_bsp_rejects_redistribute(bsp_batch_setup):
         pagerank_dynamic_frontier_prune_bsp(
             g0, g1, dels, ins, q, PagerankOptions(dangling="redistribute")
         )
+
+
+def _pair_frame(spark, pairs):
+    a = np.asarray(pairs, np.int64).reshape(-1, 2)
+    return spark.createDataFrame(
+        pd.DataFrame({"src": a[:, 0], "dst": a[:, 1]}), "src long, dst long"
+    )
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(data=st.data())
+def test_tidy_batch_equals_numpy_sets(spark, data):
+    """tidy_batch is exactly D ∩ E and I \\ E over the deduped batch pairs,
+    both against the old edge set.  Drawn: duplicates (also in the edge
+    table), reversed pairs, (v,v) pairs, an edge in D ∩ I ∩ E (deleted and
+    not re-inserted), a pair in D ∩ I \\ E (inserted), and empty sides
+    (limit(0), as the streaming driver passes)."""
+    n = 6
+    pair = st.tuples(st.integers(0, n - 1), st.integers(0, n - 1))
+    e = data.draw(st.lists(pair, min_size=1, max_size=20), label="E")
+    d = data.draw(st.lists(pair, max_size=12), label="D")
+    i = data.draw(st.lists(pair, max_size=12), label="I")
+    u, v = e[0]
+    d += [(u, v), (v, u), (u, u)]
+    i += [(u, v), (v, u), (v, v)]
+    outside = [(a, b) for a in range(n) for b in range(n) if (a, b) not in e]
+    if outside:
+        d.append(outside[0])
+        i.append(outside[0])
+    empty_d = data.draw(st.booleans(), label="empty D")
+    empty_i = data.draw(st.booleans(), label="empty I")
+    d_df, i_df = _pair_frame(spark, d), _pair_frame(spark, i)
+    if empty_d:
+        d, d_df = [], d_df.limit(0)
+    if empty_i:
+        i, i_df = [], i_df.limit(0)
+
+    def keys(pairs):
+        a = np.asarray(pairs, np.int64).reshape(-1, 2)
+        return np.unique(a[:, 0] * n + a[:, 1])
+
+    E, D, I = keys(e), keys(d), keys(i)
+    dels, ins = tidy_batch(_pair_frame(spark, e), d_df, i_df)
+    assert dels.schema == ins.schema == d_df.schema
+    got_d, got_i = _keys(dels.toPandas(), n), _keys(ins.toPandas(), n)
+    assert np.array_equal(np.sort(got_d), D[np.isin(D, E)])
+    assert np.array_equal(np.sort(got_i), I[~np.isin(I, E)])
+
+
+def test_tidy_batch_rejects_null_edges(spark):
+    """A batch edge with a null src or dst is a ValueError with the count
+    (the anti-join used to keep a null insertion silently)."""
+    edges = edges_df(spark, [0, 1], [1, 2])
+    ok = spark.createDataFrame([(0, 1)], "src long, dst long")
+    bad = spark.createDataFrame([(1, None), (None, 2), (3, 4)], "src long, dst long")
+    for d, i in ((ok, bad), (bad, ok)):
+        with pytest.raises(ValueError, match=r"2 edge\(s\) with a null src or dst"):
+            tidy_batch(edges, d, i)
+
+
+def _ranked_base(spark, seed: int, n: int, m: int):
+    """(edge keys src·n+dst without self-loops, packed snapshot, its ranks)."""
+    rng = np.random.default_rng(seed)
+    src, dst = rng.integers(0, n, m), rng.integers(0, n, m)
+    keep = src != dst
+    keys = np.unique(src[keep] * n + dst[keep])
+    g = GraphSnapshot.build(edges_df(spark, keys // n, keys % n), n=n)
+    g.bsp_packed()
+    return rng, keys, g, pagerank_static_bsp(g).ranks
+
+
+def test_fast_path_dfp_batch_job_budget(spark):
+    """One raw batch as the stream-dfp benchmark runs it: tidy_batch and
+    two localCheckpoints, with_batch(repartition=False), the delta pack and
+    DF-P.  At most 8 Spark jobs in all, at most 5 of them for the tidy and
+    its checkpoints; the ranks match the NumPy oracle on the new graph."""
+    from .oracle import add_self_loops_np, pagerank_numpy
+
+    n = 300
+    rng, keys, g0, q = _ranked_base(spark, 43, n, 2000)
+    del_raw = keys[rng.integers(0, keys.size, 8)]
+    ins_raw = rng.integers(0, n, 30) * n + rng.integers(0, n, 30)
+    del_df = edges_df(spark, del_raw // n, del_raw % n)
+    ins_df = edges_df(spark, ins_raw // n, ins_raw % n)
+
+    def tidy():
+        d, i = tidy_batch(g0.edges, del_df, ins_df)
+        return d.localCheckpoint(), i.localCheckpoint()
+
+    def apply_and_rank(d, i):
+        g1 = g0.with_batch(d, i, repartition=False)
+        g1.bsp_packed()
+        return g1, pagerank_dynamic_frontier_prune_bsp(g0, g1, d, i, q)
+
+    (dels, ins), tidy_jobs = _count_jobs(spark, tidy)
+    (g1, res), rest_jobs = _count_jobs(spark, lambda: apply_and_rank(dels, ins))
+    try:
+        assert tidy_jobs <= 5, tidy_jobs
+        assert tidy_jobs + rest_jobs <= 8, (tidy_jobs, rest_jobs)
+        s0, d0 = add_self_loops_np(n, keys // n, keys % n)
+        old = s0 * n + d0
+        dk, ik = np.unique(del_raw), np.unique(ins_raw)
+        new = np.union1d(np.setdiff1d(old, dk[np.isin(dk, old)]), ik)
+        want, _ = pagerank_numpy(n, new // n, new % n)
+        assert np.abs(res.ranks - want).max() <= 1e-6
+    finally:
+        g1.unpersist()
+        g0.unpersist()
+
+
+def test_df_seeds_from_child_arrays_bit_equal_collect(spark):
+    """DF and DF-P seed from the batch arrays the child's delta pack kept
+    when they get the same two frames (the loop's job only), and from one
+    collect otherwise.  Both routes give bit-equal ranks, iterations,
+    affected_initial, final vaff and movers; the batch has a (v,v)
+    deletion, whose src is a seed."""
+    n = 300
+    rng, keys, g0, q = _ranked_base(spark, 47, n, 2000)
+    del_keys = np.concatenate([[7 * n + 7], keys[rng.integers(0, keys.size, 10)]])
+    ins_keys = rng.integers(0, n, 30) * n + rng.integers(0, n, 30)
+    dels, ins = tidy_batch(
+        g0.edges,
+        edges_df(spark, del_keys // n, del_keys % n),
+        edges_df(spark, ins_keys // n, ins_keys % n),
+    )
+    dels, ins = dels.localCheckpoint(), ins.localCheckpoint()
+    g1 = g0.with_batch(dels, ins, repartition=False)
+    g1.bsp_packed()
+    try:
+        assert g1._batch[0] is dels and g1._batch[1] is ins
+        assert ((g1._batch[2] == 7) & (g1._batch[3] == 7) & g1._batch[4]).any()
+        for entry in (pagerank_dynamic_frontier_bsp, pagerank_dynamic_frontier_prune_bsp):
+            kept, kept_jobs = _count_jobs(spark, lambda: entry(g0, g1, dels, ins, q))
+            # equal frames, other objects: the seeds are collected
+            coll, coll_jobs = _count_jobs(
+                spark,
+                lambda: entry(g0, g1, dels.select("src", "dst"), ins.select("src", "dst"), q),
+            )
+            assert (kept_jobs, coll_jobs) == (1, 2), entry.__name__
+            assert kept.iterations == coll.iterations
+            assert kept.affected_initial == coll.affected_initial
+            assert np.array_equal(kept.ranks, coll.ranks)
+            for k in ("vaff", "movers"):
+                assert np.array_equal(kept.state[k], coll.state[k]), k
+    finally:
+        g1.unpersist()
+        g0.unpersist()
+    assert g1._batch is None

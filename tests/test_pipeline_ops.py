@@ -955,6 +955,34 @@ def test_bftopk_partials_scratch_reaped_at_interpreter_exit():
     assert not os.path.exists(d), "bftopk partials dir survived interpreter exit"
 
 
+def test_bftopk_partials_scratch_one_exit_hook():
+    """_partials_scratch adds its dirs to pagerank_bsp's scratch registry
+    instead of one atexit callback per call: 100 calls leave the exit list
+    flat, and every dir is still reaped at interpreter exit."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    probe = (
+        "import sys, atexit, json; sys.path.insert(0, %r)\n"
+        "from pagerank_cuda_dynamic_spark.operators.similarity import _partials_scratch\n"
+        "dirs = [_partials_scratch()]\n"
+        "hooks = atexit._ncallbacks()\n"
+        "dirs += [_partials_scratch() for _ in range(99)]\n"
+        "print(json.dumps([hooks, atexit._ncallbacks(), dirs]))\n" % str(repo)
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], capture_output=True, text=True, check=True
+    )
+    before, after, dirs = json.loads(out.stdout.strip().splitlines()[-1])
+    assert after == before
+    assert len(set(dirs)) == 100
+    assert not any(os.path.exists(d) for d in dirs), "a partials dir survived exit"
+
+
 def test_interleave_sources_exact_stride_order(spark):
     from pagerank_cuda_dynamic_spark.operators.sampling import (
         interleave_sources,

@@ -71,22 +71,26 @@ def test_filter_pushdown_and_column_pruning(spark, docs):
 def test_tidy_batch_uses_broadcast_anti_join(spark):
     """Batch tidying (J3/G10) must broadcast the small batch side — a
     SortMergeJoin here would shuffle the full edge table per batch, and a
-    build-side flip would try to hash the whole graph."""
+    build-side flip would try to hash the whole graph.  The edge-table
+    probe is the only query that reads the edges: the returned frames are
+    built on the driver and never re-read them."""
     import pandas as pd
 
-    from pagerank_cuda_dynamic_spark.operators.graph import tidy_batch
+    from pagerank_cuda_dynamic_spark.operators.graph import _batch_probe, tidy_batch
 
     edges = spark.range(0, 10000).select(
         F.col("id").alias("src"), ((F.col("id") * 7 + 1) % 10000).alias("dst")
     )
     dels_in = spark.createDataFrame(pd.DataFrame({"src": [1, 2], "dst": [8, 15]}))
     ins_in = spark.createDataFrame(pd.DataFrame({"src": [3, 4], "dst": [22, 29]}))
+    p = plan_of(_batch_probe(edges, dels_in.unionByName(ins_in)))
+    assert "BroadcastHashJoin" in p
+    assert "SortMergeJoin" not in p
+    # every broadcast must build the batch-derived (right) side
+    assert "BuildLeft" not in p
     for df in tidy_batch(edges, dels_in, ins_in):
         p = plan_of(df)
-        assert "BroadcastHashJoin" in p
-        assert "SortMergeJoin" not in p
-        # every broadcast must build the batch-derived (right) side
-        assert "BuildLeft" not in p
+        assert "Range" not in p and "Join" not in p
 
 
 def test_entity_edges_broadcast_dims(spark):
