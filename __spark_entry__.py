@@ -31,10 +31,8 @@ from pagerank_cuda_dynamic_spark.sources.edges import (
 from pagerank_cuda_dynamic_spark.plans.dictionary import build_vertex_dictionary, encode_edges
 from pagerank_cuda_dynamic_spark.plans.graph_snapshot import GraphSnapshot
 from pagerank_cuda_dynamic_spark.operators.graph import tidy_batch as _tidy
-from pagerank_cuda_dynamic_spark.operators.pagerank import (
-    PagerankOptions,
-    pagerank_static,
-)
+from pagerank_cuda_dynamic_spark.operators.pagerank import PagerankOptions
+from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import pagerank_static_bsp
 from pagerank_cuda_dynamic_spark.operators.components import (
     connected_components_joinagg,
     label_propagation_joinagg,
@@ -100,7 +98,7 @@ def _ranks_as_entities(spark, g, d, ranks: np.ndarray) -> DataFrame:
 def _pagerank_k(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     g, d, n = _entity_graph(spark, sf_dir)
     opts = PagerankOptions(tolerance=0.0, max_iterations=k)
-    res = pagerank_static(g, opts)
+    res = pagerank_static_bsp(g, opts)
     out = _ranks_as_entities(spark, g, d, res.ranks)
     return out
 
@@ -118,7 +116,7 @@ def entry(spark: SparkSession) -> DataFrame:
     self-loops) over the sf0.001 entity graph; top 50 entities by rank."""
     sf_dir = "/root/testdata/sf0.001"
     g, d, n = _entity_graph(spark, sf_dir)
-    res = pagerank_static(g, PagerankOptions())
+    res = pagerank_static_bsp(g, PagerankOptions())
     out = (
         _ranks_as_entities(spark, g, d, res.ranks)
         .orderBy(F.desc("rank"), F.asc("entity"))
@@ -242,7 +240,7 @@ def q_pagerank_converged(spark, sf_dir):
     """Full static PR to 1e-10 L∞ (iterative — no SQL oracle; validated by
     pytest NumPy oracle instead)."""
     g, d, n = _entity_graph(spark, sf_dir)
-    res = pagerank_static(g, PagerankOptions())
+    res = pagerank_static_bsp(g, PagerankOptions())
     return _ranks_as_entities(spark, g, d, res.ranks)
 
 

@@ -665,7 +665,7 @@ def section_ops(spark, results: dict) -> None:
 
     from pagerank_cuda_dynamic_spark.sources.edges import derive_entity_edges, edges_from_events
     from pagerank_cuda_dynamic_spark.plans import build_vertex_dictionary, encode_edges, GraphSnapshot
-    from pagerank_cuda_dynamic_spark.operators.pagerank import PagerankOptions, pagerank_static
+    from pagerank_cuda_dynamic_spark.operators.pagerank import PagerankOptions
     from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import pagerank_static_bsp
     from pagerank_cuda_dynamic_spark.operators.components import (
         connected_components_np,

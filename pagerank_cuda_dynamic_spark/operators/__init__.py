@@ -36,11 +36,13 @@ from pagerank_cuda_dynamic_spark.operators.features import (  # noqa: F401
 from pagerank_cuda_dynamic_spark.operators.pagerank import (  # noqa: F401
     PagerankOptions,
     PagerankResult,
-    pagerank_static,
-    pagerank_naive_dynamic,
-    pagerank_dynamic_traversal,
-    pagerank_dynamic_frontier,
-    pagerank_dynamic_frontier_prune,
+)
+from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (  # noqa: F401
+    pagerank_static_bsp,
+    pagerank_dynamic_traversal_bsp,
+    pagerank_dynamic_frontier_bsp,
+    pagerank_dynamic_frontier_prune_bsp,
+    pagerank_weighted_bsp,
 )
 from pagerank_cuda_dynamic_spark.operators.graph import (  # noqa: F401
     maximal_matching,

@@ -3,8 +3,8 @@
 The reference repo's rank machinery (pagerankCuda.hxx:676-692: one
 gather + one normalization barrier per superstep) generalizes to any
 linear fixpoint over the adjacency; these operators re-express three
-standard link-analysis siblings on the same declarative joinagg shape
-the engine already uses (operators/pagerank.py:261 `_loop_joinagg`):
+standard link-analysis siblings as declarative join/agg supersteps
+(the shape of operators/components.py `connected_components_joinagg`):
 
   * `hits`                  — Kleinberg hubs/authorities power iteration
                               (mutually recursive gather over E and Eᵀ,
@@ -20,14 +20,14 @@ the engine already uses (operators/pagerank.py:261 `_loop_joinagg`):
 All three are pure DataFrame plans — join / groupBy / agg supersteps
 with `materialize` lineage barriers, nothing per-row in Python, and the
 only driver traffic is one scalar per half-step (a norm or an edge
-count, exactly like the joinagg loop's L∞ collect).  They are
-key-type-agnostic: callers may pass entity-string edges directly (the
-driver gate does) or dictionary-encoded dense ids (plans/dictionary.py)
-for the 100 TB path, where the join keys become 8-byte longs.
+count).  They are key-type-agnostic: callers may pass entity-string
+edges directly (the driver gate does) or dictionary-encoded dense ids
+(plans/dictionary.py) for the 100 TB path, where the join keys become
+8-byte longs.
 
 Scale posture: every superstep is one shuffle on the edge key plus a
-broadcast-sized scalar; skewed hubs hit the same AQE skew-join handling
-as the PageRank joinagg family.  `k_core`'s peel is a shrinking
+broadcast-sized scalar; skewed hubs hit Spark's AQE skew-join
+handling.  `k_core`'s peel is a shrinking
 semi-join chain — each round's surviving-vertex set is a HAVING
 aggregate, never collected.
 """
@@ -279,7 +279,7 @@ def katz(
     series to converge.  Self-loops excluded (a page endorsing itself
     earns no Katz walk).  Returns (v, katz).
 
-    Same superstep shape as the PageRank joinagg gather — one edge-keyed
+    Same superstep shape as personalized_pagerank's gather — one edge-keyed
     shuffle + a left join back to the vertex set per round; no
     normalization barrier (Katz is not a probability), so NO driver
     traffic at all inside the loop."""

@@ -1,4 +1,4 @@
-"""BSP (bulk-synchronous) PageRank — the high-throughput execution mode.
+"""BSP (bulk-synchronous) PageRank — the package's PageRank engine.
 
 Why it exists: a Spark job that launches Python tasks costs ~0.3–0.5 s in
 local mode regardless of data volume, so a loop that submits one job per
@@ -39,12 +39,14 @@ _stripe_pack, which the TCP ring (pagerank_tcp) and the label loop
 (components_bsp) call too.  This module owns the pack, the delta pack and
 the memmap exchange.
 
-Semantics identical to operators.pagerank mode="csr" (sync pull update,
-L∞ convergence, universal self-loops); cross-checked in tests to 1e-9.
+Static, ND, DT, DF and DF-P all run _bsp_loop (semantics in
+operators.pagerank's docstring: sync pull update, L∞ convergence,
+universal self-loops); tests check each against the NumPy oracle in
+tests/oracle.py, the frontier variants superstep for superstep.
 dangling="redistribute" adds a per-superstep global dangling-mass share
 (one float per stripe per iteration through shared scratch), which also
 powers weighted PageRank (w_bin blobs; rdiv = r/wdeg) with no self-loop
-injection — semantics of pagerank_weighted_joinagg.
+injection: a[v] = C0 + P·(Σ w_uv·r[u]/wdeg(u) + dangling_mass/N).
 """
 
 from __future__ import annotations
@@ -65,6 +67,8 @@ from pagerank_cuda_dynamic_spark.operators.graph import _collect_batch
 from pagerank_cuda_dynamic_spark.operators.pagerank import (
     PagerankOptions,
     PagerankResult,
+    _adjust_warm_start,
+    _traversal_marks,
 )
 
 # worker closures call these by value (see _stripe_pack's docstring)
@@ -590,13 +594,15 @@ def spill_edges(spark, spill_dir: str):
 
 
 def _initial_ranks(q: np.ndarray | None, n: int) -> np.ndarray:
-    """The start vector: uniform 1/n, or the warm-start q (one per vertex)."""
+    """The start vector: uniform 1/n, or the warm-start q.  A q shorter
+    than n ranks a graph that has since grown: the new vertices start at 0
+    (_adjust_warm_start).  A longer q cannot belong to this graph."""
     if q is None:
         return np.full(n, 1.0 / n)
     r0 = np.asarray(q, dtype=np.float64)
-    if r0.shape != (n,):
+    if r0.ndim != 1 or r0.size > n:
         raise ValueError(f"q has {r0.size} entries, the graph has {n} vertices")
-    return r0
+    return _adjust_warm_start(r0, n)
 
 
 def _bsp_loop(
@@ -1056,18 +1062,14 @@ def _bsp_loop(
 def pagerank_static_bsp(
     graph, opts: PagerankOptions | None = None, q: np.ndarray | None = None
 ) -> PagerankResult:
-    """Static (q=None) or warm-start/Naive-Dynamic PageRank via BSP."""
+    """Static PageRank (q=None), or Naive-Dynamic from the prior ranks q:
+    every vertex affected, warm-started (absent vertices start at 0)."""
     return _bsp_loop(graph, opts or PagerankOptions(), q=q)
 
 
 def pagerank_dynamic_traversal_bsp(
     old, new, deletions, insertions, q: np.ndarray, opts: PagerankOptions | None = None
 ) -> PagerankResult:
-    from pagerank_cuda_dynamic_spark.operators.pagerank import (
-        _adjust_warm_start,
-        _traversal_marks,
-    )
-
     opts = opts or PagerankOptions()
     vaff = _traversal_marks(old, new, deletions, insertions)
     return _bsp_loop(new, opts, q=_adjust_warm_start(q, new.n), vaff0=vaff)
@@ -1111,8 +1113,6 @@ def pagerank_dynamic_frontier_bsp(
 ) -> PagerankResult:
     """Dynamic Frontier on BSP.  `old` is unused: the marks are seeded from
     the tidied batch (see _frontier_seeds); kept for the shared signature."""
-    from pagerank_cuda_dynamic_spark.operators.pagerank import _adjust_warm_start
-
     vaff, movers = _frontier_seeds(new, deletions, insertions)
     return _bsp_loop(
         new, opts or PagerankOptions(), q=_adjust_warm_start(q, new.n),
@@ -1124,8 +1124,6 @@ def pagerank_dynamic_frontier_prune_bsp(
     old, new, deletions, insertions, q: np.ndarray, opts: PagerankOptions | None = None
 ) -> PagerankResult:
     """Dynamic Frontier with Pruning on BSP; seeded like the DF entry."""
-    from pagerank_cuda_dynamic_spark.operators.pagerank import _adjust_warm_start
-
     vaff, movers = _frontier_seeds(new, deletions, insertions)
     return _bsp_loop(
         new, opts or PagerankOptions(), q=_adjust_warm_start(q, new.n),
@@ -1137,7 +1135,7 @@ class WeightedSnapshot:
     """Minimal weighted-graph snapshot for the BSP path: (src, dst, w)
     edges cached dst-partitioned, wdeg side array.  No self-loop injection
     — dangling mass is redistributed per superstep (mtx.hxx:119 readers
-    accept weights; semantics of pagerank_weighted_joinagg)."""
+    accept weights)."""
 
     def __init__(self, edges_w, n: int, partitions: int | None = None):
         spark = edges_w.sparkSession

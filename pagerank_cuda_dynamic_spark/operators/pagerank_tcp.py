@@ -41,8 +41,8 @@ per iteration the ring additionally carries (a) an NH-byte hub-affected
 mark bitmap (OR-allreduce, the memmap loop's A0 phase) when movers are
 alive, (b) each task's mover-id segment and updated (id, value) pairs —
 so cross-node traffic is O(affected) for sparse frontiers, matching the
-O(affected) compute.  Semantics cross-checked against pagerank_bsp/csr in
-tests to 1e-10 (including forced hub salting).
+O(affected) compute.  Semantics cross-checked against pagerank_bsp and
+the NumPy oracle in tests to 1e-10 (including forced hub salting).
 
 It is the only engine that needs no shared filesystem, which is why it is
 kept next to the memmap loop.

@@ -31,7 +31,6 @@ class GraphSnapshot:
         self.n = n
         self._degrees = degrees
         self._outdeg_np: np.ndarray | None = None
-        self._packed: DataFrame | None = None
         self._bsp_packed: tuple | None = None
         self._bsp_spill: str | None = None
         # (parent, deletions, insertions) when this snapshot came from
@@ -128,41 +127,6 @@ class GraphSnapshot:
             )
         return self._bsp_packed
 
-    def packed(self) -> DataFrame:
-        """Partition-packed CSR blocks: ONE row per dst-hash partition with
-        the partition's (src, dst) arrays as binary blobs.
-
-        This is the Spark analog of the reference's one-time host→device CSR
-        build (pagerankCuda.hxx:757–805): the per-superstep job then reads a
-        handful of blob rows instead of re-converting |E| rows to Arrow every
-        iteration — the dominant cost at bench scale (~25× superstep
-        speedup measured at 2.7M edges)."""
-        if self._packed is None:
-            import pandas as pd
-
-            def pack(batches):
-                srcs, dsts = [], []
-                for pdf in batches:
-                    srcs.append(pdf["src"].to_numpy(dtype=np.int64))
-                    dsts.append(pdf["dst"].to_numpy(dtype=np.int64))
-                if not srcs:
-                    return
-                src = np.concatenate(srcs)
-                dst = np.concatenate(dsts)
-                yield pd.DataFrame(
-                    {
-                        "n_local": [src.size],
-                        "src_bin": [src.tobytes()],
-                        "dst_bin": [dst.tobytes()],
-                    }
-                )
-
-            self._packed = self.edges.mapInPandas(
-                pack, "n_local long, src_bin binary, dst_bin binary"
-            ).persist()
-            self._packed.count()
-        return self._packed
-
     @classmethod
     def build(
         cls,
@@ -202,9 +166,9 @@ class GraphSnapshot:
 
     def outdeg_array(self) -> np.ndarray:
         """Dense float64 out-degree array (divisor of the pull update).
-        Collected once per snapshot — the CSR fast path assumes |V| fits the
-        driver, exactly as the reference assumes it fits one GPU
-        (pagerankCuda.hxx:798–805); the join/agg path has no such limit."""
+        Collected once per snapshot — the PageRank engine assumes |V| fits
+        the driver, exactly as the reference assumes it fits one GPU
+        (pagerankCuda.hxx:798–805)."""
         if self._outdeg_np is None:
             pdf = self.degrees.toPandas()
             arr = np.zeros(self.n, dtype=np.float64)
@@ -258,9 +222,6 @@ class GraphSnapshot:
         for df in (self._edges, self._degrees):
             if df is not None:
                 df.unpersist()
-        if self._packed is not None:
-            self._packed.unpersist()
-            self._packed = None
         if self._bsp_packed is not None:
             if self._bsp_packed[0] is not None:
                 self._bsp_packed[0].unpersist()

@@ -29,6 +29,15 @@ def edges_df(spark, src, dst):
     return spark.createDataFrame(pdf)
 
 
+def snapshot_oracle(g, **kw):
+    """tests/oracle.pagerank_numpy over a snapshot's own edge set (self-
+    looped and deduped when the snapshot was built that way)."""
+    from .oracle import pagerank_numpy
+
+    e = g.edges.toPandas()
+    return pagerank_numpy(g.n, e["src"].to_numpy(), e["dst"].to_numpy(), **kw)
+
+
 # Golden micro-graphs (FIXTURES.md F5) as literal (n, src[], dst[]) tuples.
 MICRO_GRAPHS = {
     "line5": (5, [0, 1, 2, 3], [1, 2, 3, 4]),

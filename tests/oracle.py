@@ -1,6 +1,8 @@
-"""NumPy reference oracle — ≤40-line transliteration of the reference's
-sync pull iteration (pagerank.hxx:132–141 update, 387–394 loop).  Ground
-truth for every Spark PageRank test (main.cu:88 oracle pattern)."""
+"""NumPy reference oracle — transliterations of the reference's sync pull
+iteration (pagerank.hxx:132–141 update, 387–394 loop) and of its dynamic
+superstep rules (pagerankCuda.hxx:676–692, pagerankPrune.hxx:30–67).
+Ground truth for every Spark PageRank test (main.cu:88 oracle pattern).
+NumPy only: nothing here shares code with the engine it checks."""
 
 from __future__ import annotations
 
@@ -16,18 +18,22 @@ def pagerank_numpy(
     max_iterations: int = 500,
     q: np.ndarray | None = None,
     dangling: str = "selfloop",
+    w: np.ndarray | None = None,
 ) -> tuple[np.ndarray, int]:
     """edges (src,dst) must already be deduped; in selfloop mode they must
-    already include a self-loop on every vertex (main.cu:169)."""
+    already include a self-loop on every vertex (main.cu:169).  With
+    weights w: a[v] = C0 + P·Σ w_uv·r[u]/wdeg(u), wdeg(u) = Σ_out w (use
+    dangling="redistribute"; duplicate edges then add their weights)."""
     src = np.asarray(src, dtype=np.int64)
     dst = np.asarray(dst, dtype=np.int64)
-    outdeg = np.bincount(src, minlength=n).astype(np.float64)
-    safe = np.maximum(outdeg, 1.0)
+    outdeg = np.bincount(src, weights=w, minlength=n).astype(np.float64)
+    safe = np.where(outdeg > 0, outdeg, 1.0)
     r = np.full(n, 1.0 / n) if q is None else np.asarray(q, dtype=np.float64).copy()
     C0 = (1.0 - damping) / n
     it = 0
     while it < max_iterations:
-        contrib = np.bincount(dst, weights=r[src] / safe[src], minlength=n)
+        share = r[src] / safe[src] if w is None else w * r[src] / safe[src]
+        contrib = np.bincount(dst, weights=share, minlength=n)
         a = C0 + damping * contrib
         if dangling == "redistribute":
             a += damping * r[outdeg == 0].sum() / n
@@ -37,6 +43,90 @@ def pagerank_numpy(
         if el < tolerance:
             break
     return r, it
+
+
+def pagerank_frontier_numpy(
+    n: int,
+    src: np.ndarray,
+    dst: np.ndarray,
+    q: np.ndarray,
+    vaff0: np.ndarray,
+    expand: bool = False,
+    prune: bool = False,
+    corrected: bool = False,
+    damping: float = 0.85,
+    tolerance: float = 1e-10,
+    frontier_tolerance: float = 1e-6,
+    prune_tolerance: float = 1e-6,
+    max_iterations: int = 500,
+) -> tuple[np.ndarray, int]:
+    """Dynamic supersteps from the marks vaff0 over the NEW self-looped
+    graph (src, dst): DT is expand=False, DF expand=True, DF-P
+    expand=prune=corrected=True.  Per superstep:
+      * two-phase expansion: the previous superstep's movers mark their
+        out-neighbours (pagerankCuda.hxx:681–687); DF-P skips u→u;
+      * affected vertices update (the corrected update for DF-P,
+        pagerankPrune.hxx:30–41); unaffected ones carry their rank;
+      * movers are updated vertices whose relative change exceeds
+        frontier_tolerance; DF-P unmarks those at ≤ prune_tolerance;
+      * stop when the L∞ change over the updated set is below tolerance."""
+    src = np.asarray(src, dtype=np.int64)
+    dst = np.asarray(dst, dtype=np.int64)
+    outdeg = np.bincount(src, minlength=n).astype(np.float64)
+    safe = np.maximum(outdeg, 1.0)
+    C0 = (1.0 - damping) / n
+    r = np.asarray(q, dtype=np.float64).copy()
+    vaff = np.asarray(vaff0, dtype=bool).copy()
+    movers = np.zeros(n, dtype=bool)
+    it = 0
+    while it < max_iterations:
+        if expand:
+            m = movers[src] & (src != dst) if prune else movers[src]
+            vaff[dst[m]] = True
+        contrib = np.bincount(dst, weights=r[src] / safe[src], minlength=n)
+        upd = np.flatnonzero(vaff)
+        a = r.copy()
+        if corrected:
+            d = outdeg[upd]
+            a[upd] = (C0 + damping * (contrib[upd] - r[upd] / d)) / (1.0 - damping / d)
+        else:
+            a[upd] = C0 + damping * contrib[upd]
+        eu = np.abs(a[upd] - r[upd])
+        rel = eu / np.maximum(np.maximum(r[upd], a[upd]), 1e-300)
+        if expand:
+            movers = np.zeros(n, dtype=bool)
+            movers[upd[rel > frontier_tolerance]] = True
+        if prune:
+            vaff[upd[rel <= prune_tolerance]] = False
+        el = eu.max() if upd.size else 0.0
+        r = a
+        it += 1
+        if el < tolerance:
+            break
+    return r, it
+
+
+def frontier_marks_numpy(n, old_src, old_dst, new_src, new_dst, del_src, ins_src):
+    """DF initial marks (pagerank.hxx:645–652): old-graph out-neighbours of
+    deletion sources ∪ new-graph out-neighbours of insertion sources."""
+    vaff = np.zeros(n, dtype=bool)
+    vaff[np.asarray(old_dst)[np.isin(old_src, del_src)]] = True
+    vaff[np.asarray(new_dst)[np.isin(new_src, ins_src)]] = True
+    return vaff
+
+
+def traversal_marks_numpy(n, old_src, old_dst, new_src, new_dst, del_src, ins_src):
+    """DT marks (pagerank.hxx:543–578): everything reachable in the NEW
+    graph from the DF initial marks."""
+    vaff = frontier_marks_numpy(n, old_src, old_dst, new_src, new_dst, del_src, ins_src)
+    new_src = np.asarray(new_src)
+    new_dst = np.asarray(new_dst)
+    while True:
+        reach = vaff.copy()
+        reach[new_dst[vaff[new_src]]] = True
+        if (reach == vaff).all():
+            return vaff
+        vaff = reach
 
 
 def add_self_loops_np(n: int, src: np.ndarray, dst: np.ndarray):

@@ -10,8 +10,6 @@ import pytest
 from pagerank_cuda_dynamic_spark.operators.graph import tidy_batch
 from pagerank_cuda_dynamic_spark.operators.pagerank import (
     PagerankOptions,
-    pagerank_static,
-    pagerank_weighted_joinagg,
     _frontier_marks,
 )
 from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
@@ -23,7 +21,8 @@ from pagerank_cuda_dynamic_spark.plans.graph_snapshot import GraphSnapshot
 from pagerank_cuda_dynamic_spark.streaming.checkpoint import CheckpointManager
 from pagerank_cuda_dynamic_spark.streaming.driver import pagerank_checkpointed
 
-from .conftest import edges_df
+from .conftest import edges_df, snapshot_oracle
+from .oracle import pagerank_numpy
 
 
 def test_bsp_empty_stripe_no_deadlock(spark):
@@ -38,15 +37,15 @@ def test_bsp_empty_stripe_no_deadlock(spark):
     g = GraphSnapshot.build(edges_df(spark, src, dst), n=n, self_loops=False)
     opts = PagerankOptions(dangling="redistribute")
     res = pagerank_static_bsp(g, opts)
-    want = pagerank_static(g, opts)  # csr path implements redistribute
-    assert np.allclose(res.ranks, want.ranks, atol=1e-10)
+    want, _ = snapshot_oracle(g, dangling="redistribute")
+    assert np.allclose(res.ranks, want, atol=1e-10)
     assert abs(res.ranks.sum() - 1.0) < 1e-8
     g.unpersist()
 
 
 def test_bsp_redistribute_matches_csr(spark):
     """dangling='redistribute' on the BSP path (previously silently wrong)
-    must match the csr implementation on a graph with dangling vertices."""
+    must match the NumPy oracle on a graph with dangling vertices."""
     rng = np.random.default_rng(11)
     n = 300
     src = rng.integers(0, 250, 2000)  # vertices 250..299 never emit
@@ -54,10 +53,17 @@ def test_bsp_redistribute_matches_csr(spark):
     g = GraphSnapshot.build(edges_df(spark, src, dst), n=n, self_loops=False)
     opts = PagerankOptions(dangling="redistribute")
     a = pagerank_static_bsp(g, opts)
-    b = pagerank_static(g, opts)
-    assert np.allclose(a.ranks, b.ranks, atol=1e-10)
-    assert a.iterations == b.iterations
+    want, want_it = snapshot_oracle(g, dangling="redistribute")
+    assert np.allclose(a.ranks, want, atol=1e-10)
+    assert a.iterations == want_it
     g.unpersist()
+
+
+def _weighted_oracle(pdf, n, **kw):
+    return pagerank_numpy(
+        n, pdf["src"].to_numpy(), pdf["dst"].to_numpy(),
+        w=pdf["w"].to_numpy(), dangling="redistribute", **kw,
+    )
 
 
 def test_weighted_bsp_matches_joinagg(spark):
@@ -73,8 +79,8 @@ def test_weighted_bsp_matches_joinagg(spark):
     df = spark.createDataFrame(pdf)
     opts = PagerankOptions(dangling="redistribute", max_iterations=200)
     a = pagerank_weighted_bsp(df, n, opts)
-    b = pagerank_weighted_joinagg(df, n, PagerankOptions(max_iterations=200))
-    assert np.allclose(a.ranks, b.ranks, atol=1e-8)
+    want, _ = _weighted_oracle(pdf, n, max_iterations=200)
+    assert np.allclose(a.ranks, want, atol=1e-8)
 
 
 def test_weighted_bsp_fractional_wdeg(spark):
@@ -93,8 +99,8 @@ def test_weighted_bsp_fractional_wdeg(spark):
     )
     df = spark.createDataFrame(pdf)
     a = pagerank_weighted_bsp(df, n, PagerankOptions(dangling="redistribute", max_iterations=200))
-    b = pagerank_weighted_joinagg(df, n, PagerankOptions(max_iterations=200))
-    assert np.allclose(a.ranks, b.ranks, atol=1e-8)
+    want, _ = _weighted_oracle(pdf, n, max_iterations=200)
+    assert np.allclose(a.ranks, want, atol=1e-8)
 
 
 def test_dfp_kill_resume_keeps_movers(spark, tmp_path):

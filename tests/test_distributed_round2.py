@@ -1,10 +1,9 @@
-"""Round-2 scale-out twins: joinagg CC/LPA and DataFrame-state DT must match
-the driver-resident kernels exactly (same algorithms, zero driver state)."""
+"""Round-2 scale-out twins: joinagg CC/LPA must match the driver-resident
+kernels exactly (same algorithms, zero driver state)."""
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from pagerank_cuda_dynamic_spark.operators.components import (
@@ -14,13 +13,6 @@ from pagerank_cuda_dynamic_spark.operators.components import (
     label_propagation_np,
     triangle_count,
 )
-from pagerank_cuda_dynamic_spark.operators.graph import tidy_batch
-from pagerank_cuda_dynamic_spark.operators.pagerank import (
-    pagerank_dynamic_traversal,
-    pagerank_dynamic_traversal_joinagg,
-)
-from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import pagerank_static_bsp
-from pagerank_cuda_dynamic_spark.plans.graph_snapshot import GraphSnapshot
 
 from .conftest import edges_df
 
@@ -64,31 +56,6 @@ def test_lpa_joinagg_matches_np(spark, random_graph):
         .to_numpy()
     )
     assert np.array_equal(got, want)
-
-
-def test_dt_joinagg_matches_csr(spark):
-    rng = np.random.default_rng(47)
-    n = 150
-    src = rng.integers(0, n, 700)
-    dst = rng.integers(0, n, 700)
-    keep = src != dst
-    g0 = GraphSnapshot.build(edges_df(spark, src[keep], dst[keep]), n=n)
-    base = pagerank_static_bsp(g0)
-    ins_pdf = pd.DataFrame(
-        {"src": rng.integers(0, n, 25), "dst": rng.integers(0, n, 25)}
-    )
-    empty = spark.createDataFrame(
-        pd.DataFrame({"src": [], "dst": []}).astype("int64"),
-        schema="src long, dst long",
-    )
-    dels, ins = tidy_batch(g0.edges, empty, spark.createDataFrame(ins_pdf))
-    g1 = g0.with_batch(dels, ins)
-    a = pagerank_dynamic_traversal_joinagg(g0, g1, dels, ins, base.ranks)
-    b = pagerank_dynamic_traversal(g0, g1, dels, ins, base.ranks)
-    assert np.allclose(a.ranks, b.ranks, atol=1e-9)
-    assert a.iterations == b.iterations
-    g0.unpersist()
-    g1.unpersist()
 
 
 def test_triangle_degree_oriented_exact(spark):

@@ -6,15 +6,15 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pagerank_cuda_dynamic_spark.operators.pagerank import (
-    PagerankOptions,
-    pagerank_static,
-    pagerank_weighted_joinagg,
+from pagerank_cuda_dynamic_spark.operators.pagerank import PagerankOptions
+from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
+    pagerank_static_bsp,
+    pagerank_weighted_bsp,
 )
-from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import pagerank_static_bsp
 from pagerank_cuda_dynamic_spark.plans.graph_snapshot import GraphSnapshot
 
 from .conftest import edges_df
+from .oracle import pagerank_numpy
 
 
 def test_permutation_invariance(spark):
@@ -34,25 +34,6 @@ def test_permutation_invariance(spark):
     g2.unpersist()
 
 
-def _weighted_oracle(n, src, dst, w, damping=0.85, tol=1e-10, iters=500):
-    wdeg = np.zeros(n)
-    np.add.at(wdeg, src, w)
-    r = np.full(n, 1.0 / n)
-    C0 = (1 - damping) / n
-    dangling = wdeg == 0
-    safe = np.maximum(wdeg, 1.0)
-    for _ in range(iters):
-        dm = r[dangling].sum()
-        contrib = np.zeros(n)
-        np.add.at(contrib, dst, w * r[src] / safe[src])
-        a = C0 + damping * (contrib + dm / n)
-        el = np.abs(a - r).max()
-        r = a
-        if el < tol:
-            break
-    return r
-
-
 def test_weighted_pagerank_matches_oracle(spark):
     rng = np.random.default_rng(71)
     n, m = 80, 400
@@ -63,9 +44,12 @@ def test_weighted_pagerank_matches_oracle(spark):
     # collapse duplicate (src,dst) by summing weights (dedup analog)
     pdf = pdf.groupby(["src", "dst"], as_index=False)["w"].sum()
     df = spark.createDataFrame(pdf)
-    res = pagerank_weighted_joinagg(df, n, PagerankOptions(max_iterations=120))
-    want = _weighted_oracle(
-        n, pdf["src"].to_numpy(), pdf["dst"].to_numpy(), pdf["w"].to_numpy(), iters=120
+    res = pagerank_weighted_bsp(
+        df, n, PagerankOptions(dangling="redistribute", max_iterations=120)
+    )
+    want, _ = pagerank_numpy(
+        n, pdf["src"].to_numpy(), pdf["dst"].to_numpy(), max_iterations=120,
+        dangling="redistribute", w=pdf["w"].to_numpy(),
     )
     assert np.allclose(res.ranks, want, atol=1e-8)
     assert abs(res.ranks.sum() - 1.0) < 1e-8
@@ -79,11 +63,10 @@ def test_weight_one_equals_unweighted(spark):
     dst = rng.integers(0, n, m)
     pdf = pd.DataFrame({"src": src, "dst": dst}).drop_duplicates()
     wdf = spark.createDataFrame(pdf.assign(w=1.0))
-    res_w = pagerank_weighted_joinagg(wdf, n, PagerankOptions(max_iterations=80))
+    opts = PagerankOptions(dangling="redistribute", max_iterations=80)
+    res_w = pagerank_weighted_bsp(wdf, n, opts)
     g = GraphSnapshot.build(edges_df(spark, pdf["src"].to_numpy(), pdf["dst"].to_numpy()),
                             n=n, self_loops=False)
-    res_u = pagerank_static(
-        g, PagerankOptions(mode="csr", dangling="redistribute", max_iterations=80)
-    )
+    res_u = pagerank_static_bsp(g, opts)
     assert np.allclose(res_w.ranks, res_u.ranks, atol=1e-9)
     g.unpersist()

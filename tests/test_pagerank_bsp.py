@@ -1,19 +1,21 @@
-"""BSP-mode PageRank parity with the per-superstep csr path + NumPy oracle."""
+"""BSP PageRank (and the TCP ring where noted) against the NumPy oracle."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from pagerank_cuda_dynamic_spark.operators.pagerank import (
-    PagerankOptions,
-    pagerank_static,
-)
+from pagerank_cuda_dynamic_spark.operators.pagerank import PagerankOptions
 from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import pagerank_static_bsp
 from pagerank_cuda_dynamic_spark.plans.graph_snapshot import GraphSnapshot
 
-from .conftest import MICRO_GRAPHS, edges_df
-from .oracle import add_self_loops_np, pagerank_numpy
+from .conftest import MICRO_GRAPHS, edges_df, snapshot_oracle
+from .oracle import (
+    add_self_loops_np,
+    frontier_marks_numpy,
+    pagerank_frontier_numpy,
+    pagerank_numpy,
+)
 
 
 @pytest.mark.parametrize("name", ["line5", "star_hub", "two_islands", "diamond"])
@@ -35,9 +37,9 @@ def test_bsp_matches_csr_medium(spark):
     dst = rng.integers(0, n, m)
     g = GraphSnapshot.build(edges_df(spark, src, dst), n=n)
     a = pagerank_static_bsp(g, PagerankOptions())
-    b = pagerank_static(g, PagerankOptions(mode="csr"))
-    assert np.allclose(a.ranks, b.ranks, atol=1e-10)
-    assert a.iterations == b.iterations
+    want, want_it = snapshot_oracle(g)
+    assert np.allclose(a.ranks, want, atol=1e-10)
+    assert a.iterations == want_it
     g.unpersist()
 
 
@@ -56,12 +58,9 @@ def test_bsp_warm_start(spark):
 
 def test_bsp_salted_hubs_parity(spark):
     """Force hub salting (low hub_factor) on a star-heavy graph; ranks must
-    match the unsalted csr path exactly, static and dynamic."""
+    match the NumPy oracle, static and dynamic."""
     import pandas as pd
     from pagerank_cuda_dynamic_spark.operators.graph import tidy_batch
-    from pagerank_cuda_dynamic_spark.operators.pagerank import (
-        pagerank_dynamic_frontier_prune,
-    )
     from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
         bsp_pack,
         pagerank_dynamic_frontier_prune_bsp,
@@ -78,9 +77,9 @@ def test_bsp_salted_hubs_parity(spark):
     g._bsp_packed = bsp_pack(g, hub_factor=0.05)  # force salting
     assert g._bsp_packed[3].size >= 2, "hubs must be detected"
     res = pagerank_static_bsp(g, PagerankOptions())
-    want = pagerank_static(g, PagerankOptions(mode="csr"))
-    assert np.allclose(res.ranks, want.ranks, atol=1e-10)
-    assert res.iterations == want.iterations
+    want, want_it = snapshot_oracle(g)
+    assert np.allclose(res.ranks, want, atol=1e-10)
+    assert res.iterations == want_it
 
     # dynamic DF-P with salted hubs
     ins_pdf = pd.DataFrame({"src": rng.integers(2, n, 20), "dst": rng.integers(0, n, 20)})
@@ -91,8 +90,15 @@ def test_bsp_salted_hubs_parity(spark):
     g2 = g.with_batch(dels, ins)
     g2._bsp_packed = bsp_pack(g2, hub_factor=0.05)
     bsp = pagerank_dynamic_frontier_prune_bsp(g, g2, dels, ins, res.ranks)
-    csr = pagerank_dynamic_frontier_prune(g, g2, dels, ins, res.ranks)
-    assert np.allclose(bsp.ranks, csr.ranks, atol=1e-9)
+    old, new, i_np = g.edges.toPandas(), g2.edges.toPandas(), ins.toPandas()
+    vaff0 = frontier_marks_numpy(
+        n, old["src"], old["dst"], new["src"], new["dst"], [], i_np["src"]
+    )
+    want, _ = pagerank_frontier_numpy(
+        n, new["src"], new["dst"], res.ranks, vaff0,
+        expand=True, prune=True, corrected=True,
+    )
+    assert np.allclose(bsp.ranks, want, atol=1e-9)
     g.unpersist()
     g2.unpersist()
 
@@ -101,7 +107,7 @@ def test_bsp_pack_distributed_derivation_parity(spark):
     """bsp_pack must derive hubs/bounds without any O(|V|) driver collect:
     hub set identical to the exact driver-side histogram, bounds a strict
     partition of [0, n), one packed row per stripe, and ranks at 1e-10 vs
-    the csr twin on a hub-heavy graph."""
+    the NumPy oracle on a hub-heavy graph."""
     from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
         _indegrees,
         bsp_pack,
@@ -139,17 +145,17 @@ def test_bsp_pack_distributed_derivation_parity(spark):
         assert per_stripe.max() <= 3.0 * max(per_stripe.mean(), 1.0)
         packed.unpersist()
         a = pagerank_static_bsp(g)
-        b = pagerank_static(g, PagerankOptions(mode="csr"))
-        assert np.allclose(a.ranks, b.ranks, atol=1e-10)
+        want, _ = snapshot_oracle(g)
+        assert np.allclose(a.ranks, want, atol=1e-10)
     finally:
         g.unpersist()
 
 
 def test_bsp_fine_stripes_parity(spark):
     """Stripes finer than tasks (edge-budget striping): a pack with k~16
-    stripes per task must run the memmap AND TCP loops with identical
-    results to the csr path — tasks own several stripes, flags/movers/
-    slices are per-stripe."""
+    stripes per task must run the memmap AND TCP loops with the NumPy
+    oracle's results — tasks own several stripes, flags/movers/slices are
+    per-stripe."""
     from pagerank_cuda_dynamic_spark.operators import pagerank_tcp as PT
     from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import bsp_pack
     from pagerank_cuda_dynamic_spark.operators.pagerank_tcp import pagerank_static_tcp
@@ -182,10 +188,10 @@ def test_bsp_fine_stripes_parity(spark):
         t = pagerank_static_tcp(f)
     finally:
         PT.bsp_pack = orig
-    b = pagerank_static(g, PagerankOptions(mode="csr"))
-    assert np.allclose(a.ranks, b.ranks, atol=1e-10)
-    assert np.allclose(t.ranks, b.ranks, atol=1e-10)
-    assert a.iterations == b.iterations == t.iterations
+    want, want_it = snapshot_oracle(g)
+    assert np.allclose(a.ranks, want, atol=1e-10)
+    assert np.allclose(t.ranks, want, atol=1e-10)
+    assert a.iterations == want_it == t.iterations
     g.unpersist()
 
 

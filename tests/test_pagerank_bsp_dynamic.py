@@ -1,5 +1,5 @@
 """BSP dynamic variants (ND/DT/DF/DF-P) match static recompute (main.cu
-invariant) and the per-superstep csr implementations."""
+invariant) and the NumPy superstep oracle."""
 
 from __future__ import annotations
 
@@ -10,10 +10,6 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from pagerank_cuda_dynamic_spark.operators.graph import tidy_batch
-from pagerank_cuda_dynamic_spark.operators.pagerank import (
-    pagerank_dynamic_frontier,
-    pagerank_dynamic_frontier_prune,
-)
 from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
     pagerank_dynamic_frontier_bsp,
     pagerank_dynamic_frontier_prune_bsp,
@@ -23,6 +19,7 @@ from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
 from pagerank_cuda_dynamic_spark.plans.graph_snapshot import GraphSnapshot
 
 from .conftest import edges_df
+from .oracle import frontier_marks_numpy, pagerank_frontier_numpy
 
 
 @pytest.fixture(scope="module")
@@ -50,6 +47,17 @@ def bsp_batch_setup(spark):
     return g0, g1, dels, ins, base.ranks, oracle.ranks
 
 
+def _frontier_oracle(setup, **flags):
+    """pagerank_frontier_numpy from the reference's DF marks of the batch."""
+    g0, g1, dels, ins, q, _ = setup
+    old, new = g0.edges.toPandas(), g1.edges.toPandas()
+    vaff0 = frontier_marks_numpy(
+        g1.n, old["src"], old["dst"], new["src"], new["dst"],
+        dels.toPandas()["src"], ins.toPandas()["src"],
+    )
+    return pagerank_frontier_numpy(g1.n, new["src"], new["dst"], q, vaff0, **flags)
+
+
 def test_bsp_dt_matches_static(bsp_batch_setup):
     g0, g1, dels, ins, q, want = bsp_batch_setup
     res = pagerank_dynamic_traversal_bsp(g0, g1, dels, ins, q)
@@ -61,17 +69,20 @@ def test_bsp_df_matches_static_and_csr(bsp_batch_setup):
     g0, g1, dels, ins, q, want = bsp_batch_setup
     res = pagerank_dynamic_frontier_bsp(g0, g1, dels, ins, q)
     assert np.allclose(res.ranks, want, atol=1e-6)
-    csr = pagerank_dynamic_frontier(g0, g1, dels, ins, q)
-    assert np.allclose(res.ranks, csr.ranks, atol=1e-9)
-    assert res.iterations == csr.iterations
+    ref, ref_it = _frontier_oracle(bsp_batch_setup, expand=True)
+    assert np.allclose(res.ranks, ref, atol=1e-9)
+    assert res.iterations == ref_it
 
 
 def test_bsp_dfp_matches_static_and_csr(bsp_batch_setup):
     g0, g1, dels, ins, q, want = bsp_batch_setup
     res = pagerank_dynamic_frontier_prune_bsp(g0, g1, dels, ins, q)
     assert np.allclose(res.ranks, want, atol=1e-6)
-    csr = pagerank_dynamic_frontier_prune(g0, g1, dels, ins, q)
-    assert np.allclose(res.ranks, csr.ranks, atol=1e-9)
+    ref, ref_it = _frontier_oracle(
+        bsp_batch_setup, expand=True, prune=True, corrected=True
+    )
+    assert np.allclose(res.ranks, ref, atol=1e-9)
+    assert res.iterations == ref_it
 
 
 def test_delta_pack_matches_full_pack(spark):

@@ -1,7 +1,8 @@
 """Dynamic-equivalence tests — mirrors the reference experiment harness
 (main.cu:79–147): apply batches of insertions+deletions; assert ND/DT/DF/DF-P
 each match a full static recompute on the updated graph within tolerance
-(the L1-err-vs-oracle check at main.cu:55, here as allclose)."""
+(the L1-err-vs-oracle check at main.cu:55, here as allclose), and that
+DT/DF/DF-P follow the NumPy superstep oracle over a fixed superstep count."""
 
 from __future__ import annotations
 
@@ -10,18 +11,23 @@ import pandas as pd
 import pytest
 
 from pagerank_cuda_dynamic_spark.operators.graph import tidy_batch
-from pagerank_cuda_dynamic_spark.operators.pagerank import (
-    PagerankOptions,
-    pagerank_dynamic_frontier,
-    pagerank_dynamic_frontier_prune,
-    pagerank_dynamic_traversal,
-    pagerank_naive_dynamic,
-    pagerank_static,
+from pagerank_cuda_dynamic_spark.operators.pagerank import PagerankOptions
+from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
+    pagerank_dynamic_frontier_bsp,
+    pagerank_dynamic_frontier_prune_bsp,
+    pagerank_dynamic_traversal_bsp,
+    pagerank_static_bsp,
 )
-from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import pagerank_static_bsp
 from pagerank_cuda_dynamic_spark.plans.graph_snapshot import GraphSnapshot
 
 from .conftest import edges_df
+from .oracle import (
+    add_self_loops_np,
+    frontier_marks_numpy,
+    pagerank_frontier_numpy,
+    pagerank_numpy,
+    traversal_marks_numpy,
+)
 
 
 def _random_graph(rng: np.random.Generator, n: int, m: int):
@@ -70,27 +76,27 @@ def test_batch_apply_changes_graph(batch_setup):
 
 def test_naive_dynamic_matches_static(batch_setup):
     _, g1, _, _, q, want = batch_setup
-    res = pagerank_naive_dynamic(g1, q)
+    res = pagerank_static_bsp(g1, q=q)
     assert np.allclose(res.ranks, want, atol=1e-6)
 
 
 def test_dynamic_traversal_matches_static(batch_setup):
     g0, g1, dels, ins, q, want = batch_setup
-    res = pagerank_dynamic_traversal(g0, g1, dels, ins, q)
+    res = pagerank_dynamic_traversal_bsp(g0, g1, dels, ins, q)
     assert res.affected_initial > 0
     assert np.allclose(res.ranks, want, atol=1e-6)
 
 
 def test_dynamic_frontier_matches_static(batch_setup):
     g0, g1, dels, ins, q, want = batch_setup
-    res = pagerank_dynamic_frontier(g0, g1, dels, ins, q)
+    res = pagerank_dynamic_frontier_bsp(g0, g1, dels, ins, q)
     assert res.affected_initial > 0
     assert np.allclose(res.ranks, want, atol=1e-6)
 
 
 def test_dynamic_frontier_prune_matches_static(batch_setup):
     g0, g1, dels, ins, q, want = batch_setup
-    res = pagerank_dynamic_frontier_prune(g0, g1, dels, ins, q)
+    res = pagerank_dynamic_frontier_prune_bsp(g0, g1, dels, ins, q)
     assert np.allclose(res.ranks, want, atol=1e-6)
 
 
@@ -99,49 +105,99 @@ def test_empty_batch_converges_immediately(spark):
     rng = np.random.default_rng(3)
     src, dst = _random_graph(rng, 40, 150)
     g = GraphSnapshot.build(edges_df(spark, src, dst), n=40)
-    q = pagerank_static(g).ranks
+    q = pagerank_static_bsp(g).ranks
     empty = spark.createDataFrame(
         pd.DataFrame({"src": [], "dst": []}).astype("int64"),
         schema="src long, dst long",
     )
-    res = pagerank_dynamic_frontier(g, g, empty, empty, q)
+    res = pagerank_dynamic_frontier_bsp(g, g, empty, empty, q)
     assert res.iterations == 1
     assert np.allclose(res.ranks, q, atol=1e-12)
     g.unpersist()
 
 
-def test_joinagg_frontier_matches_csr_fixed_iters(spark):
-    """Distributed-state DF path vs the csr kernel, superstep-for-superstep
-    (fixed iteration count — full convergence is covered by the csr/bsp
-    tests; the joinagg path costs several Spark jobs per superstep)."""
-    from pagerank_cuda_dynamic_spark.operators.pagerank import (
-        PagerankOptions,
-        pagerank_dynamic_frontier,
-        pagerank_dynamic_frontier_joinagg,
-        pagerank_static,
-    )
-    from pagerank_cuda_dynamic_spark.plans.graph_snapshot import GraphSnapshot
+@pytest.fixture(scope="module")
+def fixed_iters_setup(spark):
+    """A batch with deletions, insertions and a (v,v) deletion, plus the
+    old and new self-looped edge sets rebuilt in NumPy from the inputs.
 
+    Vertices [45, 60) only feed [0, 45), and the batch stays inside
+    [0, 45), so no frontier ever reaches them; q is a 3-superstep static
+    rank, far from a fixed point, so updating a vertex outside the
+    frontier (ND's rule) moves it visibly."""
     rng = np.random.default_rng(53)
-    n = 60
-    src = rng.integers(0, n, 250)
-    dst = rng.integers(0, n, 250)
-    keep = src != dst
-    g0 = GraphSnapshot.build(edges_df(spark, src[keep], dst[keep]), n=n)
-    q = pagerank_static(g0).ranks
-    ins_pdf = pd.DataFrame({"src": rng.integers(0, n, 10), "dst": rng.integers(0, n, 10)})
-    empty = spark.createDataFrame(
-        pd.DataFrame({"src": [], "dst": []}).astype("int64"), schema="src long, dst long"
+    n, k = 60, 45
+    src, dst = _random_graph(rng, k, 200)
+    up_src, up_dst = _random_graph(rng, n - k, 40)
+    src = np.r_[src, up_src + k, rng.integers(k, n, 15)]
+    dst = np.r_[dst, up_dst + k, rng.integers(0, k, 15)]
+    g0 = GraphSnapshot.build(edges_df(spark, src, dst), n=n)
+    q = pagerank_static_bsp(g0, PagerankOptions(tolerance=0.0, max_iterations=3)).ranks
+    old_s, old_d = add_self_loops_np(n, src, dst)
+    pick = rng.choice(np.flatnonzero((old_s != old_d) & (old_d < k)), 8, replace=False)
+    loop_v = int(old_s[pick[0]])
+    dels_pdf = pd.DataFrame(
+        {"src": np.r_[old_s[pick], loop_v], "dst": np.r_[old_d[pick], loop_v]}
     )
-    dels, ins = tidy_batch(g0.edges, empty, spark.createDataFrame(ins_pdf))
+    ins_pdf = pd.DataFrame({"src": rng.integers(0, k, 10), "dst": rng.integers(0, k, 10)})
+    dels, ins = tidy_batch(
+        g0.edges, spark.createDataFrame(dels_pdf), spark.createDataFrame(ins_pdf)
+    )
+    dels, ins = dels.persist(), ins.persist()
+    d_np, i_np = dels.toPandas(), ins.toPandas()
+    assert ((d_np.src == loop_v) & (d_np.dst == loop_v)).any()
+    assert len(i_np) > 0
     g1 = g0.with_batch(dels, ins)
-    opts = PagerankOptions(tolerance=0.0, max_iterations=5)
-    ja = pagerank_dynamic_frontier_joinagg(g0, g1, dels, ins, q, opts)
-    csr = pagerank_dynamic_frontier(g0, g1, dels, ins, q, opts)
-    assert ja.iterations == csr.iterations == 5
-    assert np.allclose(ja.ranks, csr.ranks, atol=1e-12)
+    # (v,v) deletions are no-ops: the new graph keeps every self-loop
+    gone = np.isin(old_s * n + old_d, d_np.src.to_numpy() * n + d_np.dst.to_numpy())
+    new_s, new_d = add_self_loops_np(
+        n, np.r_[old_s[~gone], i_np.src], np.r_[old_d[~gone], i_np.dst]
+    )
+    marks = (n, old_s, old_d, new_s, new_d, d_np.src.to_numpy(), i_np.src.to_numpy())
+    yield g0, g1, dels, ins, q, marks
     g0.unpersist()
     g1.unpersist()
+
+
+@pytest.mark.parametrize("variant", ["dt", "df", "dfp"])
+def test_frontier_variants_match_oracle_fixed_iters(fixed_iters_setup, variant):
+    """BSP DT/DF/DF-P equal the NumPy superstep oracle after exactly 5
+    supersteps.  Convergence to a static recompute would also pass a
+    frontier rule that marks every vertex (ND); a fixed iteration count
+    does not."""
+    g0, g1, dels, ins, q, marks = fixed_iters_setup
+    n, _, _, new_s, new_d = marks[:5]
+    run, marker, flags = {
+        "dt": (pagerank_dynamic_traversal_bsp, traversal_marks_numpy, {}),
+        "df": (pagerank_dynamic_frontier_bsp, frontier_marks_numpy, {"expand": True}),
+        "dfp": (
+            pagerank_dynamic_frontier_prune_bsp,
+            frontier_marks_numpy,
+            {"expand": True, "prune": True, "corrected": True},
+        ),
+    }[variant]
+    opts = PagerankOptions(tolerance=0.0, max_iterations=5)
+    res = run(g0, g1, dels, ins, q, opts)
+    want, want_it = pagerank_frontier_numpy(
+        n, new_s, new_d, q, marker(*marks), tolerance=0.0, max_iterations=5, **flags
+    )
+    assert res.iterations == want_it == 5
+    assert np.abs(res.ranks - want).max() <= 1e-12, variant
+
+
+def test_naive_dynamic_short_q_matches_oracle(fixed_iters_setup):
+    """ND from a q shorter than the graph (as if the last vertices were
+    new): absent vertices start at 0 (pagerank.hxx:290)."""
+    _, g1, _, _, q, marks = fixed_iters_setup
+    n, _, _, new_s, new_d = marks[:5]
+    q_short = q[: n - 10]
+    opts = PagerankOptions(tolerance=0.0, max_iterations=5)
+    res = pagerank_static_bsp(g1, opts, q=q_short)
+    want, _ = pagerank_numpy(
+        n, new_s, new_d, tolerance=0.0, max_iterations=5, q=np.r_[q_short, np.zeros(10)]
+    )
+    assert res.iterations == 5
+    assert np.abs(res.ranks - want).max() <= 1e-12
 
 
 def test_seeded_batch_generators(spark):

@@ -5,10 +5,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from pagerank_cuda_dynamic_spark.operators.pagerank import (
-    PagerankOptions,
-    pagerank_static,
-)
+from pagerank_cuda_dynamic_spark.operators.pagerank import PagerankOptions
+from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import pagerank_static_bsp
 from pagerank_cuda_dynamic_spark.plans.graph_snapshot import GraphSnapshot
 
 from .conftest import MICRO_GRAPHS, edges_df
@@ -16,12 +14,10 @@ from .oracle import add_self_loops_np, pagerank_numpy
 
 
 @pytest.mark.parametrize("name", sorted(MICRO_GRAPHS))
-@pytest.mark.parametrize("mode", ["csr", "joinagg"])
-def test_static_matches_oracle(spark, name, mode):
+def test_static_matches_oracle(spark, name):
     n, src, dst = MICRO_GRAPHS[name]
     g = GraphSnapshot.build(edges_df(spark, src, dst), n=n, self_loops=True)
-    opts = PagerankOptions(mode=mode)
-    res = pagerank_static(g, opts)
+    res = pagerank_static_bsp(g, PagerankOptions())
     s, d = add_self_loops_np(n, np.array(src), np.array(dst))
     want, want_it = pagerank_numpy(n, s, d)
     assert np.allclose(res.ranks, want, atol=1e-6), name
@@ -35,18 +31,10 @@ def test_static_redistribute_matches_oracle(spark):
     """Dangling-mass broadcast correction mode (no self-loops)."""
     n, src, dst = MICRO_GRAPHS["dangling3"]
     g = GraphSnapshot.build(edges_df(spark, src, dst), n=n, self_loops=False)
-    opts = PagerankOptions(mode="csr", dangling="redistribute")
-    res = pagerank_static(g, opts)
+    opts = PagerankOptions(dangling="redistribute")
+    res = pagerank_static_bsp(g, opts)
     want, _ = pagerank_numpy(n, np.array(src), np.array(dst), dangling="redistribute")
     assert np.allclose(res.ranks, want, atol=1e-6)
     assert abs(res.ranks.sum() - 1.0) < 1e-8
     g.unpersist()
 
-
-def test_csr_joinagg_agree(spark):
-    n, src, dst = MICRO_GRAPHS["diamond"]
-    g = GraphSnapshot.build(edges_df(spark, src, dst), n=n)
-    a = pagerank_static(g, PagerankOptions(mode="csr")).ranks
-    b = pagerank_static(g, PagerankOptions(mode="joinagg")).ranks
-    assert np.allclose(a, b, atol=1e-9)
-    g.unpersist()

@@ -6,14 +6,11 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from pagerank_cuda_dynamic_spark.operators.pagerank import (
-    PagerankOptions,
-    pagerank_static,
-)
+from pagerank_cuda_dynamic_spark.operators.pagerank import PagerankOptions
 from pagerank_cuda_dynamic_spark.operators.pagerank_tcp import pagerank_static_tcp
 from pagerank_cuda_dynamic_spark.plans.graph_snapshot import GraphSnapshot
 
-from .conftest import MICRO_GRAPHS, edges_df
+from .conftest import MICRO_GRAPHS, edges_df, snapshot_oracle
 
 
 def test_tcp_matches_csr(spark):
@@ -23,16 +20,16 @@ def test_tcp_matches_csr(spark):
     dst = rng.integers(0, n, m)
     g = GraphSnapshot.build(edges_df(spark, src, dst), n=n)
     a = pagerank_static_tcp(g)
-    b = pagerank_static(g, PagerankOptions(mode="csr"))
-    assert np.allclose(a.ranks, b.ranks, atol=1e-10)
-    assert a.iterations == b.iterations
+    want, want_it = snapshot_oracle(g)
+    assert np.allclose(a.ranks, want, atol=1e-10)
+    assert a.iterations == want_it
     assert a.state.get("exchange") == "tcp-ring"
     g.unpersist()
 
 
 def test_tcp_salted_hubs_parity(spark):
     """Force hub salting on a star-heavy graph; the TCP ring's two-phase
-    (partial-allreduce + rank-allgather) must match the csr path exactly."""
+    (partial-allreduce + rank-allgather) must match the NumPy oracle."""
     from pagerank_cuda_dynamic_spark.operators import pagerank_tcp as PT
     from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import bsp_pack
 
@@ -49,9 +46,9 @@ def test_tcp_salted_hubs_parity(spark):
         a = pagerank_static_tcp(g)
     finally:
         PT.bsp_pack = orig
-    b = pagerank_static(g, PagerankOptions(mode="csr"))
-    assert np.allclose(a.ranks, b.ranks, atol=1e-10)
-    assert a.iterations == b.iterations
+    want, want_it = snapshot_oracle(g)
+    assert np.allclose(a.ranks, want, atol=1e-10)
+    assert a.iterations == want_it
     g.unpersist()
 
 
@@ -163,15 +160,15 @@ def test_tcp_dfp_salted_hubs_matches_bsp(spark):
         def __init__(self, g):
             self._g = g
             self.edges, self.n = g.edges, g.n
-            self._packed = None
+            self._pack = None
 
         def outdeg_array(self):
             return self._g.outdeg_array()
 
         def bsp_packed(self, *a, **k):
-            if self._packed is None:
-                self._packed = bsp_pack(self._g, hub_factor=0.05)
-            return self._packed
+            if self._pack is None:
+                self._pack = bsp_pack(self._g, hub_factor=0.05)
+            return self._pack
 
     g0 = GraphSnapshot.build(edges_df(spark, src[keep], dst[keep]), n=n)
     base = pagerank_static_bsp(g0)

@@ -6,7 +6,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from pagerank_cuda_dynamic_spark.operators.pagerank import pagerank_static
+from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import pagerank_static_bsp
 from pagerank_cuda_dynamic_spark.sources.textgraph import (
     read_mtx,
     read_mtx_header,
@@ -127,7 +127,7 @@ def test_snapshot_from_mtx_matches_numpy_pagerank(spark, tmp_path):
     dst = np.array([1, 2, 0, 3, 1])
     s, d = add_self_loops_np(5, src, dst)
     expect, _ = pagerank_numpy(5, s, d)
-    res = pagerank_static(g)
+    res = pagerank_static_bsp(g)
     assert np.allclose(res.ranks, expect, atol=1e-9)
     g.unpersist()
 
