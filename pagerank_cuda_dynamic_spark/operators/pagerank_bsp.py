@@ -1072,7 +1072,7 @@ def pagerank_dynamic_traversal_bsp(
 ) -> PagerankResult:
     opts = opts or PagerankOptions()
     vaff = _traversal_marks(old, new, deletions, insertions)
-    return _bsp_loop(new, opts, q=_adjust_warm_start(q, new.n), vaff0=vaff)
+    return _bsp_loop(new, opts, q=q, vaff0=vaff)
 
 
 def _frontier_seeds(new, deletions, insertions) -> tuple[np.ndarray, np.ndarray]:
@@ -1115,8 +1115,7 @@ def pagerank_dynamic_frontier_bsp(
     the tidied batch (see _frontier_seeds); kept for the shared signature."""
     vaff, movers = _frontier_seeds(new, deletions, insertions)
     return _bsp_loop(
-        new, opts or PagerankOptions(), q=_adjust_warm_start(q, new.n),
-        vaff0=vaff, expand=True, movers0=movers,
+        new, opts or PagerankOptions(), q=q, vaff0=vaff, expand=True, movers0=movers
     )
 
 
@@ -1126,8 +1125,8 @@ def pagerank_dynamic_frontier_prune_bsp(
     """Dynamic Frontier with Pruning on BSP; seeded like the DF entry."""
     vaff, movers = _frontier_seeds(new, deletions, insertions)
     return _bsp_loop(
-        new, opts or PagerankOptions(), q=_adjust_warm_start(q, new.n),
-        vaff0=vaff, corrected=True, expand=True, prune=True, movers0=movers,
+        new, opts or PagerankOptions(), q=q, vaff0=vaff,
+        corrected=True, expand=True, prune=True, movers0=movers,
     )
 
 

@@ -503,49 +503,32 @@ def pagerank_static_tcp(
 def pagerank_dynamic_traversal_tcp(
     old, new, deletions, insertions, q: np.ndarray, opts: PagerankOptions | None = None
 ) -> PagerankResult:
-    from pagerank_cuda_dynamic_spark.operators.pagerank import (
-        _adjust_warm_start,
-        _traversal_marks,
-    )
+    from pagerank_cuda_dynamic_spark.operators.pagerank import _traversal_marks
 
     opts = opts or PagerankOptions()
     vaff = _traversal_marks(old, new, deletions, insertions)
-    return _tcp_loop(new, opts, q=_adjust_warm_start(q, new.n), vaff0=vaff)
+    return _tcp_loop(new, opts, q=q, vaff0=vaff)
 
 
 def pagerank_dynamic_frontier_tcp(
     old, new, deletions, insertions, q: np.ndarray, opts: PagerankOptions | None = None
 ) -> PagerankResult:
-    from pagerank_cuda_dynamic_spark.operators.pagerank import (
-        _adjust_warm_start,
-        _frontier_marks,
-    )
+    from pagerank_cuda_dynamic_spark.operators.pagerank import _frontier_marks
 
     opts = opts or PagerankOptions()
     vaff = _frontier_marks(old, new, deletions, insertions)
-    return _tcp_loop(
-        new, opts, q=_adjust_warm_start(q, new.n), vaff0=vaff, expand=True
-    )
+    return _tcp_loop(new, opts, q=q, vaff0=vaff, expand=True)
 
 
 def pagerank_dynamic_frontier_prune_tcp(
     old, new, deletions, insertions, q: np.ndarray, opts: PagerankOptions | None = None
 ) -> PagerankResult:
-    from pagerank_cuda_dynamic_spark.operators.pagerank import (
-        _adjust_warm_start,
-        _frontier_marks,
-    )
+    from pagerank_cuda_dynamic_spark.operators.pagerank import _frontier_marks
 
     opts = opts or PagerankOptions()
     vaff = _frontier_marks(old, new, deletions, insertions)
     return _tcp_loop(
-        new,
-        opts,
-        q=_adjust_warm_start(q, new.n),
-        vaff0=vaff,
-        corrected=True,
-        expand=True,
-        prune=True,
+        new, opts, q=q, vaff0=vaff, corrected=True, expand=True, prune=True
     )
 
 

@@ -9,12 +9,31 @@ parallelism from $SPARK_GRAFT_CPUS (driver contract).
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def _with_worker_daemon(
+    master: str, extra_conf: dict[str, str] | None
+) -> dict[str, str]:
+    """``extra_conf`` plus the ``_worker_daemon`` settings where they apply."""
+    conf = dict(extra_conf or {})
+    if master.startswith("local") and sys.version_info < (3, 13):
+        conf.setdefault(
+            "spark.python.daemon.module", "pagerank_cuda_dynamic_spark._worker_daemon"
+        )
+        caller_path = conf.get("spark.executorEnv.PYTHONPATH")
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            [_PACKAGE_PARENT] + ([caller_path] if caller_path else [])
+        )
+    return conf
 
 
 def get_spark(
@@ -35,7 +54,18 @@ def get_spark(
         barrier stage wider than the slots can never be scheduled;
       - Arrow enabled for every pandas/Arrow kernel;
       - broadcast threshold generous: degree/dictionary dims are small
-        relative to the edge table and must broadcast, never shuffle.
+        relative to the edge table and must broadcast, never shuffle;
+      - on a ``local*`` master under CPython < 3.13, the Python workers are
+        forked by ``_worker_daemon`` instead of ``pyspark.daemon``.  Every
+        task calls ``importlib.invalidate_caches()``, which before 3.13
+        (gh-103200 made it lazy) re-reads the whole directory of each zip
+        archive on the worker path (pyspark.zip, py4j, the Spark core jar):
+        0.15-0.2 s of each task's fixed cost.  The daemon re-reads an
+        archive only when its mtime or size changed.  So that the workers
+        can import it, the package's parent directory is put in front of
+        ``spark.executorEnv.PYTHONPATH``, merged with the caller's value
+        from ``extra_conf``.  Any other ``extra_conf`` key, the daemon
+        module included, overrides these defaults.
     """
     cpus = default_parallelism()
     if master is None:
@@ -70,6 +100,6 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in _with_worker_daemon(master, extra_conf).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

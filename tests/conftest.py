@@ -21,6 +21,38 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(scope="session")
+def dynamic_batch(spark):
+    """One tidied random batch shared by the dynamic PageRank tests:
+    (g0, g1, dels, ins, q = static ranks of g0, static ranks of g1)."""
+    from pagerank_cuda_dynamic_spark.operators.graph import tidy_batch
+    from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import pagerank_static_bsp
+    from pagerank_cuda_dynamic_spark.plans.graph_snapshot import GraphSnapshot
+
+    rng = np.random.default_rng(29)
+    n = 150
+    src = rng.integers(0, n, 700)
+    dst = rng.integers(0, n, 700)
+    keep = src != dst
+    g0 = GraphSnapshot.build(edges_df(spark, src[keep], dst[keep]), n=n)
+    base = pagerank_static_bsp(g0)
+    ins_pdf = pd.DataFrame(
+        {"src": rng.integers(0, n, 40), "dst": rng.integers(0, n, 40)}
+    )
+    ins_pdf = ins_pdf[ins_pdf.src != ins_pdf.dst]
+    pool = np.stack([src[keep], dst[keep]], axis=1)
+    pick = rng.choice(len(pool), 25, replace=False)
+    del_pdf = pd.DataFrame({"src": pool[pick, 0], "dst": pool[pick, 1]})
+    dels, ins = tidy_batch(
+        g0.edges, spark.createDataFrame(del_pdf), spark.createDataFrame(ins_pdf)
+    )
+    dels, ins = dels.persist(), ins.persist()
+    g1 = g0.with_batch(dels, ins)
+    yield g0, g1, dels, ins, base.ranks, pagerank_static_bsp(g1).ranks
+    for x in (g0, g1, dels, ins):
+        x.unpersist()
+
+
 def edges_df(spark, src, dst):
     """Tiny literal edge list → dense-id edge DataFrame."""
     pdf = pd.DataFrame(

@@ -22,31 +22,6 @@ from .conftest import edges_df
 from .oracle import frontier_marks_numpy, pagerank_frontier_numpy
 
 
-@pytest.fixture(scope="module")
-def bsp_batch_setup(spark):
-    rng = np.random.default_rng(29)
-    n = 150
-    src = rng.integers(0, n, 700)
-    dst = rng.integers(0, n, 700)
-    keep = src != dst
-    g0 = GraphSnapshot.build(edges_df(spark, src[keep], dst[keep]), n=n)
-    base = pagerank_static_bsp(g0)
-    ins_pdf = pd.DataFrame(
-        {"src": rng.integers(0, n, 40), "dst": rng.integers(0, n, 40)}
-    )
-    ins_pdf = ins_pdf[ins_pdf.src != ins_pdf.dst]
-    pool = np.stack([src[keep], dst[keep]], axis=1)
-    pick = rng.choice(len(pool), 25, replace=False)
-    del_pdf = pd.DataFrame({"src": pool[pick, 0], "dst": pool[pick, 1]})
-    dels, ins = tidy_batch(
-        g0.edges, spark.createDataFrame(del_pdf), spark.createDataFrame(ins_pdf)
-    )
-    dels, ins = dels.persist(), ins.persist()
-    g1 = g0.with_batch(dels, ins)
-    oracle = pagerank_static_bsp(g1)
-    return g0, g1, dels, ins, base.ranks, oracle.ranks
-
-
 def _frontier_oracle(setup, **flags):
     """pagerank_frontier_numpy from the reference's DF marks of the batch."""
     g0, g1, dels, ins, q, _ = setup
@@ -58,28 +33,28 @@ def _frontier_oracle(setup, **flags):
     return pagerank_frontier_numpy(g1.n, new["src"], new["dst"], q, vaff0, **flags)
 
 
-def test_bsp_dt_matches_static(bsp_batch_setup):
-    g0, g1, dels, ins, q, want = bsp_batch_setup
+def test_bsp_dt_matches_static(dynamic_batch):
+    g0, g1, dels, ins, q, want = dynamic_batch
     res = pagerank_dynamic_traversal_bsp(g0, g1, dels, ins, q)
     assert res.affected_initial > 0
     assert np.allclose(res.ranks, want, atol=1e-6)
 
 
-def test_bsp_df_matches_static_and_csr(bsp_batch_setup):
-    g0, g1, dels, ins, q, want = bsp_batch_setup
+def test_bsp_df_matches_static_and_csr(dynamic_batch):
+    g0, g1, dels, ins, q, want = dynamic_batch
     res = pagerank_dynamic_frontier_bsp(g0, g1, dels, ins, q)
     assert np.allclose(res.ranks, want, atol=1e-6)
-    ref, ref_it = _frontier_oracle(bsp_batch_setup, expand=True)
+    ref, ref_it = _frontier_oracle(dynamic_batch, expand=True)
     assert np.allclose(res.ranks, ref, atol=1e-9)
     assert res.iterations == ref_it
 
 
-def test_bsp_dfp_matches_static_and_csr(bsp_batch_setup):
-    g0, g1, dels, ins, q, want = bsp_batch_setup
+def test_bsp_dfp_matches_static_and_csr(dynamic_batch):
+    g0, g1, dels, ins, q, want = dynamic_batch
     res = pagerank_dynamic_frontier_prune_bsp(g0, g1, dels, ins, q)
     assert np.allclose(res.ranks, want, atol=1e-6)
     ref, ref_it = _frontier_oracle(
-        bsp_batch_setup, expand=True, prune=True, corrected=True
+        dynamic_batch, expand=True, prune=True, corrected=True
     )
     assert np.allclose(res.ranks, ref, atol=1e-9)
     assert res.iterations == ref_it
@@ -150,7 +125,7 @@ def test_delta_pack_matches_full_pack(spark):
         x.unpersist()
 
 
-def test_mover_bitmap_path_bit_equals_idlist_path(bsp_batch_setup, monkeypatch):
+def test_mover_bitmap_path_bit_equals_idlist_path(dynamic_batch, monkeypatch):
     """The two mover-exchange encodings (id-list walk vs bitmap gather —
     chosen per consumer stripe by size in auto mode) must be exact
     equivalents: same eidx sets in the same src-sorted order, so the
@@ -161,7 +136,7 @@ def test_mover_bitmap_path_bit_equals_idlist_path(bsp_batch_setup, monkeypatch):
     exchange movers)."""
     from pagerank_cuda_dynamic_spark.operators import _stripe_pack
 
-    g0, g1, dels, ins, q, _ = bsp_batch_setup
+    g0, g1, dels, ins, q, _ = dynamic_batch
     runs = {}
     for force, factor in (("0", 0), ("1", 2**40)):
         monkeypatch.setattr(_stripe_pack, "MOVER_BITMAP_FACTOR", factor)
@@ -429,12 +404,12 @@ def test_scratch_registry_and_exit_hooks_stay_flat(spark):
     assert len(pagerank_bsp._LIVE_SCRATCH) == live - 1  # g0's spill
 
 
-def test_dynamic_bsp_rejects_redistribute(bsp_batch_setup):
+def test_dynamic_bsp_rejects_redistribute(dynamic_batch):
     """DF-P assumes self-looped graphs: dangling="redistribute" is a
     ValueError naming the option, also under python -O."""
     from pagerank_cuda_dynamic_spark.operators.pagerank import PagerankOptions
 
-    g0, g1, dels, ins, q, _ = bsp_batch_setup
+    g0, g1, dels, ins, q, _ = dynamic_batch
     with pytest.raises(ValueError, match="dangling='redistribute'"):
         pagerank_dynamic_frontier_prune_bsp(
             g0, g1, dels, ins, q, PagerankOptions(dangling="redistribute")

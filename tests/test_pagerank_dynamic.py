@@ -37,65 +37,34 @@ def _random_graph(rng: np.random.Generator, n: int, m: int):
     return src[keep], dst[keep]
 
 
-def _random_batch(rng, n, existing_pairs, k_ins, k_del):
-    """Seeded insert+delete batch (batch.hxx:30–139 analog)."""
-    ins = pd.DataFrame(
-        {"src": rng.integers(0, n, k_ins), "dst": rng.integers(0, n, k_ins)}
-    )
-    ins = ins[ins.src != ins.dst]
-    pool = existing_pairs[existing_pairs[:, 0] != existing_pairs[:, 1]]
-    pick = rng.choice(len(pool), size=min(k_del, len(pool)), replace=False)
-    dels = pd.DataFrame({"src": pool[pick, 0], "dst": pool[pick, 1]})
-    return dels, ins
-
-
-@pytest.fixture(scope="module")
-def batch_setup(spark):
-    rng = np.random.default_rng(7)
-    n = 120
-    src, dst = _random_graph(rng, n, 600)
-    g0 = GraphSnapshot.build(edges_df(spark, src, dst), n=n)
-    base = pagerank_static_bsp(g0)
-    pairs = np.stack([src, dst], axis=1)
-    dels_pdf, ins_pdf = _random_batch(rng, n, pairs, k_ins=30, k_del=20)
-    dels, ins = tidy_batch(
-        g0.edges, spark.createDataFrame(dels_pdf), spark.createDataFrame(ins_pdf)
-    )
-    dels = dels.persist()
-    ins = ins.persist()
-    g1 = g0.with_batch(dels, ins)
-    oracle = pagerank_static_bsp(g1)  # full recompute on updated graph = ground truth
-    return g0, g1, dels, ins, base.ranks, oracle.ranks
-
-
-def test_batch_apply_changes_graph(batch_setup):
-    g0, g1, dels, ins, _, _ = batch_setup
+def test_batch_apply_changes_graph(dynamic_batch):
+    g0, g1, dels, ins, _, _ = dynamic_batch
     assert ins.count() > 0 and dels.count() > 0
     assert g1.edges.count() == g0.edges.count() + ins.count() - dels.count()
 
 
-def test_naive_dynamic_matches_static(batch_setup):
-    _, g1, _, _, q, want = batch_setup
+def test_naive_dynamic_matches_static(dynamic_batch):
+    _, g1, _, _, q, want = dynamic_batch
     res = pagerank_static_bsp(g1, q=q)
     assert np.allclose(res.ranks, want, atol=1e-6)
 
 
-def test_dynamic_traversal_matches_static(batch_setup):
-    g0, g1, dels, ins, q, want = batch_setup
+def test_dynamic_traversal_matches_static(dynamic_batch):
+    g0, g1, dels, ins, q, want = dynamic_batch
     res = pagerank_dynamic_traversal_bsp(g0, g1, dels, ins, q)
     assert res.affected_initial > 0
     assert np.allclose(res.ranks, want, atol=1e-6)
 
 
-def test_dynamic_frontier_matches_static(batch_setup):
-    g0, g1, dels, ins, q, want = batch_setup
+def test_dynamic_frontier_matches_static(dynamic_batch):
+    g0, g1, dels, ins, q, want = dynamic_batch
     res = pagerank_dynamic_frontier_bsp(g0, g1, dels, ins, q)
     assert res.affected_initial > 0
     assert np.allclose(res.ranks, want, atol=1e-6)
 
 
-def test_dynamic_frontier_prune_matches_static(batch_setup):
-    g0, g1, dels, ins, q, want = batch_setup
+def test_dynamic_frontier_prune_matches_static(dynamic_batch):
+    g0, g1, dels, ins, q, want = dynamic_batch
     res = pagerank_dynamic_frontier_prune_bsp(g0, g1, dels, ins, q)
     assert np.allclose(res.ranks, want, atol=1e-6)
 
@@ -198,6 +167,42 @@ def test_naive_dynamic_short_q_matches_oracle(fixed_iters_setup):
     )
     assert res.iterations == 5
     assert np.abs(res.ranks - want).max() <= 1e-12
+
+
+@pytest.mark.parametrize(
+    "entry",
+    [
+        pagerank_dynamic_traversal_bsp,
+        pagerank_dynamic_frontier_bsp,
+        pagerank_dynamic_frontier_prune_bsp,
+    ],
+    ids=["dt", "df", "dfp"],
+)
+def test_dynamic_entries_check_warm_start_length(fixed_iters_setup, entry):
+    """A q longer than the graph is a ValueError, as for ND (it used to be
+    truncated silently); a shorter q is padded with zeros."""
+    g0, g1, dels, ins, q, _ = fixed_iters_setup
+    n = g1.n
+    with pytest.raises(ValueError, match=f"q has {n + 3} entries"):
+        entry(g0, g1, dels, ins, np.r_[q, np.zeros(3)])
+    opts = PagerankOptions(tolerance=0.0, max_iterations=5)
+    short = entry(g0, g1, dels, ins, q[: n - 10], opts)
+    padded = entry(g0, g1, dels, ins, np.r_[q[: n - 10], np.zeros(10)], opts)
+    assert short.iterations == padded.iterations == 5
+    assert np.array_equal(short.ranks, padded.ranks)
+
+
+def test_tcp_dynamic_entries_reject_long_q(fixed_iters_setup):
+    from pagerank_cuda_dynamic_spark.operators import pagerank_tcp as PT
+
+    g0, g1, dels, ins, q, _ = fixed_iters_setup
+    for entry in (
+        PT.pagerank_dynamic_traversal_tcp,
+        PT.pagerank_dynamic_frontier_tcp,
+        PT.pagerank_dynamic_frontier_prune_tcp,
+    ):
+        with pytest.raises(ValueError, match=f"q has {g1.n + 3} entries"):
+            entry(g0, g1, dels, ins, np.r_[q, np.zeros(3)])
 
 
 def test_seeded_batch_generators(spark):
