@@ -262,7 +262,7 @@ def q_connected_components(spark, sf_dir):
     enc = encode_edges(et, d, src="src", dst="dst")
     # dense ids are sorted-entity ranks → min dense id ≡ min entity string.
     # Routed through the fully distributed min-label loop (labels never on
-    # the driver); parity with connected_components_np is pytest-checked.
+    # the driver); its labels are pytest-checked against tests/oracle.py.
     cdf = connected_components_joinagg(enc, n).withColumnRenamed("component", "cid")
     return (
         cdf.join(d, "v")
@@ -289,7 +289,7 @@ def q_lpa(spark, sf_dir):
     d = build_vertex_dictionary(et, src="src", dst="dst").persist()
     n = d.count()
     enc = encode_edges(et, d, src="src", dst="dst")
-    # distributed sync-LPA (same deterministic tie-break as the np kernel)
+    # distributed sync-LPA (same deterministic tie-break as tests/oracle.py)
     cdf = label_propagation_joinagg(enc, n, max_rounds=10).withColumnRenamed(
         "label", "lid"
     )
@@ -690,29 +690,9 @@ def q_embedding_topk(spark, sf_dir):
 
 
 def q_connected_components_pj(spark, sf_dir):
-    """CC via POINTER JUMPING (hook + path-halving, O(log diameter) rounds)
-    — same output contract as connected_components; exercises the
-    general-graph scale path where the min-label loop's O(diameter) rounds
-    would dominate."""
-    from pagerank_cuda_dynamic_spark.operators.components import (
-        connected_components_pointer_jump,
-    )
-
-    et = edges_from_events(spark, sf_dir).select("src", "dst").distinct()
-    d = build_vertex_dictionary(et, src="src", dst="dst").persist()
-    n = d.count()
-    enc = encode_edges(et, d, src="src", dst="dst")
-    cdf = connected_components_pointer_jump(enc, n).withColumnRenamed(
-        "component", "cid"
-    )
-    return (
-        cdf.join(d, "v")
-        .join(
-            d.withColumnRenamed("v", "cid").withColumnRenamed("entity", "component"),
-            "cid",
-        )
-        .select(F.col("entity").alias("v"), "component")
-    )
+    """The connected_components query under the registry name of the
+    deleted pointer-jump CC (same output contract: component = min member)."""
+    return q_connected_components(spark, sf_dir)
 
 
 def q_minhash_verified(spark, sf_dir):
@@ -1093,13 +1073,12 @@ def q_cc_incremental(spark, sf_dir):
     """Insert-only DYNAMIC connected components (components.
     connected_components_incremental — the CC analog of the reference's
     batch-insert regime, batch.hxx insert path): ~20% of the event-graph
-    edges (md5 split) arrive as the batch against a pointer-jump labeling
-    of the remaining 80%; the O(|batch|)-work merge must equal a
+    edges (md5 split) arrive as the batch against a distributed min-label
+    labeling of the remaining 80%; the O(|batch|)-work merge must equal a
     from-scratch CC of the FULL graph — the oracle is that full-graph
     recursive closure."""
     from pagerank_cuda_dynamic_spark.operators.components import (
         connected_components_incremental,
-        connected_components_pointer_jump,
     )
 
     et = edges_from_events(spark, sf_dir).select("src", "dst").distinct()
@@ -1110,7 +1089,7 @@ def q_cc_incremental(spark, sf_dir):
         .unionByName(base.select(F.col("dst").alias("v")))
         .distinct()
     )
-    labels = connected_components_pointer_jump(base, vertices=bverts)
+    labels = connected_components_joinagg(base, vertices=bverts)
     return connected_components_incremental(labels, batch)
 
 
@@ -1118,12 +1097,11 @@ def q_cc_decremental(spark, sf_dir):
     """Edge-deletion DYNAMIC connected components (components.
     connected_components_decremental): delete ~14% of the event-graph
     edges (md5 split) from a full labeling; only the affected components
-    are recomputed (pointer-jump on the O(affected) subgraph), untouched
+    are recomputed (min-label CC on the O(affected) subgraph), untouched
     labels pass through.  Oracle: recursive closure over the surviving
     edges seeded from the FULL original vertex set."""
     from pagerank_cuda_dynamic_spark.operators.components import (
         connected_components_decremental,
-        connected_components_pointer_jump,
     )
 
     et = edges_from_events(spark, sf_dir).select("src", "dst").distinct()
@@ -1132,7 +1110,7 @@ def q_cc_decremental(spark, sf_dir):
         .unionByName(et.select(F.col("dst").alias("v")))
         .distinct()
     )
-    labels = connected_components_pointer_jump(et, vertices=verts)
+    labels = connected_components_joinagg(et, vertices=verts)
     dels = et.where(_edge_split_pred(7))
     return connected_components_decremental(et, labels, dels)
 

@@ -668,9 +668,11 @@ def section_ops(spark, results: dict) -> None:
     from pagerank_cuda_dynamic_spark.operators.pagerank import PagerankOptions
     from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import pagerank_static_bsp
     from pagerank_cuda_dynamic_spark.operators.components import (
-        connected_components_np,
-        connected_components_pointer_jump,
+        connected_components_joinagg,
         triangle_count,
+    )
+    from pagerank_cuda_dynamic_spark.operators.components_bsp import (
+        connected_components_bsp,
     )
     from pagerank_cuda_dynamic_spark.operators.dedup import minhash_dedup_pairs
     from pagerank_cuda_dynamic_spark.operators.similarity import (
@@ -703,19 +705,19 @@ def section_ops(spark, results: dict) -> None:
         et = edges_from_events(spark, SF_DIR).select("src", "dst").distinct()
         d = build_vertex_dictionary(et, src="src", dst="dst")
         n = d.count()
-        return connected_components_np(encode_edges(et, d, src="src", dst="dst"), n)
+        return connected_components_bsp(encode_edges(et, d, src="src", dst="dst"), n)
 
     timed("connected_components", cc)
 
-    def cc_pj():
+    def cc_joinagg():
         et = edges_from_events(spark, SF_DIR).select("src", "dst").distinct()
         d = build_vertex_dictionary(et, src="src", dst="dst")
         n = d.count()
-        return connected_components_pointer_jump(
+        return connected_components_joinagg(
             encode_edges(et, d, src="src", dst="dst"), n
         ).count()
 
-    timed("cc_pointer_jump", cc_pj)
+    timed("cc_joinagg", cc_joinagg)
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     timed("minhash_dedup", lambda: minhash_dedup_pairs(docs, threshold=0.5).count())
@@ -851,7 +853,6 @@ def section_ops(spark, results: dict) -> None:
     from pagerank_cuda_dynamic_spark.operators.centrality import coreness
     from pagerank_cuda_dynamic_spark.operators.components import (
         connected_components_incremental,
-        connected_components_pointer_jump,
         triangle_count_incremental,
     )
 
@@ -871,7 +872,7 @@ def section_ops(spark, results: dict) -> None:
             .unionByName(base.select(F.col("dst").alias("v")))
             .distinct()
         )
-        labels = connected_components_pointer_jump(base, vertices=bverts)
+        labels = connected_components_joinagg(base, vertices=bverts)
         return connected_components_incremental(labels, batch).count()
 
     timed("cc_incremental", cc_inc)

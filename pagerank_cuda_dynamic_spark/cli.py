@@ -10,7 +10,9 @@ Usage:
 Or synthesize input: --synthesize 10000 (conversations, seed 42).
 Reads the transcript table, derives the entity link graph, runs the chosen
 PageRank technique over temporal batches with checkpointing, writes the
-final (entity, rank) table as parquet.
+final (entity, rank) table as parquet.  `--algo cc|lpa` writes (entity,
+component|label) instead: the barrier label loop under the default
+`--exchange memmap`, join/aggregate rounds under `--exchange tcp`.
 
 The reference's own input files run directly (no transcript stage):
   --input-mtx graph.mtx                # static run over a MatrixMarket file
@@ -43,10 +45,11 @@ def main(argv: list[str] | None = None) -> int:
                     choices=["static", "nd", "dt", "df", "dfp"])
     ap.add_argument("--algo", default="pagerank",
                     choices=["pagerank", "cc", "lpa"],
-                    help="pagerank (default) or distributed CC / LPA labels")
+                    help="pagerank (default) or CC / LPA labels")
     ap.add_argument("--exchange", default="memmap", choices=["memmap", "tcp"],
-                    help="BSP rank exchange: shared-memmap (single node / "
-                         "shared FS) or TCP ring (any cluster, static only)")
+                    help="platform: shared memmaps (single node / shared FS: "
+                         "BSP loops) or no shared filesystem (static PageRank "
+                         "on the TCP ring, CC / LPA as join/aggregate rounds)")
     ap.add_argument("--batches", type=int, default=0,
                     help="temporal batches after a 90%% base prefix (0 = single static run)")
     ap.add_argument("--out", required=True, help="output parquet path for (entity, rank)")
@@ -127,18 +130,26 @@ def main(argv: list[str] | None = None) -> int:
             connected_components_joinagg,
             label_propagation_joinagg,
         )
+        from pagerank_cuda_dynamic_spark.operators.components_bsp import (
+            connected_components_bsp,
+            label_propagation_bsp,
+        )
 
         if n is None:
             row = enc.agg(F.greatest(F.max("src"), F.max("dst")).alias("m")).collect()[0]
             if row["m"] is None:
                 ap.error(f"no edge records in --input-temporal file {args.input_temporal!r}")
             n = int(row["m"]) + 1
-        if args.algo == "cc":
-            out_df = connected_components_joinagg(enc.select("src", "dst"), n)
-            val = "component"
+        val = "component" if args.algo == "cc" else "label"
+        e = enc.select("src", "dst")
+        if args.exchange == "tcp":
+            fn = connected_components_joinagg if args.algo == "cc" else label_propagation_joinagg
+            out_df = fn(e, n)
         else:
-            out_df = label_propagation_joinagg(enc.select("src", "dst"), n)
-            val = "label"
+            fn = connected_components_bsp if args.algo == "cc" else label_propagation_bsp
+            out_df = spark.createDataFrame(
+                pd.DataFrame({"v": np.arange(n, dtype=np.int64), val: fn(e, n)})
+            )
         if d is None:
             # numeric text-graph input: labels are vertex ids — report both
             # in the file's own id space

@@ -4,7 +4,8 @@ The reference repo's rank machinery (pagerankCuda.hxx:676-692: one
 gather + one normalization barrier per superstep) generalizes to any
 linear fixpoint over the adjacency; these operators re-express three
 standard link-analysis siblings as declarative join/agg supersteps
-(the shape of operators/components.py `connected_components_joinagg`):
+(the shape of operators/components.py's shared-nothing components engine,
+`connected_components_joinagg`):
 
   * `hits`                  — Kleinberg hubs/authorities power iteration
                               (mutually recursive gather over E and Eᵀ,

@@ -2,15 +2,26 @@
 label propagation, triangle count, modularity (anchored by the reference's
 community helpers, properties.hxx:123–401).
 
-Same physical split as PageRank: a broadcast-label vectorized kernel
-(mapInPandas over dst-partitioned edges — fast path, |V| fits memory) and
-pure DataFrame loops (scale-out path), both converging on exact ids.
+Connected components and LPA have two engines, one per platform:
+
+* operators/components_bsp.py (`connected_components_bsp`,
+  `label_propagation_bsp`): dense ids in [0, n), one barrier query of two
+  Spark jobs whose tasks share labels through memmaps on one node.  It is
+  the engine the benchmark measures.
+* `connected_components_joinagg` / `label_propagation_joinagg` here: plain
+  join/aggregate rounds, so labels never sit on the driver and no shared
+  filesystem is needed.  It stays because it is the only CC/LPA path for a
+  shared-nothing cluster and the only one that takes sparse or string ids
+  (`vertices=`), which `dedup_clusters` and the dynamic CC operators below
+  rely on.  A round costs a few Spark jobs and min-label needs O(diameter)
+  rounds.
+
+Both produce the same labels: component = min member id; LPA = the most
+frequent neighbour label, ties to the smallest (tests/oracle.py).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -19,135 +30,7 @@ from pagerank_cuda_dynamic_spark.plans.barrier import broadcast_state, materiali
 from pagerank_cuda_dynamic_spark.operators.graph import symmetrize
 
 
-def _gather_min_labels(edges: DataFrame, labels: np.ndarray, n: int) -> np.ndarray:
-    """One round: for every dst, min label over in-edge srcs (vectorized)."""
-    sc = edges.sparkSession.sparkContext
-    bc = sc.broadcast(labels)
-
-    def kernel(batches):
-        lab = bc.value
-        best = np.full(n, np.iinfo(np.int64).max, dtype=np.int64)
-        seen = False
-        for pdf in batches:
-            src = pdf["src"].to_numpy()
-            dst = pdf["dst"].to_numpy()
-            if src.size == 0:
-                continue
-            seen = True
-            np.minimum.at(best, dst, lab[src])
-        if not seen:
-            return
-        idx = np.flatnonzero(best != np.iinfo(np.int64).max)
-        yield pd.DataFrame({"v": idx.astype(np.int64), "lab": best[idx]})
-
-    pdf = edges.mapInPandas(kernel, "v long, lab long").toPandas()
-    bc.destroy()
-    out = labels.copy()
-    if len(pdf):
-        vs = pdf["v"].to_numpy()
-        np.minimum.at(out, vs, pdf["lab"].to_numpy())
-    return out
-
-
-def connected_components_np(
-    edges: DataFrame, n: int, presymmetrized: bool = False
-) -> np.ndarray:
-    """Min-label propagation to fixpoint (G11/properties.hxx:379–401 shape).
-    Returns component id per vertex = min vertex id in the component (exact,
-    deterministic).  edges: dense-id (src,dst)."""
-    # only persist a frame we created; a presymmetrized caller owns its cache
-    und = edges if presymmetrized else symmetrize(edges).persist()
-    und.count()
-    labels = np.arange(n, dtype=np.int64)
-    while True:
-        new = _gather_min_labels(und, labels, n)
-        if np.array_equal(new, labels):
-            break
-        labels = new
-    if not presymmetrized:
-        und.unpersist()
-    return labels
-
-
-def connected_components(edges: DataFrame, n: int) -> DataFrame:
-    """DataFrame result (v, component)."""
-    labels = connected_components_np(edges, n)
-    spark = edges.sparkSession
-    return spark.createDataFrame(
-        pd.DataFrame({"v": np.arange(n, dtype=np.int64), "component": labels})
-    )
-
-
-def label_propagation_np(
-    edges: DataFrame, n: int, max_rounds: int = 20, presymmetrized: bool = False
-) -> np.ndarray:
-    """Synchronous LPA, deterministic: each round every vertex adopts the
-    most frequent label among its (undirected) neighbors, ties broken by the
-    SMALLEST label (properties.hxx community-membership helpers anchor the
-    aggregates).  Stops at fixpoint or max_rounds (sync LPA can 2-cycle on
-    bipartite structures — the cap is part of the defined semantics).
-
-    Edges MUST be hash-partitioned by dst for the per-partition winner pick
-    to be complete — enforced here (one shuffle, reused every round)."""
-    und = edges if presymmetrized else symmetrize(edges)
-    und = und.repartition(
-        edges.sparkSession.sparkContext.defaultParallelism, "dst"
-    ).persist()
-    und.count()
-    sc = edges.sparkSession.sparkContext
-    labels = np.arange(n, dtype=np.int64)
-    for _ in range(max_rounds):
-        bc = sc.broadcast(labels)
-
-        def kernel(batches):
-            lab = bc.value
-            # accumulate (dst, neighbor-label) counts across batches
-            acc: dict = {}
-            frames = []
-            for pdf in batches:
-                src = pdf["src"].to_numpy()
-                dst = pdf["dst"].to_numpy()
-                if src.size:
-                    frames.append(
-                        pd.DataFrame({"v": dst, "lab": lab[src]})
-                    )
-            if not frames:
-                return
-            allp = pd.concat(frames, ignore_index=True)
-            counts = (
-                allp.groupby(["v", "lab"], sort=False).size().reset_index(name="c")
-            )
-            # winner per v: max count, then min label — deterministic
-            counts = counts.sort_values(
-                ["v", "c", "lab"], ascending=[True, False, True]
-            )
-            win = counts.drop_duplicates("v", keep="first")
-            yield pd.DataFrame(
-                {"v": win["v"].to_numpy().astype(np.int64),
-                 "lab": win["lab"].to_numpy().astype(np.int64)}
-            )
-
-        pdf = und.mapInPandas(kernel, "v long, lab long").toPandas()
-        bc.destroy()
-        new = labels.copy()
-        if len(pdf):
-            new[pdf["v"].to_numpy()] = pdf["lab"].to_numpy()
-        if np.array_equal(new, labels):
-            break
-        labels = new
-    und.unpersist()
-    return labels
-
-
-def label_propagation(edges: DataFrame, n: int, max_rounds: int = 20) -> DataFrame:
-    labels = label_propagation_np(edges, n, max_rounds)
-    spark = edges.sparkSession
-    return spark.createDataFrame(
-        pd.DataFrame({"v": np.arange(n, dtype=np.int64), "label": labels})
-    )
-
-
-def _und_src(edges: DataFrame, presymmetrized: bool) -> DataFrame:
+def _und_src(edges: DataFrame) -> DataFrame:
     """Src-partitioned undirected simple view built with ONE |E| shuffle:
     the directed view is materialized once (the symmetrize union reads it
     twice — a lazy frame re-runs the caller's derivation twice), then the
@@ -155,8 +38,6 @@ def _und_src(edges: DataFrame, presymmetrized: bool) -> DataFrame:
     the distinct aggregate runs in place — no second exchange).  Callers
     persist/unpersist the returned frame."""
     p = edges.sparkSession.sparkContext.defaultParallelism
-    if presymmetrized:
-        return edges.repartition(p, "src")
     e0 = materialize(edges.select("src", "dst"))
     return (
         e0.unionByName(
@@ -170,28 +51,27 @@ def _und_src(edges: DataFrame, presymmetrized: bool) -> DataFrame:
 def connected_components_joinagg(
     edges: DataFrame,
     n: int | None = None,
-    presymmetrized: bool = False,
     vertices: DataFrame | None = None,
 ) -> DataFrame:
     """Fully distributed min-label CC (G11, properties.hxx:379–401 shape):
-    neither labels nor the frontier ever sit on the driver — the 10^12-vertex
-    scale-out twin of connected_components_np (which broadcasts an O(N)
-    label array per round).
+    neither labels nor the frontier ever sit on the driver.
 
     Frontier-optimized: each round only vertices whose label improved last
     round send messages (edges ⋈ frontier on src → groupBy(dst).min), so
-    late rounds touch O(|changed|) edges.  Fixpoint when no label improves.
-    Returns (v, component) with component = min vertex id (exact,
-    deterministic — same result as the np/BSP variants).
+    late rounds touch O(|changed|) edges.  Fixpoint when no label improves,
+    after O(diameter) rounds.  Returns (v, component) with component = min
+    vertex id (exact, deterministic — the same labels as
+    connected_components_bsp).
 
     Vertex set: dense [0, n) via `n`, or an explicit (v) DataFrame via
-    `vertices` for sparse id spaces (e.g. a near-dup pair graph over doc
-    ids)."""
+    `vertices` for sparse or string id spaces (e.g. a near-dup pair graph
+    over doc ids)."""
+    if n is None and vertices is None:
+        raise ValueError("connected_components_joinagg: pass n or vertices")
     spark = edges.sparkSession
-    und = _und_src(edges, presymmetrized).persist()
+    und = _und_src(edges).persist()
     und.count()
     if vertices is None:
-        assert n is not None, "need n or vertices"
         vertices = spark.range(n).select(F.col("id").alias("v"))
         n_verts = n
     else:
@@ -230,99 +110,24 @@ def connected_components_joinagg(
             .transform(materialize)
         )
         frontier = improved
-    und.unpersist()  # repartitioned frame is ours in both branches
+    und.unpersist()
     return labels.select("v", F.col("lab").alias("component"))
 
 
-def connected_components_pointer_jump(
-    edges: DataFrame,
-    n: int | None = None,
-    presymmetrized: bool = False,
-    vertices: DataFrame | None = None,
-    with_rounds: bool = False,
-    max_rounds: int = 64,
-) -> DataFrame:
-    """Connected components with POINTER JUMPING — O(log diameter) rounds
-    instead of the min-label loop's O(diameter) (properties.hxx:379–401
-    semantics; algorithm shape of the large-star/small-star MapReduce CC
-    family).  A 10³-hop chain costs the frontier min-label loop 10³
-    shuffles; this twin needs ~log₂(10³) ≈ 10.
-
-    Per round, each vertex keeps a parent label lab(v) (init v):
-      1. hook:   lab'(v) = min(lab(v), min over und-neighbors u of lab(u))
-      2. jump:   lab''(v) = lab'(lab'(v))  — path halving; label chains
-                 collapse doubly-exponentially when combined with hooking
-    Fixpoint when no label changes.  Returns (v, component), component =
-    min vertex id in the component — identical output to
-    connected_components_np / connected_components_joinagg.
-
-    Scale posture: both steps are plain shuffles (join on src / self-join
-    on lab); labels never touch the driver.  The jump self-join keys on the
-    CURRENT label, so hot roots (one label shared by a whole component) are
-    broadcast-friendly — Catalyst/AQE handles the skew; pass `vertices` for
-    sparse id spaces."""
-    spark = edges.sparkSession
-    und = _und_src(edges, presymmetrized).persist()
-    und.count()
-    if vertices is None:
-        assert n is not None, "need n or vertices"
-        vertices = spark.range(n).select(F.col("id").alias("v"))
-        n_verts = n
-    else:
-        vertices = vertices.select("v").distinct()
-        n_verts = vertices.count()
-    labels = vertices.select("v", F.col("v").alias("lab")).transform(materialize)
-    rounds = 0
-    while rounds < max_rounds:
-        rounds += 1
-        # 1. hook: min neighbor label (plus own); broadcast-state gather
-        # keeps und's src partitioning in place
-        nbr_min = (
-            und.join(broadcast_state(labels.withColumnRenamed("v", "src"), n_verts), "src")
-            .groupBy("dst")
-            .agg(F.min("lab").alias("nlab"))
-            .withColumnRenamed("dst", "v")
-        )
-        hooked = (
-            labels.join(broadcast_state(nbr_min, n_verts), "v", "left")
-            .select("v", F.least("lab", F.coalesce("nlab", "lab")).alias("lab"))
-        )
-        # 2. jump: lab <- lab(lab) (path halving)
-        parent = hooked.select(
-            F.col("v").alias("lab"), F.col("lab").alias("plab")
-        )
-        jumped = (
-            hooked.join(broadcast_state(parent, n_verts), "lab", "left")
-            .select("v", F.least("lab", F.coalesce("plab", "lab")).alias("lab"))
-            .transform(materialize)
-        )
-        changed = (
-            jumped.withColumnRenamed("lab", "nl")
-            .join(broadcast_state(labels, n_verts), "v")
-            .where(F.col("nl") != F.col("lab"))
-        )
-        stop = changed.isEmpty()
-        labels = jumped
-        if stop:
-            break
-    und.unpersist()  # repartitioned frame is ours in both branches
-    out = labels.select("v", F.col("lab").alias("component"))
-    return (out, rounds) if with_rounds else out
-
-
 def label_propagation_joinagg(
-    edges: DataFrame, n: int, max_rounds: int = 20, presymmetrized: bool = False
+    edges: DataFrame, n: int, max_rounds: int = 20
 ) -> DataFrame:
-    """Fully distributed synchronous LPA — the scale-out twin of
-    label_propagation_np with identical semantics: every round each vertex
-    with ≥1 neighbor adopts the most frequent neighbor label, ties broken
-    by the SMALLEST label; fixpoint or max_rounds.
+    """Fully distributed synchronous LPA with the semantics of
+    label_propagation_bsp: every round each vertex with ≥1 neighbor adopts
+    the most frequent neighbor label, ties broken by the SMALLEST label;
+    fixpoint or max_rounds (sync LPA can 2-cycle on bipartite structures —
+    the cap is part of the defined semantics).
 
     Winner pick is one agg chain: groupBy(dst, lab).count →
     groupBy(dst).min(struct(-count, lab)) — no global windows, no driver
     state.  Returns (v, label)."""
     spark = edges.sparkSession
-    und = _und_src(edges, presymmetrized).persist()
+    und = _und_src(edges).persist()
     und.count()
     vertices = spark.range(n).select(F.col("id").alias("v"))
     labels = vertices.select(
@@ -355,7 +160,7 @@ def label_propagation_joinagg(
         labels = new_labels
         if stop:
             break
-    und.unpersist()  # repartitioned frame is ours in both branches
+    und.unpersist()
     return labels.select("v", F.col("lab").alias("label"))
 
 
@@ -668,8 +473,7 @@ def strongly_connected_components(
     Round bound: outer rounds = SCC-DAG *depth* eliminated per round is
     ≥ 1 full antichain of root SCCs, so pathological SCC-chains degrade
     to O(chain length) rounds (the same caveat as min-label CC on long
-    paths, where pointer-jumping is the documented alternative); real
-    link graphs have shallow SCC DAGs.  `max_outer_rounds` raises rather
+    paths); real link graphs have shallow SCC DAGs.  `max_outer_rounds` raises rather
     than returning a silently partial answer.
     """
     spark = edges.sparkSession
@@ -791,7 +595,7 @@ def connected_components_incremental(
     distributed merge work — never a full recompute.
 
     labels: (v, component) with component = min member id (the invariant
-    every CC twin in this module produces).  batch: (src, dst); endpoints
+    both CC engines produce).  batch: (src, dst); endpoints
     absent from `labels` are treated as fresh singleton vertices.
 
     Plan shape (100 TB posture):
@@ -801,7 +605,8 @@ def connected_components_incremental(
          other way: labels is scanned ONCE per endpoint side with the
          broadcast batch as the build side (map-side, no |V| shuffle).
       2. the distinct (comp_a, comp_b) pairs form a component graph of
-         size ≤ |batch|; pointer-jump CC merges it in O(log d) rounds.
+         size ≤ |batch|; connected_components_joinagg merges it over that
+         small sparse-id graph.
       3. the merge map (old component → new root, non-identity rows only,
          ≤ 2|batch| rows) is broadcast and applied to `labels` with one
          map-side left join — the only O(|V|) cost, shuffle-free.
@@ -838,7 +643,7 @@ def connected_components_incremental(
         .unionByName(pairs.select(F.col("dst").alias("v")))
         .distinct()
     )
-    merge = connected_components_pointer_jump(pairs, vertices=cverts).where(
+    merge = connected_components_joinagg(pairs, vertices=cverts).where(
         F.col("v") != F.col("component")
     )
     # apply: one broadcast left join over labels ∪ fresh singletons
@@ -872,9 +677,9 @@ def connected_components_decremental(
     small deletion batch; the affected VERTEX set is one map-side
     broadcast semi-join over labels (O(|V|) scan, no shuffle); the
     affected EDGE set is one semi-join over edges keyed src (co-located
-    with the snapshot's ownership partitioning); pointer-jump CC reruns
-    on that O(affected) subgraph only, and every untouched component's
-    rows pass through unchanged."""
+    with the snapshot's ownership partitioning); connected_components_joinagg
+    reruns on that O(affected) subgraph only, and every untouched
+    component's rows pass through unchanged."""
     d = deletions.select("src", "dst").dropDuplicates(["src", "dst"])
     # deleted edges live inside one component each: the src side suffices
     aff = (
@@ -890,9 +695,7 @@ def connected_components_decremental(
         av.select(F.col("v").alias("src")), "src", "left_semi"
     )
     remaining = e_aff.join(F.broadcast(d), ["src", "dst"], "left_anti")
-    redo = connected_components_pointer_jump(
-        remaining, vertices=av.select("v")
-    )
+    redo = connected_components_joinagg(remaining, vertices=av.select("v"))
     keep = labels.join(F.broadcast(aff), "component", "left_anti")
     return keep.unionByName(redo)
 
@@ -1097,7 +900,6 @@ def seeded_label_propagation(
     edges: DataFrame,
     seeds: DataFrame,
     rounds: int = 10,
-    presymmetrized: bool = False,
 ) -> DataFrame:
     """Semi-supervised label propagation (the hard-label relaxation of
     Zhu & Ghahramani 2002): `seeds` is a (v, label) table of CLAMPED
@@ -1118,23 +920,7 @@ def seeded_label_propagation(
     deterministically to the smallest label.
 
     Returns (v, label) over all graph vertices; label nullable."""
-    p = edges.sparkSession.sparkContext.defaultParallelism
-    if presymmetrized:
-        und = edges.repartition(p, "src")
-    else:
-        # materialize the directed view once (the symmetrize union reads
-        # it twice — a lazy frame re-runs the caller's derivation twice),
-        # and let the dedup ride the src-repartition: equal (src,dst)
-        # rows share a src, so no second |E| shuffle
-        e0 = materialize(edges.select("src", "dst"))
-        und = (
-            e0.unionByName(
-                e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .repartition(p, "src")
-            .dropDuplicates(["src", "dst"])
-        )
-    und = und.persist()
+    und = _und_src(edges).persist()
     und.count()
     verts = (
         und.select(F.col("src").alias("v"))

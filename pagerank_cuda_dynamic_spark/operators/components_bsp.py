@@ -2,8 +2,8 @@
 
 A `mapInPandas` emits every edge in both directions, `repartition(P, "dst")`
 gives each vertex's rows to one task, and a barrier `mapInPandas` runs all
-label rounds: two Spark jobs per call, where one job per round (the kernels
-in operators/components.py) costs ~0.44 s/round of fixed overhead.  Each
+label rounds: two Spark jobs per call, where a loop of one Spark job per
+round pays a job's fixed cost every round.  Each
 task dedups its rows (`symmetrize`'s set semantics), builds a dst-CSR over
 the vertices it owns and scatters their labels into double-buffered shared
 memmaps; rounds sync via a flag-array spin (the memmap and spin helpers are
@@ -11,9 +11,12 @@ _stripe_pack's, shared with the PageRank loops).  A vertex with no edges is
 owned by no task and keeps its own id.
 
 CC semantics: iterative min-label to fixpoint over the symmetrized graph —
-component id = min vertex id (exact, matches components.connected_components_np).
+component id = min vertex id (exact, matches tests/oracle.py).
 LPA semantics: synchronous most-frequent-neighbor label, ties → smallest
-label, fixpoint or max_rounds (matches components.label_propagation_np).
+label, fixpoint or max_rounds (matches tests/oracle.py).
+
+This is the dense-id, single-node components engine; the shared-nothing
+one is components.connected_components_joinagg / label_propagation_joinagg.
 """
 
 from __future__ import annotations

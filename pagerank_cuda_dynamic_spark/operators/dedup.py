@@ -260,12 +260,11 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> 
     directly); transitive closures merge chains A~B~C into one keeper even
     when A and C never paired.
 
-    Routing choice: near-dup clusters have tiny diameters (every member
-    pairs with almost every other), so the min-label frontier loop
-    converges in 2–3 rounds at one cheap join each — pointer jumping
-    (components.connected_components_pointer_jump, O(log d) rounds of TWO
-    joins) only wins on long-chain graphs and is the right twin for
-    general link graphs, not for this stage."""
+    Routing choice: doc ids are sparse (or strings), which only the
+    join/aggregate engine takes (`vertices=`), and near-dup clusters have
+    tiny diameters (every member pairs with almost every other), so its
+    min-label frontier loop converges in 2–3 rounds at one cheap join
+    each."""
     from pagerank_cuda_dynamic_spark.operators.components import (
         connected_components_joinagg,
     )

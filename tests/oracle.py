@@ -1,8 +1,10 @@
 """NumPy reference oracle — transliterations of the reference's sync pull
 iteration (pagerank.hxx:132–141 update, 387–394 loop) and of its dynamic
-superstep rules (pagerankCuda.hxx:676–692, pagerankPrune.hxx:30–67).
-Ground truth for every Spark PageRank test (main.cu:88 oracle pattern).
-NumPy only: nothing here shares code with the engine it checks."""
+superstep rules (pagerankCuda.hxx:676–692, pagerankPrune.hxx:30–67), plus
+the min-label and label-propagation rounds of its community helpers
+(properties.hxx:379–401).  Ground truth for every Spark PageRank and
+CC/LPA test (main.cu:88 oracle pattern).  NumPy only: nothing here shares
+code with the engine it checks."""
 
 from __future__ import annotations
 
@@ -135,3 +137,52 @@ def add_self_loops_np(n: int, src: np.ndarray, dst: np.ndarray):
     d = np.concatenate([np.asarray(dst, np.int64), np.arange(n, dtype=np.int64)])
     pairs = np.unique(np.stack([s, d], axis=1), axis=0)
     return pairs[:, 0], pairs[:, 1]
+
+
+def _undirected_numpy(n: int, src, dst):
+    """Both directions of every edge, deduplicated, self-loops kept; returned
+    as (dst, src) sorted by dst."""
+    src = np.asarray(src, dtype=np.int64)
+    dst = np.asarray(dst, dtype=np.int64)
+    key = np.unique(np.concatenate([dst * n + src, src * n + dst]))
+    return key // n, key % n
+
+
+def components_numpy(n: int, src, dst, max_rounds: int | None = None) -> np.ndarray:
+    """Synchronous min-label rounds over the undirected graph: every vertex
+    takes the min of its own label and its neighbours' labels.  At the
+    fixpoint a vertex's label is the min vertex id of its component; a
+    vertex with no edges keeps its own id.  Stops at the fixpoint or after
+    max_rounds rounds."""
+    d, s = _undirected_numpy(n, src, dst)
+    lab = np.arange(n, dtype=np.int64)
+    # a label travels one hop a round, so n rounds always reach the fixpoint
+    for _ in range(n if max_rounds is None else max_rounds):
+        new = lab.copy()
+        np.minimum.at(new, d, lab[s])
+        if np.array_equal(new, lab):
+            break
+        lab = new
+    return lab
+
+
+def label_propagation_numpy(n: int, src, dst, max_rounds: int = 20) -> np.ndarray:
+    """Synchronous label propagation over the undirected graph: every vertex
+    with a neighbour takes the most frequent neighbour label, a tie going to
+    the smallest label; a vertex with no edges keeps its own id.  Stops at
+    the fixpoint or after max_rounds rounds."""
+    d, s = _undirected_numpy(n, src, dst)
+    lab = np.arange(n, dtype=np.int64)
+    for _ in range(max_rounds):
+        key, count = np.unique(d * n + lab[s], return_counts=True)
+        v, cand = key // n, key % n
+        order = np.lexsort((cand, -count, v))  # by v, then count desc, label asc
+        v, cand = v[order], cand[order]
+        first = np.ones(v.size, dtype=bool)
+        first[1:] = v[1:] != v[:-1]
+        new = lab.copy()
+        new[v[first]] = cand[first]
+        if np.array_equal(new, lab):
+            break
+        lab = new
+    return lab

@@ -22,7 +22,7 @@ from pagerank_cuda_dynamic_spark.streaming.checkpoint import CheckpointManager
 from pagerank_cuda_dynamic_spark.streaming.driver import pagerank_checkpointed
 
 from .conftest import edges_df, snapshot_oracle
-from .oracle import pagerank_numpy
+from .oracle import components_numpy, pagerank_numpy
 
 
 def test_bsp_empty_stripe_no_deadlock(spark):
@@ -152,9 +152,6 @@ def test_cc_bsp_empty_stripe(spark):
     label pack; the stub-row guarantee must keep the label loop converging
     (previously: flag-spin deadlock)."""
     import numpy as np
-    from pagerank_cuda_dynamic_spark.operators.components import (
-        connected_components_np,
-    )
     from pagerank_cuda_dynamic_spark.operators.components_bsp import (
         connected_components_bsp,
     )
@@ -163,7 +160,7 @@ def test_cc_bsp_empty_stripe(spark):
     dst = np.arange(301, 351)
     e = edges_df(spark, src, dst)
     got = connected_components_bsp(e, 400)
-    want = connected_components_np(e, 400)
+    want = components_numpy(400, src, dst)
     assert np.array_equal(got, want)
     assert got[0] == 0 and got[299] == 299  # isolated vertices keep own id
     assert (got[300:351] == 300).all()

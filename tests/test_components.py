@@ -4,32 +4,37 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from pagerank_cuda_dynamic_spark.operators.components import (
-    connected_components_np,
-    label_propagation_np,
+    connected_components_joinagg,
     modularity,
     triangle_count,
 )
+from pagerank_cuda_dynamic_spark.operators.components_bsp import (
+    connected_components_bsp,
+    label_propagation_bsp,
+)
 
 from .conftest import MICRO_GRAPHS, edges_df
+from .oracle import components_numpy, label_propagation_numpy
 
 
 def test_cc_two_islands(spark):
     n, src, dst = MICRO_GRAPHS["two_islands"]
-    comp = connected_components_np(edges_df(spark, src, dst), n)
+    comp = connected_components_bsp(edges_df(spark, src, dst), n)
     assert comp.tolist() == [0, 0, 0, 3, 3, 3]
 
 
 def test_cc_line(spark):
     n, src, dst = MICRO_GRAPHS["line5"]
-    comp = connected_components_np(edges_df(spark, src, dst), n)
+    comp = connected_components_bsp(edges_df(spark, src, dst), n)
     assert comp.tolist() == [0] * 5
 
 
 def test_cc_isolated_vertex(spark):
     # vertex 3 isolated (n=4, edges only among 0-2)
-    comp = connected_components_np(edges_df(spark, [0, 1], [1, 2]), 4)
+    comp = connected_components_bsp(edges_df(spark, [0, 1], [1, 2]), 4)
     assert comp.tolist() == [0, 0, 0, 3]
 
 
@@ -38,7 +43,7 @@ def test_cc_oracle_random(spark):
     n, m = 60, 80
     src = rng.integers(0, n, m)
     dst = rng.integers(0, n, m)
-    comp = connected_components_np(edges_df(spark, src, dst), n)
+    comp = connected_components_bsp(edges_df(spark, src, dst), n)
     # union-find oracle
     parent = list(range(n))
 
@@ -110,9 +115,8 @@ def test_lpa_two_cliques(spark):
     cl2 = list(itertools.permutations(range(4, 8), 2))
     src = [a for a, b in cl1 + cl2] + [3]
     dst = [b for a, b in cl1 + cl2] + [4]
-    labels = label_propagation_np(edges_df(spark, src, dst), 8)
-    assert len(set(labels[:4])) == 1
-    assert len(set(labels[4:])) == 1
+    labels = label_propagation_bsp(edges_df(spark, src, dst), 8)
+    assert labels.tolist() == [0] * 4 + [4] * 4
 
 
 def test_modularity_perfect_split(spark):
@@ -128,73 +132,106 @@ def test_modularity_perfect_split(spark):
 
 
 def test_cc_bsp_matches(spark):
-    from pagerank_cuda_dynamic_spark.operators.components_bsp import (
-        connected_components_bsp,
-    )
-
     rng = np.random.default_rng(43)
     n = 300
     src = rng.integers(0, n, 350)
     dst = rng.integers(0, n, 350)
-    e = edges_df(spark, src, dst)
-    want = connected_components_np(e, n)
-    got = connected_components_bsp(e, n)
-    assert got.tolist() == want.tolist()
+    got = connected_components_bsp(edges_df(spark, src, dst), n)
+    assert got.tolist() == components_numpy(n, src, dst).tolist()
 
 
 def test_lpa_bsp_matches(spark):
-    from pagerank_cuda_dynamic_spark.operators.components_bsp import (
-        label_propagation_bsp,
-    )
-
     rng = np.random.default_rng(47)
     n = 120
     src = rng.integers(0, n, 500)
     dst = rng.integers(0, n, 500)
-    e = edges_df(spark, src, dst)
-    want = label_propagation_np(e, n, max_rounds=10)
-    got = label_propagation_bsp(e, n, max_rounds=10)
-    assert got.tolist() == want.tolist()
+    got = label_propagation_bsp(edges_df(spark, src, dst), n, max_rounds=10)
+    assert got.tolist() == label_propagation_numpy(n, src, dst, max_rounds=10).tolist()
 
 
-def test_cc_pointer_jump_matches_np(spark):
-    from pagerank_cuda_dynamic_spark.operators.components import (
-        connected_components_pointer_jump,
-    )
-
-    rng = np.random.default_rng(53)
-    n = 300
-    src = rng.integers(0, n, 350)
-    dst = rng.integers(0, n, 350)
-    e = edges_df(spark, src, dst)
-    want = connected_components_np(e, n)
-    got_df = connected_components_pointer_jump(e, n).toPandas()
-    got = np.full(n, -1, dtype=np.int64)
-    got[got_df["v"].to_numpy()] = got_df["component"].to_numpy()
-    assert got.tolist() == want.tolist()
+def _shuffled_paths(n: int, seed: int):
+    """Two paths through all n vertices whose ids are not sorted along the
+    path: visiting a random permutation in order, and its inverse.  On the
+    inverse with n = 200, seed 5, a hook+jump CC needs 128 rounds, not
+    O(log n).  Min-label needs up to n - 1 rounds on either."""
+    perm = np.random.default_rng(seed).permutation(n)
+    return [(p[:-1], p[1:]) for p in (perm, np.argsort(perm))]
 
 
-def test_cc_pointer_jump_long_chain_logarithmic(spark):
-    """A 1024-hop chain needs the min-label loop O(diameter) rounds; the
-    pointer-jumping twin must finish in O(log diameter) — assert both the
-    exact components (union-find ground truth) and the round bound."""
-    from pagerank_cuda_dynamic_spark.operators.components import (
-        connected_components_pointer_jump,
-    )
+def test_cc_bsp_shuffled_path(spark):
+    n = 200
+    for src, dst in _shuffled_paths(n, 5):
+        got = connected_components_bsp(edges_df(spark, src, dst), n)
+        assert got.tolist() == [0] * n
+        assert got.tolist() == components_numpy(n, src, dst).tolist()
 
+
+def test_cc_bsp_long_chain_matches_oracle(spark):
+    """A 1024-hop chain (1023 min-label rounds), a 3-cycle island and an
+    isolated vertex."""
     L = 1024
-    # chain 0→1→…→L-1, plus a 3-cycle island and an isolated vertex
     src = list(range(L - 1)) + [L, L + 1, L + 2]
     dst = list(range(1, L)) + [L + 1, L + 2, L]
     n = L + 4
-    e = edges_df(spark, src, dst)
-    out, rounds = connected_components_pointer_jump(e, n, with_rounds=True)
-    pdf = out.toPandas().sort_values("v")
-    comp = pdf["component"].to_numpy()
+    comp = connected_components_bsp(edges_df(spark, src, dst), n)
     assert (comp[:L] == 0).all()
     assert (comp[L: L + 3] == L).all()
     assert comp[L + 3] == L + 3
-    assert rounds <= int(np.log2(L)) + 6, rounds
+    assert comp.tolist() == components_numpy(n, src, dst).tolist()
+
+
+def test_cc_joinagg_shuffled_path(spark):
+    """joinagg runs one round of Spark jobs per hop, so the path is short."""
+    n = 24
+    src, dst = _shuffled_paths(n, 5)[1]
+    got = connected_components_joinagg(edges_df(spark, src, dst), n).toPandas()
+    got = got.sort_values("v")["component"].tolist()
+    assert got == [0] * n
+    assert got == components_numpy(n, src, dst).tolist()
+
+
+def test_cc_joinagg_needs_n_or_vertices(spark):
+    with pytest.raises(ValueError, match="n or vertices"):
+        connected_components_joinagg(edges_df(spark, [0], [1]))
+
+
+@pytest.fixture(scope="module")
+def synthesized_graph(spark):
+    """The CLI's --synthesize 30 input, dictionary-encoded: (entity by dense
+    id, src, dst)."""
+    from pagerank_cuda_dynamic_spark.plans.dictionary import (
+        build_vertex_dictionary,
+        encode_edges,
+    )
+    from pagerank_cuda_dynamic_spark.sources.edges import derive_edges_from_transcripts
+    from pagerank_cuda_dynamic_spark.sources.transcripts import synthesize_transcripts
+
+    ent = derive_edges_from_transcripts(synthesize_transcripts(spark, 30, seed=42))
+    d = build_vertex_dictionary(ent)
+    enc = encode_edges(ent, d).toPandas()
+    entity = d.toPandas().sort_values("v")["entity"].to_numpy()
+    return entity, enc["src"].to_numpy(), enc["dst"].to_numpy()
+
+
+@pytest.mark.parametrize(
+    "algo,exchange", [("cc", "memmap"), ("lpa", "memmap"), ("cc", "tcp")]
+)
+def test_cli_labels_match_oracle(spark, tmp_path, synthesized_graph, algo, exchange):
+    """`--algo cc|lpa` writes (entity, label) rows that map back to the NumPy
+    oracle's labels over the dictionary-encoded edges."""
+    from pagerank_cuda_dynamic_spark.cli import main
+
+    out = str(tmp_path / "labels")
+    argv = ["--synthesize", "30", "--algo", algo, "--exchange", exchange, "--out", out]
+    assert main(argv) == 0
+    entity, src, dst = synthesized_graph
+    n = len(entity)
+    if algo == "cc":
+        val, lab = "component", components_numpy(n, src, dst)
+    else:
+        val, lab = "label", label_propagation_numpy(n, src, dst)
+    got = {r["entity"]: r[val] for r in spark.read.parquet(out).collect()}
+    assert got == dict(zip(entity, entity[lab]))
 
 
 # ---------------------------------------------------------------------------

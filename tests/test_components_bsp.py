@@ -1,5 +1,6 @@
-"""Barrier-loop CC / LPA (operators/components_bsp.py) against the NumPy-path
-oracles on edge cases, plus its Spark job budget and input validation."""
+"""Barrier-loop CC / LPA (operators/components_bsp.py) against the NumPy
+oracles (tests/oracle.py) on edge cases, plus its Spark job budget and input
+validation."""
 
 from __future__ import annotations
 
@@ -12,16 +13,13 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from pagerank_cuda_dynamic_spark.operators.components import (
-    connected_components_np,
-    label_propagation_np,
-)
 from pagerank_cuda_dynamic_spark.operators.components_bsp import (
     connected_components_bsp,
     label_propagation_bsp,
 )
 
 from .conftest import edges_df
+from .oracle import components_numpy, label_propagation_numpy
 from .test_pagerank_bsp_dynamic import _count_jobs
 
 # name -> (n, src, dst)
@@ -41,17 +39,18 @@ def test_bsp_labels_match_np(spark, name):
     # an explicit schema: an empty frame gives nothing to infer types from
     pdf = pd.DataFrame({"src": np.asarray(src, np.int64), "dst": np.asarray(dst, np.int64)})
     e = spark.createDataFrame(pdf, "src long, dst long")
-    assert connected_components_bsp(e, n).tolist() == connected_components_np(e, n).tolist()
+    assert connected_components_bsp(e, n).tolist() == components_numpy(n, src, dst).tolist()
     for rounds in (0, 1, 10):
         got = label_propagation_bsp(e, n, max_rounds=rounds)
-        want = label_propagation_np(e, n, max_rounds=rounds)
+        want = label_propagation_numpy(n, src, dst, max_rounds=rounds)
         assert got.tolist() == want.tolist(), rounds
 
 
 def test_bsp_labels_run_two_jobs(spark):
     """One query per call: the shuffle-map stage and the barrier stage."""
     rng = np.random.default_rng(59)
-    e = edges_df(spark, rng.integers(0, 200, 300), rng.integers(0, 200, 300)).persist()
+    src, dst = rng.integers(0, 200, 300), rng.integers(0, 200, 300)
+    e = edges_df(spark, src, dst).persist()
     e.count()
     try:
         cc, cc_jobs = _count_jobs(spark, lambda: connected_components_bsp(e, 200))
@@ -59,8 +58,8 @@ def test_bsp_labels_run_two_jobs(spark):
     finally:
         e.unpersist()
     assert cc_jobs <= 2 and lpa_jobs <= 2
-    assert cc.tolist() == connected_components_np(e, 200).tolist()
-    assert lpa.tolist() == label_propagation_np(e, 200).tolist()
+    assert cc.tolist() == components_numpy(200, src, dst).tolist()
+    assert lpa.tolist() == label_propagation_numpy(200, src, dst).tolist()
 
 
 def _scratch_dirs() -> set:
@@ -87,7 +86,7 @@ def test_default_session_barrier_fits_slots(spark):
     label loop is sized by spark.default.parallelism, which must not
     exceed the slots (a wider barrier stage waits ~10 min in Spark's slot
     check and then fails).  A fresh driver runs CC and matches the
-    NumPy-path labels well inside two minutes."""
+    NumPy oracle's labels well inside two minutes."""
     import json
     import subprocess
     import sys
@@ -118,5 +117,4 @@ def test_default_session_barrier_fits_slots(spark):
     )
     par, labels = json.loads(out.stdout.strip().splitlines()[-1])
     assert par == 2
-    e = edges_df(spark, src, dst)
-    assert labels == connected_components_np(e, n).tolist()
+    assert labels == components_numpy(n, src, dst).tolist()

@@ -1,5 +1,5 @@
-"""Round-2 scale-out twins: joinagg CC/LPA must match the driver-resident
-kernels exactly (same algorithms, zero driver state)."""
+"""The shared-nothing components engine: joinagg CC/LPA must match the
+NumPy oracles (tests/oracle.py) exactly, with zero driver state."""
 
 from __future__ import annotations
 
@@ -8,13 +8,12 @@ import pytest
 
 from pagerank_cuda_dynamic_spark.operators.components import (
     connected_components_joinagg,
-    connected_components_np,
     label_propagation_joinagg,
-    label_propagation_np,
     triangle_count,
 )
 
 from .conftest import edges_df
+from .oracle import components_numpy, label_propagation_numpy
 
 
 @pytest.fixture(scope="module")
@@ -23,12 +22,12 @@ def random_graph(spark):
     n, m = 600, 2200
     src = rng.integers(0, n, m)
     dst = rng.integers(0, n, m)
-    return n, edges_df(spark, src, dst)
+    return n, src, dst, edges_df(spark, src, dst)
 
 
 def test_cc_joinagg_matches_np(spark, random_graph):
-    n, e = random_graph
-    want = connected_components_np(e, n)
+    n, src, dst, e = random_graph
+    want = components_numpy(n, src, dst)
     got = connected_components_joinagg(e, n).toPandas().sort_values("v")
     assert np.array_equal(got["component"].to_numpy(), want)
 
@@ -47,8 +46,8 @@ def test_cc_joinagg_islands(spark):
 
 
 def test_lpa_joinagg_matches_np(spark, random_graph):
-    n, e = random_graph
-    want = label_propagation_np(e, n, max_rounds=10)
+    n, src, dst, e = random_graph
+    want = label_propagation_numpy(n, src, dst, max_rounds=10)
     got = (
         label_propagation_joinagg(e, n, max_rounds=10)
         .toPandas()

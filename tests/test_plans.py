@@ -103,28 +103,6 @@ def test_entity_edges_broadcast_dims(spark):
     assert "BroadcastHashJoin" in p
 
 
-def test_driver_queries_never_route_to_np_twins():
-    """connected_components_np / label_propagation_np collect O(|V|) per
-    round — documented mid-scale twins kept only as oracle cross-checks.
-    No driver-contract query may import or call them, so future edits
-    can't silently re-route a scale path onto a driver-resident loop."""
-    import ast
-    import pathlib
-
-    src = pathlib.Path("/root/repo/__spark_entry__.py").read_text()
-    tree = ast.parse(src)
-    banned = {"connected_components_np", "label_propagation_np"}
-    hits = []
-    for node in ast.walk(tree):
-        if isinstance(node, ast.ImportFrom):
-            hits += [a.name for a in node.names if a.name in banned]
-        elif isinstance(node, ast.Name) and node.id in banned:
-            hits.append(node.id)
-        elif isinstance(node, ast.Attribute) and node.attr in banned:
-            hits.append(node.attr)
-    assert not hits, f"driver entry references np twins: {hits}"
-
-
 def test_temporal_ops_single_shuffle_jvm_side(spark):
     """Sessionization and the union-tag ASOF join must stay JVM-side and
     shuffle exactly ONCE on the key column — the whole point of the

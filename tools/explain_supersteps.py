@@ -121,7 +121,7 @@ def main() -> None:
     # --- louvain round (current shape: fused move aggregate, no window)
     from pagerank_cuda_dynamic_spark.operators.components import _und_src
 
-    und = _und_src(e, presymmetrized=False).persist()
+    und = _und_src(e).persist()
     two_m = und.count()
     c = materialize(
         und.groupBy(F.col("src").alias("v"))

@@ -573,8 +573,8 @@ def generate(
         "entity_graph_build": "entity graph build (derive + dictionary + snapshot)",
         "pagerank_converged_bsp": "PageRank converged (entity graph)",
         "triangles": "triangle count (degree-oriented wedges)",
-        "connected_components": "connected components (events graph, np labels)",
-        "cc_pointer_jump": "connected components (distributed pointer-jump)",
+        "connected_components": "connected components (events graph, BSP label loop)",
+        "cc_joinagg": "connected components (distributed join/aggregate loop)",
         "minhash_dedup": "MinHash-LSH dedup + exact-Jaccard verify (50 k docs)",
         "token_stats": "token stats (50 k docs)",
         "text_scrub": "PII scrub + whitespace normalization (50 k docs)",
