@@ -5,9 +5,9 @@ community helpers, properties.hxx:123–401).
 Connected components and LPA have two engines, one per platform:
 
 * operators/components_bsp.py (`connected_components_bsp`,
-  `label_propagation_bsp`): dense ids in [0, n), one barrier query of two
-  Spark jobs whose tasks share labels through memmaps on one node.  It is
-  the engine the benchmark measures.
+  `label_propagation_bsp`): dense ids in [0, n), one barrier stage (one
+  Spark job on a persisted input) whose tasks share labels through memmaps
+  on one node.  It is the engine the benchmark measures.
 * `connected_components_joinagg` / `label_propagation_joinagg` here: plain
   join/aggregate rounds, so labels never sit on the driver and no shared
   filesystem is needed.  It stays because it is the only CC/LPA path for a

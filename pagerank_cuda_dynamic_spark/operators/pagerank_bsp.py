@@ -53,6 +53,7 @@ from __future__ import annotations
 
 import atexit
 import os
+import re
 import shutil
 import tempfile
 import time
@@ -145,11 +146,36 @@ def _reap_scratch() -> None:
         _remove_scratch(path)
 
 
+# pr_bsp_<owner pid>_<hex>[_spill]: a killed driver never runs the exit
+# hook, so the first _scratch_dir call of a later process removes the dirs
+# whose owner no longer exists (pids as this process sees them: drivers
+# that share the scratch base must share a pid namespace)
+_OWNED_SCRATCH = re.compile(r"pr_bsp_(\d+)_[0-9a-f]{12}(_spill)?")
+_reaped_dead_owners = False
+
+
+def _reap_dead_owners(base: str) -> None:
+    for name in os.listdir(base):
+        m = _OWNED_SCRATCH.fullmatch(name)
+        if m is None:
+            continue  # not ours, or a name from before owners were recorded
+        try:
+            os.kill(int(m.group(1)), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(base, name), ignore_errors=True)
+        except (PermissionError, OverflowError):
+            pass  # alive under another user, or too large to be a pid
+
+
 def _scratch_dir() -> str:
     """A fresh scratch path (not created); it and its "_spill" twin are
     removed at interpreter exit unless _remove_scratch removes them first."""
+    global _reaped_dead_owners
     base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    path = os.path.join(base, f"pr_bsp_{uuid.uuid4().hex[:12]}")
+    if not _reaped_dead_owners:
+        _reaped_dead_owners = True
+        _reap_dead_owners(base)
+    path = os.path.join(base, f"pr_bsp_{os.getpid()}_{uuid.uuid4().hex[:12]}")
     _LIVE_SCRATCH.add(path)
     return path
 

@@ -2,61 +2,62 @@
 
 The reference remaps sparse vertex keys to dense device indices through an
 unordered_map built from the key scan (pagerankCuda.hxx:765–775 `ksMap`,
-csr.hxx:213–222).  Spark equivalent: sorted-rank numbering of distinct
-entities — deterministic across runs/parallelism (never
-monotonically_increasing_id, which is partition-layout-dependent).
+csr.hxx:213–222).  Here one Spark query brings the distinct entity strings
+to the driver through Arrow, and `np.unique` numbers them by sorted rank:
+deterministic across runs and parallelism (never
+monotonically_increasing_id, which is partition-layout-dependent).  Python
+orders str by code point, the order of Spark's UTF-8 binary string
+comparison, so the ids are the entities' sorted rank in Spark too.
 
-Numbering is ALWAYS the zipWithIndex-style two-phase scheme
-(assign_dense_ids_scaled): range-partition by key → per-partition
-row_number → broadcast exclusive prefix-sum of partition counts.  The ids
-equal the global sorted rank regardless of where the range boundaries fall,
-so the mapping is deterministic even though range sampling isn't — and no
-single task ever sorts all |V| keys (10^12-vertex safe).  The same scheme
-numbers temporal cursors (attach_global_seq)."""
+Premise: |V| fits the driver, the one the engine already makes for the
+rank vector, outdeg_array and bsp_pack's degree table.  The dictionary
+comes back as a driver-built (v, entity) DataFrame, which encode_edges
+broadcasts.  attach_global_seq numbers ROWS (|E| of them, the temporal
+cursors) and so never collects: range-partition → per-partition
+row_number → broadcast offsets."""
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 
 def build_vertex_dictionary(edges: DataFrame, src: str = "src_entity", dst: str = "dst_entity") -> DataFrame:
-    """(v:long, entity:string), ids dense [0,N) over sorted distinct keys."""
-    entities = (
-        edges.select(F.col(src).alias("entity"))
-        .unionByName(edges.select(F.col(dst).alias("entity")))
-        .distinct()
+    """(v:long, entity:string), ids dense [0,N) over sorted distinct keys.
+    A null endpoint is a ValueError naming how many there are."""
+    return number_entities(
+        edges.select(F.col(src).alias("entity")).unionByName(
+            edges.select(F.col(dst).alias("entity"))
+        )
     )
-    return assign_dense_ids_scaled(entities)
 
 
-def assign_dense_ids_scaled(entities: DataFrame) -> DataFrame:
-    """Two-phase numbering: range-partition by entity, number within
-    partitions, add broadcast per-partition offsets.  Output ids = global
-    sorted rank; no global single-task window.
-
-    The range-partitioned snapshot is materialized ONCE (localCheckpoint):
-    range boundary sampling is seeded per execution, so without pinning,
-    the counts job and the numbering job could see different partitionings
-    and produce inconsistent ids."""
-    parts = entities.repartitionByRange(entities.sparkSession.sparkContext.defaultParallelism, "entity")
-    with_pid = parts.select("entity", F.spark_partition_id().alias("pid")).localCheckpoint(eager=True)
-    counts = with_pid.groupBy("pid").count()
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select("pid", F.coalesce(F.sum("count").over(w_off), F.lit(0)).alias("off"))
-    w_local = Window.partitionBy("pid").orderBy("entity")
-    return (
-        with_pid.withColumn("local", F.row_number().over(w_local) - 1)
-        .join(F.broadcast(offsets), "pid")
-        .select((F.col("off") + F.col("local")).cast("long").alias("v"), "entity")
+def number_entities(entities: DataFrame, first: int = 0) -> DataFrame:
+    """(v:long, entity:string) over the distinct values of the string
+    column `entity`, v = first + sorted rank.  One Spark query collects the
+    distinct values with their multiplicity, so a null is reported by the
+    number of rows that hold it instead of taking an id of its own."""
+    pdf = entities.groupBy("entity").count().toPandas()
+    null = pdf["entity"].isna()
+    if null.any():
+        raise ValueError(
+            f"{int(pdf['count'][null].sum())} edge endpoint(s) are null; "
+            "every endpoint needs an entity string"
+        )
+    names = np.unique(pdf["entity"].to_numpy(object))
+    ids = np.arange(first, first + names.size, dtype=np.int64)
+    return entities.sparkSession.createDataFrame(
+        pd.DataFrame({"v": ids, "entity": names}), "v long, entity string"
     )
 
 
 def attach_global_seq(df: DataFrame, order_cols: list[str], out_col: str = "seq") -> DataFrame:
-    """Global 0-based arrival index under a total order, by the same
-    two-phase scheme (range partition → local row_number → broadcast
-    offsets).  Equals ROW_NUMBER() OVER (ORDER BY order_cols) - 1 when the
-    order keys are unique, with no single-task global window.  Range
+    """Global 0-based arrival index under a total order, by a two-phase
+    scheme (range partition → local row_number → broadcast offsets).
+    Equals ROW_NUMBER() OVER (ORDER BY order_cols) - 1 when the order keys
+    are unique, with no single-task global window.  Range
     partitioning keeps equal keys together, so ties never split across the
     offset boundary.  Materialized once (localCheckpoint) so the counts and
     numbering jobs share one set of sampled range boundaries."""
@@ -89,9 +90,9 @@ def encode_edges(
 
     Two hash joins against the dictionary; `broadcast=True` (default)
     hints the dictionary side — right whenever |V| fits the broadcast
-    budget.  At 10^12 vertices pass broadcast=False: the joins become
-    shuffle joins on the entity key (same plan shape, Catalyst/AQE picks
-    the strategy from measured sizes)."""
+    budget.  Past it pass broadcast=False: the joins become shuffle joins
+    on the entity key (same plan shape, Catalyst/AQE picks the strategy
+    from measured sizes)."""
     src_map = dictionary.select(
         F.col("entity").alias("__src_ent"), F.col("v").alias("__src_id")
     )

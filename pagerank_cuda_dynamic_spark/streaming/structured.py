@@ -190,9 +190,10 @@ class StreamingPagerankDriver:
     state via Dynamic-Frontier-Prune (technique='dfp') or plain warm
     restart ('nd').
 
-    The entity dictionary is a DISTRIBUTED DataFrame (anti-join for new
-    entities, two-phase scaled numbering + offset) — no unbounded
-    driver-side dict; micro-batch rows never pass through the driver."""
+    The entity dictionary is a DataFrame: an anti-join finds the batch's
+    new entities, whose distinct strings are numbered on the driver
+    (plans.dictionary.number_entities); edge rows never pass through the
+    driver."""
 
     def __init__(self, spark, technique: str = "dfp", ckpt_root: str | None = None):
         from pagerank_cuda_dynamic_spark.operators.pagerank import PagerankOptions
@@ -210,24 +211,20 @@ class StreamingPagerankDriver:
     def _encode_batch(self, batch_df: DataFrame) -> DataFrame:
         from pagerank_cuda_dynamic_spark.plans.barrier import materialize
         from pagerank_cuda_dynamic_spark.plans.dictionary import (
-            assign_dense_ids_scaled,
             encode_edges,
+            number_entities,
         )
 
         e = batch_df.select("src_entity", "dst_entity")
-        ents = (
-            e.select(F.col("src_entity").alias("entity"))
-            .unionByName(e.select(F.col("dst_entity").alias("entity")))
-            .distinct()
+        ents = e.select(F.col("src_entity").alias("entity")).unionByName(
+            e.select(F.col("dst_entity").alias("entity"))
         )
         new = (
             ents
             if self.dict_df is None
             else ents.join(self.dict_df.select("entity"), "entity", "left_anti")
         )
-        new_ids = assign_dense_ids_scaled(new).select(
-            (F.col("v") + F.lit(self.n_entities)).cast("long").alias("v"), "entity"
-        )
+        new_ids = number_entities(new, first=self.n_entities)
         self.dict_df = materialize(
             new_ids
             if self.dict_df is None

@@ -20,7 +20,6 @@ from pagerank_cuda_dynamic_spark.operators.components_bsp import (
 
 from .conftest import edges_df
 from .oracle import components_numpy, label_propagation_numpy
-from .test_pagerank_bsp_dynamic import _count_jobs
 
 # name -> (n, src, dst)
 GRAPHS = {
@@ -46,20 +45,91 @@ def test_bsp_labels_match_np(spark, name):
         assert got.tolist() == want.tolist(), rounds
 
 
+def _jobs_and_stages(spark, fn):
+    """(fn(), Spark jobs fn ran, stages those jobs ran or skipped)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    stages = sum(len(sc.statusTracker().getJobInfo(j).stageIds) for j in jobs)
+    return out, len(jobs), stages
+
+
 def test_bsp_labels_run_two_jobs(spark):
-    """One query per call: the shuffle-map stage and the barrier stage."""
+    """On a persisted frame a call is one Spark job of one stage: the
+    barrier stage reads the cached rows and exchanges them itself (the name
+    is older than that)."""
     rng = np.random.default_rng(59)
     src, dst = rng.integers(0, 200, 300), rng.integers(0, 200, 300)
     e = edges_df(spark, src, dst).persist()
     e.count()
     try:
-        cc, cc_jobs = _count_jobs(spark, lambda: connected_components_bsp(e, 200))
-        lpa, lpa_jobs = _count_jobs(spark, lambda: label_propagation_bsp(e, 200))
+        cc, *cc_cost = _jobs_and_stages(spark, lambda: connected_components_bsp(e, 200))
+        lpa, *lpa_cost = _jobs_and_stages(spark, lambda: label_propagation_bsp(e, 200))
     finally:
         e.unpersist()
-    assert cc_jobs <= 2 and lpa_jobs <= 2
+    assert cc_cost == [1, 1] and lpa_cost == [1, 1]
     assert cc.tolist() == components_numpy(200, src, dst).tolist()
     assert lpa.tolist() == label_propagation_numpy(200, src, dst).tolist()
+
+
+def test_bsp_labels_input_wider_than_slots(spark):
+    """An input with more partitions than task slots (a barrier stage
+    cannot be wider, nor coalesce into) is repartitioned to the slots:
+    a plain scan, an exchange and a persisted frame."""
+    parts = 2 * spark.sparkContext.defaultParallelism + 1
+    rng = np.random.default_rng(73)
+    n = 120
+    src, dst = rng.integers(0, n, 150), rng.integers(0, n, 150)
+    rows = list(zip(src.tolist(), dst.tolist()))
+    scan = spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), "src long, dst long")
+    cached = edges_df(spark, src, dst).repartition(parts).persist()
+    cached.count()
+    frames = {"scan": scan, "exchange": scan.repartition(parts), "cached": cached}
+    try:
+        for kind, e in frames.items():
+            assert e.rdd.getNumPartitions() == parts, kind
+            got = connected_components_bsp(e, n)
+            assert got.tolist() == components_numpy(n, src, dst).tolist(), kind
+            got = label_propagation_bsp(e, n, max_rounds=5)
+            want = label_propagation_numpy(n, src, dst, max_rounds=5)
+            assert got.tolist() == want.tolist(), kind
+    finally:
+        cached.unpersist()
+
+
+def test_bsp_labels_shuffled_input(spark):
+    """A groupBy output (an exchange adaptive execution may coalesce): the
+    shuffle-map job and the barrier job, with no job to size the stage."""
+    rng = np.random.default_rng(79)
+    n = 90
+    src, dst = rng.integers(0, n, 200), rng.integers(0, n, 200)
+    g = edges_df(spark, src, dst).groupBy("src", "dst").count()
+    got, jobs, _ = _jobs_and_stages(spark, lambda: connected_components_bsp(g, n))
+    assert jobs == 2
+    assert got.tolist() == components_numpy(n, src, dst).tolist()
+    got = label_propagation_bsp(g, n)
+    assert got.tolist() == label_propagation_numpy(n, src, dst).tolist()
+
+
+def test_bsp_labels_zero_partitions(spark):
+    """A frame with no partitions runs no barrier stage, and no job.  An
+    empty groupBy output, which adaptive execution leaves with no partition
+    only once its shuffle has run, runs a barrier stage of no task."""
+    e = spark.createDataFrame(spark.sparkContext.emptyRDD(), "src long, dst long")
+    for fn in (connected_components_bsp, label_propagation_bsp):
+        got, jobs, _ = _jobs_and_stages(spark, lambda: fn(e, 6))
+        assert jobs == 0
+        assert got.tolist() == list(range(6))
+    g = spark.createDataFrame([], "src long, dst long").groupBy("src", "dst").count()
+    assert connected_components_bsp(g, 6).tolist() == list(range(6))
+    assert label_propagation_bsp(g, 6).tolist() == list(range(6))
 
 
 def _scratch_dirs() -> set:

@@ -1,24 +1,30 @@
-"""Two-phase (range-partitioned) numbering must equal global sorted ranks —
-and stay consistent across the multiple jobs that consume it (range
-boundary sampling is per-execution; the pinned snapshot makes ids stable)."""
+"""Dense numbering must equal global sorted ranks and stay consistent
+across the jobs that consume it: the vertex dictionary (numbered on the
+driver) and attach_global_seq's two-phase row numbering (range boundary
+sampling is per-execution; the pinned snapshot makes ids stable)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
+import pytest
 
 from pagerank_cuda_dynamic_spark.plans.dictionary import (
-    assign_dense_ids_scaled,
     attach_global_seq,
+    build_vertex_dictionary,
+    encode_edges,
 )
+
+
+def _dictionary(df):
+    return build_vertex_dictionary(df, src="entity", dst="entity")
 
 
 def test_assign_dense_ids_equals_sorted_rank(spark):
     rng = np.random.default_rng(61)
     ents = [f"e{int(x):08d}" for x in rng.choice(10**7, 5000, replace=False)]
     df = spark.createDataFrame(pd.DataFrame({"entity": ents}))
-    got = assign_dense_ids_scaled(df).toPandas().sort_values("v")
+    got = _dictionary(df).toPandas().sort_values("v")
     want = sorted(ents)
     assert list(got["entity"]) == want
     assert list(got["v"]) == list(range(len(ents)))
@@ -28,9 +34,8 @@ def test_assign_dense_ids_stable_across_actions(spark):
     rng = np.random.default_rng(67)
     ents = [f"x{int(v):06d}" for v in rng.choice(10**6, 3000, replace=False)]
     df = spark.createDataFrame(pd.DataFrame({"entity": ents}))
-    ids = assign_dense_ids_scaled(df)
-    # two separate actions over the same DF must see identical ids (the
-    # un-pinned version could re-sample range boundaries between jobs)
+    ids = _dictionary(df)
+    # two separate actions over the same DF must see identical ids
     a = ids.toPandas().sort_values("entity").reset_index(drop=True)
     b = ids.toPandas().sort_values("entity").reset_index(drop=True)
     assert (a["v"] == b["v"]).all()
@@ -53,3 +58,33 @@ def test_attach_global_seq_equals_row_number(spark):
     assert (got["ts"].to_numpy() == want["ts"].to_numpy()).all()
     assert list(got["seq"]) == list(range(n))
     assert set(got.columns) == {"ts", "event_id", "payload", "seq"}
+
+
+def test_dictionary_rejects_null_endpoints(spark):
+    """A null endpoint would take id 0 and shift every other id by one,
+    and encode_edges would drop its edge: a ValueError names the count."""
+    df = spark.createDataFrame(
+        [("a", "b"), ("b", None), ("c", "a")], "src_entity string, dst_entity string"
+    )
+    with pytest.raises(ValueError, match=r"^1 edge endpoint\(s\) are null"):
+        build_vertex_dictionary(df)
+    two = spark.createDataFrame(
+        [(None, "b"), ("b", None), ("c", "a")], "src_entity string, dst_entity string"
+    )
+    with pytest.raises(ValueError, match=r"^2 edge endpoint\(s\) are null"):
+        build_vertex_dictionary(two)
+
+
+def test_dictionary_orders_by_code_point(spark):
+    """Ids follow Python's sorted() (code point order, which is Spark's
+    UTF-8 byte order); a UTF-16 compare would put the emoji before "Ａ"."""
+    ents = ["b", "é", "\U0001F600", "Ａ", "a", "z", "ß"]
+    pdf = pd.DataFrame({"src_entity": ents, "dst_entity": ents[1:] + ents[:1]})
+    edges = spark.createDataFrame(pdf)
+    got = build_vertex_dictionary(edges).toPandas().sort_values("v")
+    assert list(got["entity"]) == sorted(ents)
+    assert list(got["v"]) == list(range(len(ents)))
+    ids = {e: i for i, e in enumerate(sorted(ents))}
+    enc = encode_edges(edges, build_vertex_dictionary(edges)).toPandas()
+    want = sorted((ids[a], ids[b]) for a, b in zip(pdf.src_entity, pdf.dst_entity))
+    assert sorted(zip(enc["src"], enc["dst"])) == want

@@ -1,6 +1,7 @@
 """Dynamic graph maintenance: incremental/decremental connected components,
 incremental triangle count, and coreness (h-index iteration) — each checked
-against a from-scratch recompute or a pure-Python reference."""
+against a from-scratch recompute, the NumPy oracle (tests/oracle.py) or a
+pure-Python reference."""
 
 from __future__ import annotations
 
@@ -17,6 +18,7 @@ from pagerank_cuda_dynamic_spark.operators.components import (
 from pagerank_cuda_dynamic_spark.operators.centrality import coreness
 
 from .conftest import edges_df
+from .oracle import components_numpy
 
 
 def _rand_graph(seed, n, m):
@@ -43,7 +45,7 @@ def test_cc_incremental_matches_recompute(spark):
     got = _as_dict(
         connected_components_incremental(base, edges_df(spark, bsrc, bdst))
     )
-    want = _as_dict(_labels(spark, src + bsrc, dst + bdst, n))
+    want = dict(enumerate(components_numpy(n, src + bsrc, dst + bdst).tolist()))
     assert got == want
 
 
@@ -83,10 +85,8 @@ def test_cc_decremental_matches_recompute(spark):
             e, labels, edges_df(spark, [s for s, _ in dels], [d for _, d in dels])
         )
     )
-    want = _as_dict(
-        _labels(spark, [s for s, _ in remaining], [d for _, d in remaining], n)
-    )
-    assert got == want
+    want = components_numpy(n, [s for s, _ in remaining], [d for _, d in remaining])
+    assert got == dict(enumerate(want.tolist()))
 
 
 def test_triangle_incremental_matches_recount(spark):

@@ -224,6 +224,52 @@ def test_scratch_dirs_reaped_at_interpreter_exit(tmp_path):
     assert not os.path.exists(d + "_spill"), "spill dir survived interpreter exit"
 
 
+def test_scratch_dirs_of_killed_driver_reaped_by_next():
+    """A SIGKILLed driver runs no exit hook: its scratch and spill dirs stay
+    until the first _scratch_dir call of a later process, which removes the
+    dirs whose owner pid is gone.  Dirs of a live owner and names without an
+    owner stay.  Sparkless subprocess drives."""
+    import os
+    import shutil
+    import subprocess
+    import sys as _sys
+    import uuid
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    head = (
+        "import sys; sys.path.insert(0, %r)\n"
+        "import os, signal\n"
+        "from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import _scratch_dir\n"
+        % str(repo)
+    )
+    killed = subprocess.run(
+        [_sys.executable, "-c", head + "d = _scratch_dir()\n"
+         "os.makedirs(d); os.makedirs(d + '_spill')\n"
+         "print(d, flush=True)\n"
+         "os.kill(os.getpid(), signal.SIGKILL)\n"],
+        capture_output=True, text=True,
+    )
+    assert killed.returncode == -9
+    dead = killed.stdout.strip().splitlines()[-1]
+    assert os.path.isdir(dead) and os.path.isdir(dead + "_spill")
+    base = os.path.dirname(dead)
+    live = os.path.join(base, f"pr_bsp_{os.getpid()}_{uuid.uuid4().hex[:12]}")
+    legacy = os.path.join(base, f"pr_bsp_{uuid.uuid4().hex[:12]}")
+    try:
+        os.makedirs(live)
+        os.makedirs(legacy)
+        subprocess.run(
+            [_sys.executable, "-c", head + "_scratch_dir()\n"], check=True
+        )
+        assert not os.path.exists(dead), "dead driver's scratch dir survived"
+        assert not os.path.exists(dead + "_spill"), "dead driver's spill survived"
+        assert os.path.isdir(live) and os.path.isdir(legacy)
+    finally:
+        for d in (dead, dead + "_spill", live, legacy):
+            shutil.rmtree(d, ignore_errors=True)
+
+
 def test_trailing_empty_rows_keep_every_edge(spark):
     """A stripe ending in rows without in-edges (no self-loops here) must
     still sum every edge of its last non-empty row: BSP and TCP with
