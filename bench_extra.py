@@ -3,7 +3,7 @@ driver's measurement; every number quoted in OPTIMIZATION_r06.md that is
 not a bench.py row comes from here).
 
 Subcommands:
-  pack                      — phase-profile bsp_pack + the BSP static loop
+  pack                      — time the snapshot build, bsp_pack and the BSP static loop
                               at the bench graph size (SPARK_GRAFT_BENCH_CONVS)
   q <name> [name ...]       — time registry queries exactly as bench.py's
                               registry sweep does (`.count()`), with
@@ -47,57 +47,27 @@ def _mk_spark(name: str):
 
 def cmd_pack() -> None:
     import numpy as np
-    import pyspark.sql.functions as F
 
     from pagerank_cuda_dynamic_spark.sources.bench_graph import dense_transcript_graph
     from pagerank_cuda_dynamic_spark.plans import GraphSnapshot
     from pagerank_cuda_dynamic_spark.operators.pagerank import PagerankOptions
-    from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
-        STRIPE_EDGES,
-        pagerank_static_bsp,
-    )
+    from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import pagerank_static_bsp
 
     spark = _mk_spark("bench-extra-pack")
     out: dict = {"convs": BENCH_CONVS, "cpus": CPUS}
-    t0 = time.time()
     e, n = dense_transcript_graph(spark, BENCH_CONVS, adjacency_hops=HOPS, seed=SEED)
+    t0 = time.time()
     g = GraphSnapshot.build(e, n=n, partitions=spark.sparkContext.defaultParallelism)
-    m = g.edges.count()
     out["graph_build_sec"] = round(time.time() - t0, 2)
-    out["edges"] = m
-    out["vertices"] = n
 
-    # phase replica of bsp_pack's pre-route work (same plans, timed apart)
-    p = spark.sparkContext.defaultParallelism
-    hub_cut = max(4.0 * m / max(p, 1), 64)
+    # the pack: degree pass, routed shuffle, dedup + self-loops + spill
     t0 = time.time()
-    hub_pdf = (
-        g.edges.groupBy(F.col("dst").alias("v"))
-        .agg(F.count(F.lit(1)).alias("indeg"))
-        .where(F.col("indeg") > hub_cut)
-        .select("v")
-        .toPandas()
-    )
-    out["phase_hub_agg_sec"] = round(time.time() - t0, 2)
-    hubs = np.sort(hub_pdf["v"].to_numpy().astype(np.int64))
-    out["n_hubs"] = int(hubs.size)
-    k = max(1, min(16, round(m / p / STRIPE_EDGES)))
-    n_target = p * k
-    if hubs.size and hubs.size <= 4096:
-        nonhub = g.edges.where(~F.col("dst").isin([int(h) for h in hubs]))
-    else:
-        nonhub = g.edges
-    t0 = time.time()
-    cuts = nonhub.select("dst").approxQuantile(
-        "dst", [i / n_target for i in range(1, n_target)], 0.001
-    )
-    out["phase_quantile_sec"] = round(time.time() - t0, 2)
-    out["n_cuts"] = len(cuts)
-
-    # full pack (route + mapInPandas + spill), then loop
-    t0 = time.time()
-    g.bsp_packed()
+    _, _, n_stripes, hubs = g.bsp_packed()
     out["pack_total_sec"] = round(time.time() - t0, 2)
+    out["edges"] = g.edges.count()
+    out["vertices"] = n
+    out["n_stripes"] = n_stripes
+    out["n_hubs"] = int(hubs.size)
     t0 = time.time()
     res = pagerank_static_bsp(g, PagerankOptions())
     out["static_wall_sec"] = round(time.time() - t0, 2)

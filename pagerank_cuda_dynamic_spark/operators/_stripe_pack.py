@@ -160,25 +160,11 @@ def _raw_to_row(raw: dict) -> dict:
     }
 
 
-def _stub_pack_row(raw: dict) -> dict:
-    """Minimal valid PACK_SCHEMA row (stripe identity only) emitted when the
-    stripe's arrays went to the spill instead — keeps the packed DataFrame
-    shape (one row per stripe) without shipping ~|E| bytes through Arrow."""
-    return {
-        "stripe": raw["s"], "lo": raw["lo"], "hi": raw["hi"],
-        "src_bin": b"", "src32": True, "offsets_bin": b"",
-        "usrc_bin": b"", "uoff_bin": b"", "dstloc_bin": b"",
-        "hub_src_bin": b"", "hub_src32": True, "hub_offsets_bin": b"",
-        "husrc_bin": b"", "huoff_bin": b"", "hubcol_bin": b"",
-        "w_bin": b"", "hub_w_bin": b"",
-    }
-
-
-def _spill_write(spill_dir: str, raw: dict) -> None:
-    """Atomically persist one raw stripe record to the snapshot's spill
-    (tmp + rename: barrier/pack task retries overwrite, never interleave)."""
-    os.makedirs(spill_dir, exist_ok=True)
-    path = os.path.join(spill_dir, f"s{raw['s']}.pkl")
+def _spill_write(spill_dir: str, raw, name: str | None = None) -> None:
+    """Atomically persist one raw stripe record (or, under `name`, any
+    object) to an existing spill dir (tmp + rename: barrier/pack task
+    retries overwrite, never interleave)."""
+    path = os.path.join(spill_dir, name or f"s{raw['s']}.pkl")
     tmp = f"{path}.tmp.{os.getpid()}"
     with open(tmp, "wb") as f:
         pickle.dump(raw, f, protocol=pickle.HIGHEST_PROTOCOL)
@@ -192,26 +178,20 @@ def _spill_read(spill_dir: str, s: int) -> dict:
 
 
 def row_to_raw(row, n_hubs: int, weighted: bool) -> dict:
-    """Inverse of _raw_to_row: a PACK_SCHEMA blob row -> raw stripe record.
-    An empty stub row (_stub_pack_row) decodes to an edgeless stripe."""
-    lo, hi = int(row["lo"]), int(row["hi"])
+    """Inverse of _raw_to_row: a PACK_SCHEMA blob row -> raw stripe record."""
     src_t = np.int32 if row["src32"] else np.int64
 
     def blob(col, dtype=np.int64):
         return np.frombuffer(row[col], dtype=dtype)
 
-    def offs(col, size=1):  # a stub row ships no offsets
-        o = blob(col)
-        return o if o.size else np.zeros(size, np.int64)
-
     return {
-        "s": int(row["stripe"]), "lo": lo, "hi": hi,
-        "src": blob("src_bin", src_t), "offsets": offs("offsets_bin", hi - lo + 1),
-        "usrc": blob("usrc_bin"), "uoff": offs("uoff_bin"),
+        "s": int(row["stripe"]), "lo": int(row["lo"]), "hi": int(row["hi"]),
+        "src": blob("src_bin", src_t), "offsets": blob("offsets_bin"),
+        "usrc": blob("usrc_bin"), "uoff": blob("uoff_bin"),
         "dstloc": blob("dstloc_bin", np.int32),
         "hsrc": blob("hub_src_bin", np.int32 if row["hub_src32"] else np.int64),
-        "hoff": offs("hub_offsets_bin", n_hubs + 1),
-        "husrc": blob("husrc_bin"), "huoff": offs("huoff_bin"),
+        "hoff": blob("hub_offsets_bin"),
+        "husrc": blob("husrc_bin"), "huoff": blob("huoff_bin"),
         "hubcol": blob("hubcol_bin", np.int32),
         "w_reg": blob("w_bin", np.float64) if weighted else None,
         "w_hub": blob("hub_w_bin", np.float64) if weighted else None,

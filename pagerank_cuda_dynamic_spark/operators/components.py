@@ -807,8 +807,7 @@ def louvain_moves(
     )
     # repartition by src BEFORE the undirected dedup: equal (src,dst)
     # rows share a src, so the distinct aggregate runs in place on the
-    # src-hash layout — one |E| shuffle instead of two (the same
-    # move as GraphSnapshot.build's dst-first dedup)
+    # src-hash layout — one |E| shuffle instead of two
     und = (
         simple.unionByName(
             simple.select(F.col("dst").alias("src"), F.col("src").alias("dst"))

@@ -56,18 +56,13 @@ def self_loop_count(edges: DataFrame) -> DataFrame:
     )
 
 
-def _collect_batch(
-    deletions: DataFrame, insertions: DataFrame, limit: int | None = None
-) -> pd.DataFrame:
+def _collect_batch(deletions: DataFrame, insertions: DataFrame) -> pd.DataFrame:
     """Both sides of a batch as one pandas frame (src, dst, is_del), in one
-    Spark job: a union of the two sides, each capped at `limit` rows when
-    given."""
+    Spark job: a union of the two sides."""
     sides = [
         df.select("src", "dst", F.lit(flag).alias("is_del"))
         for df, flag in ((deletions, True), (insertions, False))
     ]
-    if limit is not None:
-        sides = [df.limit(limit) for df in sides]
     return sides[0].unionByName(sides[1]).toPandas()
 
 
@@ -113,8 +108,8 @@ def tidy_batch(
     i = pdf.loc[~is_del, on].drop_duplicates()
     d = d[pd.MultiIndex.from_frame(d).isin(hits)]
     i = i[~pd.MultiIndex.from_frame(i).isin(hits)]
-    # one partition each: a limit() over the frame (delta_pack's per-side
-    # cap) then needs no shuffle, which would cost a job per side
+    # one partition each: later reads of the small batch (checkpoints,
+    # the delta pack's collect) run one task per side
     return (
         spark.createDataFrame(d, deletions.select(on).schema).coalesce(1),
         spark.createDataFrame(i, insertions.select(on).schema).coalesce(1),

@@ -80,7 +80,6 @@ from pagerank_cuda_dynamic_spark.operators._stripe_pack import (
     _spill_read,
     _spill_write,
     _stripe_edges,
-    _stub_pack_row,
     affected_gather,
     full_gather,
     hub_partials,
@@ -181,9 +180,9 @@ def _scratch_dir() -> str:
 
 
 def _indegrees(graph) -> np.ndarray:
-    """Dense |V| in-degree histogram on the driver.  NOT on the perf path —
-    bsp_pack derives bounds/hubs from its own degree pass; this remains as
-    the exact cross-check used by the pack parity tests."""
+    """Dense |V| in-degree histogram of graph.edges on the driver.  NOT on
+    the perf path — bsp_pack balances on its own raw histogram; this
+    remains as the exact cross-check used by the pack parity tests."""
     pdf = (
         graph.edges.groupBy(F.col("dst").alias("v"))
         .agg(F.count(F.lit(1)).alias("indeg"))
@@ -194,6 +193,31 @@ def _indegrees(graph) -> np.ndarray:
     return indeg
 
 
+def _hash_partition(keys: np.ndarray, n_parts: int) -> np.ndarray:
+    """The partition repartition(n_parts, col) sends each long key to:
+    pmod(Murmur3_x86_32.hashLong(key, seed 42), n_parts), the hash that
+    HashPartitioning and F.hash share — computed on the driver, no job."""
+    u32 = np.uint32
+
+    def mix_k1(k):
+        k = k * u32(0xCC9E2D51)
+        return ((k << u32(15)) | (k >> u32(17))) * u32(0x1B873593)
+
+    def mix_h1(h, k):
+        h = h ^ k
+        return ((h << u32(13)) | (h >> u32(19))) * u32(5) + u32(0xE6546B64)
+
+    v = np.asarray(keys, dtype=np.int64).view(np.uint64)
+    h = np.full(v.shape, 42, dtype=u32)
+    h = mix_h1(h, mix_k1((v & np.uint64(0xFFFFFFFF)).astype(u32)))
+    h = mix_h1(h, mix_k1((v >> np.uint64(32)).astype(u32)))
+    h = h ^ u32(8)
+    h = (h ^ (h >> u32(16))) * u32(0x85EBCA6B)
+    h = (h ^ (h >> u32(13))) * u32(0xC2B2AE35)
+    h = h ^ (h >> u32(16))
+    return np.mod(h.view(np.int32).astype(np.int64), n_parts)
+
+
 def bsp_pack(
     graph,
     p: int | None = None,
@@ -201,9 +225,8 @@ def bsp_pack(
     stripe_edges: int = STRIPE_EDGES,
     spill_dir: str | None = None,
 ):
-    """Stripe-packed CSR blobs + salted hub blocks, one row per dst stripe,
-    repartitioned so each stripe is whole in one task.  Returns
-    (packed_df, bounds, n_stripes, hubs).
+    """Stripe-packed CSR blobs + salted hub blocks, each stripe whole in one
+    task.  Returns (packed_df, bounds, n_stripes, hubs).
 
     hubs: dst ids with indeg > hub_factor·E/p.  Their in-edges are assigned
     to stripes by pmod(src) (the salt) and packed as per-stripe hub CSR
@@ -211,224 +234,266 @@ def bsp_pack(
     contiguous-stripe CSR (csr.hxx:107–286 analog), built once and
     gathered in row (dst) order.  Every blob also carries a src-sorted
     view (usrc/uoff/dstloc and husrc/huoff/hubcol) so mover-frontier
-    extension is O(out-edges of movers).  If graph.edges has a `w` column,
+    extension is O(out-edges of movers).  If the edges have a `w` column,
     per-edge weights ride along (w_bin/hub_w_bin) for weighted PageRank.
     stripe_edges is the in-edge budget per stripe (see the cut below).
 
-    Exactly ONE row per stripe id 0..n_stripes-1 is guaranteed (stripes
-    that receive no edges get an empty stub row) — the barrier loop waits
-    on every stripe's flag, so a missing stripe would deadlock it.
+    Each pack task adds the universal self-loops of the stripes it owns
+    when the input asks for them (pack_input) and dedups its unweighted
+    edges in place (np.unique of src·n+dst): equal pairs route to the same
+    stripe, so this is the edge SET.  Weighted edges are packed as given.
 
-    Scale note: one degree pass ships a |V|-row (v, outdeg, indeg) table
-    to the driver, and the hub list and the stripe bounds derive from it
-    in NumPy — the same |V|-fits-one-node premise as the loop's rank
-    vector (the reference assumes one GPU, pagerankCuda.hxx:798)."""
-    spark = graph.edges.sparkSession
+    Without spill_dir, packed_df holds exactly ONE PACK_SCHEMA blob row per
+    stripe id 0..n_stripes-1 (stripes that receive no edges get an empty
+    row — the barrier loop waits on every stripe's flag, so a missing
+    stripe would deadlock it).  With spill_dir, each task writes its raw
+    stripe records and an out-degree partial there instead, and packed_df
+    is the cached (src, dst) edge rows the tasks emitted.  Either way, an
+    unweighted graph with an `_outdeg_np` slot gets its exact out-degrees.
+
+    Scale note: one degree pass ships a |V|-row in-degree table of the RAW
+    rows to the driver (self-loops are +1 per vertex there, no Spark rows),
+    and the hub list and the stripe bounds derive from it in NumPy.  Raw
+    counts only balance load; they need not be exact.  This is the same
+    |V|-fits-one-node premise as the loop's rank vector (the reference
+    assumes one GPU, pagerankCuda.hxx:798)."""
+    frame, loops = graph.pack_input()
+    spark = frame.sparkSession
     if p is None:
         p = spark.sparkContext.defaultParallelism
-    weighted = "w" in graph.edges.columns
-    e = graph.edges
-    # ONE union-agg degree pass replaces four separate |E| jobs (the edge
-    # count, the hub HAVING aggregate, the approxQuantile bounds pass, and
-    # the loop setup's out-degree collect): (v, outdeg, indeg) lands as a
-    # |V|-row table on the driver, and |E|, the hub list, the EXACT
-    # edge-balanced stripe bounds and the out-degree array all derive from
-    # it in numpy.  Driver-side O(|V|) here matches the loop's existing
-    # |V|-fits-one-node posture (it memmaps |V|-sized rank vectors; the
-    # reference assumes one GPU, pagerankCuda.hxx:798).
-    deg_pdf = (
-        e.select(F.col("src").alias("v"), F.lit(1).alias("o"), F.lit(0).alias("i"))
-        .unionByName(
-            e.select(F.col("dst").alias("v"), F.lit(0).alias("o"), F.lit(1).alias("i"))
-        )
-        .groupBy("v")
-        .agg(F.sum("o").alias("outdeg"), F.sum("i").alias("indeg"))
-        .toPandas()
-    )
-    v_arr = deg_pdf["v"].to_numpy(dtype=np.int64)
-    out_arr = deg_pdf["outdeg"].to_numpy(dtype=np.int64)
-    in_arr = deg_pdf["indeg"].to_numpy(dtype=np.int64)
-    total = int(in_arr.sum())
-    if not weighted and getattr(graph, "_outdeg_np", None) is None and hasattr(
-        graph, "_outdeg_np"
-    ):
-        arr = np.zeros(graph.n, dtype=np.float64)
-        arr[v_arr] = out_arr
-        graph._outdeg_np = arr
-    hub_cut = max(hub_factor * total / max(p, 1), 64)
-    hubs = np.sort(v_arr[in_arr > hub_cut])
-    # stripes FINER than tasks (k per task, round-robin balanced): a
-    # stripe's dst range — and on locality-bearing graphs its src range —
-    # shrinks with the stripe, so the gather+sums working set drops into
-    # cache.  Measured on the 26.9M-edge bench family: 8 fat stripes
-    # 0.127 s/superstep → ~176 fine stripes 0.045 s at local[8];
-    # 32 → 192–256 stripes 0.019–0.031 s at local[32].  k rounds to keep
-    # stripe count a task multiple (uneven waves straggle the superstep).
-    k = 1
-    if total and p:
-        k = max(1, min(16, round(total / p / max(stripe_edges, 1))))
-    n_target = p * k
-    # EXACT cumulative-indegree bounds over NON-hub in-edges (hub edges are
-    # salted away): sort the degree table by dst and cut where the non-hub
-    # indegree prefix sum crosses each i/n_target fraction — the histogram
-    # the old approxQuantile pass estimated, now exact and job-free.
-    cuts_np = np.empty(0, dtype=np.int64)
-    if total and n_target > 1:
-        order = np.argsort(v_arr, kind="stable")
-        v_sorted = v_arr[order]
-        w_nonhub = np.where(in_arr[order] > hub_cut, 0, in_arr[order])
-        cum = np.cumsum(w_nonhub)
-        tot_nh = int(cum[-1]) if cum.size else 0
-        if tot_nh > 0:
-            targets = (np.arange(1, n_target) / n_target) * tot_nh
-            idx = np.searchsorted(cum, targets, side="left")
-            cuts_np = v_sorted[np.minimum(idx, v_sorted.size - 1)]
-    bounds = np.unique(
-        np.concatenate([[0], cuts_np, [graph.n]]).astype(np.int64)
-    )
-    n_stripes = len(bounds) - 1
-    sc = spark.sparkContext
-    bc_bounds = sc.broadcast(bounds)
-    bc_hubs = sc.broadcast(hubs)
-
-    # --- routing: ONE hash shuffle lands each stripe BLOCK on its own
-    # task.  The per-row stripe is a vectorized searchsorted in a
-    # pandas UDF (a JVM higher-order-function fold over the ~n_stripes
-    # bounds array measured ~20 s/pass at 27M edges — 6x the whole Arrow
-    # transfer); the shuffle key is a probed integer k_b per block with
-    # pmod(murmur3(k_b), n_parts) == b, so repartition(n_parts, key) IS the
-    # identity block->partition map (verified: HashPartitioning and
-    # F.hash share Murmur3/seed-42) and every pack task can derive the
-    # stripe set it owns from its partition id alone — which lets it emit
-    # its own empty-stripe stub rows (the barrier loop spins on every
-    # stripe's flag) and kills both the stub-detection collect and the
-    # blob re-repartition that used to materialize the pack twice.
-    n_parts = max(min(n_stripes, p), 1)
-    # ROUND-ROBIN stripe->block ownership (stripe % n_parts), not
-    # contiguous ranges: the barrier superstep is max-over-tasks, and
-    # per-stripe gather cost has a gradient along the dst range (Zipf
-    # id ordering), so contiguous blocks concentrate the hot stripes on
-    # one task (measured: 28.7 -> ~41 ms/superstep at 27M edges).  The
-    # interleave restores the old repartition()'s load balance while
-    # keeping the one-shuffle owned-stripe pack.
-    blk_of = np.arange(n_stripes, dtype=np.int64) % n_parts
-    probe = (
-        spark.range(0, 32 * n_parts + 64)
-        .select("id", F.pmod(F.hash("id"), F.lit(n_parts)).alias("b"))
-        .toPandas()
-    )
-    key_of_block = np.full(n_parts, -1, dtype=np.int64)
-    for kid, b in zip(probe["id"].to_numpy(), probe["b"].to_numpy()):
-        if key_of_block[int(b)] < 0:
-            key_of_block[int(b)] = int(kid)
-    if not (key_of_block >= 0).all():
-        raise RuntimeError("murmur3 probe failed to cover all blocks")
-    key_of_stripe = key_of_block[blk_of]
-    interior_np = bounds[1:-1]
-    ns_cap = n_stripes
-
-    # Vectorized pandas route (one numpy searchsorted per batch).  A pure-
-    # codegen route was tried in this round and measured SLOWER: a
-    # log-depth CASE WHEN bisection tree over the ~n_stripes bounds costs
-    # ~5.8 s/pass at 27M edges (nested-when codegen does not JIT well)
-    # vs ~3.3 s for the whole Arrow crossing, and a linear higher-order
-    # fold ~20 s/pass — the Arrow route stays.
-    @F.pandas_udf("long")
-    def _route_key(src_s: pd.Series, dst_s: pd.Series) -> pd.Series:
-        stripe = stripe_of(
-            src_s.to_numpy(dtype=np.int64), dst_s.to_numpy(dtype=np.int64),
-            interior_np, bc_hubs.value, ns_cap,
-        )
-        return pd.Series(key_of_stripe[stripe])
-
+    weighted = "w" in frame.columns
     cols = ["src", "dst"] + (["w"] if weighted else [])
-    routed = graph.edges.select(
-        *cols, _route_key("src", "dst").alias("rkey")
-    ).repartition(n_parts, "rkey")
+    N = int(graph.n)
+    # a narrow coalesce before any Python stage (a union plan may carry
+    # dozens of tiny partitions, one Python task each), cached so the
+    # degree pass and the route evaluate the input once
+    e = frame.select(*cols).coalesce(p)
+    if not frame.is_cached:
+        e = e.persist()
+    try:
+        def dst_counts(batches):
+            d = [pdf["dst"].to_numpy(np.int64) for pdf in batches]
+            v, c = np.unique(np.concatenate(d) if d else np.empty(0, np.int64), return_counts=True)
+            yield pd.DataFrame({"v": v, "c": c})
 
-    def pack_one(s: int, src_all, dst_all, w_all) -> dict:
-        b = bc_bounds.value
-        raw = _pack_stripe_raw(
-            s, int(b[s]), int(b[s + 1]), src_all, dst_all, w_all,
-            bc_hubs.value, weighted,
+        # per-partition counts summed on the driver: one job, where a JVM
+        # groupBy costs three under adaptive execution
+        deg_pdf = e.select("dst").mapInPandas(dst_counts, "v long, c long").toPandas()
+        v_arr = deg_pdf["v"].to_numpy(dtype=np.int64)
+        if v_arr.size and (v_arr.min() < 0 or v_arr.max() >= N):
+            raise ValueError(f"edge dst outside the vertex space [0, {N})")
+        indeg = np.zeros(N, dtype=np.int64)
+        np.add.at(indeg, v_arr, deg_pdf["c"].to_numpy(dtype=np.int64))
+        if loops:
+            indeg += 1
+        total = int(indeg.sum())
+        hub_cut = max(hub_factor * total / max(p, 1), 64)
+        hubs = np.flatnonzero(indeg > hub_cut).astype(np.int64)
+        # stripes FINER than tasks (k per task, round-robin balanced): a
+        # stripe's dst range — and on locality-bearing graphs its src range —
+        # shrinks with the stripe, so the gather+sums working set drops into
+        # cache.  Measured on the 26.9M-edge bench family: 8 fat stripes
+        # 0.127 s/superstep → ~176 fine stripes 0.045 s at local[8];
+        # 32 → 192–256 stripes 0.019–0.031 s at local[32].  k rounds to keep
+        # stripe count a task multiple (uneven waves straggle the superstep).
+        k = 1
+        if total and p:
+            k = max(1, min(16, round(total / p / max(stripe_edges, 1))))
+        n_target = p * k
+        # cumulative-indegree bounds over NON-hub in-edges (hub edges are
+        # salted away): cut where the prefix sum crosses each i/n_target
+        # fraction of the total
+        cuts_np = np.empty(0, dtype=np.int64)
+        if total and n_target > 1:
+            cum = np.cumsum(np.where(indeg > hub_cut, 0, indeg))
+            if cum[-1] > 0:
+                targets = (np.arange(1, n_target) / n_target) * cum[-1]
+                cuts_np = np.minimum(np.searchsorted(cum, targets, side="left"), N - 1)
+        bounds = np.unique(np.concatenate([[0], cuts_np, [N]]).astype(np.int64))
+        n_stripes = len(bounds) - 1
+        sc = spark.sparkContext
+        bc_bounds = sc.broadcast(bounds)
+        bc_hubs = sc.broadcast(hubs)
+
+        # --- routing: ONE hash shuffle lands each stripe BLOCK on its own
+        # task.  The per-row stripe is a vectorized searchsorted in a
+        # pandas UDF (a JVM higher-order-function fold over the ~n_stripes
+        # bounds array measured ~20 s/pass at 27M edges — 6x the whole Arrow
+        # transfer); the shuffle key is an integer k_b per block with
+        # pmod(murmur3(k_b), n_parts) == b (_hash_partition), so
+        # repartition(n_parts, key) IS the identity block->partition map and
+        # every pack task derives the stripe set it owns from its partition id
+        # alone — which lets it pack its empty stripes and add its self-loops
+        # without any collect.
+        n_parts = max(min(n_stripes, p), 1)
+        # ROUND-ROBIN stripe->block ownership (stripe % n_parts), not
+        # contiguous ranges: the barrier superstep is max-over-tasks, and
+        # per-stripe gather cost has a gradient along the dst range (Zipf
+        # id ordering), so contiguous blocks concentrate the hot stripes on
+        # one task (measured: 28.7 -> ~41 ms/superstep at 27M edges).  The
+        # interleave restores the old repartition()'s load balance while
+        # keeping the one-shuffle owned-stripe pack.
+        blk_of = np.arange(n_stripes, dtype=np.int64) % n_parts
+        cand = np.arange(32 * n_parts + 64, dtype=np.int64)
+        blocks, first = np.unique(_hash_partition(cand, n_parts), return_index=True)
+        if blocks.size != n_parts:
+            raise RuntimeError("no routing key found for every pack partition")
+        key_of_stripe = cand[first][blk_of]
+        interior_np = bounds[1:-1]
+        ns_cap = n_stripes
+
+        # Vectorized pandas route (one numpy searchsorted per batch).  A pure-
+        # codegen route was tried in this round and measured SLOWER: a
+        # log-depth CASE WHEN bisection tree over the ~n_stripes bounds costs
+        # ~5.8 s/pass at 27M edges (nested-when codegen does not JIT well)
+        # vs ~3.3 s for the whole Arrow crossing, and a linear higher-order
+        # fold ~20 s/pass — the Arrow route stays.
+        @F.pandas_udf("long")
+        def _route_key(src_s: pd.Series, dst_s: pd.Series) -> pd.Series:
+            stripe = stripe_of(
+                src_s.to_numpy(dtype=np.int64), dst_s.to_numpy(dtype=np.int64),
+                interior_np, bc_hubs.value, ns_cap,
+            )
+            return pd.Series(key_of_stripe[stripe])
+
+        routed = (
+            e.select(*cols, _route_key("src", "dst").alias("rkey"))
+            .repartition(n_parts, "rkey")
+            .drop("rkey")
         )
         if spill_dir:
-            _spill_write(spill_dir, raw)
-            return _stub_pack_row(raw)
-        return _raw_to_row(raw)
+            # tasks write only into an existing spill: recomputing the cached
+            # edge rows of a snapshot released since must not recreate it
+            os.makedirs(spill_dir, exist_ok=True)
 
-    def pack_partition(batches):
-        """Pack every stripe this partition OWNS (blk_of == partitionId) —
-        including empty ones as stub rows, so exactly one row per stripe
-        exists globally and the barrier loop never waits on a missing
-        flag.  Runs on empty partitions too (verified behavior)."""
-        from pyspark import TaskContext
+        def pack_partition(batches):
+            """Pack every stripe this partition OWNS (blk_of == partitionId),
+            empty ones included, so exactly one record per stripe exists
+            globally.  Runs on empty partitions too (verified behavior)."""
+            from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        own = np.flatnonzero(blk_of == pid)
-        pdfs = [pdf for pdf in batches]
-        if pdfs:
-            pdf = pd.concat(pdfs, ignore_index=True)
-            src_all = pdf["src"].to_numpy(dtype=np.int64)
-            dst_all = pdf["dst"].to_numpy(dtype=np.int64)
-            w_all = pdf["w"].to_numpy(dtype=np.float64) if weighted else None
-            stripe = stripe_of(src_all, dst_all, interior_np, bc_hubs.value, ns_cap)
+            pid = TaskContext.get().partitionId()
+            own = np.flatnonzero(blk_of == pid)
+            hub_ids, b = bc_hubs.value, bc_bounds.value
+            pdfs = [pdf for pdf in batches]
+            pdf = pd.concat(pdfs, ignore_index=True) if pdfs else pd.DataFrame(columns=cols)
+            src_all = pdf["src"].to_numpy(np.int64)
+            dst_all = pdf["dst"].to_numpy(np.int64)
+            w_all = pdf["w"].to_numpy(np.float64) if weighted else None
+            stripe = stripe_of(src_all, dst_all, interior_np, hub_ids, ns_cap)
             if not np.isin(stripe, own).all():
                 # the searchsorted slices below silently DROP edges whose
                 # stripe this partition does not own, so a divergence
-                # between the murmur3 probe and HashPartitioning must
-                # fail loudly, not corrupt ranks (raise, not assert:
-                # survives python -O)
+                # between _hash_partition and HashPartitioning must fail
+                # loudly, not corrupt ranks (raise, not assert: survives
+                # python -O)
                 raise RuntimeError(
                     "bsp_pack misroute: partition received edges for "
-                    "stripes it does not own — murmur3 probe and "
+                    "stripes it does not own — _hash_partition and the "
                     "repartition hash disagree"
                 )
+            if loops:
+                # (v, v) lands in v's dst stripe, or in v mod n_stripes when v
+                # is a hub: candidates are the owned ranges plus every hub
+                v = np.concatenate(
+                    [np.arange(b[s], b[s + 1], dtype=np.int64) for s in own] + [hub_ids]
+                )
+                v = v[np.isin(stripe_of(v, v, interior_np, hub_ids, ns_cap), own)]
+                src_all = np.concatenate([src_all, v])
+                dst_all = np.concatenate([dst_all, v])
+            if not weighted:
+                if N < 2**31:
+                    key = np.unique(src_all * N + dst_all)
+                    src_all, dst_all = key // N, key % N
+                else:  # src·n+dst would overflow int64
+                    pair = np.unique(np.stack([src_all, dst_all], axis=1), axis=0)
+                    src_all, dst_all = pair[:, 0], pair[:, 1]
+            stripe = stripe_of(src_all, dst_all, interior_np, hub_ids, ns_cap)
             order = np.argsort(stripe, kind="stable")
-            src_all, dst_all = src_all[order], dst_all[order]
-            if weighted:
-                w_all = w_all[order]
             stripe = stripe[order]
             cuts_ = np.searchsorted(stripe, own)
             ends_ = np.searchsorted(stripe, own, side="right")
-        rows = []
-        for i, s in enumerate(own):
-            if pdfs:
+            s_src, s_dst = src_all[order], dst_all[order]
+            s_w = w_all[order] if weighted else None
+            write = bool(spill_dir) and os.path.isdir(spill_dir)
+            rows = []
+            for i, s in enumerate(own):
                 a, z = int(cuts_[i]), int(ends_[i])
-                rows.append(
-                    pack_one(
-                        int(s),
-                        src_all[a:z],
-                        dst_all[a:z],
-                        w_all[a:z] if weighted else None,
-                    )
+                raw = _pack_stripe_raw(
+                    int(s), int(b[s]), int(b[s + 1]), s_src[a:z], s_dst[a:z],
+                    s_w[a:z] if weighted else None, hub_ids, weighted,
                 )
-            else:
-                rows.append(
-                    pack_one(
-                        int(s),
-                        np.empty(0, np.int64),
-                        np.empty(0, np.int64),
-                        np.empty(0, np.float64) if weighted else None,
-                    )
+                if write:
+                    _spill_write(spill_dir, raw)
+                elif not spill_dir:
+                    rows.append(_raw_to_row(raw))
+            if not spill_dir:
+                if rows:
+                    yield pd.DataFrame(rows, columns=_PACK_COLS)
+                return
+            if write:
+                # this task's exact out-degree partial — also the marker that
+                # its stripes are all in the spill
+                _spill_write(
+                    spill_dir, np.stack(np.unique(src_all, return_counts=True)),
+                    f"outdeg_{pid}.pkl",
                 )
-        if rows:
-            yield pd.DataFrame(rows, columns=_PACK_COLS)
+            out = {"src": src_all, "dst": dst_all}
+            if weighted:
+                out["w"] = w_all
+            yield pd.DataFrame(out)
 
-    packed = routed.drop("rkey").mapInPandas(pack_partition, PACK_SCHEMA).persist()
-    n_rows = packed.count()
-    if n_rows != n_stripes:
-        raise RuntimeError(f"pack emitted {n_rows} stripe rows, expected {n_stripes}")
+        want_deg = (
+            not weighted and hasattr(graph, "_outdeg_np") and graph._outdeg_np is None
+        )
+        if spill_dir:
+            schema = "src long, dst long" + (", w double" if weighted else "")
+            packed = routed.mapInPandas(pack_partition, schema).persist()
+            # runs the pack tasks once and caches their rows
+            packed.write.format("noop").mode("overwrite").save()
+            parts = [os.path.join(spill_dir, f"outdeg_{pid}.pkl") for pid in range(n_parts)]
+            missing = [path for path in parts if not os.path.exists(path)]
+            if missing:
+                packed.unpersist()
+                raise RuntimeError(f"{len(missing)} pack task(s) left no spill records")
+            if want_deg:
+                parts = [pd.read_pickle(path) for path in parts]
+        else:
+            packed = routed.mapInPandas(pack_partition, PACK_SCHEMA).persist()
+            # one job: the cache fill, the stripe-row check and, from the
+            # src-sorted views, the out-degrees
+            views = (("usrc_bin", "uoff_bin"), ("husrc_bin", "huoff_bin"))
+            got = packed.select(
+                *([c for v in views for c in v] if want_deg else ["stripe"])
+            ).collect()
+            if len(got) != n_stripes:
+                packed.unpersist()
+                raise RuntimeError(
+                    f"pack emitted {len(got)} stripe rows, expected {n_stripes}"
+                )
+            if want_deg:
+                parts = [
+                    (np.frombuffer(r[u], np.int64), np.diff(np.frombuffer(r[o], np.int64)))
+                    for r in got
+                    for u, o in views
+                ]
+    finally:
+        if e.is_cached:
+            e.unpersist()
+    if want_deg:
+        out = np.zeros(N, dtype=np.float64)
+        for v, c in parts:
+            np.add.at(out, v, c)
+        graph._outdeg_np = out
     if spill_dir:
-        # spill is complete iff the pack job materialized every stripe row
-        # (checked above) — the marker gates the loop's spill-load path
+        # the marker gates the loop's spill-load path
         import pickle
 
         with open(os.path.join(spill_dir, "META.pkl"), "wb") as f:
             pickle.dump(
                 {
                     "bounds": bounds, "hubs": hubs, "n_stripes": n_stripes,
-                    "n_parts": n_parts, "weighted": weighted, "n": graph.n,
+                    "n_parts": n_parts, "weighted": weighted, "n": N,
                 },
                 f,
                 protocol=pickle.HIGHEST_PROTOCOL,
@@ -454,8 +519,8 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
     hub list are inherited from the parent (a small batch cannot move the
     balance point materially; routing stays consistent by construction).
 
-    Cost: one collect of the batch (both sides in one union, each limited
-    to DELTA_MAX_BATCH + 1 rows) and one |batch|-broadcast job over n_parts
+    Cost: one collect of the batch (both sides in one union) and one
+    |batch|-broadcast job over n_parts
     tasks, O(|batch| + Σ|touched stripes|) work, zero shuffle.  The
     collected arrays stay on the child with the two frames, so DF seeding
     (_frontier_seeds) reads them instead of collecting again.  Also
@@ -477,12 +542,13 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
     # the reconstruction does not model
     if meta.get("weighted") or child.n != meta["n"] or child.n >= 2**31:
         return None
-    lim = DELTA_MAX_BATCH
-    pdf = _collect_batch(deletions, insertions, limit=lim + 1)
+    # no row cap on the collect: a tidied batch is driver-built already
+    # (tidy_batch), and a cap costs a limit per side on every batch
+    pdf = _collect_batch(deletions, insertions)
     b_src = pdf["src"].to_numpy(np.int64)
     b_dst = pdf["dst"].to_numpy(np.int64)
     b_del = pdf["is_del"].to_numpy(bool)
-    if int(b_del.sum()) > lim or int((~b_del).sum()) > lim:
+    if max(int(b_del.sum()), int((~b_del).sum())) > DELTA_MAX_BATCH:
         return None
     bounds = np.asarray(meta["bounds"], dtype=np.int64)
     hubs = np.asarray(meta["hubs"], dtype=np.int64)
@@ -594,10 +660,9 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
 def spill_edges(spark, spill_dir: str):
     """The (src, dst) edge frame held by a complete stripe spill: one task
     per pack partition reads the stripes it owns (s ≡ pid mod n_parts) and
-    unpacks them with _stripe_edges.  The rows are then hash-partitioned by
-    dst, the layout GraphSnapshot.build gives, so consumers such as
-    tidy_batch plan the same exchanges on a carried snapshot as on a
-    built one."""
+    unpacks them with _stripe_edges — the stripe-block partitions that
+    bsp_pack's edge rows have, so consumers such as tidy_batch plan the
+    same exchanges on a carried snapshot as on a packed one."""
     import pickle
 
     with open(os.path.join(spill_dir, "META.pkl"), "rb") as f:
@@ -612,10 +677,8 @@ def spill_edges(spark, spill_dir: str):
                     src, dst = _stripe_edges(_spill_read(spill_dir, s), hubs)
                     yield pd.DataFrame({"src": src, "dst": dst})
 
-    return (
-        spark.range(n_parts, numPartitions=n_parts)
-        .mapInPandas(read, "src long, dst long")
-        .repartition(spark.sparkContext.defaultParallelism, "dst")
+    return spark.range(n_parts, numPartitions=n_parts).mapInPandas(
+        read, "src long, dst long"
     )
 
 
@@ -692,13 +755,10 @@ def _bsp_loop(
         if spill and os.path.exists(os.path.join(spill, "COMPLETE"))
         else None
     )
-    if packed is not None:
+    if SPILL is None:
         NPARTS = packed.rdd.getNumPartitions()
-    else:  # delta-packed snapshot: stripe records exist only in the spill
-        import pickle
-
-        with open(os.path.join(SPILL, "META.pkl"), "rb") as f:
-            NPARTS = int(pickle.load(f)["n_parts"])
+    else:  # a spilled pack's frame holds edge rows, or nothing at all
+        NPARTS = int(pd.read_pickle(os.path.join(SPILL, "META.pkl"))["n_parts"])
     HUBS = np.asarray(hubs, dtype=np.int64)
     n_hubs = int(HUBS.size)
     outdeg = graph.outdeg_array()
@@ -1178,6 +1238,9 @@ class WeightedSnapshot:
             arr[pdf["src"].to_numpy()] = pdf["wdeg"].to_numpy()
             self._wdeg = arr
         return self._wdeg
+
+    def pack_input(self):
+        return self.edges, False
 
     def bsp_packed(self, p: int | None = None, hub_factor: float = 4.0) -> tuple:
         if self._bsp_packed is None:

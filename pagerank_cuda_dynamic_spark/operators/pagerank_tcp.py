@@ -114,7 +114,9 @@ def _tcp_loop(
             f"dangling={opts.dangling!r}: weighted TCP redistributes dangling "
             "mass (dangling='redistribute')"
         )
-    if not weighted and "w" in graph.edges.columns:
+    # the rows the pack reads: a fresh snapshot's edges would dedup first
+    frame, _ = graph.pack_input()
+    if not weighted and "w" in frame.columns:
         # without the flag the loop would ignore the w_bin blobs and
         # silently compute UNWEIGHTED ranks — refuse loudly instead
         raise ValueError(
@@ -122,7 +124,7 @@ def _tcp_loop(
             "unweighted entry points reject 'w' — use pagerank_weighted_tcp"
         )
     t_all = time.time()
-    spark = graph.edges.sparkSession
+    spark = frame.sparkSession
     sc = spark.sparkContext
     N = graph.n
     r0 = _initial_ranks(q, N)

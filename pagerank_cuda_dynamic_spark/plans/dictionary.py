@@ -10,7 +10,7 @@ orders str by code point, the order of Spark's UTF-8 binary string
 comparison, so the ids are the entities' sorted rank in Spark too.
 
 Premise: |V| fits the driver, the one the engine already makes for the
-rank vector, outdeg_array and bsp_pack's degree table.  The dictionary
+rank vector, outdeg_array and bsp_pack's degree histogram.  The dictionary
 comes back as a driver-built (v, entity) DataFrame, which encode_edges
 broadcasts.  attach_global_seq numbers ROWS (|E| of them, the temporal
 cursors) and so never collects: range-partition → per-partition

@@ -1,11 +1,15 @@
 """GraphSnapshot — an immutable dense-id graph version.
 
 The reference snapshots graphs by copy-construction before each batch
-(duplicate.hxx:86–101, main.cu:80).  DataFrames are immutable, so a snapshot
-is just: the deduped self-looped edge DF (cached, hash-partitioned by dst —
-the gather key of the pull update), the vertex count, and the out-degree
-side table (transposeWithDegree's vertex value, transpose.hxx:79–100).
-A fast-path with_batch child derives its edges lazily, see with_batch.
+(duplicate.hxx:86–101, main.cu:80) and builds the device CSR once.  Here a
+built snapshot is just the raw (src, dst) plan, the vertex count and the
+self-loop flag: build runs no Spark job.  The one-time CSR build is
+bsp_pack, which dedups each stripe, adds the universal self-loops and counts
+the exact out-degrees (transposeWithDegree's vertex value,
+transpose.hxx:79–100) in its own tasks; its output rows are the snapshot's
+cached edge set.  A snapshot read before any spilled pack (the TCP ring
+packs in rows) dedups its plan in the JVM instead, see edges.  A fast-path
+with_batch child derives its edges lazily, see with_batch.
 """
 
 from __future__ import annotations
@@ -14,22 +18,21 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from pagerank_cuda_dynamic_spark.operators.graph import (
-    apply_batch,
-    out_degrees,
-)
+from pagerank_cuda_dynamic_spark.operators.graph import apply_batch
 
 
 class GraphSnapshot:
     """edges: (src:long, dst:long), deduped, self-loop on every vertex,
-    cached.  Dense id space [0, n).  degrees: (v, outdeg), cached."""
+    cached once derived.  Dense id space [0, n)."""
 
-    def __init__(
-        self, edges: DataFrame | None, n: int, degrees: DataFrame | None = None
-    ):
-        self._edges = edges  # None until a lazy with_batch child derives it
+    def __init__(self, edges: DataFrame | None, n: int):
+        self._edges = edges  # None until first derived, see edges
         self.n = n
-        self._degrees = degrees
+        # the un-deduped edge plan bsp_pack reads while _edges is None, and
+        # whether the pack adds a self-loop on every vertex to it
+        self._raw: DataFrame | None = None
+        self._self_loops = False
+        self._partitions: int | None = None  # the pack's task count
         self._outdeg_np: np.ndarray | None = None
         self._bsp_packed: tuple | None = None
         self._bsp_spill: str | None = None
@@ -43,31 +46,49 @@ class GraphSnapshot:
 
     @property
     def edges(self) -> DataFrame:
+        """The cached edge set.  A full pack's output rows once bsp_packed()
+        has run; read back from the spill of a delta-packed snapshot;
+        otherwise the plan deduped in the JVM (plus the self-loops), which
+        needs no scratch shared with the executors — the TCP ring's
+        platform, and batch tidying before any pack."""
         if self._edges is None:
             if self._delta is not None:
                 self._apply_delta()
             if self._edges is None:
-                from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
-                    spill_edges,
-                )
+                if self._raw is None:
+                    from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
+                        spill_edges,
+                    )
 
-                e = spill_edges(SparkSession.active(), self._bsp_spill).persist()
-                # fills the cache in one job; count() takes three here
+                    e = spill_edges(SparkSession.active(), self._bsp_spill)
+                else:
+                    e = self._raw
+                    if self._self_loops:
+                        v = e.sparkSession.range(self.n)
+                        e = e.unionByName(
+                            v.select(F.col("id").alias("src"), F.col("id").alias("dst"))
+                        )
+                    e = e.distinct()
+                e = e.persist()
+                # fills the cache; count() would run more jobs here
                 e.write.format("noop").mode("overwrite").save()
-                self._edges = e
+                self._edges, self._raw = e, None
         return self._edges
 
-    @property
-    def degrees(self) -> DataFrame:
-        if self._degrees is None:
-            self._degrees = out_degrees(self.edges).persist()
-        return self._degrees
+    def pack_input(self) -> tuple[DataFrame, bool]:
+        """(frame, add_self_loops): the rows bsp_pack reads.  While the edge
+        set is not derived, the raw plan and the self-loop flag — the pack
+        dedups and self-loops them in its tasks; after that, the edges."""
+        if self._edges is None and self._raw is not None:
+            return self._raw, self._self_loops
+        return self.edges, False
 
     def _apply_delta(self) -> None:
         """One shot: merge the batch into the parent's stripe spill
         (delta_pack).  When delta_pack declines and the edge set is still
-        pending, derive it from the parent with a broadcast anti-join +
-        append instead — a narrow plan, valid for a TIDIED batch."""
+        pending, the pack (or edges) reads it from the parent by a broadcast
+        anti-join + append instead — a narrow plan, valid for a TIDIED
+        batch."""
         from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
             _remove_scratch,
             _scratch_dir,
@@ -80,25 +101,20 @@ class GraphSnapshot:
         self._delta = None  # the parent must not stay pinned
         if got is not None:
             self._bsp_spill, self._bsp_packed = spill, got
+            self._raw = None  # the edges are read back from the spill
             return
         _remove_scratch(spill)
-        if self._edges is None:
+        if self._edges is None and self._raw is None:
             on = ["src", "dst"]
-            # (v,v) deletions are no-ops on the default path (build
+            # (v,v) deletions are no-ops on the default path (the pack
             # re-injects universal self-loops) — hold that here too
-            e = (
-                parent.edges.join(
-                    F.broadcast(
-                        deletions.select(on).where(F.col("src") != F.col("dst"))
-                    ),
-                    on,
-                    "left_anti",
-                )
-                .unionByName(insertions.select(on))
-                .persist()
-            )
-            e.count()
-            self._edges = e
+            self._raw = parent.edges.join(
+                F.broadcast(
+                    deletions.select(on).where(F.col("src") != F.col("dst"))
+                ),
+                on,
+                "left_anti",
+            ).unionByName(insertions.select(on))
 
     def bsp_packed(self, p: int | None = None, hub_factor: float = 4.0) -> tuple:
         """Cached (packed, bounds, n_stripes, hubs) stripe-CSR build for the
@@ -109,7 +125,8 @@ class GraphSnapshot:
         executors (the same premise as the loop's memmap exchange): repeat
         loop invocations — warm starts, dynamic batches, repeated queries —
         load stripes off the spill instead of re-streaming ~|E|·12 B of blob
-        rows through Arrow every run."""
+        rows through Arrow every run.  A full pack's output rows become the
+        snapshot's edges, and its out-degree partials its outdeg_array."""
         if self._bsp_packed is None and self._delta is not None:
             # batch-derived snapshot + packed parent → incremental pack:
             # O(|batch| + touched stripes), no |E| shuffle (delta_pack's
@@ -123,8 +140,13 @@ class GraphSnapshot:
 
             self._bsp_spill = _scratch_dir() + "_spill"
             self._bsp_packed = bsp_pack(
-                self, p, hub_factor=hub_factor, spill_dir=self._bsp_spill
+                self, p or self._partitions, hub_factor=hub_factor,
+                spill_dir=self._bsp_spill,
             )
+            if self._edges is None:
+                self._edges, self._raw = self._bsp_packed[0], None
+            else:  # the edge set is cached already: drop the pack's copy
+                self._bsp_packed[0].unpersist()
         return self._bsp_packed
 
     @classmethod
@@ -135,45 +157,34 @@ class GraphSnapshot:
         self_loops: bool = True,
         partitions: int | None = None,
     ) -> "GraphSnapshot":
-        """edges: dense-id (src,dst).  n: vertex-space size; derived from
-        max id if absent (one pass).  self_loops: the reference's universal
-        dead-end elimination (main.cu:169)."""
-        spark = edges.sparkSession
+        """edges: dense-id (src,dst), duplicates allowed.  n: vertex-space
+        size; derived from max id if absent (one pass).  self_loops: the
+        reference's universal dead-end elimination (main.cu:169).
+        partitions: the pack's task count (default: the session's
+        parallelism).
+
+        Runs no Spark job when n is given: the snapshot keeps the plan, and
+        bsp_pack dedups it and adds the self-loops stripe by stripe, once
+        (bsp_packed or the first outdeg_array; edges read before that dedup
+        the plan in the JVM, see edges).  The plan must stay valid until
+        then."""
         if n is None:
             row = edges.agg(
                 F.greatest(F.max("src"), F.max("dst")).alias("m")
             ).collect()[0]
             n = int(row["m"]) + 1 if row["m"] is not None else 0
-        e = edges.select("src", "dst")
-        if self_loops:
-            vertices = spark.range(n).select(F.col("id").alias("v"))
-            loops = vertices.select(
-                F.col("v").alias("src"), F.col("v").alias("dst")
-            )
-            e = e.unionByName(loops)
-        p = partitions or spark.sparkContext.defaultParallelism
-        # repartition FIRST, dedup second: rows with equal (src,dst) share a
-        # dst, so they land in the same dst-hash partition and the distinct
-        # aggregate runs in place with NO second exchange (HashPartitioning
-        # on dst satisfies the agg's clustered-by-(src,dst) requirement) —
-        # one |E| shuffle instead of two (measured 7.2 s -> 3.2 s at 20M
-        # rows), with the exact same deduped result and the same dst-hash
-        # layout the gather loops key on.
-        e = e.repartition(p, "dst").distinct().persist()
-        e.count()  # materialize
-        deg = out_degrees(e).persist()
-        return cls(edges=e, n=n, degrees=deg)
+        g = cls(None, n)
+        g._raw, g._self_loops = edges.select("src", "dst"), self_loops
+        g._partitions = partitions
+        return g
 
     def outdeg_array(self) -> np.ndarray:
-        """Dense float64 out-degree array (divisor of the pull update).
-        Collected once per snapshot — the PageRank engine assumes |V| fits
-        the driver, exactly as the reference assumes it fits one GPU
-        (pagerankCuda.hxx:798–805)."""
+        """Dense float64 out-degree array (divisor of the pull update),
+        summed from the pack's per-task partials — the PageRank engine
+        assumes |V| fits the driver, exactly as the reference assumes it
+        fits one GPU (pagerankCuda.hxx:798–805)."""
         if self._outdeg_np is None:
-            pdf = self.degrees.toPandas()
-            arr = np.zeros(self.n, dtype=np.float64)
-            arr[pdf["v"].to_numpy()] = pdf["outdeg"].to_numpy()
-            self._outdeg_np = arr
+            self.bsp_packed()
         return self._outdeg_np
 
     def with_batch(
@@ -193,16 +204,14 @@ class GraphSnapshot:
         unique, n unchanged).  It runs no Spark job: bsp_packed() merges
         the batch into the parent's stripe spill (delta_pack), and the
         child's edges, on first access, are read back from its own spill —
-        or, when delta_pack declines, derived from the parent by a
-        broadcast anti-join + append.  Either way the parent must stay
-        cached until the child's pack or edges are first used; after that
-        the child no longer reads through it.  Correct rows either way;
-        only the physical dst-clustering differs, and the BSP pack routes
-        by its own key regardless."""
+        or, when delta_pack declines, derived from the parent's edges by a
+        broadcast anti-join + append (see edges).  Either way the parent
+        must stay cached until the child's pack or edges are first used;
+        after that the child no longer reads through it."""
         new_n = n or self.n
         if repartition:
             new_edges = apply_batch(self.edges, deletions, insertions)
-            child = GraphSnapshot.build(new_edges, n=new_n, self_loops=True)
+            child = GraphSnapshot.build(new_edges, n=new_n, partitions=self._partitions)
         else:
             if new_n != self.n:
                 raise ValueError(
@@ -218,10 +227,9 @@ class GraphSnapshot:
             _remove_scratch,
         )
 
-        self._delta = self._batch = None
-        for df in (self._edges, self._degrees):
-            if df is not None:
-                df.unpersist()
+        self._delta = self._batch = self._raw = None
+        if self._edges is not None:
+            self._edges.unpersist()
         if self._bsp_packed is not None:
             if self._bsp_packed[0] is not None:
                 self._bsp_packed[0].unpersist()

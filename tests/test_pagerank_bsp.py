@@ -177,6 +177,9 @@ def test_bsp_fine_stripes_parity(spark):
         def outdeg_array(self):
             return self._g.outdeg_array()
 
+        def pack_input(self):
+            return self._g.pack_input()
+
         def bsp_packed(self, *a, **k):
             return packed, bounds, n_stripes, hubs
 
@@ -193,6 +196,20 @@ def test_bsp_fine_stripes_parity(spark):
     assert np.allclose(t.ranks, want, atol=1e-10)
     assert a.iterations == want_it == t.iterations
     g.unpersist()
+
+
+def test_bsp_pack_rejects_out_of_range_dst_and_drops_its_cache(spark):
+    """A dst outside [0, n) fails the pack's degree pass loudly, and the
+    coalesced input the pack cached for that pass is released on the way
+    out, not left in the session's cache."""
+    from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import bsp_pack
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    g = GraphSnapshot.build(edges_df(spark, [0, 1, 2], [1, 2, 7]), n=5)
+    with pytest.raises(ValueError, match="outside the vertex space"):
+        bsp_pack(g)
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_scratch_dirs_reaped_at_interpreter_exit(tmp_path):
@@ -328,3 +345,95 @@ def test_weighted_bsp_rejects_selfloop_dangling(spark):
     )
     with pytest.raises(ValueError, match="dangling='selfloop'"):
         pagerank_weighted_bsp(edges_w, 3, PagerankOptions())
+
+
+def _messy_union_plan(spark, rng, n: int, m: int, branches: int):
+    """(raw edge plan, its src, its dst): a union of `branches` two-partition
+    frames, wider than the session's slots, holding duplicate, reversed
+    and explicit self-loop edges."""
+    from functools import reduce
+
+    src = rng.integers(0, n, m)
+    dst = (rng.zipf(1.5, m) % n).astype(np.int64)
+    loops = rng.integers(0, n, 20)
+    src = np.concatenate([src, src[:300], dst[:200], loops])  # dups, reversed
+    dst = np.concatenate([dst, dst[:300], src[:200], loops])  # and (v, v)
+    parts = np.array_split(rng.permutation(src.size), branches)
+    frames = [edges_df(spark, src[i], dst[i]).coalesce(2) for i in parts]
+    return reduce(lambda a, b: a.unionByName(b), frames), src, dst
+
+
+@pytest.mark.parametrize("self_loops", [True, False])
+def test_fused_pack_is_exact_on_a_messy_union_plan(spark, self_loops):
+    """The pack dedups the raw plan and adds the universal self-loops in
+    its own tasks: on a many-partition union with duplicate, reversed and
+    explicit self-loop edges, g.edges is exactly that set, outdeg_array is
+    exact, static ranks and one DF-P batch match the NumPy oracle."""
+    import pandas as pd
+
+    from pagerank_cuda_dynamic_spark.operators.graph import tidy_batch
+    from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
+        pagerank_dynamic_frontier_prune_bsp,
+    )
+
+    rng = np.random.default_rng(83)
+    n = 700
+    raw, src, dst = _messy_union_plan(spark, rng, n, 5000, 12)
+    assert raw.rdd.getNumPartitions() > spark.sparkContext.defaultParallelism
+    g = GraphSnapshot.build(raw, n=n, self_loops=self_loops)
+    try:
+        if self_loops:
+            s_, d_ = add_self_loops_np(n, src, dst)
+        else:
+            pairs = np.unique(np.stack([src, dst], axis=1), axis=0)
+            s_, d_ = pairs[:, 0], pairs[:, 1]
+        want_keys = s_ * n + d_
+        _, _, _, hubs = g.bsp_packed(hub_factor=0.3)
+        assert hubs.size > 0, "the fixture must exercise the salted-hub route"
+        e = g.edges.toPandas()
+        got_keys = np.sort(e["src"].to_numpy() * n + e["dst"].to_numpy())
+        assert np.array_equal(got_keys, want_keys)
+        assert np.array_equal(g.outdeg_array(), np.bincount(s_, minlength=n))
+        opts = PagerankOptions(dangling="selfloop" if self_loops else "redistribute")
+        base = pagerank_static_bsp(g, opts)
+        want, _ = pagerank_numpy(n, s_, d_, dangling=opts.dangling)
+        assert np.abs(base.ranks - want).max() <= 1e-6
+        if not self_loops:
+            return  # DF-P assumes the universal self-loops
+        ins_pdf = pd.DataFrame({"src": rng.integers(0, n, 40), "dst": rng.integers(0, n, 40)})
+        del_pdf = e[e.src != e.dst].head(25)
+        dels, ins = tidy_batch(
+            g.edges, spark.createDataFrame(del_pdf), spark.createDataFrame(ins_pdf)
+        )
+        dels, ins = dels.localCheckpoint(), ins.localCheckpoint()
+        g1 = g.with_batch(dels, ins, repartition=False)
+        try:
+            res = pagerank_dynamic_frontier_prune_bsp(g, g1, dels, ins, base.ranks)
+            d_np, i_np = dels.toPandas(), ins.toPandas()
+            new = np.union1d(
+                np.setdiff1d(want_keys, d_np["src"].to_numpy() * n + d_np["dst"].to_numpy()),
+                i_np["src"].to_numpy() * n + i_np["dst"].to_numpy(),
+            )
+            want1, _ = pagerank_numpy(n, new // n, new % n)
+            assert np.abs(res.ranks - want1).max() <= 1e-6
+        finally:
+            g1.unpersist()
+    finally:
+        g.unpersist()
+
+
+def test_hash_partition_matches_spark_repartition(spark):
+    """bsp_pack routes with keys chosen on the driver by _hash_partition:
+    it must agree with Spark's own pmod(hash(key), n) — the hash
+    repartition(n, key) uses — on negative, large and small keys."""
+    import pyspark.sql.functions as F
+
+    from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import _hash_partition
+
+    keys = np.concatenate(
+        [np.arange(-50, 400), [2**31 - 1, 2**31, 2**40 + 7, -(2**62), 2**63 - 1]]
+    ).astype(np.int64)
+    df = spark.createDataFrame([(int(k),) for k in keys], "k long")
+    for n_parts in (1, 2, 7, 64):
+        got = df.select(F.pmod(F.hash("k"), F.lit(n_parts)).alias("b")).toPandas()
+        assert np.array_equal(_hash_partition(keys, n_parts), got["b"].to_numpy()), n_parts

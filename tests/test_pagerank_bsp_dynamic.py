@@ -528,6 +528,42 @@ def test_fast_path_dfp_batch_job_budget(spark):
         g0.unpersist()
 
 
+def test_build_runs_no_job_and_pack_fits_budget(spark):
+    """GraphSnapshot.build runs no Spark job; build + the full pack run at
+    most 8 on an unpersisted many-partition raw plan; and the first batch
+    tidy on the packed snapshot (tidy_batch and its two localCheckpoints,
+    as the stream-dfp benchmark runs it) reads the pack's cached edge rows
+    in at most 5 jobs."""
+    from functools import reduce
+
+    rng = np.random.default_rng(53)
+    n = 400
+    frames = [
+        edges_df(spark, rng.integers(0, n, 300), rng.integers(0, n, 300)).coalesce(2)
+        for _ in range(8)
+    ]
+    raw = reduce(lambda a, b: a.unionByName(b), frames)
+    g, build_jobs = _count_jobs(spark, lambda: GraphSnapshot.build(raw, n=n))
+    _, pack_jobs = _count_jobs(spark, g.bsp_packed)
+    keys = rng.integers(0, n, 30) * n + rng.integers(0, n, 30)
+
+    def tidy():
+        d, i = tidy_batch(
+            g.edges,
+            edges_df(spark, keys[:10] // n, keys[:10] % n),
+            edges_df(spark, keys[10:] // n, keys[10:] % n),
+        )
+        return d.localCheckpoint(), i.localCheckpoint()
+
+    try:
+        assert build_jobs == 0
+        assert build_jobs + pack_jobs <= 8, pack_jobs
+        _, tidy_jobs = _count_jobs(spark, tidy)
+        assert tidy_jobs <= 5, tidy_jobs
+    finally:
+        g.unpersist()
+
+
 def test_df_seeds_from_child_arrays_bit_equal_collect(spark):
     """DF and DF-P seed from the batch arrays the child's delta pack kept
     when they get the same two frames (the loop's job only), and from one

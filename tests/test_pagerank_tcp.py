@@ -27,6 +27,109 @@ def test_tcp_matches_csr(spark):
     g.unpersist()
 
 
+def test_tcp_packs_a_fresh_snapshot_without_a_spill(spark):
+    """The ring has no shared scratch: on a freshly built snapshot (raw
+    plan, duplicates and all) the row pack dedups and self-loops in its
+    tasks, the ranks match the NumPy oracle, and no pr_bsp_*_spill dir is
+    ever created."""
+    import glob
+    import os
+
+    from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import _scratch_dir
+
+    from .oracle import add_self_loops_np, pagerank_numpy
+
+    rng = np.random.default_rng(79)
+    n, m = 500, 3000
+    src = rng.integers(0, n, m)
+    dst = rng.integers(0, n, m)
+    src, dst = np.concatenate([src, src[:400]]), np.concatenate([dst, dst[:400]])
+    base = os.path.dirname(_scratch_dir())
+    before = set(glob.glob(os.path.join(base, "pr_bsp_*_spill")))
+    g = GraphSnapshot.build(edges_df(spark, src, dst), n=n)
+    try:
+        a = pagerank_static_tcp(g)
+        assert set(glob.glob(os.path.join(base, "pr_bsp_*_spill"))) == before
+        assert g._bsp_spill is None and g._edges is None
+        want, want_it = pagerank_numpy(n, *add_self_loops_np(n, src, dst))
+        assert np.allclose(a.ranks, want, atol=1e-10)
+        assert a.iterations == want_it
+    finally:
+        g.unpersist()
+
+
+@pytest.mark.parametrize("repartition", [True, False])
+def test_tcp_dynamic_on_fresh_snapshots_without_a_spill(spark, repartition):
+    """DF-P over the ring on freshly built snapshots: the frontier marks
+    read old.edges and new.edges (the child both from with_batch's lazy
+    plan and from a declined fast-path delta), the ring packs in rows, the
+    ranks match the NumPy oracle, and no pr_bsp_*_spill dir is created."""
+    import glob
+    import os
+
+    import pandas as pd
+
+    from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import _scratch_dir
+    from pagerank_cuda_dynamic_spark.operators.pagerank_tcp import (
+        pagerank_dynamic_frontier_prune_tcp,
+    )
+
+    from .oracle import (
+        add_self_loops_np,
+        frontier_marks_numpy,
+        pagerank_frontier_numpy,
+        pagerank_numpy,
+    )
+
+    rng = np.random.default_rng(83)
+    n, m = 400, 2400
+    src = rng.integers(0, n, m)
+    dst = rng.integers(0, n, m)
+    src, dst = np.concatenate([src, src[:300]]), np.concatenate([dst, dst[:300]])
+    old_s, old_d = add_self_loops_np(n, src, dst)
+    old_k = old_s * n + old_d
+    # a tidied batch: deletions of existing non-loop edges, new insertions
+    cand = np.flatnonzero(old_s != old_d)
+    del_k = old_k[rng.choice(cand, 20, replace=False)]
+    ins_k = rng.integers(0, n, 60) * n + rng.integers(0, n, 60)
+    ins_k = np.setdiff1d(ins_k[ins_k // n != ins_k % n], old_k)[:30]
+    new_k = np.union1d(np.setdiff1d(old_k, del_k), ins_k)
+    new_s, new_d = new_k // n, new_k % n
+
+    def frame(k):
+        return spark.createDataFrame(
+            pd.DataFrame({"src": k // n, "dst": k % n}).astype("int64"),
+            schema="src long, dst long",
+        )
+
+    base = os.path.dirname(_scratch_dir())
+    before = set(glob.glob(os.path.join(base, "pr_bsp_*_spill")))
+    g0 = GraphSnapshot.build(edges_df(spark, src, dst), n=n)
+    g1 = None
+    try:
+        r0 = pagerank_static_tcp(g0)
+        want0, _ = pagerank_numpy(n, old_s, old_d)
+        assert np.allclose(r0.ranks, want0, atol=1e-10)
+        dels, ins = frame(del_k), frame(ins_k)
+        g1 = g0.with_batch(dels, ins, repartition=repartition)
+        a = pagerank_dynamic_frontier_prune_tcp(g0, g1, dels, ins, r0.ranks)
+        assert set(glob.glob(os.path.join(base, "pr_bsp_*_spill"))) == before
+        assert g0._bsp_spill is None and g1._bsp_spill is None
+        got = g1.edges.toPandas()
+        assert np.array_equal(np.sort(got["src"] * n + got["dst"]), new_k)
+        vaff0 = frontier_marks_numpy(
+            n, old_s, old_d, new_s, new_d, del_k // n, ins_k // n
+        )
+        want, _ = pagerank_frontier_numpy(
+            n, new_s, new_d, r0.ranks, vaff0, expand=True, prune=True, corrected=True,
+        )
+        assert np.allclose(a.ranks, want, atol=1e-9)
+    finally:
+        g0.unpersist()
+        if g1 is not None:
+            g1.unpersist()
+
+
 def test_tcp_salted_hubs_parity(spark):
     """Force hub salting on a star-heavy graph; the TCP ring's two-phase
     (partial-allreduce + rank-allgather) must match the NumPy oracle."""
@@ -164,6 +267,9 @@ def test_tcp_dfp_salted_hubs_matches_bsp(spark):
 
         def outdeg_array(self):
             return self._g.outdeg_array()
+
+        def pack_input(self):
+            return self._g.pack_input()
 
         def bsp_packed(self, *a, **k):
             if self._pack is None:

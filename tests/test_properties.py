@@ -95,11 +95,10 @@ def test_stripe_kernel_equals_bincount(data):
     """The shared full-stripe gather, affected-set gather and hub partials
     equal a plain np.bincount over the stripe's edges: leading, middle and
     trailing empty rows and hub columns, fully empty stripes, int32 and
-    int64 src, weights, raw, blob-row and stub records."""
+    int64 src, weights, raw and blob-row records."""
     from pagerank_cuda_dynamic_spark.operators._stripe_pack import (
         _pack_stripe_raw,
         _raw_to_row,
-        _stub_pack_row,
         affected_gather,
         full_gather,
         hub_partials,
@@ -126,11 +125,8 @@ def test_stripe_kernel_equals_bincount(data):
     if data.draw(st.booleans()):
         for key in ("src", "hsrc"):
             raw[key] = raw[key].astype(np.int64)
-    record = data.draw(st.sampled_from(["raw", "row", "stub"] if dst.size == 0 else ["raw", "row"]))
-    if record == "row":
+    if data.draw(st.booleans()):
         raw = row_to_raw(_raw_to_row(raw), hubs.size, weighted)
-    elif record == "stub":
-        raw = row_to_raw(_stub_pack_row(raw), hubs.size, weighted)
     stripe = prepare_stripe(raw, hubs)
 
     rdiv = rng.random(n)
