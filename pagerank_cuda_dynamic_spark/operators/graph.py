@@ -68,9 +68,10 @@ def _collect_batch(deletions: DataFrame, insertions: DataFrame) -> pd.DataFrame:
 
 def _batch_probe(edges: DataFrame, pairs: DataFrame) -> DataFrame:
     """The rows of `edges` whose (src, dst) is one of `pairs` (the hasEdge
-    probe, batch.hxx:153–160).  Oriented for scale: ONE pass over the
-    (huge) edge table with the (small) pairs broadcast — never a plan that
-    must build or shuffle the edge side."""
+    probe, batch.hxx:153–160), for an edge frame with no stripe spill
+    behind it (tidy_batch).  Oriented for scale: ONE pass over the (huge)
+    edge table with the (small) pairs broadcast — never a plan that must
+    build or shuffle the edge side."""
     on = ["src", "dst"]
     return edges.select(on).join(F.broadcast(pairs.select(on)), on, "left_semi")
 
@@ -85,10 +86,15 @@ def tidy_batch(
     in the set-semantics DataFrame world.
 
     Premise: the batch fits the driver (the probe broadcasts it anyway).
-    The raw batch is collected once, the edge table is probed once
-    (_batch_probe), and the set algebra runs in pandas.  The two returned
-    frames are built on the driver as single partitions, so materializing
-    them never re-reads `edges`.
+    The raw batch is collected once (one Spark job), the deduped pairs are
+    probed once, and the set algebra runs in pandas.  When `edges` is the
+    cached edge frame of a GraphSnapshot whose stripe spill is complete
+    (the spill then holds exactly that edge set), the probe reads only the
+    stripes the pairs route to, on the driver (spill_contains, no job);
+    any other frame is probed by one Spark scan (_batch_probe).  A pair
+    with an id outside the snapshot's [0, n) is not in E on both routes.
+    The two returned frames are built on the driver as single partitions,
+    so materializing them never re-reads `edges`.
 
     Raises ValueError when a batch edge has a null src or dst."""
     on = ["src", "dst"]
@@ -98,7 +104,14 @@ def tidy_batch(
     if bad:
         raise ValueError(f"batch has {bad} edge(s) with a null src or dst")
     pairs = pdf[on].drop_duplicates()
-    if len(pairs):
+    # the weak back-reference GraphSnapshot sets on its cached edge frame
+    # (vars: a missing DataFrame attribute would look up a column)
+    ref = vars(edges).get("_snapshot")
+    g = ref() if ref is not None else None
+    hit = None if g is None else g.spill_contains(pairs["src"], pairs["dst"])
+    if hit is not None:
+        hits = pd.MultiIndex.from_frame(pairs[hit])
+    elif len(pairs):
         probe = _batch_probe(edges, spark.createDataFrame(pairs))
         hits = pd.MultiIndex.from_frame(probe.toPandas())
     else:

@@ -53,6 +53,7 @@ from __future__ import annotations
 
 import atexit
 import os
+import pickle
 import re
 import shutil
 import tempfile
@@ -432,10 +433,12 @@ def bsp_pack(
                     yield pd.DataFrame(rows, columns=_PACK_COLS)
                 return
             if write:
-                # this task's exact out-degree partial — also the marker that
-                # its stripes are all in the spill
+                # this task's exact out-degree partial and its stripes' edge
+                # counts — also the marker that its stripes are all in the
+                # spill
                 _spill_write(
-                    spill_dir, np.stack(np.unique(src_all, return_counts=True)),
+                    spill_dir,
+                    (np.stack(np.unique(src_all, return_counts=True)), own, ends_ - cuts_),
                     f"outdeg_{pid}.pkl",
                 )
             out = {"src": src_all, "dst": dst_all}
@@ -456,8 +459,11 @@ def bsp_pack(
             if missing:
                 packed.unpersist()
                 raise RuntimeError(f"{len(missing)} pack task(s) left no spill records")
-            if want_deg:
-                parts = [pd.read_pickle(path) for path in parts]
+            edge_counts = np.zeros(n_stripes, dtype=np.int64)
+            parts = [pd.read_pickle(path) for path in parts]
+            for _, own, m in parts:
+                edge_counts[own] = m
+            parts = [deg for deg, _, _ in parts]
         else:
             packed = routed.mapInPandas(pack_partition, PACK_SCHEMA).persist()
             # one job: the cache fill, the stripe-row check and, from the
@@ -486,21 +492,34 @@ def bsp_pack(
             np.add.at(out, v, c)
         graph._outdeg_np = out
     if spill_dir:
-        # the marker gates the loop's spill-load path
-        import pickle
-
-        with open(os.path.join(spill_dir, "META.pkl"), "wb") as f:
-            pickle.dump(
-                {
-                    "bounds": bounds, "hubs": hubs, "n_stripes": n_stripes,
-                    "n_parts": n_parts, "weighted": weighted, "n": N,
-                },
-                f,
-                protocol=pickle.HIGHEST_PROTOCOL,
-            )
-        with open(os.path.join(spill_dir, "COMPLETE"), "w") as f:
-            f.write(str(n_stripes))
+        _spill_complete(
+            spill_dir,
+            {
+                "bounds": bounds, "hubs": hubs, "n_stripes": n_stripes,
+                "n_parts": n_parts, "weighted": weighted, "n": N,
+                "edge_counts": edge_counts,
+            },
+        )
     return packed, bounds, n_stripes, hubs
+
+
+def _spill_complete(spill_dir: str, meta: dict) -> None:
+    """Write a spill's META.pkl, then the COMPLETE marker that gates every
+    reader of the spill (_spill_meta)."""
+    with open(os.path.join(spill_dir, "META.pkl"), "wb") as f:
+        pickle.dump(meta, f, protocol=pickle.HIGHEST_PROTOCOL)
+    with open(os.path.join(spill_dir, "COMPLETE"), "w") as f:
+        f.write(str(meta["n_stripes"]))
+
+
+def _spill_meta(spill_dir: str | None) -> dict | None:
+    """The META.pkl of a complete stripe spill — bounds, hubs, n_stripes,
+    n_parts, weighted, n and the per-stripe edge counts — or None when
+    there is no complete spill."""
+    if not spill_dir or not os.path.exists(os.path.join(spill_dir, "COMPLETE")):
+        return None
+    with open(os.path.join(spill_dir, "META.pkl"), "rb") as f:
+        return pickle.load(f)
 
 
 def delta_pack(child, parent, deletions, insertions, spill_dir: str):
@@ -511,36 +530,34 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
     the batch, not the graph (batch.hxx:222–247 applies updates in place;
     the device CSR is rebuilt only for the touched ranges).  The full
     bsp_pack is a full-data shuffle — correct for a new graph, absurd for a
-    67-edge insert batch.  Here each owner task reconstructs only its
-    TOUCHED stripes' edge lists from the parent spill (dst from CSR counts,
-    hub dst from the hub-block counts), applies set semantics
-    ((E \\ D) ∪ I — duplicate inserts and missing deletes are no-ops), and
-    re-packs those stripes; untouched stripes are hardlinked.  Bounds and
-    hub list are inherited from the parent (a small batch cannot move the
-    balance point materially; routing stays consistent by construction).
+    67-edge insert batch.  Here the merge reconstructs only the TOUCHED
+    stripes' edge lists from the parent spill (dst from CSR counts, hub dst
+    from the hub-block counts), applies set semantics ((E \\ D) ∪ I —
+    duplicate inserts and missing deletes are no-ops), and re-packs those
+    stripes; untouched stripes are hardlinked.  Bounds and hub list are
+    inherited from the parent (a small batch cannot move the balance point
+    materially; routing stays consistent by construction).
 
-    Cost: one collect of the batch (both sides in one union) and one
-    |batch|-broadcast job over n_parts
-    tasks, O(|batch| + Σ|touched stripes|) work, zero shuffle.  The
-    collected arrays stay on the child with the two frames, so DF seeding
-    (_frontier_seeds) reads them instead of collecting again.  Also
-    derives the child's out-degree array from the parent's + the applied
-    delta, so the child skips the |E| groupBy + |V| collect entirely.
+    Cost: one collect of the batch (both sides in one union), then the
+    merge: O(|batch| + Σ|touched stripes|) work, zero shuffle.  When the
+    touched stripes hold at most STRIPE_EDGES edges in all (the spill's
+    per-stripe counts) — one pack task's work budget, merged faster than a
+    task wave starts — the driver runs the merge, no Spark job; otherwise
+    one |batch|-broadcast job over n_parts tasks runs the same merge, each
+    task over the stripes it owns.  The collected arrays stay on the child
+    with the two frames, so DF seeding (_frontier_seeds) reads them instead
+    of collecting again.  Also derives the child's out-degree array from
+    the parent's + the applied delta, so the child skips the |E| groupBy +
+    |V| collect entirely.
 
     Returns (None, bounds, n_stripes, hubs) — the packed-DataFrame slot is
     None because every consumer path reads the spill — or None when
     ineligible (no parent spill, weighted, n changed, batch too big).
     Raises ValueError when a batch edge names a vertex outside [0, n)."""
-    import pickle
-
-    pspill = getattr(parent, "_bsp_spill", None)
-    if not pspill or not os.path.exists(os.path.join(pspill, "COMPLETE")):
-        return None
-    with open(os.path.join(pspill, "META.pkl"), "rb") as f:
-        meta = pickle.load(f)
+    meta = _spill_meta(getattr(parent, "_bsp_spill", None))
     # src·n+dst keys must fit int64; weighted packs carry per-edge payloads
     # the reconstruction does not model
-    if meta.get("weighted") or child.n != meta["n"] or child.n >= 2**31:
+    if meta is None or meta["weighted"] or child.n != meta["n"] or child.n >= 2**31:
         return None
     # no row cap on the collect: a tidied batch is driver-built already
     # (tidy_batch), and a cap costs a limit per side on every batch
@@ -582,21 +599,20 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
     i_stripe = stripe_of(i_src, i_dst, interior, hubs, n_stripes)
     d_key = d_src * N + d_dst
     i_key = i_src * N + i_dst
-    PARENT, CHILD = pspill, spill_dir
+    PARENT, CHILD = parent._bsp_spill, spill_dir
     NSTR, NP, NN, HUBS = n_stripes, n_parts, N, hubs
 
-    def merge(it):
+    def merge(pid):
+        """The stripes s ≡ pid mod n_parts of the child spill; returns the
+        applied insertion and deletion srcs and the merged stripes' edge
+        counts."""
         import os as _os
         import shutil as _shutil
 
         import numpy as _np
-        from pyspark import TaskContext as _TC
 
-        for _ in it:
-            pass  # drain the skeleton partition
-        pid = _TC.get().partitionId()
         _os.makedirs(CHILD, exist_ok=True)
-        a_ins, a_del = [], []
+        a_ins, a_del, sizes = [], [], {}
         for s in range(pid, NSTR, NP):
             pp = _os.path.join(PARENT, f"s{s}.pkl")
             cp = _os.path.join(CHILD, f"s{s}.pkl")
@@ -634,21 +650,28 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
                 s, lo, hi, merged // NN, merged % NN, None, HUBS, False
             )
             _spill_write(CHILD, raw2)
-        yield (
+            sizes[s] = merged.size
+        return (
             _np.concatenate(a_ins) if a_ins else _np.empty(0, _np.int64),
             _np.concatenate(a_del) if a_del else _np.empty(0, _np.int64),
+            sizes,
         )
 
-    sc = deletions.sparkSession.sparkContext
-    rows = sc.parallelize(range(n_parts), n_parts).mapPartitions(merge).collect()
-    with open(os.path.join(spill_dir, "META.pkl"), "wb") as f:
-        pickle.dump(meta, f, protocol=pickle.HIGHEST_PROTOCOL)
-    with open(os.path.join(spill_dir, "COMPLETE"), "w") as f:
-        f.write(str(n_stripes))
+    edge_counts = np.array(meta["edge_counts"], dtype=np.int64)
+    touched = np.union1d(d_stripe, i_stripe)
+    if edge_counts[touched].sum() <= STRIPE_EDGES:
+        rows = [merge(pid) for pid in range(n_parts)]
+    else:
+        sc = deletions.sparkSession.sparkContext
+        # one element per partition: element pid lands in partition pid
+        rows = sc.parallelize(range(n_parts), n_parts).map(merge).collect()
+    for _, _, sizes in rows:
+        edge_counts[list(sizes)] = list(sizes.values())
+    _spill_complete(spill_dir, dict(meta, edge_counts=edge_counts))
     # child out-degrees = parent's + applied delta (self-loops unchanged by
     # contract) — skips the |E| groupBy + |V|-row collect on the child
     out = parent.outdeg_array().copy()
-    for a_ins, a_del in rows:
+    for a_ins, a_del, _ in rows:
         if a_ins.size:
             np.add.at(out, a_ins, 1.0)
         if a_del.size:
@@ -661,12 +684,11 @@ def spill_edges(spark, spill_dir: str):
     """The (src, dst) edge frame held by a complete stripe spill: one task
     per pack partition reads the stripes it owns (s ≡ pid mod n_parts) and
     unpacks them with _stripe_edges — the stripe-block partitions that
-    bsp_pack's edge rows have, so consumers such as tidy_batch plan the
-    same exchanges on a carried snapshot as on a packed one."""
-    import pickle
-
-    with open(os.path.join(spill_dir, "META.pkl"), "rb") as f:
-        meta = pickle.load(f)
+    bsp_pack's edge rows have, so Spark consumers of the edge set (apply_batch,
+    a tidy_batch handed a derived frame, the TCP ring's marks) plan the same
+    exchanges on a carried snapshot as on a packed one.  tidy_batch handed
+    this very frame reads the spill on the driver instead (spill_contains)."""
+    meta = _spill_meta(spill_dir)
     n_stripes, n_parts = int(meta["n_stripes"]), int(meta["n_parts"])
     hubs = np.asarray(meta["hubs"], dtype=np.int64)
 
@@ -680,6 +702,33 @@ def spill_edges(spark, spill_dir: str):
     return spark.range(n_parts, numPartitions=n_parts).mapInPandas(
         read, "src long, dst long"
     )
+
+
+def spill_contains(spill_dir: str | None, n: int, src, dst) -> np.ndarray | None:
+    """hasEdge (batch.hxx:153–160) for each pair (src[k], dst[k]) against
+    the edge set of a complete stripe spill, on the driver and with no
+    Spark job: bsp_pack's router (stripe_of over the spill's bounds and
+    hubs) sends each pair to the one stripe that would hold it, and only
+    the stripes the pairs touch are read and unpacked.  A pair with an id
+    outside [0, n) is no edge: it is masked before routing, because its
+    src·n+dst key would alias a valid one.  None when the spill cannot
+    answer: no complete spill, a weighted one, or n ≥ 2**31."""
+    meta = _spill_meta(spill_dir)
+    if meta is None or meta["weighted"] or meta["n"] != n or n >= 2**31:
+        return None
+    src = np.asarray(src, dtype=np.int64)
+    dst = np.asarray(dst, dtype=np.int64)
+    hubs = np.asarray(meta["hubs"], dtype=np.int64)
+    interior = np.asarray(meta["bounds"], dtype=np.int64)[1:-1]
+    ok = np.flatnonzero((np.minimum(src, dst) >= 0) & (np.maximum(src, dst) < n))
+    key = src[ok] * n + dst[ok]
+    stripe = stripe_of(src[ok], dst[ok], interior, hubs, int(meta["n_stripes"]))
+    hit = np.zeros(src.size, dtype=bool)
+    for s in np.unique(stripe):
+        at = stripe == s
+        e_src, e_dst = _stripe_edges(_spill_read(spill_dir, int(s)), hubs)
+        hit[ok[at]] = np.isin(key[at], e_src * n + e_dst)
+    return hit
 
 
 def _initial_ranks(q: np.ndarray | None, n: int) -> np.ndarray:
@@ -749,16 +798,12 @@ def _bsp_loop(
     # dominant setup cost for repeat runs (warm starts, dynamic batches).
     # The row-stream path remains for packs without a spill (weighted
     # snapshots, direct bsp_pack callers).
-    spill = getattr(graph, "_bsp_spill", None)
-    SPILL = (
-        spill
-        if spill and os.path.exists(os.path.join(spill, "COMPLETE"))
-        else None
-    )
+    meta = _spill_meta(getattr(graph, "_bsp_spill", None))
+    SPILL = None if meta is None else graph._bsp_spill
     if SPILL is None:
         NPARTS = packed.rdd.getNumPartitions()
     else:  # a spilled pack's frame holds edge rows, or nothing at all
-        NPARTS = int(pd.read_pickle(os.path.join(SPILL, "META.pkl"))["n_parts"])
+        NPARTS = int(meta["n_parts"])
     HUBS = np.asarray(hubs, dtype=np.int64)
     n_hubs = int(HUBS.size)
     outdeg = graph.outdeg_array()

@@ -10,9 +10,19 @@ transpose.hxx:79–100) in its own tasks; its output rows are the snapshot's
 cached edge set.  A snapshot read before any spilled pack (the TCP ring
 packs in rows) dedups its plan in the JVM instead, see edges.  A fast-path
 with_batch child derives its edges lazily, see with_batch.
+
+Invariant: once a snapshot's stripe spill is COMPLETE, it holds exactly the
+edge SET of its edges frame.  A full pack emits as edges the very rows it
+spills, or packs (and dedups) the edges already cached; a delta child's
+edges are read back from its own spill (spill_edges); a child whose delta
+pack declined gets a full pack of its pending plan, as above.  So
+tidy_batch handed this snapshot's edges answers hasEdge from the spill on
+the driver (spill_contains), with no Spark job.
 """
 
 from __future__ import annotations
+
+import weakref
 
 import numpy as np
 import pyspark.sql.functions as F
@@ -72,8 +82,23 @@ class GraphSnapshot:
                 e = e.persist()
                 # fills the cache; count() would run more jobs here
                 e.write.format("noop").mode("overwrite").save()
-                self._edges, self._raw = e, None
+                self._own_edges(e)
         return self._edges
+
+    def _own_edges(self, e: DataFrame) -> None:
+        """Cache e as the edge set, with a weak back-reference from the
+        frame to this snapshot: tidy_batch handed this very frame answers
+        its probe from the snapshot's stripe spill (spill_contains)."""
+        e._snapshot = weakref.ref(self)
+        self._edges, self._raw = e, None
+
+    def spill_contains(self, src, dst) -> np.ndarray | None:
+        """hasEdge of each pair against this snapshot's stripe spill, on the
+        driver; None while no complete unweighted spill holds the edge set
+        (see pagerank_bsp.spill_contains)."""
+        from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import spill_contains
+
+        return spill_contains(self._bsp_spill, self.n, src, dst)
 
     def pack_input(self) -> tuple[DataFrame, bool]:
         """(frame, add_self_loops): the rows bsp_pack reads.  While the edge
@@ -144,7 +169,7 @@ class GraphSnapshot:
                 spill_dir=self._bsp_spill,
             )
             if self._edges is None:
-                self._edges, self._raw = self._bsp_packed[0], None
+                self._own_edges(self._bsp_packed[0])
             else:  # the edge set is cached already: drop the pack's copy
                 self._bsp_packed[0].unpersist()
         return self._bsp_packed

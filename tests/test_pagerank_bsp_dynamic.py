@@ -478,6 +478,119 @@ def test_tidy_batch_rejects_null_edges(spark):
             tidy_batch(edges, d, i)
 
 
+def _tidy_frames(spark, edges, d_df, i_df):
+    """((dels, ins) as sorted pandas frames, Spark jobs tidy_batch ran)."""
+    got, jobs = _count_jobs(spark, lambda: tidy_batch(edges, d_df, i_df))
+    return tuple(
+        f.toPandas().sort_values(["src", "dst"], ignore_index=True) for f in got
+    ), jobs
+
+
+def _check_spill_tidy(spark, g, E, rng, hubs):
+    """tidy_batch on g.edges (E: its edge keys src·n+dst) takes the spill
+    route in the raw-batch collect alone and returns exactly D ∩ E and
+    I \\ E; g.edges.select(...) takes the Spark scan and returns the same
+    frames.  The batch holds duplicate pairs, (v,v) pairs, an edge in
+    D ∩ I ∩ E, pairs absent from E and pairs into the salted hubs."""
+    n = g.n
+    edges = g.edges  # derived (and cached) outside the counted calls
+    into_hubs = E[np.isin(E % n, hubs)]
+    d = np.concatenate([
+        E[rng.integers(0, E.size, 30)], into_hubs[:10], into_hubs[:3],
+        rng.integers(0, n, 15) * n + rng.integers(0, n, 15), [5 * n + 5],
+    ])
+    i = np.concatenate([
+        rng.integers(0, n, 40) * n + rng.integers(0, n, 40),
+        rng.integers(0, n, 10) * n + np.resize(hubs, 10),
+        E[rng.integers(0, E.size, 5)], d[:1], d[:1], [7 * n + 7],
+    ])
+    d_df, i_df = edges_df(spark, d // n, d % n), edges_df(spark, i // n, i % n)
+    (dels, ins), jobs = _tidy_frames(spark, edges, d_df, i_df)
+    assert jobs == 1, jobs  # the raw-batch collect only
+    D, I = np.unique(d), np.unique(i)
+    assert np.array_equal(_keys(dels, n), D[np.isin(D, E)])
+    assert np.array_equal(_keys(ins, n), I[~np.isin(I, E)])
+    assert d[0] in E and not (ins["src"] * n + ins["dst"] == d[0]).any()
+    spark_route, spark_jobs = _tidy_frames(spark, edges.select("src", "dst"), d_df, i_df)
+    assert spark_jobs > jobs, spark_jobs
+    for a, b in zip((dels, ins), spark_route):
+        assert a.equals(b)
+
+
+def test_tidy_batch_spill_route_equals_numpy_sets(spark, monkeypatch):
+    """tidy_batch handed a packed snapshot's cached edges answers hasEdge
+    from the stripe spill on the driver: exactly D ∩ E and I \\ E, in one
+    Spark job, on a full pack with salted hubs, on a delta child's edges
+    and on a child whose delta pack declined, with the same frames as the
+    Spark scan of a derived frame."""
+    from pagerank_cuda_dynamic_spark.operators import pagerank_bsp
+
+    from .oracle import add_self_loops_np
+
+    rng = np.random.default_rng(71)
+    n = 600
+    src = rng.integers(0, n, 6000)
+    dst = (rng.zipf(1.3, 6000) % n).astype(np.int64)
+    g0 = GraphSnapshot.build(edges_df(spark, src, dst), n=n)
+    g1 = g2 = None
+    try:
+        _, _, _, hubs = g0.bsp_packed(hub_factor=0.3)
+        assert hubs.size > 0, "the fixture must exercise the salted-hub route"
+        s_, d_ = add_self_loops_np(n, src, dst)
+        E0 = s_ * n + d_
+        _check_spill_tidy(spark, g0, E0, rng, hubs)
+        del_keys, ins_keys = _np_batch(rng, E0[E0 // n != E0 % n], n, 20, 40)
+        dels = edges_df(spark, del_keys // n, del_keys % n).localCheckpoint()
+        ins = edges_df(spark, ins_keys // n, ins_keys % n).localCheckpoint()
+        g1 = g0.with_batch(dels, ins, repartition=False)
+        g1.bsp_packed()
+        assert g1._bsp_packed[0] is None, "delta path not taken"
+        E1 = np.union1d(np.setdiff1d(E0, del_keys), ins_keys)
+        _check_spill_tidy(spark, g1, E1, rng, hubs)
+        monkeypatch.setattr(pagerank_bsp, "DELTA_MAX_BATCH", 1)
+        g2 = g0.with_batch(dels, ins, repartition=False)
+        g2.bsp_packed(hub_factor=0.3)
+        assert g2._bsp_packed[0] is not None, "the delta pack did not decline"
+        _check_spill_tidy(spark, g2, E1, rng, g2._bsp_packed[3])
+    finally:
+        for x in (g2, g1, g0):
+            if x is not None:
+                x.unpersist()
+
+
+def test_tidy_batch_routes_agree_on_out_of_range_ids(spark):
+    """A batch pair with an id outside [0, n) is not in E on both probe
+    routes, though its src·n+dst key aliases an edge ((2, 1-n) is the key
+    of the self-loop (1, 1), and routes to the same stripe): its deletion
+    is dropped, its insertion kept, and the delta pack then rejects it."""
+    n = 60
+    rng = np.random.default_rng(5)
+    g = GraphSnapshot.build(
+        edges_df(spark, rng.integers(0, n, 300), rng.integers(0, n, 300)), n=n
+    )
+    try:
+        e = g.edges.toPandas()  # cached before the pack, which then reads it
+        g.bsp_packed()
+        out = [(1, -1), (2, 1 - n), (1, n), (-1, 1), (n, n - 1)]
+        bad = pd.DataFrame(out, columns=["src", "dst"])
+        ok = e[e.src != e.dst].head(4)
+        d_df = spark.createDataFrame(pd.concat([bad, ok]), "src long, dst long")
+        i_df = spark.createDataFrame(pd.concat([bad, ok]), "src long, dst long")
+        spill, _ = _tidy_frames(spark, g.edges, d_df, i_df)
+        scan, _ = _tidy_frames(spark, g.edges.select("src", "dst"), d_df, i_df)
+        for a, b in zip(spill, scan):
+            assert a.equals(b)
+        dels, ins = spill
+        assert np.array_equal(_keys(dels, n), np.sort(_keys(ok, n)))
+        assert set(zip(ins["src"], ins["dst"])) == set(out)
+        dels, ins = tidy_batch(g.edges, d_df, i_df)
+        g1 = g.with_batch(dels, ins, repartition=False)
+        with pytest.raises(ValueError, match=r"5 edge\(s\) with a vertex id outside"):
+            g1.bsp_packed()
+    finally:
+        g.unpersist()
+
+
 def _ranked_base(spark, seed: int, n: int, m: int):
     """(edge keys src·n+dst without self-loops, packed snapshot, its ranks)."""
     rng = np.random.default_rng(seed)
@@ -492,8 +605,9 @@ def _ranked_base(spark, seed: int, n: int, m: int):
 def test_fast_path_dfp_batch_job_budget(spark):
     """One raw batch as the stream-dfp benchmark runs it: tidy_batch and
     two localCheckpoints, with_batch(repartition=False), the delta pack and
-    DF-P.  At most 8 Spark jobs in all, at most 5 of them for the tidy and
-    its checkpoints; the ranks match the NumPy oracle on the new graph."""
+    DF-P.  At most 5 Spark jobs in all, exactly 3 of them for the tidy and
+    its checkpoints (the probe reads the parent's spill on the driver); the
+    ranks match the NumPy oracle on the new graph."""
     from .oracle import add_self_loops_np, pagerank_numpy
 
     n = 300
@@ -515,8 +629,8 @@ def test_fast_path_dfp_batch_job_budget(spark):
     (dels, ins), tidy_jobs = _count_jobs(spark, tidy)
     (g1, res), rest_jobs = _count_jobs(spark, lambda: apply_and_rank(dels, ins))
     try:
-        assert tidy_jobs <= 5, tidy_jobs
-        assert tidy_jobs + rest_jobs <= 8, (tidy_jobs, rest_jobs)
+        assert tidy_jobs == 3, tidy_jobs
+        assert tidy_jobs + rest_jobs <= 5, (tidy_jobs, rest_jobs)
         s0, d0 = add_self_loops_np(n, keys // n, keys % n)
         old = s0 * n + d0
         dk, ik = np.unique(del_raw), np.unique(ins_raw)
@@ -532,8 +646,8 @@ def test_build_runs_no_job_and_pack_fits_budget(spark):
     """GraphSnapshot.build runs no Spark job; build + the full pack run at
     most 8 on an unpersisted many-partition raw plan; and the first batch
     tidy on the packed snapshot (tidy_batch and its two localCheckpoints,
-    as the stream-dfp benchmark runs it) reads the pack's cached edge rows
-    in at most 5 jobs."""
+    as the stream-dfp benchmark runs it) probes the pack's spill on the
+    driver: 3 jobs, the raw-batch collect and the two checkpoints."""
     from functools import reduce
 
     rng = np.random.default_rng(53)
@@ -559,9 +673,50 @@ def test_build_runs_no_job_and_pack_fits_budget(spark):
         assert build_jobs == 0
         assert build_jobs + pack_jobs <= 8, pack_jobs
         _, tidy_jobs = _count_jobs(spark, tidy)
-        assert tidy_jobs <= 5, tidy_jobs
+        assert tidy_jobs == 3, tidy_jobs
     finally:
         g.unpersist()
+
+
+def test_delta_pack_driver_and_job_routes_agree(spark, monkeypatch):
+    """delta_pack merges on the driver when the touched stripes hold at
+    most STRIPE_EDGES edges, and in one Spark job otherwise.  Both routes
+    write byte-equal child stripe records, keep exact per-stripe edge
+    counts, and give equal out-degrees and bit-equal DF-P ranks; the driver
+    route runs only the batch collect inside bsp_packed()."""
+    import pickle
+    from pathlib import Path
+
+    from pagerank_cuda_dynamic_spark.operators import pagerank_bsp
+
+    n = 300
+    rng, keys, g0, q = _ranked_base(spark, 61, n, 2000)
+    del_keys, ins_keys = _np_batch(rng, keys, n, 10, 30)
+    dels = edges_df(spark, del_keys // n, del_keys % n).localCheckpoint()
+    ins = edges_df(spark, ins_keys // n, ins_keys % n).localCheckpoint()
+    out = {}
+    try:
+        for route, budget in (("driver", pagerank_bsp.STRIPE_EDGES), ("job", 0)):
+            monkeypatch.setattr(pagerank_bsp, "STRIPE_EDGES", budget)
+            g1 = g0.with_batch(dels, ins, repartition=False)
+            try:
+                _, jobs = _count_jobs(spark, g1.bsp_packed)
+                spill = Path(g1._bsp_spill)
+                records = {p.name: p.read_bytes() for p in spill.glob("s*.pkl")}
+                counts = pickle.loads((spill / "META.pkl").read_bytes())["edge_counts"]
+                res = pagerank_dynamic_frontier_prune_bsp(g0, g1, dels, ins, q)
+                out[route] = (jobs, records, counts, g1.outdeg_array(), res.ranks)
+                e = g1.edges.toPandas()
+            finally:
+                g1.unpersist()
+            assert counts.sum() == len(e)
+        assert (out["driver"][0], out["job"][0]) == (1, 2)
+        drv, job = out["driver"], out["job"]
+        assert len(drv[1]) > 1 and drv[1] == job[1]
+        for a, b in zip(drv[2:], job[2:]):
+            assert np.array_equal(a, b)
+    finally:
+        g0.unpersist()
 
 
 def test_df_seeds_from_child_arrays_bit_equal_collect(spark):
